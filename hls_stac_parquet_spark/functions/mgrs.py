@@ -10,11 +10,13 @@ Projections: A Working Manual", USGS PP 1395, and the Wikipedia
 under the ~2.4 km Hilbert-grid cell (p=14), which is all the
 clustering key needs.
 
-Two consumption forms, per SURVEY.md §7 phase 2:
+Three consumption forms:
 - :func:`mgrs_center_udf` — Arrow-batched pandas UDF
 - :func:`mgrs_dim_table` — precomputed broadcast dimension table
-  (tile → lat/lon) to join instead of calling a UDF per row; ~56k
-  HLS tiles ≈ a few MB, the preferred plan at scale.
+  (tile → lat/lon) to join instead of calling a UDF per row
+- :func:`tile_keys` — the same table plus the Hilbert key, computed
+  in plain numpy on the driver from a list of tiles; ~56k HLS tiles
+  ≈ a few MB, so E2 keys a month before it fetches any item.
 """
 
 from __future__ import annotations
@@ -28,6 +30,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from hls_stac_parquet_spark.functions.spatial import hilbert_index
 
 # WGS84
 _A = 6378137.0
@@ -165,9 +169,21 @@ def mgrs_dim_table(spark: SparkSession, tiles_df: DataFrame,
     )
 
 
-def with_tile_center(df: DataFrame, tile_col: str = "mgrs_tile") -> DataFrame:
-    """Attach tile_lat/tile_lon via broadcast dim join (not per-row UDF)."""
-    dim = mgrs_dim_table(df.sparkSession, df, tile_col)
-    return df.join(F.broadcast(dim), on=df[tile_col] == dim["mgrs_tile"], how="left").drop(
-        dim["mgrs_tile"]
+def tile_keys(tiles) -> pd.DataFrame:
+    """Distinct tile ids (None allowed) → (mgrs_tile, lat, lon,
+    hilbert_idx), in numpy on the driver. Same values as the
+    :func:`mgrs_dim_table` + ``hilbert_index_udf`` column path: a tile
+    the decoder rejects, or no tile at all, gets NaN lat/lon and the
+    error sentinel key."""
+    tiles = pd.Series(list(tiles), dtype=object)
+    center = mgrs_tile_center(tiles)
+    lat = center["lat"].to_numpy()
+    lon = center["lon"].to_numpy()
+    return pd.DataFrame(
+        {
+            "mgrs_tile": tiles,
+            "lat": lat,
+            "lon": lon,
+            "hilbert_idx": hilbert_index(lon, lat),
+        }
     )

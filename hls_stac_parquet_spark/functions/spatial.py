@@ -13,9 +13,10 @@ the sort scales horizontally:
 - :func:`morton_key` / :func:`morton_key_sql` — pure-SQL bit
   interleave (Z-order). Stays inside whole-stage codegen, and is
   expressible in ANSI-ish SQL for the DuckDB oracle.
-- :func:`hilbert_index_udf` — exact Hilbert distance as a vectorized
-  pandas UDF (numpy bit-twiddling, no per-row Python), matching the
-  reference's (p, n, sentinel) contract.
+- :func:`hilbert_index` / :func:`hilbert_index_udf` — exact Hilbert
+  distance in numpy (bit-twiddling, no per-row Python) and as a
+  vectorized pandas UDF, matching the reference's (p, n, sentinel)
+  contract.
 
 At 100 TB either key feeds ``repartitionByRange(key).sortWithin
 Partitions(key)`` — a total order with no driver materialization.
@@ -156,21 +157,31 @@ def lonlat_to_grid(
     return gx, gy
 
 
-@F.pandas_udf(LongType())
-def hilbert_index_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
+def hilbert_index(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
     """lon/lat → Hilbert distance on the reference's 16384² grid.
 
-    Null/NaN inputs get the error sentinel ``2**28`` (sorts last),
-    matching write.py:86-88. Arrow-batched; numpy inner loop is
-    O(order) vector ops per batch, not per row.
+    NaN inputs get the error sentinel ``2**28`` (sorts last),
+    matching write.py:86-88. O(order) vector ops, not per-row work.
     """
-    lon_v = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-    lat_v = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-    bad = np.isnan(lon_v) | np.isnan(lat_v)
-    gx, gy = lonlat_to_grid(np.nan_to_num(lon_v), np.nan_to_num(lat_v))
+    lon = np.asarray(lon, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
+    bad = np.isnan(lon) | np.isnan(lat)
+    gx, gy = lonlat_to_grid(np.nan_to_num(lon), np.nan_to_num(lat))
     d = hilbert_xy2d(HILBERT_P, gx, gy)
     d[bad] = HILBERT_ERROR_SENTINEL
-    return pd.Series(d)
+    return d
+
+
+@F.pandas_udf(LongType())
+def hilbert_index_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
+    """Column form of :func:`hilbert_index` (nulls → sentinel);
+    Arrow-batched, one numpy call per batch."""
+    return pd.Series(
+        hilbert_index(
+            lon.to_numpy(dtype=np.float64, na_value=np.nan),
+            lat.to_numpy(dtype=np.float64, na_value=np.nan),
+        )
+    )
 
 
 def with_hilbert_key(df, lon_col: str, lat_col: str, out_col: str = "hilbert_idx"):

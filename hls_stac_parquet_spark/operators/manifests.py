@@ -35,8 +35,8 @@ def split_failures(
     df: DataFrame, error_col: str = "fetch_error"
 ) -> tuple[DataFrame, DataFrame]:
     """(ok, dead_letter) — the success/failure stream split. The
-    dead-letter side persists as a table instead of a log line so
-    retries are a join away."""
+    dead-letter side is a DataFrame, not a log line; the pipelines
+    only count it today (nothing stores it yet)."""
     ok = df.filter(F.col(error_col).isNull()).drop(error_col)
     dead = df.filter(F.col(error_col).isNotNull())
     return ok, dead

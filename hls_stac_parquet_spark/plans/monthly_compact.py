@@ -4,16 +4,25 @@ Reference flow (write.py:99-245): list month's manifests →
 sequential fan-in → completeness gate → driver-side Hilbert sort of
 the whole month → semaphore(50) fetch → rustac GeoParquet write.
 
-Spark shape — one DAG, no driver materialization:
+Spark shape — plan the month from its URLs, then fetch each item once:
 
     read_manifests (parallel multi-file scan)
       → completeness gate (sequence + anti-join)
-      → explode urls → repartition(fan-out) → fetch (mapInPandas
-        thread pools) → failure split (dead-letter DF)
-      → from_json(explicit STAC schema) → hoist columns → stamp
-        collection → MGRS regex → broadcast tile-center dim join
-      → Hilbert key → repartitionByRange + sortWithinPartitions
-      → GeoParquet sink (executor-side pyarrow, geo footer, zstd-6)
+      → plan: explode urls → MGRS regex → per-tile URL counts,
+        collected (≤ ~56k HLS tiles) → tile centres + Hilbert keys in
+        numpy on the driver (functions/mgrs.py::tile_keys)
+      → broadcast-join the keys onto the URL rows (JVM side)
+      → repartitionByRange(URL rows on the key) +
+        sortWithinPartitions — the sampler re-reads only manifests
+      → one stage per file: fetch (mapInPandas thread pools, the key
+        columns ride along in order) → failures counted by
+        df.observe → from_json(explicit STAC schema) → hoist columns
+        → GeoParquet writer (executor-side pyarrow, geo footer,
+        zstd-6)
+
+The clustering key never depends on an item body (the tile comes
+from the URL, the key from the tile centre), so nothing after the
+fetch shuffles, and every item is requested exactly once per run.
 
 The reference's month-in-memory sort (write.py:219) is the exact
 anti-pattern this replaces: its 64 GiB Batch instance ceiling
@@ -23,12 +32,12 @@ anti-pattern this replaces: its 64 GiB Batch instance ceiling
 from __future__ import annotations
 
 import datetime as dt
+import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from hls_stac_parquet_spark.functions.mgrs import mgrs_dim_table
-from hls_stac_parquet_spark.functions.spatial import hilbert_index_udf
+from hls_stac_parquet_spark.functions.mgrs import tile_keys
 from hls_stac_parquet_spark.functions.urls import extract_mgrs
 from hls_stac_parquet_spark.model import STAC_ITEM_SCHEMA
 from hls_stac_parquet_spark.operators.completeness import (
@@ -38,16 +47,51 @@ from hls_stac_parquet_spark.operators.completeness import (
 from hls_stac_parquet_spark.operators.manifests import fan_in_manifests, split_failures
 from hls_stac_parquet_spark.sinks.geoparquet import (
     geoparquet_month_dir,
-    write_geoparquet,
+    write_geoparquet_partitions,
 )
 from hls_stac_parquet_spark.sinks.manifest import read_manifests
 from hls_stac_parquet_spark.sources.stac_fetch import fetch_stac_items
 from hls_stac_parquet_spark.store import get_store
 
+#: URLs per output file (and per fetch/write task) when the caller
+#: gives no ``target_partitions``. The writer holds a whole partition
+#: as one Arrow table: a full HLS item (18 assets, 5-point footprint)
+#: is ~5.6 KB there and ~210 B on disk after zstd-6 (pyarrow, 20k
+#: synthetic items), so 50k rows cap a task near 280 MB of worker
+#: memory and give ~10 MB files — 2-20 files for a 10^5-10^6-item
+#: month. A month below it stays the reference's single file.
+ROWS_PER_FILE = 50_000
+
+_KEYS_SCHEMA = "mgrs_tile string, lat double, lon double, hilbert_idx bigint"
+
 
 def _month_end(year: int, month: int) -> dt.date:
     nxt = dt.date(year + (month == 12), month % 12 + 1, 1)
     return nxt - dt.timedelta(days=1)
+
+
+def key_urls(urls: DataFrame) -> tuple[DataFrame, int]:
+    """Attach the clustering key to URL rows before any fetch.
+
+    One small aggregate collects the per-tile URL counts; the driver
+    computes each tile's centre and Hilbert key (:func:`tile_keys`),
+    and a broadcast join puts them on the URL rows. Returns the keyed
+    rows (url, mgrs_tile, lat, lon, hilbert_idx) and the URL count.
+    """
+    spark = urls.sparkSession
+    tiled = urls.select("url", extract_mgrs("url").alias("mgrs_tile"))
+    counts = tiled.groupBy("mgrs_tile").count().collect()
+    n_urls = sum(r["count"] for r in counts)
+    keys = spark.createDataFrame(
+        tile_keys([r.mgrs_tile for r in counts]), _KEYS_SCHEMA
+    )
+    # null-safe: URLs without a tile match the NULL row's sentinel key
+    keyed = tiled.join(
+        F.broadcast(keys),
+        tiled["mgrs_tile"].eqNullSafe(keys["mgrs_tile"]),
+        "left",
+    ).select("url", tiled["mgrs_tile"], "lat", "lon", "hilbert_idx")
+    return keyed, n_urls
 
 
 def write_monthly_stac_geoparquet(
@@ -59,7 +103,6 @@ def write_monthly_stac_geoparquet(
     dest: str,
     origin_date: dt.date | None = None,
     require_complete_links: bool = True,
-    fetch_partitions: int | None = None,
     skip_existing: bool = True,
     version: str = "1",
     reference_layout: bool = False,
@@ -68,7 +111,10 @@ def write_monthly_stac_geoparquet(
     """Compact one collection-month of cached links into clustered
     GeoParquet. Returns {written, failed, skipped} counts plus the
     file manifest rows. ``reference_layout=True`` emits the exact
-    one-object-per-month reference path (constants.py:8)."""
+    one-object-per-month reference path (constants.py:8).
+
+    Files: ``target_partitions`` when given, else one per
+    :data:`ROWS_PER_FILE` URLs."""
     store = get_store(dest)
     month_dir = geoparquet_month_dir(
         collection_id, year, month, version, reference_layout
@@ -87,55 +133,57 @@ def write_monthly_stac_geoparquet(
         actual = manifests.select("day")
         require_complete(exp, actual, key="day")
 
-    urls = fan_in_manifests(manifests).select("url")
-    if fetch_partitions:
-        urls = urls.repartition(fetch_partitions)
+    keyed, n_urls = key_urls(fan_in_manifests(manifests))
+    if n_urls == 0:
+        return {"skipped": False, "written": 0, "failed": 0, "files": []}
+    if reference_layout:
+        n_files = 1
+    else:
+        n_files = target_partitions or max(1, math.ceil(n_urls / ROWS_PER_FILE))
 
-    fetched = fetch_stac_items(urls)
-    ok, dead = split_failures(fetched)
-    n_failed = dead.count()  # reference logs failures (write.py:227-228)
+    # the explicit count pins the file layout: AQE would coalesce these
+    # tiny URL rows into a few huge fetch tasks. Sorting the URL rows
+    # sorts the items: the fetch and the hoist keep row order.
+    clustered = keyed.repartitionByRange(
+        n_files, "hilbert_idx"
+    ).sortWithinPartitions("hilbert_idx")
+
+    fetch_stats = Observation()
+    fetched = fetch_stac_items(clustered).observe(
+        fetch_stats,
+        # reference logs failures (write.py:227-228)
+        F.count_if(F.col("fetch_error").isNotNull()).alias("failed"),
+    )
+    ok, _ = split_failures(fetched)
 
     items = ok.withColumn(
         "item", F.from_json("body", STAC_ITEM_SCHEMA)
-    ).select("url", "item.*")
+    ).select("url", "mgrs_tile", "lat", "lon", "hilbert_idx", "item.*")
 
-    hoisted = (
-        items.withColumn("collection", F.lit(collection_id))  # A20 stamp
-        .withColumn("mgrs_tile", extract_mgrs("url"))
-        .withColumn("datetime", F.to_timestamp(F.col("properties.datetime")))
-        .withColumn("eo_cloud_cover", F.col("properties.`eo:cloud_cover`"))
-        .withColumn("bbox_xmin", F.element_at("bbox", 1))
-        .withColumn("bbox_ymin", F.element_at("bbox", 2))
-        .withColumn("bbox_xmax", F.element_at("bbox", 3))
-        .withColumn("bbox_ymax", F.element_at("bbox", 4))
+    hoisted = items.select(
+        "id",
+        F.lit(collection_id).alias("collection"),  # A20 stamp
+        F.to_timestamp(F.col("properties.datetime")).alias("datetime"),
+        F.col("properties.`eo:cloud_cover`").alias("eo_cloud_cover"),
+        "mgrs_tile", "lon", "lat", "hilbert_idx",
+        F.element_at("bbox", 1).alias("bbox_xmin"),
+        F.element_at("bbox", 2).alias("bbox_ymin"),
+        F.element_at("bbox", 3).alias("bbox_xmax"),
+        F.element_at("bbox", 4).alias("bbox_ymax"),
         # raw GeoJSON coordinates ride to the sink as-is; the Arrow
         # writer stage encodes WKB batch-wise (geoparquet.py::
         # polygon_coords_to_wkb_array) — no per-row Python in the plan
-        .withColumn("geometry", F.col("geometry.coordinates"))
+        F.col("geometry.coordinates").alias("geometry"),
+        "assets", "url",
     )
 
-    # tile → center via broadcast dim (A15): UDF runs once per distinct
-    # tile, the join is JVM-side
-    dim = mgrs_dim_table(spark, hoisted, "mgrs_tile")
-    located = hoisted.join(F.broadcast(dim), "mgrs_tile", "left")
-
-    keyed = located.withColumn(
-        "hilbert_idx", hilbert_index_udf(F.col("tile_lon"), F.col("tile_lat"))
-    ).select(
-        "id", "collection", "datetime", "eo_cloud_cover", "mgrs_tile",
-        F.col("tile_lon").alias("lon"), F.col("tile_lat").alias("lat"),
-        "hilbert_idx", "bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax",
-        "geometry", "assets", "url",
-    )
-
-    files = write_geoparquet(
-        keyed, dest, collection_id, year, month, version=version,
+    files = write_geoparquet_partitions(
+        hoisted, dest, collection_id, year, month, version=version,
         reference_layout=reference_layout,
-        target_partitions=target_partitions,
     ).collect()
     return {
         "skipped": False,
         "written": sum(r.n_rows for r in files),
-        "failed": n_failed,
+        "failed": fetch_stats.get["failed"],
         "files": [r.path for r in files],
     }

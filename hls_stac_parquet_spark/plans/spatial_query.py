@@ -10,10 +10,7 @@ Two pruning layers, both free at query time:
    stats — effective precisely BECAUSE rows are Hilbert-clustered)
 2. the same bbox predicate re-applied row-wise by codegen
 
-``bbox_query`` expresses the standard rectangle-intersection test;
-``bbox_query_stats`` reports how much of the dataset the scan
-actually touched, so tests (and capacity planning) can assert the
-clustering is doing its job.
+``bbox_query`` expresses the standard rectangle-intersection test.
 """
 
 from __future__ import annotations
@@ -67,25 +64,3 @@ def bbox_query(
     if month is not None:
         df = df.filter(F.col("month") == month)
     return df.filter(bbox_filter(*bbox))
-
-
-def scan_stats(df: DataFrame) -> dict:
-    """Executed-plan scan metrics: files/rows the query actually read.
-    Call AFTER an action on df."""
-    plan = df._jdf.queryExecution().executedPlan()
-    metrics = {}
-    # walk to the FileSourceScanExec and read its metrics
-    nodes = [plan]
-    while nodes:
-        node = nodes.pop()
-        name = node.nodeName()
-        if "Scan" in name:
-            m = node.metrics()
-            for key in ("numFiles", "numOutputRows", "filesSize"):
-                if m.contains(key):
-                    metrics[key] = m.apply(key).value()
-        for i in range(node.children().size()):
-            nodes.append(node.children().apply(i))
-        if hasattr(node, "child") and not node.children().size():
-            pass
-    return metrics

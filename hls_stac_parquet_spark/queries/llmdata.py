@@ -375,9 +375,15 @@ def q_simhash_dedup(spark, sf_dir):
     oracle=(
         "WITH base AS (SELECT doc_id, string_split(lower(text), ' ') AS ts "
         "FROM documents WHERE len(string_split(lower(text), ' ')) >= 8), "
-        "wins AS (SELECT DISTINCT doc_id, "
-        "unnest(list_transform(range(1, len(ts) - 6), "
-        "i -> md5(array_to_string(ts[i:i+7], ' ')))) AS fp FROM base), "
+        # windows via lead() over one row per token: a list_transform
+        # lambda over the token list copies the list per window, O(n²)
+        # memory (>12 GB on a 50k-token doc); same (doc_id, fp) set
+        "toks AS (SELECT doc_id, unnest(ts) AS tok, "
+        "unnest(range(1, len(ts) + 1)) AS pos FROM base), "
+        "wins AS (SELECT DISTINCT doc_id, fp FROM (SELECT doc_id, md5(tok"
+        + "".join(f" || ' ' || lead(tok, {k}) OVER w" for k in range(1, 8))
+        + ") AS fp FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)) "
+        "WHERE fp IS NOT NULL), "
         "eligible AS (SELECT fp FROM wins GROUP BY fp "
         "HAVING count(*) BETWEEN 2 AND 50) "
         "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared "

@@ -21,6 +21,24 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else min(32g, half the host's
+    MemTotal): in local mode the one JVM holds driver and executors,
+    and a heap sized past the host's memory gets the process killed
+    mid-run instead of collected. 32g when MemTotal is unreadable."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    cap_mib = 32 * 1024
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    cap_mib = min(cap_mib, int(line.split()[1]) // 2048)
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{cap_mib}m"
+
+
 def get_spark(
     app_name: str = "hls_stac_parquet_spark",
     master: str | None = None,
@@ -65,9 +83,9 @@ def get_spark(
         # JVM: an 8g heap on a 128 GiB box forced full-GC storms (6-9 s
         # pauses randomly landing on bench queries) once the query set
         # grew past ~180 plans of broadcasts/caches/codegen classes.
-        # 32g + G1 with a 200 ms pause target keeps collections
+        # up to 32g + G1 with a 200 ms pause target keeps collections
         # incremental; on a real cluster these are per-role settings.
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+        "spark.driver.memory": default_driver_memory(),
         # -Xss8m: the streaming error path (ForeachBatchUserFuncException
         # wrapping a py4j callback failure) intermittently dies with
         # java.lang.StackOverflowError in the stream execution thread on

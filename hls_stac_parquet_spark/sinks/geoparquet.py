@@ -290,13 +290,43 @@ def write_geoparquet(
 
     Returns the write manifest (one row per file).
     """
-    store = get_store(dest)
     if reference_layout:
         target_partitions = 1
     clustered = df.repartitionByRange(
         *([target_partitions] if target_partitions else []), F.col(sort_col)
     ).sortWithinPartitions(sort_col)
+    return write_geoparquet_partitions(
+        clustered, dest, collection_id, year, month, version=version,
+        geometry_col=geometry_col, compression=compression,
+        compression_level=compression_level,
+        reference_layout=reference_layout,
+    )
 
+
+def write_geoparquet_partitions(
+    df: DataFrame,
+    dest: str,
+    collection_id: str,
+    year: int,
+    month: int,
+    version: str = "1",
+    geometry_col: str = "geometry",
+    compression: str = "zstd",
+    compression_level: int = 6,
+    reference_layout: bool = False,
+) -> DataFrame:
+    """Write each partition of ``df``, rows in their current order, as
+    one footer-stamped GeoParquet file named by its partition id; an
+    empty partition writes nothing (an in-process store, which the
+    workers cannot reach, gets one object for the whole frame, written
+    from the driver). The caller has already clustered
+    ``df`` (:func:`write_geoparquet` does it for a plain frame);
+    ``reference_layout=True`` names the file the reference's way and
+    so expects a single partition.
+
+    Returns the write manifest (one row per file).
+    """
+    store = get_store(dest)
     rel_dir = geoparquet_month_dir(
         collection_id, year, month, version, reference_layout
     )
@@ -332,7 +362,7 @@ def write_geoparquet(
         # in-process test store: materialize the (already clustered
         # and sorted) result on the driver and write one object —
         # toArrow preserves partition order, so the total order holds
-        table = clustered.toArrow()
+        table = df.toArrow()
         spark = df.sparkSession
         if table.num_rows == 0:
             return spark.createDataFrame([], manifest_schema)
@@ -376,7 +406,7 @@ def write_geoparquet(
             _manifest_row(task_store.full_url(key), table, bbox)
         )
 
-    return clustered.mapInArrow(write_partition, manifest_schema)
+    return df.mapInArrow(write_partition, manifest_schema)
 
 
 def optimize_geoparquet_month(

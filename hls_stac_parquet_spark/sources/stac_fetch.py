@@ -30,6 +30,7 @@ from urllib.parse import urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from hls_stac_parquet_spark.model import FETCH_RESULT_SCHEMA
 
@@ -85,9 +86,12 @@ def fetch_stac_items(
     credential_provider: Callable[[str], dict[str, str] | None] | None = None,
     retry_attempts: int = 3,
 ) -> DataFrame:
-    """urls(url) → (url, body, fetch_error) via per-partition bounded
-    thread pools. Callers control total fan-out with
-    ``urls.repartition(n)`` before the call.
+    """urls(url, ...) → (url, body, fetch_error, ...) via
+    per-partition bounded thread pools. Every input column other than
+    the URL rides through to the output, after the fetch columns, and
+    rows keep their input order within a partition; a url-only input
+    returns exactly ``FETCH_RESULT_SCHEMA``. Callers control total
+    fan-out with ``urls.repartition(n)`` before the call.
 
     ``credential_provider(netloc)`` returns the auth headers for that
     host (or None). It is invoked lazily, once per distinct netloc per
@@ -124,12 +128,18 @@ def fetch_stac_items(
                         prepared,
                     )
                 )
-                yield pd.DataFrame(
+                out = pd.DataFrame(
                     {
                         "url": batch_urls,
                         "body": [r[1] for r in results],
                         "fetch_error": [r[2] for r in results],
                     }
                 )
+                for f in carried:
+                    out[f.name] = pdf[f.name].to_numpy()
+                yield out
 
-    return urls.mapInPandas(run, FETCH_RESULT_SCHEMA)
+    carried = [f for f in urls.schema.fields if f.name != url_col]
+    return urls.mapInPandas(
+        run, StructType(FETCH_RESULT_SCHEMA.fields + carried)
+    )

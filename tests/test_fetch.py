@@ -78,3 +78,26 @@ def test_no_provider_sends_no_auth(spark, http_server):
     rows = fetch_stac_items(_urls_df(spark, [url])).collect()
     assert rows[0].fetch_error is None
     assert _RecordingHandler.seen_auth == [None]
+
+
+def test_fetch_carries_input_columns_in_order(spark, tmp_path):
+    """Columns besides the URL ride through the fetch, and rows keep
+    their order within a partition (E2 sorts URL rows, not items)."""
+    from hls_stac_parquet_spark.model import FETCH_RESULT_SCHEMA
+
+    paths = []
+    for i in range(300):
+        p = tmp_path / f"item-{i}.json"
+        p.write_text(json.dumps({"id": i}))
+        paths.append(str(p))
+    urls = spark.createDataFrame(
+        pd.DataFrame({"url": paths, "key": range(300, 0, -1)})
+    ).coalesce(1)
+    assert fetch_stac_items(urls.select("url")).schema == FETCH_RESULT_SCHEMA
+
+    out = fetch_stac_items(urls, max_concurrent=7)
+    assert out.columns == ["url", "body", "fetch_error", "key"]
+    rows = out.collect()
+    assert [r.url for r in rows] == paths
+    assert [r.key for r in rows] == list(range(300, 0, -1))
+    assert [json.loads(r.body)["id"] for r in rows] == list(range(300))

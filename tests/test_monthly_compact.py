@@ -1,0 +1,175 @@
+"""E2 plan (plans/monthly_compact.py): every STAC item is requested
+exactly once, the driver-side cluster keys equal the column (UDF)
+path's, and an empty month writes nothing."""
+
+from __future__ import annotations
+
+import collections
+import datetime as dt
+import http.server
+import os
+import threading
+import types
+from urllib.parse import urlparse
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from hls_stac_parquet_spark.functions.mgrs import mgrs_dim_table
+from hls_stac_parquet_spark.functions.spatial import (
+    HILBERT_ERROR_SENTINEL,
+    hilbert_index_udf,
+)
+from hls_stac_parquet_spark.functions.urls import extract_mgrs
+from hls_stac_parquet_spark.plans.daily_ingest import cache_daily_stac_json_links
+from hls_stac_parquet_spark.plans.monthly_compact import (
+    key_urls,
+    write_monthly_stac_geoparquet,
+)
+from hls_stac_parquet_spark.sinks.manifest import manifest_key, read_manifests
+from hls_stac_parquet_spark.store import get_store
+from tests.fixtures import make_fixtures
+
+COLL_CID = "C2021957657-LPCLOUD"
+COLL_ID = "HLSL30_2.0"
+DAYS = [dt.date(2025, 10, d) for d in (1, 2, 3)]
+
+
+def _counting_handler(root: str, counts: collections.Counter):
+    lock = threading.Lock()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802 — stdlib API name
+            with lock:
+                counts[self.path] += 1
+            path = os.path.join(root, os.path.basename(self.path))
+            if not os.path.exists(path):
+                self.send_error(404)
+                return
+            with open(path, "rb") as fh:
+                body = fh.read()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *a):  # silence request logging
+            pass
+
+    return Handler
+
+
+@pytest.fixture(scope="module")
+def origin(spark, tmp_path_factory):
+    """E1 over fixture CMR days whose STAC links point at a local HTTP
+    origin that counts requests per path; 2 items a day are 404s."""
+    base = str(tmp_path_factory.mktemp("e2-origin"))
+    cmr_dir, stac_dir = make_fixtures(
+        base, days=DAYS, granules_per_day=8, broken_stac_urls=2
+    )
+    counts: collections.Counter = collections.Counter()
+    srv = http.server.ThreadingHTTPServer(
+        ("127.0.0.1", 0), _counting_handler(stac_dir, counts)
+    )
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    url_base = f"http://127.0.0.1:{srv.server_address[1]}/"
+    for name in os.listdir(cmr_dir):
+        path = os.path.join(cmr_dir, name)
+        with open(path) as fh:
+            text = fh.read()
+        with open(path, "w") as fh:
+            fh.write(text.replace(f"file://{stac_dir}/", url_base))
+
+    links = os.path.join(base, "links")
+    written = cache_daily_stac_json_links(
+        spark, COLL_CID, COLL_ID, DAYS[0], links,
+        end_date=DAYS[-1], protocol="http", fixture_dir=cmr_dir,
+    )
+    assert len(written) == len(DAYS)
+    manifests = read_manifests(spark, links, COLL_ID, 2025, 10).collect()
+    urls = [u for m in manifests for u in m.urls]
+    assert urls and all(u.startswith(url_base) for u in urls)
+    yield types.SimpleNamespace(
+        links=links, counts=counts, urls=urls,
+        broken=[u for u in urls if "_missing_" in u],
+    )
+    srv.shutdown()
+    srv.server_close()
+
+
+@pytest.mark.parametrize("target_partitions", [None, 3])
+def test_e2_requests_each_url_once(spark, origin, tmp_path, target_partitions):
+    origin.counts.clear()
+    result = write_monthly_stac_geoparquet(
+        spark, COLL_ID, 2025, 10, origin.links, str(tmp_path / "gpq"),
+        require_complete_links=False, target_partitions=target_partitions,
+    )
+    assert origin.counts == collections.Counter(
+        urlparse(u).path for u in origin.urls
+    )
+    assert result["written"] + result["failed"] == len(origin.urls)
+    assert result["failed"] == len(origin.broken) == 2 * len(DAYS)
+
+    files = sorted(result["files"])
+    if target_partitions is None:
+        assert len(files) == 1  # a month under ROWS_PER_FILE: one file
+        return
+    assert 1 < len(files) <= target_partitions
+    prev_end = None
+    for path in files:  # part-number order is range order
+        keys = pq.read_table(path, columns=["hilbert_idx"])[
+            "hilbert_idx"
+        ].to_pylist()
+        assert keys == sorted(keys)
+        if prev_end is not None:
+            assert keys[0] >= prev_end
+        prev_end = keys[-1]
+
+
+def test_driver_keys_match_udf_path(spark):
+    """The driver-computed tile centres and Hilbert keys equal the
+    mgrs_dim_table + hilbert_index_udf column path, including the
+    sentinel for a tile the decoder rejects and for a URL without a
+    tile."""
+    valid = "https://h/HLS.L30.T15TWN.2025274T170400.v2.0/x_stac.json"
+    rejected = "https://h/HLS.L30.T15III.2025274T170400.v2.0/x_stac.json"
+    no_tile = "https://h/some/item_stac.json"
+    urls = spark.createDataFrame(
+        [(valid,), (valid.replace("T1704", "T1705"),), (rejected,), (no_tile,)],
+        "url string",
+    )
+
+    keyed, n_urls = key_urls(urls)
+    assert n_urls == 4
+    got = {
+        r.url: (r.mgrs_tile, r.lat, r.lon, r.hilbert_idx)
+        for r in keyed.collect()
+    }
+
+    tiled = urls.withColumn("mgrs_tile", extract_mgrs("url"))
+    dim = mgrs_dim_table(spark, tiled, "mgrs_tile")
+    udf_path = tiled.join(F.broadcast(dim), "mgrs_tile", "left").withColumn(
+        "hilbert_idx", hilbert_index_udf(F.col("tile_lon"), F.col("tile_lat"))
+    )
+    want = {
+        r.url: (r.mgrs_tile, r.tile_lat, r.tile_lon, r.hilbert_idx)
+        for r in udf_path.collect()
+    }
+    assert got == want
+    tile, lat, lon, key = got[valid]
+    assert tile == "15TWN" and lat is not None and key < HILBERT_ERROR_SENTINEL
+    assert got[rejected] == ("15III", None, None, HILBERT_ERROR_SENTINEL)
+    assert got[no_tile] == (None, None, None, HILBERT_ERROR_SENTINEL)
+
+
+def test_empty_month_writes_nothing(spark, tmp_path):
+    links = str(tmp_path / "links")
+    store = get_store(links)
+    for day in DAYS:
+        store.put_bytes(manifest_key(COLL_ID, day), b"[]")
+    result = write_monthly_stac_geoparquet(
+        spark, COLL_ID, 2025, 10, links, str(tmp_path / "gpq"),
+        require_complete_links=False,
+    )
+    assert result == {"skipped": False, "written": 0, "failed": 0, "files": []}

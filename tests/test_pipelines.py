@@ -191,7 +191,7 @@ def test_optimize_geoparquet_month_compacts_and_reclusters(spark, fx, tmp_path):
     )
     result = write_monthly_stac_geoparquet(
         spark, COLL_ID, 2025, 10, links_dest, out_dest,
-        require_complete_links=False, fetch_partitions=4,
+        require_complete_links=False,
         target_partitions=5,  # simulate small-file accumulation
     )
     month_dir = os.path.join(out_dest, "v1", COLL_ID, "year=2025", "month=10")

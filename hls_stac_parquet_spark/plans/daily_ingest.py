@@ -10,8 +10,11 @@ into the source request) → higher-order-function link extraction
 loop becomes a single projected expression) → manifest sink.
 
 The reference runs one Lambda per day (A22/A24); here a date *range*
-is one job whose source partitions are days — the control plane
-collapses into the plan.
+is one job whose source partitions are contiguous runs of days, at
+most ``defaultParallelism`` of them (a Python task has a fixed cost,
+so cores-many tasks beat one per day) — the control plane collapses
+into the plan. Catalog concurrency is unchanged: each day is still
+its own cursor-paged query, and no more tasks than cores run at once.
 """
 
 from __future__ import annotations

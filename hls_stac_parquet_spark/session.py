@@ -118,19 +118,3 @@ TABLES = (
     "embeddings",
 )
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load the driver's parquet tables and register them as temp views.
-
-    Returns {name: DataFrame}. Registration makes every query writable
-    as either DataFrame calls or ``spark.sql`` over the same names the
-    DuckDB oracle uses.
-    """
-    dfs = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    return dfs

@@ -3,7 +3,6 @@
 from hls_stac_parquet_spark.sinks.geoparquet import (  # noqa: F401
     geojson_polygon_to_wkb,
     geoparquet_month_dir,
-    wkb_udf,
     write_geoparquet,
 )
 from hls_stac_parquet_spark.sinks.manifest import (  # noqa: F401

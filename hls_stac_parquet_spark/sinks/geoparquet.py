@@ -44,7 +44,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
 
 from hls_stac_parquet_spark.store import get_store
 
@@ -74,19 +73,6 @@ def geojson_polygon_to_wkb(coordinates: list) -> bytes:
         for pt in ring:
             out.append(struct.pack("<dd", float(pt[0]), float(pt[1])))
     return b"".join(out)
-
-
-@F.udf(BinaryType())
-def wkb_udf(coordinates) -> bytes | None:
-    """Column form of the WKB encoder (arrow-optimized Python UDF).
-
-    Kept for ad-hoc column use; the E2 write path no longer calls it —
-    :func:`write_geoparquet` encodes coordinates batch-wise inside its
-    Arrow writer stage (:func:`polygon_coords_to_wkb_array`), so the
-    plan carries no per-row Python stage."""
-    if coordinates is None:
-        return None
-    return geojson_polygon_to_wkb(coordinates)
 
 
 def polygon_coords_to_wkb_array(coords) -> pa.Array:

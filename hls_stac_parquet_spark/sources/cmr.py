@@ -13,10 +13,18 @@ Here the same capability is a first-class Spark source:
   EqualTo(collection_concept_id) and time_start/time_end range
   filters and folds them into the request, so Catalyst's pushdown
   reaches the REST catalog exactly like the hand-built query did.
-- partitions = one per UTC day in the temporal range: each Spark
-  task pages through its own day with its own cursor. The
-  reference's SNS/SQS/Lambda fan-out (A22/A24) collapses into source
-  partitioning; retries become ``spark.task.maxFailures``.
+- partitions = contiguous runs of UTC days: the temporal range is
+  packed into ``min(n_days, defaultParallelism)`` partitions whose
+  run lengths differ by at most one day, and each task walks its
+  days in order, paging through every day with that day's own
+  cursor. A Python task costs a fixed ~0.3 CPU-s on PySpark 4.1,
+  so one task per day would pay that 31 times a month for
+  seconds of parsing. Catalog concurrency is unchanged: at most
+  cores-many tasks run at once, each querying one day at a time,
+  as when every day was its own task. The cap is the session's
+  ``defaultParallelism``, bound by :func:`register_cmr_source`. The
+  reference's SNS/SQS/Lambda fan-out (A22/A24) collapses into
+  source partitioning; retries become ``spark.task.maxFailures``.
 - offline mode (``fixture_dir``): reads cassette-style JSON fixtures
   (one ``{"feed": {"entry": [...]}}`` file per day) — the unit-test
   path, mirroring the reference's VCR cassettes.
@@ -30,7 +38,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-from typing import Iterator
+from typing import Iterable, Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -52,15 +60,37 @@ from hls_stac_parquet_spark.sources.retry import request_with_retries
 DEFAULT_PAGE_SIZE = 2000  # CMR hard cap (cmr_api.py:44,55)
 
 
-class _DayPartition(InputPartition):
-    def __init__(self, day: str):
-        self.day = day
+class _DaysPartition(InputPartition):
+    def __init__(self, days: list[str]):
+        self.days = days
+
+
+def pack_days(days: list[str], max_partitions: int) -> list[list[str]]:
+    """Split ordered ``days`` into ``min(len(days), max_partitions)``
+    contiguous runs whose lengths differ by at most one."""
+    total = len(days)
+    n = min(total, max_partitions)
+    return [days[k * total // n:(k + 1) * total // n] for k in range(n)]
+
+
+def _on_day(entry: dict, day: str) -> bool:
+    """A granule belongs to the day of its ``time_start``. A catalog
+    day query matches every granule that *overlaps* the day, so one
+    spanning midnight comes back for both days; this keeps it in its
+    first day only, in the fixture and HTTP modes alike."""
+    return day == "all" or (entry.get("time_start") or "")[:10] in ("", day)
 
 
 class CmrReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict):
+    def __init__(
+        self,
+        schema: StructType,
+        options: dict,
+        max_partitions: int = 1,
+    ):
         self.schema = schema
         self.options = options
+        self.max_partitions = max_partitions
         self.collection = options.get("collection_concept_id")
         self.temporal_start = options.get("temporal_start")
         self.temporal_end = options.get("temporal_end")
@@ -73,7 +103,7 @@ class CmrReader(DataSourceReader):
         self.endpoint = options.get("endpoint")
 
     # --- Catalyst filter pushdown (A2/A4) -------------------------------
-    def pushFilters(self, filters: list[Filter]) -> Iterable[Filter]:  # noqa: F821
+    def pushFilters(self, filters: list[Filter]) -> Iterable[Filter]:
         """Fold supported predicates into the catalog request; return
         the rest for Spark to evaluate post-scan."""
         unsupported = []
@@ -89,7 +119,7 @@ class CmrReader(DataSourceReader):
                 unsupported.append(f)
         return unsupported
 
-    # --- partition planning: one task per day (A22) ----------------------
+    # --- partition planning: runs of days, ≤ max_partitions (A22) -------
     def partitions(self) -> list[InputPartition]:
         if self.temporal_start and self.temporal_end:
             start = dt.date.fromisoformat(self.temporal_start[:10])
@@ -98,26 +128,28 @@ class CmrReader(DataSourceReader):
                 (start + dt.timedelta(days=i)).isoformat()
                 for i in range((end - start).days + 1)
             ]
-            return [_DayPartition(d) for d in days]
-        if self.fixture_dir:
+        elif self.fixture_dir:
             days = sorted(
                 f[:-5]
                 for f in os.listdir(self.fixture_dir)
                 if f.endswith(".json")
             )
-            return [_DayPartition(d) for d in days]
-        return [_DayPartition("all")]
+        else:
+            return [_DaysPartition(["all"])]
+        return [_DaysPartition(r) for r in pack_days(days, self.max_partitions)]
 
     # --- scan ----------------------------------------------------------------
-    def read(self, partition: _DayPartition) -> Iterator[tuple]:
+    def read(self, partition: _DaysPartition) -> Iterator[tuple]:
         if self.fixture_dir:
-            yield from self._read_fixture(partition.day)
+            read_day = self._read_fixture
         elif self.endpoint:
-            yield from self._read_http(partition.day)
+            read_day = self._read_http
         else:
             raise ValueError(
                 "cmr source needs either fixture_dir (offline) or endpoint"
             )
+        for day in partition.days:
+            yield from read_day(day)
 
     def _entry_to_row(self, entry: dict) -> tuple:
         links = entry.get("links") or None
@@ -145,9 +177,7 @@ class CmrReader(DataSourceReader):
         real catalog applies server-side for the pushed predicates."""
         if self.collection and entry.get("collection_concept_id") != self.collection:
             return False
-        if day != "all" and entry.get("time_start", "")[:10] not in ("", day):
-            return False
-        return True
+        return _on_day(entry, day)
 
     def _read_fixture(self, day: str) -> Iterator[tuple]:
         if day == "all":
@@ -169,8 +199,13 @@ class CmrReader(DataSourceReader):
     def _read_http(self, day: str) -> Iterator[tuple]:
         """Cursor-paginated scan of one day window (cmr_api.py:55-71):
         page_size-capped GETs following the ``cmr-search-after``
-        header until exhausted. stdlib urllib; per-task, so total
-        concurrency = number of day partitions running."""
+        header until exhausted. stdlib urllib; a packed task walks its
+        days one after another, so total concurrency = number of
+        partitions running (≤ cores, as with one task per day).
+
+        The window runs from the day's midnight to the next one, so
+        every granule starting on the day overlaps it; :func:`_on_day`
+        then drops those that started the day before."""
         import urllib.parse
         import urllib.request
 
@@ -180,7 +215,8 @@ class CmrReader(DataSourceReader):
         if self.collection:
             params["collection_concept_id[]"] = self.collection
         if day != "all":
-            params["temporal[]"] = f"{day}T00:00:00Z,{day}T23:59:59Z"
+            next_day = dt.date.fromisoformat(day) + dt.timedelta(days=1)
+            params["temporal[]"] = f"{day}T00:00:00Z,{next_day}T00:00:00Z"
         elif self.temporal_start and self.temporal_end:
             params["temporal[]"] = f"{self.temporal_start},{self.temporal_end}"
         if self.bbox:
@@ -218,13 +254,20 @@ class CmrReader(DataSourceReader):
             data = json.loads(body.decode())
             entries = data.get("feed", {}).get("entry", [])
             for entry in entries:
-                yield self._entry_to_row(entry)
+                if _on_day(entry, day):
+                    yield self._entry_to_row(entry)
             if not search_after or not entries:
                 return
 
 
 class CmrDataSource(DataSource):
-    """``spark.read.format("cmr")`` — see module docstring."""
+    """``spark.read.format("cmr")`` — see module docstring.
+
+    ``max_partitions`` caps the batch scan's partition count;
+    :func:`register_cmr_source` registers a subclass that binds it to
+    the session's ``defaultParallelism``."""
+
+    max_partitions: int = 1
 
     @classmethod
     def name(cls) -> str:
@@ -234,14 +277,22 @@ class CmrDataSource(DataSource):
         return CMR_GRANULE_SCHEMA
 
     def reader(self, schema: StructType) -> CmrReader:
-        return CmrReader(schema, self.options)
+        return CmrReader(schema, self.options, self.max_partitions)
 
     def simpleStreamReader(self, schema: StructType) -> "CmrStreamReader":
         return CmrStreamReader(schema, self.options)
 
 
 def register_cmr_source(spark) -> None:
-    spark.dataSource.register(CmrDataSource)
+    """Register ``format("cmr")`` with its batch scan capped at the
+    session's ``defaultParallelism``. The planner runs in a Python
+    worker with no SparkContext, so the cap travels as a class
+    attribute of the registered (pickled-by-value) subclass."""
+
+    class SizedCmrDataSource(CmrDataSource):
+        max_partitions = spark.sparkContext.defaultParallelism
+
+    spark.dataSource.register(SizedCmrDataSource)
 
 
 class CmrStreamReader(SimpleDataSourceStreamReader):

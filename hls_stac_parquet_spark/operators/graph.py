@@ -529,49 +529,14 @@ def propagate_labels(
         F.col(node_col).alias("_n"), F.col(label_col).alias("_lbl")
     ).withColumn("_seed", F.lit(True)).localCheckpoint()
 
-    # AQE off for the driver-sequenced rounds (r8, the mlfit lesson —
-    # guide §1.2 config/scheduler overhead): every eager checkpoint
-    # job otherwise splits into per-exchange AQE sub-jobs, and runtime
-    # re-planning has nothing to offer these fixed-shape small joins;
-    # restored in finally so only the loop is affected.
-    # r9 (ADVICE): the toggle only matters when a lineage cut actually
-    # EXECUTES inside the window — the cadence fires at round 4k with
-    # k*4 < max_iter, so for max_iter <= 4 the rounds build lazily and
-    # the flip was a session-global no-op. CONTRACT: spark.conf is
-    # session-global — like the mlfit toggle this is safe under the
-    # engine's sequential query execution but NOT thread-safe if
-    # queries ever run concurrently on one session; a concurrent
-    # deployment should drop the toggle (it is an optimization only).
-    spark = edges.sparkSession
-    if max_iter > 4:
-        aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            labels = _lpa_rounds(sym, seed_labels, max_iter)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-    else:
-        labels = _lpa_rounds(sym, seed_labels, max_iter)
-    out = labels.select(
-        F.col("_n").alias(node_col),
-        F.col("_lbl").alias(label_col),
-        F.col("_seed").alias("is_seed"),
-    )
-    return out
-
-
-def _lpa_rounds(sym, seed_labels, max_iter):
-    """The synchronous LPA vote rounds (split out so the AQE scope in
-    :func:`propagate_labels` wraps exactly the loop).
-
-    Lineage is cut every 4th round instead of every round (r8):
-    each round references the previous labels 3× (vote join, seed
-    carryover, left-anti), so the lazy plan grows ~3^k between cuts —
-    fine for 4 rounds (≲100 extra nodes, and identical exchanges are
-    deduped by ReuseExchange at runtime), runaway for unbounded k.
-    Per-round eager checkpoints were measured as pure barrier cost at
-    the query's max_iter=3 (every round = 1-2 driver-sequenced jobs
-    of ~100 ms scheduling around ms-scale work)."""
+    # Lineage is cut every 4th round instead of every round (r8): each
+    # round references the previous labels 3× (vote join, seed
+    # carryover, left-anti), so the lazy plan grows ~3^k between cuts —
+    # fine for 4 rounds (≲100 extra nodes, and identical exchanges are
+    # deduped by ReuseExchange at runtime), runaway for unbounded k.
+    # Per-round eager checkpoints were measured as pure barrier cost at
+    # the query's max_iter=3 (every round = 1-2 driver-sequenced jobs
+    # of ~100 ms scheduling around ms-scale work).
     labels = seed_labels
     for i in range(max_iter):
         # contributions: each labeled node votes its label onto its
@@ -586,7 +551,7 @@ def _lpa_rounds(sym, seed_labels, max_iter):
             F.max(F.struct(F.col("_votes"), (-F.col("_lbl")).alias("_neg"))).alias("_w")
         ).select("_n", (-F.col("_w._neg")).alias("_lbl"))
         # seeds keep their label; everyone else takes this round's vote
-        new_labels = (
+        labels = (
             winner.join(seed_labels.select("_n", F.col("_lbl").alias("_sl")), "_n", "left")
             .select(
                 "_n",
@@ -600,9 +565,12 @@ def _lpa_rounds(sym, seed_labels, max_iter):
             )
         )
         if (i + 1) % 4 == 0 and (i + 1) < max_iter:
-            new_labels = new_labels.localCheckpoint()
-        labels = new_labels
-    return labels
+            labels = labels.localCheckpoint()
+    return labels.select(
+        F.col("_n").alias(node_col),
+        F.col("_lbl").alias(label_col),
+        F.col("_seed").alias("is_seed"),
+    )
 
 
 def core_numbers(

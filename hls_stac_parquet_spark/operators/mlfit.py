@@ -24,6 +24,12 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Largest feature matrix, in cells (rows × (features + intercept)),
+#: that logreg_fit collects to the driver and fits in numpy. 4M cells
+#: is 32 MB of float64 and keeps the 1M-row cap measured for the
+#: 3-feature q_logreg_train.
+LOGREG_DRIVER_MAX_CELLS = 4_000_000
+
 
 def logreg_fit(
     df: DataFrame,
@@ -48,24 +54,19 @@ def logreg_fit(
 
     # Size-tiered (r9, guide §1.2): the distributed loop's cost is
     # 2·iters driver-sequenced jobs of pure scheduler latency (~150 ms
-    # each around a ~5 ms aggregate at bench scale). Below the row cap
-    # the feature matrix is collected ONCE (one Arrow job, ≤ ~32 MB at
-    # the cap) and the identical GD runs vectorized in numpy — same
-    # init, step, iteration count, and same null semantics (a row with
-    # any NULL feature/label contributes to no gradient term: the
-    # literal-coefficient margin nulls resid whenever any x_j is null,
-    # and F.sum skips null terms — so dropna == the per-term
-    # exclusions; n stays the FULL row count either way). Weights
-    # agree with the distributed path to float-summation-order ulps
-    # (outputs round to ≥4 dp; pinned by tests + oracle parity).
-    # Above the cap — any corpus that matters at 100 TB — the
-    # aggregate loop below is unchanged.
-    import os
-
-    max_driver_rows = int(
-        os.environ.get("SPARK_GRAFT_LOGREG_DRIVER_MAX_ROWS", "1000000")
-    )
-    if n_row <= max_driver_rows:
+    # each around a ~5 ms aggregate at bench scale). Up to
+    # LOGREG_DRIVER_MAX_CELLS the feature matrix is collected ONCE (one
+    # Arrow job, ≤ 32 MB of float64 at the cap) and the identical GD
+    # runs vectorized in numpy — same init, step, iteration count, and
+    # same null semantics (a row with any NULL feature/label contributes
+    # to no gradient term: the literal-coefficient margin nulls resid
+    # whenever any x_j is null, and F.sum skips null terms — so dropna
+    # == the per-term exclusions; n stays the FULL row count either
+    # way, and a sum over no terms is 0). Weights agree with the
+    # distributed path to float-summation-order ulps (outputs round to
+    # ≥4 dp; pinned by tests + oracle parity). Above the cap — any
+    # corpus that matters at 100 TB — the aggregate loop below runs.
+    if n_row * (d + 1) <= LOGREG_DRIVER_MAX_CELLS:
         import numpy as np
 
         pdf = (
@@ -87,42 +88,25 @@ def logreg_fit(
             wv = wv - lr * grad
         return [float(x) for x in wv]
 
-    # AQE off for the loop (restored after): each round is a 1-row
-    # global aggregate, and AQE materializes its partial-agg stage as
-    # a SEPARATE job before re-planning the 1-partition exchange it
-    # could never improve — doubling the job count of a loop whose
-    # cost is pure scheduler latency (profiled r8: 44 trivial jobs,
-    # ~90 ms each around a ~5 ms aggregate; AQE off: 3.9 s → 3.4 s,
-    # bit-identical weights). Runtime re-planning has nothing to
-    # offer a fixed-shape scalar aggregate at any scale.
-    # CONTRACT (r9, VERDICT note): spark.conf is session-global — safe
-    # under the engine's sequential query execution, NOT thread-safe if
-    # queries ever run concurrently on one session (a concurrent
-    # deployment should drop the toggle; it is an optimization only).
-    spark = df.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        for _ in range(iters):
-            # margin = w·x + b as a literal-coefficient expression —
-            # codegen'd, recompiled per iteration (cheap: d is small)
-            margin = F.lit(w[d])
-            for j, c in enumerate(feats):
-                margin = margin + F.lit(w[j]) * F.col(c)
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-            resid = p - F.col(label_col).cast("double")
-            agg = df.agg(
-                *[
-                    F.sum(resid * F.col(c)).alias(f"g{j}")
-                    for j, c in enumerate(feats)
-                ],
-                F.sum(resid).alias("gb"),
-            ).collect()[0]
-            grad = [agg[f"g{j}"] / n_row + reg * w[j] for j in range(d)]
-            grad.append(agg["gb"] / n_row)
-            w = [wi - lr * gi for wi, gi in zip(w, grad)]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+    zero = F.lit(0.0)
+    for _ in range(iters):
+        # margin = w·x + b as a literal-coefficient expression —
+        # codegen'd, recompiled per iteration (cheap: d is small)
+        margin = F.lit(w[d])
+        for j, c in enumerate(feats):
+            margin = margin + F.lit(w[j]) * F.col(c)
+        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
+        resid = p - F.col(label_col).cast("double")
+        agg = df.agg(
+            *[
+                F.coalesce(F.sum(resid * F.col(c)), zero).alias(f"g{j}")
+                for j, c in enumerate(feats)
+            ],
+            F.coalesce(F.sum(resid), zero).alias("gb"),
+        ).collect()[0]
+        grad = [agg[f"g{j}"] / n_row + reg * w[j] for j in range(d)]
+        grad.append(agg["gb"] / n_row)
+        w = [wi - lr * gi for wi, gi in zip(w, grad)]
     return w
 
 

@@ -27,6 +27,20 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+#: ``grouped_quantiles(ranged="auto")`` takes the range tier above this
+#: optimizer size estimate: the tier's ~1 s fixed overhead pays off
+#: only above a few hundred MB (measured at sf0.1, r8).
+QUANTILES_RANGED_MIN_BYTES = 256 * 1024 * 1024
+#: ``grouped_weighted_median(ranged="auto")``'s break-even: the range
+#: tier wins 3.3 s vs 4.3 s at a 46 MB estimate and loses 1.51 s vs
+#: 0.96 s at sf0.1's ~4.6 MB (r9).
+WEIGHTED_MEDIAN_RANGED_MIN_BYTES = 32 * 1024 * 1024
+
+
+def _size_estimate(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df``'s plan, in bytes."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
 
 def grouped_quantiles(
     df: DataFrame,
@@ -66,25 +80,14 @@ def grouped_quantiles(
       the offset-dim jobs) cost ~1 s, while the funnel it removes is
       only ~1 s of task time — hash wins below a few hundred MB and
       loses badly above it (the funnel grows linearly, the overhead
-      doesn't). The threshold is the break-even with slack, env-
-      overridable (SPARK_GRAFT_RANGED_QUANTILES_MIN_BYTES) so a
-      cluster profile can move it without code changes.
+      doesn't). The threshold, ``QUANTILES_RANGED_MIN_BYTES``
+      (256 MiB), is the break-even with slack.
     """
     if len(probs) != len(aliases):
         raise ValueError("probs and aliases must align")
     gcols = list(group_cols)
     if ranged == "auto":
-        import os
-
-        threshold = int(
-            os.environ.get(
-                "SPARK_GRAFT_RANGED_QUANTILES_MIN_BYTES", str(256 * 1024 * 1024)
-            )
-        )
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        ranged = est > threshold
+        ranged = _size_estimate(df) > QUANTILES_RANGED_MIN_BYTES
     if ranged:
         # Explicit partition count: without it AQE coalesces the
         # small range shuffle back to ~advisory-size partitions (one
@@ -188,9 +191,9 @@ def grouped_weighted_median(
       range assignment is IDENTICAL for the cell pass and the re-read
       (repartitionByRange samples; two plans would draw different
       boundaries).
-    - ``"auto"``: by the optimizer's size estimate, same env override
-      (SPARK_GRAFT_RANGED_QUANTILES_MIN_BYTES) as grouped_quantiles
-      but a LOWER default break-even (32 MiB vs 256 MiB): the hash
+    - ``"auto"``: by the optimizer's size estimate, like
+      grouped_quantiles but at a LOWER break-even,
+      ``WEIGHTED_MEDIAN_RANGED_MIN_BYTES`` (32 MiB vs 256 MiB): the hash
       tier here funnels the fact through TWO per-group windows, and
       the measured crossover is earlier — at a 46 MB estimate
       (100×-replicated sf0.01) the range tier already wins 3.3 s vs
@@ -207,17 +210,7 @@ def grouped_weighted_median(
     """
     gcols = list(group_cols)
     if ranged == "auto":
-        import os
-
-        threshold = int(
-            os.environ.get(
-                "SPARK_GRAFT_RANGED_QUANTILES_MIN_BYTES", str(32 * 1024 * 1024)
-            )
-        )
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        ranged = est > threshold
+        ranged = _size_estimate(df) > WEIGHTED_MEDIAN_RANGED_MIN_BYTES
     if not ranged:
         wc = (
             Window.partitionBy(*gcols)

@@ -60,6 +60,13 @@ REFERENCE_PARQUET_PATH_FORMAT = (
     "{collection_id}-{year}-{month}.parquet"
 )
 
+#: the file format, fixed as in the reference (write.py:233-245): one
+#: WKB geometry column, rows clustered on the Hilbert key, zstd level 6
+GEOMETRY_COL = "geometry"
+SORT_COL = "hilbert_idx"
+COMPRESSION = "zstd"
+COMPRESSION_LEVEL = 6
+
 
 def geojson_polygon_to_wkb(coordinates: list) -> bytes:
     """GeoJSON Polygon coordinates → WKB (little-endian, type=3).
@@ -254,16 +261,12 @@ def write_geoparquet(
     year: int,
     month: int,
     version: str = "1",
-    geometry_col: str = "geometry",
-    sort_col: str = "hilbert_idx",
-    compression: str = "zstd",
-    compression_level: int = 6,
     target_partitions: int | None = None,
     reference_layout: bool = False,
 ) -> DataFrame:
     """Write a spatially clustered GeoParquet dataset.
 
-    Range-partitions on ``sort_col`` (total order across files —
+    Range-partitions on ``SORT_COL`` (total order across files —
     file k's keys all precede file k+1's), sorts within partitions,
     then each executor partition writes its own footer-stamped file.
     zstd level 6 matches the reference (write.py:243).
@@ -279,12 +282,10 @@ def write_geoparquet(
     if reference_layout:
         target_partitions = 1
     clustered = df.repartitionByRange(
-        *([target_partitions] if target_partitions else []), F.col(sort_col)
-    ).sortWithinPartitions(sort_col)
+        *([target_partitions] if target_partitions else []), F.col(SORT_COL)
+    ).sortWithinPartitions(SORT_COL)
     return write_geoparquet_partitions(
         clustered, dest, collection_id, year, month, version=version,
-        geometry_col=geometry_col, compression=compression,
-        compression_level=compression_level,
         reference_layout=reference_layout,
     )
 
@@ -296,9 +297,6 @@ def write_geoparquet_partitions(
     year: int,
     month: int,
     version: str = "1",
-    geometry_col: str = "geometry",
-    compression: str = "zstd",
-    compression_level: int = 6,
     reference_layout: bool = False,
 ) -> DataFrame:
     """Write each partition of ``df``, rows in their current order, as
@@ -334,14 +332,23 @@ def write_geoparquet_partitions(
             rel_dir, f"{prefix}-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet"
         )
 
-    def _manifest_row(path: str, table: pa.Table, bbox) -> dict:
+    def _write_file(table: pa.Table, key: str) -> dict:
+        """Encode, stamp and write one file; its manifest row."""
+        table = _encode_geometry_column(table, GEOMETRY_COL)
+        table, bbox = _stamp_geo_footer(table, GEOMETRY_COL)
+        with store.open_output(key) as f:
+            pq.write_table(
+                table, f,
+                compression=COMPRESSION,
+                compression_level=COMPRESSION_LEVEL,
+            )
         return {
-            "path": [path],
-            "n_rows": [table.num_rows],
-            "xmin": [bbox[0] if bbox else None],
-            "ymin": [bbox[1] if bbox else None],
-            "xmax": [bbox[2] if bbox else None],
-            "ymax": [bbox[3] if bbox else None],
+            "path": store.full_url(key),
+            "n_rows": table.num_rows,
+            "xmin": bbox[0] if bbox else None,
+            "ymin": bbox[1] if bbox else None,
+            "xmax": bbox[2] if bbox else None,
+            "ymax": bbox[3] if bbox else None,
         }
 
     if not store.distributed:
@@ -352,19 +359,8 @@ def write_geoparquet_partitions(
         spark = df.sparkSession
         if table.num_rows == 0:
             return spark.createDataFrame([], manifest_schema)
-        table = _encode_geometry_column(table, geometry_col)
-        table, bbox = _stamp_geo_footer(table, geometry_col)
-        key = _file_key(0)
-        with store.open_output(key) as f:
-            pq.write_table(
-                table, f,
-                compression=compression,
-                compression_level=compression_level,
-            )
-        row = _manifest_row(store.full_url(key), table, bbox)
-        return spark.createDataFrame(
-            [tuple(v[0] for v in row.values())], manifest_schema
-        )
+        row = _write_file(table, _file_key(0))
+        return spark.createDataFrame([tuple(row.values())], manifest_schema)
 
     def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -376,21 +372,10 @@ def write_geoparquet_partitions(
         table = pa.Table.from_batches(batch_list)
         if table.num_rows == 0:
             return
-        table = _encode_geometry_column(table, geometry_col)
-        table, bbox = _stamp_geo_footer(table, geometry_col)
         # `store` pickles into the task (config only); resolving the
         # URL here would miss driver-side scheme registrations
-        task_store = store
-        key = _file_key(pid)
-        with task_store.open_output(key) as f:
-            pq.write_table(
-                table, f,
-                compression=compression,
-                compression_level=compression_level,
-            )
-        yield pa.RecordBatch.from_pydict(
-            _manifest_row(task_store.full_url(key), table, bbox)
-        )
+        row = _write_file(table, _file_key(pid))
+        yield pa.RecordBatch.from_pylist([row])
 
     return df.mapInArrow(write_partition, manifest_schema)
 
@@ -403,10 +388,6 @@ def optimize_geoparquet_month(
     month: int,
     version: str = "1",
     target_partitions: int | None = None,
-    geometry_col: str = "geometry",
-    sort_col: str = "hilbert_idx",
-    compression: str = "zstd",
-    compression_level: int = 6,
     reference_layout: bool = False,
 ) -> dict:
     """Compact/re-cluster an already-written collection-month in
@@ -443,16 +424,7 @@ def optimize_geoparquet_month(
                 "manifest": []}
     df = spark.read.parquet(spark_base)
     manifest = write_geoparquet(
-        df,
-        dest,
-        collection_id,
-        year,
-        month,
-        version=version,
-        geometry_col=geometry_col,
-        sort_col=sort_col,
-        compression=compression,
-        compression_level=compression_level,
+        df, dest, collection_id, year, month, version=version,
         target_partitions=target_partitions,
         reference_layout=reference_layout,
     ).collect()

@@ -73,6 +73,19 @@ def pack_days(days: list[str], max_partitions: int) -> list[list[str]]:
     return [days[k * total // n:(k + 1) * total // n] for k in range(n)]
 
 
+def _fixture_days(fixture_dir: str) -> list[str]:
+    """The days that have a fixture file in ``fixture_dir``, in order."""
+    return sorted(f[:-5] for f in os.listdir(fixture_dir) if f.endswith(".json"))
+
+
+def _day_range(start: dt.date, stop: dt.date) -> list[str]:
+    """ISO days from ``start`` up to, not including, ``stop``."""
+    return [
+        (start + dt.timedelta(days=i)).isoformat()
+        for i in range((stop - start).days)
+    ]
+
+
 def _on_day(entry: dict, day: str) -> bool:
     """A granule belongs to the day of its ``time_start``. A catalog
     day query matches every granule that *overlaps* the day, so one
@@ -122,18 +135,13 @@ class CmrReader(DataSourceReader):
     # --- partition planning: runs of days, ≤ max_partitions (A22) -------
     def partitions(self) -> list[InputPartition]:
         if self.temporal_start and self.temporal_end:
-            start = dt.date.fromisoformat(self.temporal_start[:10])
             end = dt.date.fromisoformat(self.temporal_end[:10])
-            days = [
-                (start + dt.timedelta(days=i)).isoformat()
-                for i in range((end - start).days + 1)
-            ]
-        elif self.fixture_dir:
-            days = sorted(
-                f[:-5]
-                for f in os.listdir(self.fixture_dir)
-                if f.endswith(".json")
+            days = _day_range(
+                dt.date.fromisoformat(self.temporal_start[:10]),
+                end + dt.timedelta(days=1),
             )
+        elif self.fixture_dir:
+            days = _fixture_days(self.fixture_dir)
         else:
             return [_DaysPartition(["all"])]
         return [_DaysPartition(r) for r in pack_days(days, self.max_partitions)]
@@ -180,16 +188,11 @@ class CmrReader(DataSourceReader):
         return _on_day(entry, day)
 
     def _read_fixture(self, day: str) -> Iterator[tuple]:
-        if day == "all":
-            paths = [
-                os.path.join(self.fixture_dir, f)
-                for f in sorted(os.listdir(self.fixture_dir))
-                if f.endswith(".json")
-            ]
-        else:
-            p = os.path.join(self.fixture_dir, f"{day}.json")
-            paths = [p] if os.path.exists(p) else []
-        for path in paths:
+        days = _fixture_days(self.fixture_dir) if day == "all" else [day]
+        for d in days:
+            path = os.path.join(self.fixture_dir, f"{d}.json")
+            if not os.path.exists(path):
+                continue
             with open(path) as fh:
                 data = json.load(fh)
             for entry in data.get("feed", {}).get("entry", []):
@@ -351,20 +354,14 @@ class CmrStreamReader(SimpleDataSourceStreamReader):
     def _available_days(self, cursor: str) -> list[str]:
         """Days ≥ cursor ready to consume, in order, capped per batch."""
         if self.fixture_dir:
-            days = sorted(
-                f[:-5]
-                for f in os.listdir(self.fixture_dir)
-                if f.endswith(".json")
-            )
-            days = [d for d in days if d >= cursor]
+            days = [d for d in _fixture_days(self.fixture_dir) if d >= cursor]
+        elif not cursor:
+            return []
         else:
-            if not cursor:
-                return []
-            today = self._today()
-            days, d = [], dt.date.fromisoformat(cursor)
-            while d.isoformat() < today:
-                days.append(d.isoformat())
-                d += dt.timedelta(days=1)
+            days = _day_range(
+                dt.date.fromisoformat(cursor),
+                dt.date.fromisoformat(self._today()),
+            )
         return days[: self.max_days_per_batch]
 
     def initialOffset(self) -> dict:
@@ -382,17 +379,12 @@ class CmrStreamReader(SimpleDataSourceStreamReader):
     def readBetweenOffsets(self, start: dict, end: dict):
         # replay: re-fetch exactly the committed [start, end) day range
         if self.fixture_dir:
-            days = sorted(
-                f[:-5]
-                for f in os.listdir(self.fixture_dir)
-                if f.endswith(".json")
-            )
+            days = _fixture_days(self.fixture_dir)
         else:
-            days, d = [], dt.date.fromisoformat(start["next_day"])
-            last = dt.date.fromisoformat(end["next_day"])
-            while d < last:
-                days.append(d.isoformat())
-                d += dt.timedelta(days=1)
+            days = _day_range(
+                dt.date.fromisoformat(start["next_day"]),
+                dt.date.fromisoformat(end["next_day"]),
+            )
         days = [d for d in days if start["next_day"] <= d < end["next_day"]]
         # MUST be an iterator: unlike read() (driver-side, list is
         # fine for the prefetch cache), readBetweenOffsets executes

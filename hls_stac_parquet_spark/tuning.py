@@ -1,69 +1,10 @@
-"""Cluster-scale tuning arithmetic — the partition-sizing rules of
-thumb applied by code instead of folklore.
-
-The reference hand-sizes its workers (8 vCPU / 64 GiB Batch jobs,
-``infrastructure/src/hls-batch-stack.ts:261-262``); a Spark job's
-equivalent decision is how many shuffle partitions and how large a
-scan split to use.  These helpers make the arithmetic explicit and
-testable so a 100 TB deployment starts from defensible numbers
-instead of the 200-partition default:
-
-- scan splits: ``maxPartitionBytes`` bounds mapper memory; the
-  default 128 MiB is right for zstd parquet (decompressed batches
-  stay inside executor memory headroom).
-- shuffle partitions: target ~128-200 MiB of *shuffle* data per
-  partition, rounded up to a multiple of total cores so every wave
-  is full; too few → spill + GC, too many → scheduler overhead and
-  tiny files.
-- AQE then coalesces/splits at runtime from these static ceilings
-  (it can only merge what exists — the static number is the upper
-  bound on parallelism, so it must err high, never low).
+"""Partition and materialization helpers shared by the operators and
+queries: spreading a compact input before a CPU-heavy stage, handing
+driver-computed rows to the JVM as Arrow, a row-count guard on
+broadcast dims, and serialized local checkpoints.
 """
 
 from __future__ import annotations
-
-MIB = 1024 * 1024
-DEFAULT_TARGET_PARTITION_BYTES = 128 * MIB
-
-
-def recommended_shuffle_partitions(
-    shuffle_bytes: int,
-    total_cores: int,
-    target_partition_bytes: int = DEFAULT_TARGET_PARTITION_BYTES,
-) -> int:
-    """Shuffle partition count for an expected shuffle volume.
-
-    max(bytes / target, cores), rounded UP to a whole multiple of
-    ``total_cores`` so the final stage wave is full — a 100 TB
-    shuffle at 128 MiB/partition on a 1000-executor × 8-core cluster
-    lands at ~800k partitions (and AQE coalesces the skewed tail).
-    """
-    if shuffle_bytes < 0 or total_cores <= 0:
-        raise ValueError("shuffle_bytes must be ≥ 0 and total_cores > 0")
-    need = max(1, -(-shuffle_bytes // target_partition_bytes))
-    waves = max(1, -(-need // total_cores))
-    return waves * total_cores
-
-
-def recommended_conf(
-    input_bytes: int,
-    total_cores: int,
-    shuffle_fraction: float = 0.5,
-) -> dict[str, str]:
-    """Static conf for a job scanning ``input_bytes``: scan split
-    size, shuffle partitions (assuming ``shuffle_fraction`` of the
-    input crosses the wire — override per workload), and AQE advisory
-    size aligned with the target partition size."""
-    shuffle_bytes = int(input_bytes * shuffle_fraction)
-    return {
-        "spark.sql.files.maxPartitionBytes": str(DEFAULT_TARGET_PARTITION_BYTES),
-        "spark.sql.shuffle.partitions": str(
-            recommended_shuffle_partitions(shuffle_bytes, total_cores)
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(
-            DEFAULT_TARGET_PARTITION_BYTES
-        ),
-    }
 
 
 def parallelize_for_udf(df, min_factor: int = 1):

@@ -17,13 +17,9 @@ SF001 = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("hls-spark-tests", shuffle_partitions=8)
     yield s
-    # explicit stop at session finish: without it the JVM teardown
-    # races the interpreter exit and full-suite runs can die before
-    # pytest prints its final summary line (round-4 verdict note).
-    # stop() alone proved insufficient (round 5: full run still exited
-    # 1 with the summary suppressed AFTER a 100% dot matrix) — the
-    # Py4J gateway's callback/daemon threads outlive it; shut the
-    # gateway down explicitly and give its threads a beat to exit.
+    # explicit stop at session finish, then shut the Py4J gateway down
+    # and give its callback/daemon threads a beat to exit, so no JVM
+    # thread outlives the interpreter.
     try:
         sc = s.sparkContext
         s.stop()

@@ -122,10 +122,12 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert abs(sum(got.values()) - n) < 1e-6
 
 
-def test_label_propagation_matches_python_sync(spark):
+@pytest.mark.parametrize("max_iter", [4, 9])
+def test_label_propagation_matches_python_sync(spark, max_iter):
     """propagate_labels == a plain-Python synchronous replay with the
     same deterministic tie rule (count desc, label asc), on a graph
-    with two seed communities and a contested middle node."""
+    with two seed communities and a contested middle node. At 9
+    rounds the every-4th-round lineage cut runs twice."""
     from hls_stac_parquet_spark.operators.graph import propagate_labels
 
     edges = [
@@ -140,7 +142,7 @@ def test_label_propagation_matches_python_sync(spark):
         for r in propagate_labels(
             spark.createDataFrame(edges, "src long, dst long"),
             spark.createDataFrame(seeds, "node long, label long"),
-            max_iter=4,
+            max_iter=max_iter,
         ).collect()
     }
 
@@ -151,7 +153,7 @@ def test_label_propagation_matches_python_sync(spark):
         adj.setdefault(b, set()).add(a)
     seed_map = dict(seeds)
     labels = dict(seed_map)
-    for _ in range(4):
+    for _ in range(max_iter):
         new = {}
         for n in adj:
             counts = {}

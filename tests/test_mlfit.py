@@ -176,18 +176,23 @@ def test_logreg_driver_tier_matches_distributed_tier(
     spark, training_data, monkeypatch
 ):
     """r9 size tier: the collect-once numpy fit (engaged below the
-    row cap) and the distributed aggregate loop (forced here via the
-    cap override) produce the same weights up to float-summation
-    order."""
-    from hls_stac_parquet_spark.operators.mlfit import logreg_fit
+    cell cap) and the distributed aggregate loop (forced here by a
+    zero cap) produce the same weights up to float-summation order —
+    on the training data, and on all-NULL features, where no row
+    contributes a gradient term and both tiers return zeros."""
+    from hls_stac_parquet_spark.operators import mlfit
 
     X, y = training_data
     rows = [(float(a), float(b), float(c), float(t))
             for (a, b, c), t in zip(X, y)]
-    df = spark.createDataFrame(
-        rows, "x1 double, x2 double, x3 double, y double"
-    )
-    fast = logreg_fit(df, ["x1", "x2", "x3"], "y", iters=15, lr=0.5)
-    monkeypatch.setenv("SPARK_GRAFT_LOGREG_DRIVER_MAX_ROWS", "0")
-    dist = logreg_fit(df, ["x1", "x2", "x3"], "y", iters=15, lr=0.5)
-    np.testing.assert_allclose(fast, dist, rtol=1e-9, atol=1e-9)
+    schema = "x1 double, x2 double, x3 double, y double"
+    frames = [
+        spark.createDataFrame(rows, schema),
+        spark.createDataFrame([(None, None, None, 1.0)] * 5, schema),
+    ]
+    feats = ["x1", "x2", "x3"]
+    fast = [mlfit.logreg_fit(df, feats, "y", iters=15, lr=0.5) for df in frames]
+    monkeypatch.setattr(mlfit, "LOGREG_DRIVER_MAX_CELLS", 0)
+    dist = [mlfit.logreg_fit(df, feats, "y", iters=15, lr=0.5) for df in frames]
+    np.testing.assert_allclose(fast[0], dist[0], rtol=1e-9, atol=1e-9)
+    assert fast[1] == dist[1] == [0.0] * 4

@@ -330,22 +330,6 @@ def test_dq_expectations_plan(spark):
     assert plan.count("FileScan parquet") <= 4
 
 
-def test_tuning_arithmetic():
-    from hls_stac_parquet_spark.tuning import (
-        MIB,
-        recommended_conf,
-        recommended_shuffle_partitions,
-    )
-
-    # 100 TB shuffle on 8000 cores: ~819k partitions, whole waves
-    p = recommended_shuffle_partitions(100 * 1024 * 1024 * MIB, 8000)
-    assert p % 8000 == 0 and p >= 800_000
-    # tiny job never drops below one full wave
-    assert recommended_shuffle_partitions(1, 32) == 32
-    conf = recommended_conf(10 * 1024 * MIB, 32)
-    assert int(conf["spark.sql.shuffle.partitions"]) % 32 == 0
-
-
 def test_corr_matrix_single_scan_agg(spark):
     """All six correlations must fuse into ONE aggregate over one
     scan — not one scan-agg per pair."""

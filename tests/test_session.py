@@ -1,8 +1,16 @@
-"""Session defaults (session.py) that depend on the host."""
+"""Session defaults (session.py) that depend on the host, and the rule
+that only session.py configures the session."""
 
 from __future__ import annotations
 
+import pathlib
+import re
+
+import hls_stac_parquet_spark
 from hls_stac_parquet_spark.session import default_driver_memory
+
+PACKAGE = pathlib.Path(hls_stac_parquet_spark.__file__).parent
+SESSION_STATE = re.compile(r"spark\.conf\.set|conf\.unset|os\.environ|os\.getenv")
 
 
 def test_driver_memory_is_half_the_host_capped_at_32g(tmp_path, monkeypatch):
@@ -21,3 +29,18 @@ def test_driver_memory_env_wins(tmp_path, monkeypatch):
     small = tmp_path / "small"
     small.write_text("MemTotal:       16479424 kB\n")
     assert default_driver_memory(str(small)) == "3g"
+
+
+def test_only_session_module_reads_env_or_sets_conf():
+    """Library code never changes session state: the environment and
+    Spark conf are session.py's. queries/registry.py keeps its per-read
+    nanosAsLong conf for nanosecond-timestamp tables."""
+    allowed = {PACKAGE / "session.py", PACKAGE / "queries" / "registry.py"}
+    offenders = [
+        f"{path.relative_to(PACKAGE)}:{n}: {line.strip()}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path not in allowed
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if SESSION_STATE.search(line)
+    ]
+    assert offenders == []

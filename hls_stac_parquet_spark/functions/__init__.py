@@ -23,7 +23,6 @@ from hls_stac_parquet_spark.functions.urls import (  # noqa: F401
     MGRS_TILE_PATTERN,
     extract_mgrs,
     url_host,
-    url_path,
     url_scheme,
 )
 

@@ -18,8 +18,9 @@ the sort scales horizontally:
   vectorized pandas UDF, matching the reference's (p, n, sentinel)
   contract.
 
-At 100 TB either key feeds ``repartitionByRange(key).sortWithin
-Partitions(key)`` — a total order with no driver materialization.
+The clustering itself belongs to the GeoParquet sink
+(``sinks/geoparquet.py::cluster_month``): a range-partitioned sort on
+the key — a total order with no driver materialization.
 """
 
 from __future__ import annotations
@@ -182,20 +183,3 @@ def hilbert_index_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
             lat.to_numpy(dtype=np.float64, na_value=np.nan),
         )
     )
-
-
-def with_hilbert_key(df, lon_col: str, lat_col: str, out_col: str = "hilbert_idx"):
-    """Attach the Hilbert clustering key column."""
-    return df.withColumn(out_col, hilbert_index_udf(F.col(lon_col), F.col(lat_col)))
-
-
-def cluster_by_hilbert(df, lon_col: str, lat_col: str, key_col: str = "hilbert_idx"):
-    """Spatially cluster a DataFrame along the Hilbert curve.
-
-    Distributed replacement for the reference's in-memory month sort
-    (write.py:204-219): range partition on the key (samples ranges, no
-    global collect) then sort within partitions — a total order across
-    output files with no driver bottleneck.
-    """
-    keyed = with_hilbert_key(df, lon_col, lat_col, key_col)
-    return keyed.repartitionByRange(F.col(key_col)).sortWithinPartitions(key_col)

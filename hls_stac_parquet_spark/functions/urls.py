@@ -33,7 +33,3 @@ def url_scheme(url: Column | str) -> Column:
 
 def url_host(url: Column | str) -> Column:
     return F.parse_url(_col(url), F.lit("HOST"))
-
-
-def url_path(url: Column | str) -> Column:
-    return F.parse_url(_col(url), F.lit("PATH"))

@@ -19,7 +19,6 @@ from hls_stac_parquet_spark.operators.dedup import (  # noqa: F401
     simhash_candidate_pairs,
 )
 from hls_stac_parquet_spark.operators.manifests import (  # noqa: F401
-    anti_join_existing,
     fan_in_manifests,
     split_failures,
 )

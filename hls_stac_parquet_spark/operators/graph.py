@@ -17,6 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: canonical edges up to which :func:`core_numbers` peels on the driver
+CORE_NUMBERS_DRIVER_MAX = 200_000
+#: pairs up to which :func:`connected_components_auto` runs union-find
+#: on the driver
+CC_DRIVER_MAX = 1_000_000
+
 
 def connected_components(
     edges: DataFrame,
@@ -578,7 +584,6 @@ def core_numbers(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    driver_max: int = 200_000,
 ) -> DataFrame:
     """Coreness (k-core number) of every node via the h-index
     iteration (Lü et al., "The H-index of a network node and its
@@ -613,12 +618,12 @@ def core_numbers(
     matters).
 
     Tiering (same counted-guard pattern as
-    :func:`connected_components_auto`): edge sets ≤ ``driver_max``
-    canonical edges run the O(E+V) bucket-queue peeling on the driver
-    — the h-index loop's per-round fixed cost (~1 s × O(rounds) in
-    local mode) dwarfs a ≤200k-row collect. Pass ``driver_max=0`` to
-    force the distributed path (the property tests pin both tiers to
-    textbook peeling).
+    :func:`connected_components_auto`): edge sets ≤
+    :data:`CORE_NUMBERS_DRIVER_MAX` canonical edges run the O(E+V)
+    bucket-queue peeling on the driver — the h-index loop's per-round
+    fixed cost (~1 s × O(rounds) in local mode) dwarfs a ≤200k-row
+    collect. The property tests set the cap to 0 to force the
+    distributed path and pin both tiers to textbook peeling.
     """
     e = (
         edges.select(
@@ -629,7 +634,7 @@ def core_numbers(
         .distinct()
         .localCheckpoint()
     )
-    if e.count() <= driver_max:
+    if e.count() <= CORE_NUMBERS_DRIVER_MAX:
         adj: dict = {}
         for r in e.collect():
             adj.setdefault(r._u, set()).add(r._v)
@@ -736,7 +741,6 @@ def connected_components_auto(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    driver_max: int = 1_000_000,
     max_iter: int = 50,
 ) -> DataFrame:
     """Tiered connected components — same ``(node, component=min
@@ -744,7 +748,7 @@ def connected_components_auto(
     with the tier picked by a counted guard, mirroring the
     brute-vs-blocked tiering in operators/similarity.py:
 
-    - pair sets ≤ ``driver_max`` rows (the common case for dedup:
+    - pair sets ≤ :data:`CC_DRIVER_MAX` rows (the common case for dedup:
       candidate PAIRS are orders of magnitude smaller than the
       corpus) run a driver-side union-find — one collect of long
       pairs, O(E α(E)) in plain Python, zero iterative Spark rounds.
@@ -760,7 +764,7 @@ def connected_components_auto(
     candidate-generation pipeline without it running twice."""
     edges = edges.select(src, dst).localCheckpoint()
     n = edges.count()
-    if n > driver_max:
+    if n > CC_DRIVER_MAX:
         return connected_components_star(edges, src, dst, max_iter)
     rows = edges.select(src, dst).collect()
     parent: dict = {}

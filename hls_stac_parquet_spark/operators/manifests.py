@@ -1,10 +1,7 @@
-"""Manifest-flow operators: skip-existing, fan-in, failure split.
+"""Manifest-flow operators: fan-in, failure split.
 
-Three small reference behaviors as set/flow algebra:
+Two small reference behaviors as set/flow algebra:
 
-- skip-existing (A9, links.py:100-103): left anti-join of work units
-  against already-materialized outputs (replaces per-key HEAD probes
-  with one distributed join)
 - fan-in (A12, write.py:161-168): multi-file read + explode — Spark's
   file listing does the driver loop's job in parallel
 - failure split (A19, fetch.py:78-88): tag rows with an error column,
@@ -15,13 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def anti_join_existing(
-    work_units: DataFrame, existing: DataFrame, keys: list[str]
-) -> DataFrame:
-    """Work units not yet materialized (idempotent re-run guard)."""
-    return work_units.join(existing, keys, "left_anti")
 
 
 def fan_in_manifests(manifest_df: DataFrame, urls_col: str = "urls") -> DataFrame:

@@ -30,7 +30,7 @@ from hls_stac_parquet_spark.store import get_store
 
 
 def extract_stac_json_links(
-    granules: DataFrame, protocol: str = "https", url_col: str = "url"
+    granules: DataFrame, protocol: str = "https"
 ) -> DataFrame:
     """Per granule, the first link href ending ``stac.json`` with the
     requested protocol (cmr_api.py:74-105). Malformed/linkless rows
@@ -48,9 +48,8 @@ def extract_stac_json_links(
         ),
         1,
     )["href"]
-    return (
-        granules.withColumn(url_col, first_match)
-        .filter(F.col(url_col).isNotNull())
+    return granules.withColumn("url", first_match).filter(
+        F.col("url").isNotNull()
     )
 
 

@@ -12,8 +12,10 @@ Spark shape — plan the month from its URLs, then fetch each item once:
         collected (≤ ~56k HLS tiles) → tile centres + Hilbert keys in
         numpy on the driver (functions/mgrs.py::tile_keys)
       → broadcast-join the keys onto the URL rows (JVM side)
-      → repartitionByRange(URL rows on the key) +
-        sortWithinPartitions — the sampler re-reads only manifests
+      → the sink clusters the URL rows into its month layout
+        (geoparquet.py::cluster_month: one range partition on the key
+        per output file, sorted within) — the sampler re-reads only
+        manifests
       → one stage per file: fetch (mapInPandas thread pools, the key
         columns ride along in order) → failures counted by
         df.observe → from_json(explicit STAC schema) → hoist columns
@@ -32,7 +34,6 @@ anti-pattern this replaces: its 64 GiB Batch instance ceiling
 from __future__ import annotations
 
 import datetime as dt
-import math
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -46,21 +47,13 @@ from hls_stac_parquet_spark.operators.completeness import (
 )
 from hls_stac_parquet_spark.operators.manifests import fan_in_manifests, split_failures
 from hls_stac_parquet_spark.sinks.geoparquet import (
+    cluster_month,
     geoparquet_month_dir,
     write_geoparquet_partitions,
 )
 from hls_stac_parquet_spark.sinks.manifest import read_manifests
 from hls_stac_parquet_spark.sources.stac_fetch import fetch_stac_items
 from hls_stac_parquet_spark.store import get_store
-
-#: URLs per output file (and per fetch/write task) when the caller
-#: gives no ``target_partitions``. The writer holds a whole partition
-#: as one Arrow table: a full HLS item (18 assets, 5-point footprint)
-#: is ~5.6 KB there and ~210 B on disk after zstd-6 (pyarrow, 20k
-#: synthetic items), so 50k rows cap a task near 280 MB of worker
-#: memory and give ~10 MB files — 2-20 files for a 10^5-10^6-item
-#: month. A month below it stays the reference's single file.
-ROWS_PER_FILE = 50_000
 
 _KEYS_SCHEMA = "mgrs_tile string, lat double, lon double, hilbert_idx bigint"
 
@@ -106,15 +99,12 @@ def write_monthly_stac_geoparquet(
     skip_existing: bool = True,
     version: str = "1",
     reference_layout: bool = False,
-    target_partitions: int | None = None,
 ) -> dict:
     """Compact one collection-month of cached links into clustered
     GeoParquet. Returns {written, failed, skipped} counts plus the
-    file manifest rows. ``reference_layout=True`` emits the exact
-    one-object-per-month reference path (constants.py:8).
-
-    Files: ``target_partitions`` when given, else one per
-    :data:`ROWS_PER_FILE` URLs."""
+    file manifest rows. The sink picks the layout from the URL count
+    (:func:`cluster_month`), or with ``reference_layout=True`` the
+    exact one-object-per-month reference path (constants.py:8)."""
     store = get_store(dest)
     month_dir = geoparquet_month_dir(
         collection_id, year, month, version, reference_layout
@@ -136,17 +126,10 @@ def write_monthly_stac_geoparquet(
     keyed, n_urls = key_urls(fan_in_manifests(manifests))
     if n_urls == 0:
         return {"skipped": False, "written": 0, "failed": 0, "files": []}
-    if reference_layout:
-        n_files = 1
-    else:
-        n_files = target_partitions or max(1, math.ceil(n_urls / ROWS_PER_FILE))
 
-    # the explicit count pins the file layout: AQE would coalesce these
-    # tiny URL rows into a few huge fetch tasks. Sorting the URL rows
-    # sorts the items: the fetch and the hoist keep row order.
-    clustered = keyed.repartitionByRange(
-        n_files, "hilbert_idx"
-    ).sortWithinPartitions("hilbert_idx")
+    # clustering the URL rows clusters the items: the fetch and the
+    # hoist keep row order, so nothing after the fetch shuffles
+    clustered = cluster_month(keyed, n_urls, reference_layout)
 
     fetch_stats = Observation()
     fetched = fetch_stac_items(clustered).observe(

@@ -18,17 +18,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hls_stac_parquet_spark.sinks.geoparquet import GEOPARQUET_DATASET_DIR
+from hls_stac_parquet_spark.store import get_store
+
 
 def read_geoparquet(spark: SparkSession, dest: str, collection_id: str,
                     version: str = "1") -> DataFrame:
     """Read the whole clustered dataset (hive year=/month= partitions
     discovered and pruned by Spark's file index)."""
-    import os
-
-    return spark.read.option("basePath", os.path.join(dest, f"v{version}",
-                                                      collection_id)).parquet(
-        os.path.join(dest, f"v{version}", collection_id)
+    root = get_store(dest).spark_url(
+        GEOPARQUET_DATASET_DIR.format(version=version, collection_id=collection_id)
     )
+    return spark.read.option("basePath", root).parquet(root)
 
 
 def bbox_filter(w: float, s: float, e: float, n: float):

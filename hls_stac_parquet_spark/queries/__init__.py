@@ -9,11 +9,10 @@ Registration ORDER is part of the contract: the driver's correctness
 gate verifies only the first 50 registry entries per round, so after
 the modules populate the registry we reorder it to drain the
 never-driver-checked backlog fastest: queries that failed their last
-driver check first (prove the fix), then never-checked queries
-(flagship LLM-data queries biased to the front), then ever-green
-queries — §2.B contract queries first within that tier, least-verified
-first after (CHECKED_HISTORY.json, updated each round from
-CORRECTNESS_r{N}.json via scripts/update_history.py). Once the
+driver check first (prove the fix), then never-checked queries, then
+ever-green queries — §2.B contract queries first within a tier,
+least-verified first after (CHECKED_HISTORY.json alone, updated each
+round from CORRECTNESS_r{N}.json via scripts/update_history.py). Once the
 backlog is drained the window naturally returns to re-verifying the
 §2.B contract block every round; while a backlog exists, contract
 queries already proven green across rounds yield their slots —
@@ -52,88 +51,16 @@ CONTRACT_QUERIES = [
 
 
 def load_check_history() -> dict:
-    """Merged per-query driver-check history: CHECKED_HISTORY.json
-    plus any CORRECTNESS_r{N}.json not yet folded in (rotation stays
-    fresh even when scripts/update_history.py wasn't run)."""
+    """Per-query driver-check history from CHECKED_HISTORY.json
+    (``{name: {"checked": [rounds], "green": [rounds]}}``), which
+    scripts/update_history.py folds each CORRECTNESS_r{N}.json into;
+    empty on a checkout without it."""
     root = _os.path.join(_os.path.dirname(_os.path.abspath(__file__)), "..", "..")
-    hist: dict = {}
     try:
         with open(_os.path.join(root, "CHECKED_HISTORY.json")) as f:
-            hist = _json.load(f)
-    except Exception:
-        pass
-    # self-maintaining: fold in any driver CORRECTNESS_r{N}.json not yet
-    # merged into the history file (scripts/update_history.py is the
-    # durable merge; this keeps rotation fresh even if it wasn't run)
-    try:
-        import glob as _glob
-        import re as _re
-
-        for path in _glob.glob(_os.path.join(root, "CORRECTNESS_r*.json")):
-            m = _re.search(r"_r(\d+)\.json$", path)
-            if not m:
-                continue
-            rnd = int(m.group(1))
-            with open(path) as f:
-                corr = _json.load(f)
-            for name, row in corr.items():
-                ent = hist.setdefault(name, {"checked": [], "green": []})
-                if rnd not in ent["checked"]:
-                    ent["checked"].append(rnd)
-                # A rows-only query (no oracle_sql entry) gets a driver row
-                # with err == "no_oracle" and only spark_rows populated —
-                # that IS the driver's rows-only pass, so count it green.
-                # Without this, rows-only queries land in tier 0
-                # ("checked-but-failed") forever and clog the rotation.
-                if row.get("err") == "no_oracle":
-                    ok = (row.get("spark_rows") or 0) >= 0 and row.get(
-                        "spark_rows"
-                    ) is not None
-                else:
-                    ok = row.get("err") is None and all(
-                        v is not False
-                        for v in (
-                            row.get("rows_match"),
-                            row.get("schema_match"),
-                            row.get("hash_match"),
-                        )
-                    )
-                if ok and rnd not in ent["green"]:
-                    ent["green"].append(rnd)
-    except Exception:
-        pass
-    return hist
-
-
-# North-star LLM-data operators (BASELINE.json mandate): when they have
-# no driver-green row yet, they rotate into the window before the rest
-# of the never-checked tail.
-PRIORITY_QUERIES = [
-    "q_corpus_pipeline", "q_dedup_clusters", "q_dedup_survivors",
-    "q_tfidf", "q_bm25", "q_embedding_dedup", "q_substring_dup_pairs",
-    "q_cosine_pairs", "q_simhash_dedup", "q_train_test_split",
-    "q_jaccard_prefix_join", "q_lang_id", "q_quality_score",
-    "q_token_count", "q_fingerprint",
-    # second wave: the fourth-session flagships, so each earns a
-    # driver row before the long alphabetical tail drains
-    "q_dedup_clusters_incremental", "q_knn_classifier", "q_psi_drift",
-    "q_item_item_cf", "q_geo_radius_join", "q_global_quantiles",
-    "q_ndcg", "q_seasonal_decompose", "q_er_sorted_neighborhood",
-    "q_golden_record", "q_theil_sen", "q_cusum_changepoint",
-    "q_sssp_weighted", "q_textrank",
-    # third wave: fifth-session flagships
-    "q_dsir_resample", "q_boilerplate_removal", "q_token_budget_mix",
-    "q_split_leakage", "q_png_decode_stats", "q_wav_decode_pipeline",
-    # sixth-session flagships
-    "q_perplexity_filter", "q_jpeg_decode_stats", "q_gif_frame_pipeline",
-    # round-4 flagships
-    "q_url_canonical_dedup", "q_k_anonymity", "q_cuped", "q_dp_counts",
-    "q_sql_text_interface", "q_ohlc_bars", "q_degree_distribution",
-    "q_token_fertility",
-    # round-6 flagships
-    "q_hits", "q_adamic_adar", "q_conformal_threshold",
-    "q_ece_calibration", "q_kl_source_divergence", "q_propensity_ipw",
-]
+            return _json.load(f)
+    except FileNotFoundError:
+        return {}
 
 
 # Queries added THIS round: within the never-checked tier they queue
@@ -154,7 +81,6 @@ DEBUT_QUERIES = frozenset({
 
 def _rotation_order() -> list[str]:
     hist = load_check_history()
-    prio_rank = {n: i for i, n in enumerate(PRIORITY_QUERIES)}
     contract_rank = {n: i for i, n in enumerate(CONTRACT_QUERIES)}
 
     def prio(name: str) -> tuple:
@@ -168,12 +94,11 @@ def _rotation_order() -> list[str]:
         # within a tier: the standing backlog before this round's
         # debuts, then §2.B contract queries first (the declared
         # surface re-verifies soonest once green slots open up), then
-        # flagship LLM-data queries, then the alphabetical tail
+        # the alphabetical tail
         return (
             tier,
             1 if name in DEBUT_QUERIES else 0,
             contract_rank.get(name, len(CONTRACT_QUERIES)),
-            prio_rank.get(name, len(PRIORITY_QUERIES)),
             name,
         )
 

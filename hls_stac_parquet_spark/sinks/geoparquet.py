@@ -20,11 +20,12 @@ is a two-stage Spark-first design:
 writes route through the driver since Spark worker processes can't
 see an in-process store).
 
-Layout: the default keeps Spark's strictly-better-at-scale N
-range-partitioned files per month. ``reference_layout=True`` emits
-the EXACT reference path contract instead —
-``v{version}/{collection_id}/year={year}/month={month}/
-{collection_id}-{year}-{month}.parquet`` (constants.py:8, month
+Layout: this module alone decides how a collection-month is laid out.
+A month of ``n`` rows is ``ceil(n / ROWS_PER_FILE)`` range-partitioned
+files (:func:`cluster_month`), named by :data:`GEOPARQUET_PATH_TEMPLATE`;
+E2, OPTIMIZE and the bbox reader all go through it.
+``reference_layout=True`` emits the EXACT reference path contract
+instead — :data:`REFERENCE_PARQUET_PATH_FORMAT` (constants.py:8, month
 unpadded, one object per collection-month) — so a consumer globbing
 the reference's names finds ours.
 
@@ -35,6 +36,7 @@ observability the reference lacks.
 from __future__ import annotations
 
 import json
+import math
 import posixpath
 import struct
 import uuid
@@ -43,22 +45,34 @@ from typing import Iterator
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from hls_stac_parquet_spark.store import get_store
 
-#: default output path template (N files; constants.py:8 is the
-#: 1-file reference form emitted by reference_layout=True)
+#: one collection's dataset root; both month templates extend it
+GEOPARQUET_DATASET_DIR = "v{version}/{collection_id}"
+
+#: default output path: one file per range partition ``part``, plus a
+#: random ``token`` so a rewrite never overwrites a file it still reads
 GEOPARQUET_PATH_TEMPLATE = (
-    "v{version}/{collection_id}/year={year}/month={month}/"
-    "{collection_id}-{year}-{month}-{part}.parquet"
+    GEOPARQUET_DATASET_DIR + "/year={year}/month={month:02d}/"
+    "{collection_id}-{year}-{month:02d}-{part:05d}-{token}.parquet"
 )
 
-#: the reference's exact path contract (constants.py:8)
+#: the reference's exact path contract (constants.py:8): one object
+#: per collection-month, month unpadded; reference_layout=True
 REFERENCE_PARQUET_PATH_FORMAT = (
-    "v{version}/{collection_id}/year={year}/month={month}/"
+    GEOPARQUET_DATASET_DIR + "/year={year}/month={month}/"
     "{collection_id}-{year}-{month}.parquet"
 )
+
+#: rows per output file (and per fetch/write task in E2). The writer
+#: holds a whole partition as one Arrow table: a full HLS item (18
+#: assets, 5-point footprint) is ~5.6 KB there and ~210 B on disk
+#: after zstd-6 (pyarrow, 20k synthetic items), so 50k rows cap a task
+#: near 280 MB of worker memory and give ~10 MB files — 2-20 files for
+#: a 10^5-10^6-item month. A month below it stays the reference's
+#: single file.
+ROWS_PER_FILE = 50_000
 
 #: the file format, fixed as in the reference (write.py:233-245): one
 #: WKB geometry column, rows clustered on the Hilbert key, zstd level 6
@@ -217,6 +231,27 @@ def _geo_metadata(geometry_col: str, bbox: list[float] | None) -> bytes:
     return json.dumps(meta).encode()
 
 
+def _month_path(
+    collection_id: str,
+    year: int,
+    month: int,
+    version: str,
+    reference_layout: bool,
+    part: int = 0,
+    token: str = "",
+) -> str:
+    """Store-relative key of one month file, from the layout's template."""
+    template = (
+        REFERENCE_PARQUET_PATH_FORMAT
+        if reference_layout
+        else GEOPARQUET_PATH_TEMPLATE
+    )
+    return template.format(
+        version=version, collection_id=collection_id, year=year,
+        month=month, part=part, token=token,
+    )
+
+
 def geoparquet_month_dir(
     collection_id: str,
     year: int,
@@ -225,9 +260,27 @@ def geoparquet_month_dir(
     reference_layout: bool = False,
 ) -> str:
     """Store-relative hive directory for one collection-month."""
-    month_part = f"{month}" if reference_layout else f"{month:02d}"
-    return posixpath.join(
-        f"v{version}", collection_id, f"year={year}", f"month={month_part}"
+    return posixpath.dirname(
+        _month_path(collection_id, year, month, version, reference_layout)
+    )
+
+
+def cluster_month(
+    df: DataFrame, n_rows: int, reference_layout: bool = False
+) -> DataFrame:
+    """Cluster a month's ``n_rows`` rows for the write: one range
+    partition per output file on ``SORT_COL`` (file k's keys all
+    precede file k+1's), sorted within each — the distributed
+    replacement for the reference's in-memory month sort
+    (write.py:204-219). ``ceil(n_rows / ROWS_PER_FILE)`` files, or one
+    for ``reference_layout``. The explicit count pins the layout:
+    AQE does not coalesce a shuffle whose partition count was asked
+    for."""
+    n_files = (
+        1 if reference_layout else max(1, math.ceil(n_rows / ROWS_PER_FILE))
+    )
+    return df.repartitionByRange(n_files, SORT_COL).sortWithinPartitions(
+        SORT_COL
     )
 
 
@@ -261,15 +314,12 @@ def write_geoparquet(
     year: int,
     month: int,
     version: str = "1",
-    target_partitions: int | None = None,
     reference_layout: bool = False,
 ) -> DataFrame:
-    """Write a spatially clustered GeoParquet dataset.
-
-    Range-partitions on ``SORT_COL`` (total order across files —
-    file k's keys all precede file k+1's), sorts within partitions,
-    then each executor partition writes its own footer-stamped file.
-    zstd level 6 matches the reference (write.py:243).
+    """Write a spatially clustered GeoParquet month: counts ``df``,
+    clusters it (:func:`cluster_month`), then each executor partition
+    writes its own footer-stamped file. zstd level 6 matches the
+    reference (write.py:243).
 
     ``reference_layout=True`` forces one output object named exactly
     like the reference (constants.py:8). The single file still gets
@@ -279,13 +329,9 @@ def write_geoparquet(
 
     Returns the write manifest (one row per file).
     """
-    if reference_layout:
-        target_partitions = 1
-    clustered = df.repartitionByRange(
-        *([target_partitions] if target_partitions else []), F.col(SORT_COL)
-    ).sortWithinPartitions(SORT_COL)
     return write_geoparquet_partitions(
-        clustered, dest, collection_id, year, month, version=version,
+        cluster_month(df, df.count(), reference_layout),
+        dest, collection_id, year, month, version=version,
         reference_layout=reference_layout,
     )
 
@@ -304,32 +350,23 @@ def write_geoparquet_partitions(
     empty partition writes nothing (an in-process store, which the
     workers cannot reach, gets one object for the whole frame, written
     from the driver). The caller has already clustered
-    ``df`` (:func:`write_geoparquet` does it for a plain frame);
+    ``df`` (:func:`cluster_month`; :func:`write_geoparquet` does it
+    for a plain frame);
     ``reference_layout=True`` names the file the reference's way and
     so expects a single partition.
 
     Returns the write manifest (one row per file).
     """
     store = get_store(dest)
-    rel_dir = geoparquet_month_dir(
-        collection_id, year, month, version, reference_layout
-    )
-    prefix = (
-        f"{collection_id}-{year}-{month}"
-        if reference_layout
-        else f"{collection_id}-{year}-{month:02d}"
-    )
-
     manifest_schema = (
         "path string, n_rows bigint, xmin double, ymin double, "
         "xmax double, ymax double"
     )
 
     def _file_key(pid: int) -> str:
-        if reference_layout:
-            return posixpath.join(rel_dir, f"{prefix}.parquet")
-        return posixpath.join(
-            rel_dir, f"{prefix}-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet"
+        return _month_path(
+            collection_id, year, month, version, reference_layout,
+            part=pid, token=uuid.uuid4().hex[:8],
         )
 
     def _write_file(table: pa.Table, key: str) -> dict:
@@ -387,7 +424,6 @@ def optimize_geoparquet_month(
     year: int,
     month: int,
     version: str = "1",
-    target_partitions: int | None = None,
     reference_layout: bool = False,
 ) -> dict:
     """Compact/re-cluster an already-written collection-month in
@@ -395,9 +431,10 @@ def optimize_geoparquet_month(
     for the GeoParquet sink: N incremental writes (late-arriving
     days, retries, small appends) accumulate small files; this reads
     the month back, re-runs the range-partitioned Hilbert sort, and
-    replaces the files with ``target_partitions`` clustered ones
-    (``reference_layout=True`` → exactly one object under the
-    reference's path name).
+    replaces the files with ``ceil(rows / ROWS_PER_FILE)`` clustered
+    ones — the rule E2 writes by (``reference_layout=True`` → exactly
+    one object under the reference's path name). The row count comes
+    from the parquet footers.
 
     Write-then-delete ordering makes a crash safe-but-duplicating
     (new files land before old ones are removed; re-running converges
@@ -425,7 +462,6 @@ def optimize_geoparquet_month(
     df = spark.read.parquet(spark_base)
     manifest = write_geoparquet(
         df, dest, collection_id, year, month, version=version,
-        target_partitions=target_partitions,
         reference_layout=reference_layout,
     ).collect()
     new_urls = {r.path for r in manifest}

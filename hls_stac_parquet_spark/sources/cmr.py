@@ -57,7 +57,7 @@ from pyspark.sql.types import StructType
 from hls_stac_parquet_spark.model import CMR_GRANULE_SCHEMA
 from hls_stac_parquet_spark.sources.retry import request_with_retries
 
-DEFAULT_PAGE_SIZE = 2000  # CMR hard cap (cmr_api.py:44,55)
+PAGE_SIZE = 2000  # granules per request: the CMR hard cap (cmr_api.py:44,55)
 
 
 class _DaysPartition(InputPartition):
@@ -108,10 +108,6 @@ class CmrReader(DataSourceReader):
         self.temporal_start = options.get("temporal_start")
         self.temporal_end = options.get("temporal_end")
         self.bbox = options.get("bbox")  # "w,s,e,n"
-        self.page_size = min(
-            max(1, int(options.get("page_size", DEFAULT_PAGE_SIZE))),
-            DEFAULT_PAGE_SIZE,
-        )
         self.fixture_dir = options.get("fixture_dir")
         self.endpoint = options.get("endpoint")
 
@@ -201,7 +197,7 @@ class CmrReader(DataSourceReader):
 
     def _read_http(self, day: str) -> Iterator[tuple]:
         """Cursor-paginated scan of one day window (cmr_api.py:55-71):
-        page_size-capped GETs following the ``cmr-search-after``
+        PAGE_SIZE-capped GETs following the ``cmr-search-after``
         header until exhausted. stdlib urllib; a packed task walks its
         days one after another, so total concurrency = number of
         partitions running (≤ cores, as with one task per day).
@@ -213,7 +209,7 @@ class CmrReader(DataSourceReader):
         import urllib.request
 
         params = {
-            "page_size": str(self.page_size),
+            "page_size": str(PAGE_SIZE),
         }
         if self.collection:
             params["collection_concept_id[]"] = self.collection

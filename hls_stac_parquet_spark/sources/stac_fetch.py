@@ -4,7 +4,7 @@ The reference fetches every STAC URL of a month through one event
 loop with a semaphore(50) (fetch.py:14-92) on an 8-vCPU box. Here the
 URL list is a DataFrame and each Spark task runs a bounded
 thread-pool fetch over its partition: total concurrency =
-``numPartitions × max_concurrent_per_task``, scaling with the
+``numPartitions × MAX_CONCURRENT``, scaling with the
 cluster instead of one process.
 
 Failure semantics mirror A19: per-row try/except, errors become a
@@ -18,8 +18,7 @@ the same way, tests/test_workflow.py:43,56-64); http(s) uses stdlib
 urllib. Credentials plug in via ``credential_provider`` — a callable
 ``netloc -> headers`` resolved once per netloc per task, mirroring
 the reference's per-netloc credentialed-store reuse
-(fetch.py:30-48, NasaEarthdataAsyncCredentialProvider at :39-44);
-URL rewriting/signing plugs in via ``url_preparer``.
+(fetch.py:30-48, NasaEarthdataAsyncCredentialProvider at :39-44).
 """
 
 from __future__ import annotations
@@ -34,7 +33,9 @@ from pyspark.sql.types import StructType
 
 from hls_stac_parquet_spark.model import FETCH_RESULT_SCHEMA
 
-DEFAULT_MAX_CONCURRENT = 50  # per task; reference: fetch.py:15
+MAX_CONCURRENT = 50  # requests in flight per task; reference: fetch.py:15
+TIMEOUT_S = 30.0  # per request
+RETRY_ATTEMPTS = 3  # per URL, transient failures only (sources/retry.py)
 
 
 def _fetch_one(
@@ -79,12 +80,7 @@ def _fetch_one(
 
 def fetch_stac_items(
     urls: DataFrame,
-    url_col: str = "url",
-    max_concurrent: int = DEFAULT_MAX_CONCURRENT,
-    timeout: float = 30.0,
-    url_preparer: Callable[[str], str] | None = None,
     credential_provider: Callable[[str], dict[str, str] | None] | None = None,
-    retry_attempts: int = 3,
 ) -> DataFrame:
     """urls(url, ...) → (url, body, fetch_error, ...) via
     per-partition bounded thread pools. Every input column other than
@@ -112,20 +108,15 @@ def fetch_stac_items(
                 cred_cache[netloc] = credential_provider(netloc)
             return cred_cache[netloc]
 
-        with cf.ThreadPoolExecutor(max_workers=max_concurrent) as pool:
+        with cf.ThreadPoolExecutor(max_workers=MAX_CONCURRENT) as pool:
             for pdf in batches:
-                batch_urls = pdf[url_col].tolist()
-                prepared = (
-                    [url_preparer(u) for u in batch_urls]
-                    if url_preparer
-                    else batch_urls
-                )
+                batch_urls = pdf["url"].tolist()
                 results = list(
                     pool.map(
                         lambda u: _fetch_one(
-                            u, timeout, headers_for(u), retry_attempts
+                            u, TIMEOUT_S, headers_for(u), RETRY_ATTEMPTS
                         ),
-                        prepared,
+                        batch_urls,
                     )
                 )
                 out = pd.DataFrame(
@@ -139,7 +130,7 @@ def fetch_stac_items(
                     out[f.name] = pdf[f.name].to_numpy()
                 yield out
 
-    carried = [f for f in urls.schema.fields if f.name != url_col]
+    carried = [f for f in urls.schema.fields if f.name != "url"]
     return urls.mapInPandas(
         run, StructType(FETCH_RESULT_SCHEMA.fields + carried)
     )

@@ -418,7 +418,7 @@ def foreach_batch_sketch_monitor(
             merged = batch_sketch
         tmp = f"{dest}.__new__{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
-        # crash-safe swap (same ordering as foreach_batch_latest):
+        # crash-safe swap (same ordering as foreach_batch_upsert):
         # dest is renamed aside, never deleted before the new snapshot
         # is in place — a crash between rmtree and rename would lose
         # the whole accumulated state and the replayed batch would
@@ -513,7 +513,7 @@ def foreach_batch_digest_monitor(
             merged = batch_digests
         tmp = f"{dest}.__new__{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
-        # crash-safe swap (same ordering as foreach_batch_latest):
+        # crash-safe swap (same ordering as foreach_batch_upsert):
         # dest is renamed aside, never deleted before the new snapshot
         # is in place — a crash between rmtree and rename would lose
         # the whole accumulated state and the replayed batch would
@@ -571,7 +571,7 @@ def foreach_batch_hll_monitor(
             merged = batch_sk
         tmp = f"{dest}.__new__{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
-        # crash-safe swap (same ordering as foreach_batch_latest):
+        # crash-safe swap (same ordering as foreach_batch_upsert):
         # dest is renamed aside, never deleted before the new snapshot
         # is in place — a crash between rmtree and rename would lose
         # the whole accumulated state and the replayed batch would

@@ -95,7 +95,7 @@ def test_fetch_carries_input_columns_in_order(spark, tmp_path):
     ).coalesce(1)
     assert fetch_stac_items(urls.select("url")).schema == FETCH_RESULT_SCHEMA
 
-    out = fetch_stac_items(urls, max_concurrent=7)
+    out = fetch_stac_items(urls)
     assert out.columns == ["url", "body", "fetch_error", "key"]
     rows = out.collect()
     assert [r.url for r in rows] == paths

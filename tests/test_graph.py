@@ -217,27 +217,29 @@ def _peel_coreness_exact(edges):
     return core
 
 
-def _spark_coreness(spark, edges, **kw):
-    from hls_stac_parquet_spark.operators.graph import core_numbers
+def _spark_coreness(spark, edges, monkeypatch, tier):
+    from hls_stac_parquet_spark.operators import graph
 
+    for name, value in tier.items():
+        monkeypatch.setattr(graph, name, value)
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
-    rows = core_numbers(df, **kw).collect()
+    rows = graph.core_numbers(df).collect()
     return {r.node: r.core for r in rows}
 
 
-# driver_max=0 forces the distributed h-index tier; the default runs
-# the driver bucket-queue peeling tier — both must match textbook
+# a driver cap of 0 forces the distributed h-index tier; the default
+# runs the driver bucket-queue peeling tier — both must match textbook
 # peeling exactly
-@pytest.mark.parametrize("tier", [{}, {"driver_max": 0}])
-def test_coreness_clique_plus_tail(spark, tier):
+@pytest.mark.parametrize("tier", [{}, {"CORE_NUMBERS_DRIVER_MAX": 0}])
+def test_coreness_clique_plus_tail(spark, monkeypatch, tier):
     # K4 (coreness 3) with a pendant path (coreness 1)
     edges = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (3, 4), (4, 5)]
-    got = _spark_coreness(spark, edges, **tier)
+    got = _spark_coreness(spark, edges, monkeypatch, tier)
     assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 1, 5: 1}
 
 
-@pytest.mark.parametrize("tier", [{}, {"driver_max": 0}])
-def test_coreness_matches_peeling_on_random_graphs(spark, tier):
+@pytest.mark.parametrize("tier", [{}, {"CORE_NUMBERS_DRIVER_MAX": 0}])
+def test_coreness_matches_peeling_on_random_graphs(spark, monkeypatch, tier):
     import random
 
     rng = random.Random(13)
@@ -254,15 +256,17 @@ def test_coreness_matches_peeling_on_random_graphs(spark, tier):
             }
         )
         want = _peel_coreness_exact(edges)
-        got = _spark_coreness(spark, edges, **tier)
+        got = _spark_coreness(spark, edges, monkeypatch, tier)
         assert got == want, f"trial {trial}"
 
 
-@pytest.mark.parametrize("tier", [{}, {"driver_max": 0}])
-def test_coreness_duplicate_and_directed_edges_are_canonicalized(spark, tier):
+@pytest.mark.parametrize("tier", [{}, {"CORE_NUMBERS_DRIVER_MAX": 0}])
+def test_coreness_duplicate_and_directed_edges_are_canonicalized(
+    spark, monkeypatch, tier
+):
     # triangle given as duplicated directed edges + a self loop
     edges = [(1, 2), (2, 1), (2, 3), (3, 1), (1, 1), (2, 3)]
-    got = _spark_coreness(spark, edges, **tier)
+    got = _spark_coreness(spark, edges, monkeypatch, tier)
     assert got == {1: 2, 2: 2, 3: 2}
 
 

@@ -18,7 +18,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from hls_stac_parquet_spark.functions.spatial import cluster_by_hilbert
+from hls_stac_parquet_spark.functions.spatial import hilbert_index_udf
+from hls_stac_parquet_spark.sinks.geoparquet import cluster_month
 
 
 def _rowgroup_spans(path_glob, col):
@@ -42,7 +43,10 @@ def test_hilbert_clustering_prunes_row_groups(spark, tmp_path, rows):
             (F.pmod(F.hash(F.col("id") * 7 + 1), F.lit(17000)) / 100.0 - 85.0).alias("lat"),
         )
     )
-    keyed = cluster_by_hilbert(pts, "lon", "lat")
+    keyed = cluster_month(
+        pts.withColumn("hilbert_idx", hilbert_index_udf(F.col("lon"), F.col("lat"))),
+        rows,
+    )
     clustered = str(tmp_path / "clustered")
     shuffled = str(tmp_path / "shuffled")
     small = {"parquet.block.size": 64 * 1024}  # force many row groups

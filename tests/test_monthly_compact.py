@@ -7,6 +7,7 @@ from __future__ import annotations
 import collections
 import datetime as dt
 import http.server
+import math
 import os
 import threading
 import types
@@ -27,6 +28,7 @@ from hls_stac_parquet_spark.plans.monthly_compact import (
     key_urls,
     write_monthly_stac_geoparquet,
 )
+from hls_stac_parquet_spark.sinks import geoparquet
 from hls_stac_parquet_spark.sinks.manifest import manifest_key, read_manifests
 from hls_stac_parquet_spark.store import get_store
 from tests.fixtures import make_fixtures
@@ -98,12 +100,16 @@ def origin(spark, tmp_path_factory):
     srv.server_close()
 
 
-@pytest.mark.parametrize("target_partitions", [None, 3])
-def test_e2_requests_each_url_once(spark, origin, tmp_path, target_partitions):
+@pytest.mark.parametrize("n_files", [None, 3])
+def test_e2_requests_each_url_once(spark, origin, tmp_path, monkeypatch, n_files):
+    if n_files is not None:  # size the sink's files so the month needs 3
+        monkeypatch.setattr(
+            geoparquet, "ROWS_PER_FILE", math.ceil(len(origin.urls) / n_files)
+        )
     origin.counts.clear()
     result = write_monthly_stac_geoparquet(
         spark, COLL_ID, 2025, 10, origin.links, str(tmp_path / "gpq"),
-        require_complete_links=False, target_partitions=target_partitions,
+        require_complete_links=False,
     )
     assert origin.counts == collections.Counter(
         urlparse(u).path for u in origin.urls
@@ -112,10 +118,10 @@ def test_e2_requests_each_url_once(spark, origin, tmp_path, target_partitions):
     assert result["failed"] == len(origin.broken) == 2 * len(DAYS)
 
     files = sorted(result["files"])
-    if target_partitions is None:
+    if n_files is None:
         assert len(files) == 1  # a month under ROWS_PER_FILE: one file
         return
-    assert 1 < len(files) <= target_partitions
+    assert 1 < len(files) <= n_files
     prev_end = None
     for path in files:  # part-number order is range order
         keys = pq.read_table(path, columns=["hilbert_idx"])[

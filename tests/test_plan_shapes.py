@@ -120,7 +120,7 @@ def test_sort_global_range_partitions(spark):
         spark.read.parquet(f"{SF0001}/events.parquet")
         .select(F.col("user_id") % 256, (F.col("event_id") % 256))
     )
-    # the building block used by cluster_by_hilbert
+    # the building block of the GeoParquet sink's cluster_month
     plan = (
         spark.read.parquet(f"{SF0001}/lineitem.parquet")
         .repartitionByRange(F.col("l_orderkey"))

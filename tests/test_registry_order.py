@@ -3,7 +3,7 @@ so ordering IS the correctness-gate coverage policy.
 
 Policy (round 4+): drain the never-driver-checked backlog fastest.
 Tier 0 = checked-but-failed (prove the fix), tier 1 = never checked
-(contract block first, then flagships), tier 2+ = ever-green
+(contract block first), tier 2+ = ever-green
 (least-verified first). While a backlog exists, already-green queries
 yield their window slots; LOCAL_PARITY + pytest cover them between
 driver rows. Once the backlog drains, the window returns to
@@ -100,13 +100,6 @@ def test_contract_queries_lead_their_tiers():
         other_pos = [i for i, n in enumerate(members) if n not in CONTRACT_QUERIES]
         if contract_pos and other_pos:
             assert max(contract_pos) < min(other_pos), f"tier {t}"
-
-
-def test_priority_queries_exist_in_registry():
-    from hls_stac_parquet_spark.queries import PRIORITY_QUERIES
-
-    missing = [n for n in PRIORITY_QUERIES if n not in REGISTRY]
-    assert not missing, missing
 
 
 def test_every_query_callable_and_oracle_typed():

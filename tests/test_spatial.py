@@ -10,13 +10,13 @@ from pyspark.sql import functions as F
 
 from hls_stac_parquet_spark.functions.spatial import (
     HILBERT_ERROR_SENTINEL,
-    cluster_by_hilbert,
     hilbert_index_udf,
     hilbert_xy2d,
     lonlat_to_grid,
     morton_key,
     morton_key_sql,
 )
+from hls_stac_parquet_spark.sinks import geoparquet
 
 
 def test_hilbert_bijective_small_grid():
@@ -76,7 +76,8 @@ def test_morton_sql_matches_column_expr(spark):
     assert [r.m for r in a] == [r.m for r in b]
 
 
-def test_cluster_by_hilbert_total_order(spark):
+def test_cluster_by_hilbert_total_order(spark, monkeypatch):
+    monkeypatch.setattr(geoparquet, "ROWS_PER_FILE", 50)  # 4 partitions
     pdf = pd.DataFrame(
         {
             "id": range(200),
@@ -84,7 +85,10 @@ def test_cluster_by_hilbert_total_order(spark):
             "lat": np.random.default_rng(1).uniform(-90, 90, 200),
         }
     )
-    out = cluster_by_hilbert(spark.createDataFrame(pdf), "lon", "lat")
+    keyed = spark.createDataFrame(pdf).withColumn(
+        "hilbert_idx", hilbert_index_udf(F.col("lon"), F.col("lat"))
+    )
+    out = geoparquet.cluster_month(keyed, len(pdf))
     # partition-wise sorted and partitions range-ordered → global order
     keys = [r.hilbert_idx for r in out.select("hilbert_idx").collect()]
     assert keys == sorted(keys)

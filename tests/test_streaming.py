@@ -99,6 +99,15 @@ def _write_manifest(dest, day, urls):
 
 
 def _drain(stream_df, ckpt, out_name, mode="append"):
+    """Run ``stream_df`` AvailableNow into memory table ``out_name``
+    until every data batch has committed, then stop it.
+
+    Contract: the first executed batch with no input rows ends the
+    run, so output that a stateful query emits only in a LATER
+    no-data batch (a watermark or processing-time timer firing after
+    the source is exhausted) is not guaranteed to be there. Callers
+    that wait on such output use :func:`_await_done` with a
+    predicate on the expected state instead."""
     import time as _time
 
     q = (

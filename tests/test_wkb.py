@@ -123,9 +123,7 @@ def test_write_geoparquet_plan_no_batch_eval_python(spark):
     import tempfile
 
     with tempfile.TemporaryDirectory() as dest:
-        manifest = write_geoparquet(
-            df, dest, "HLSL30_2.0", 2025, 10, target_partitions=2
-        )
+        manifest = write_geoparquet(df, dest, "HLSL30_2.0", 2025, 10)
         plan = manifest._sc._jvm.PythonSQLUtils.explainString(
             manifest._jdf.queryExecution(), "formatted"
         )

@@ -4,9 +4,10 @@ The reference builds the expected list of daily manifest paths for a
 month (origin-date-aware: the collection's first month starts at the
 origin day, not day 1 — write.py:180-196) and raises if the listing
 differs (write.py:172-202). Here: generate the expected keys with
-``sequence`` + ``explode``, anti-join both directions, and let the
-caller assert emptiness — set algebra instead of driver loops, so the
-same gate works for a month or a decade of partitions.
+``sequence`` + ``explode`` and compare the two key sets both ways
+(``completeness_check``: two anti-joins; ``require_complete``: one
+grouped pass, one action) — set algebra instead of driver loops, so
+the same gate works for a month or a decade of partitions.
 """
 
 from __future__ import annotations
@@ -50,10 +51,30 @@ def completeness_check(
 
 
 def require_complete(expected: DataFrame, actual: DataFrame, key: str = "day") -> None:
-    """Raise IncompleteInputError unless expected == actual as sets."""
-    missing, unexpected = completeness_check(expected, actual, key)
-    miss = [r[key] for r in missing.limit(20).collect()]
-    extra = [r[key] for r in unexpected.limit(20).collect()]
+    """Raise IncompleteInputError unless expected == actual as sets.
+
+    One action: both sides' keys, tagged with their side, grouped on
+    the key (a full outer join as one aggregate: 2 Spark jobs where
+    the join plans 3 and the two anti-join collects 5); only keys
+    missing from one side come back, so the collect is bounded by the
+    key count, not the row count. The report keeps the first 20 per
+    side.
+    """
+    # side: 1 = expected only, 2 = actual only, 3 = both
+    sides = (
+        expected.select(key, F.lit(1).alias("side"))
+        .unionByName(actual.select(key, F.lit(2).alias("side")))
+        .groupBy(key)
+        .agg(F.bit_or("side").alias("side"))
+        .where(F.col("side") != 3)
+        .collect()
+    )
+
+    def first20(side: int) -> list:
+        keys = [r[key] for r in sides if r.side == side]
+        return sorted(keys, key=lambda k: (k is None, k))[:20]
+
+    miss, extra = first20(1), first20(2)
     if miss or extra:
         raise IncompleteInputError(
             f"expected these links: missing={miss} unexpected={extra}"

@@ -14,7 +14,11 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from hls_stac_parquet_spark.operators.completeness import IncompleteInputError
+from hls_stac_parquet_spark.operators.completeness import (
+    IncompleteInputError,
+    expected_days,
+    require_complete,
+)
 from hls_stac_parquet_spark.plans.daily_ingest import (
     cache_daily_stac_json_links,
     extract_stac_json_links,
@@ -152,6 +156,21 @@ def test_monthly_completeness_gate_raises(spark, fx, tmp_path):
             spark, COLL_ID, 2025, 10, links_dest, str(tmp_path / "gpq"),
             require_complete_links=True,
         )
+
+
+def test_completeness_gate_reports_both_sides_sorted_and_capped(spark):
+    # one action finds both sides; each is reported sorted, first 20
+    exp = expected_days(spark, dt.date(2025, 1, 1), dt.date(2025, 2, 9))
+    act = spark.createDataFrame(
+        [(dt.date(2025, 3, 1),), (dt.date(2025, 1, 1),)], "day date"
+    )
+    with pytest.raises(IncompleteInputError) as err:
+        require_complete(exp, act)
+    missing = [dt.date(2025, 1, 2) + dt.timedelta(days=d) for d in range(20)]
+    assert str(err.value) == (
+        f"expected these links: missing={missing} "
+        f"unexpected={[dt.date(2025, 3, 1)]}"
+    )
 
 
 def test_cmr_source_pushdown_plan(spark, fx):

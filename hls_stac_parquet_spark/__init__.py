@@ -13,13 +13,13 @@ Layout
 - ``functions``  — scalar/column function library (spatial keys, text,
                    url/regex helpers) — JVM-side built-ins first
 - ``operators``  — composable DataFrame→DataFrame transforms
-                   (dedup, similarity, completeness, sessionize, ...)
-- ``sources``    — CMR catalog DataSource (pushdown + pagination) and
-                   the distributed STAC fetcher
+                   (dedup, similarity, completeness, ...)
+- ``sources``    — CMR catalog DataSource (pushdown + pagination,
+                   plus its streaming reader) and the distributed
+                   STAC fetcher
 - ``sinks``      — manifest JSON sink, GeoParquet writer shim
 - ``plans``      — end-to-end pipelines (daily ingest E1, monthly
                    compaction E2) built from the pieces above
-- ``streaming``  — incremental (Structured Streaming) variants
 """
 
 __version__ = "0.1.0"

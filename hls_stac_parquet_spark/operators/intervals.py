@@ -4,8 +4,7 @@ overlap without a quadratic nested loop.
 The reference's only temporal reasoning is point-in-range (day-window
 filters, cmr_api.py:37-38 / links.py:105-106); this generalizes to
 interval×interval overlap, the join class behind session-collision
-analysis, meeting/booking conflicts, and stream-stream interval joins
-(streaming/incremental.py:262 is the unbounded twin).
+analysis, meeting/booking conflicts, and stream-stream interval joins.
 
 Algorithm (grid bucketization, the standard distributed range-join
 device): every interval lands in the ceil-span of fixed-width grid

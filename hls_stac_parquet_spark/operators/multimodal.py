@@ -78,15 +78,6 @@ MEDIA_SCHEMA = StructType(
 
 FEATURE_DIM = 32
 
-_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", IntegerType()),
-        StructField("feature", ArrayType(FloatType())),
-    ]
-)
-
 _FRAMES_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -151,35 +142,6 @@ def deterministic_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     return (ints / np.float64(2**32)).astype(np.float32)
 
 
-def extract_features(
-    media: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-    type_col: str = "media_type",
-) -> DataFrame:
-    """media(bytes) → fixed-dim feature vectors, Arrow-batched.
-
-    One generator invocation per Arrow batch (10^3-10^4 rows), numpy
-    inner work — the plan scales by adding partitions, never by
-    driver-side loops.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_as_bytes(p) for p in pdf[bytes_col]]
-            feats = [deterministic_feature(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].to_numpy(),
-                    "media_type": pdf[type_col].to_numpy(),
-                    "n_bytes": np.array([len(p) for p in payloads], dtype=np.int32),
-                    "feature": feats,
-                }
-            )
-
-    return _par(media).mapInPandas(gen, _FEATURES_SCHEMA)
-
-
 def sample_frames(
     media: DataFrame,
     every_n_bytes: int = 1024,
@@ -226,48 +188,6 @@ _RESIZED_SCHEMA = StructType(
         StructField("content", BinaryType()),
     ]
 )
-
-
-def resize_images(
-    media: DataFrame,
-    width: int = 64,
-    height: int = 64,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """Batch image resize to (width, height), Arrow-batched.
-
-    The pixel work is stubbed deterministically (no image codec in
-    this environment): the 'resized' payload is the sha256 stream of
-    the original bytes cut to exactly width*height bytes — stable
-    across runs and partitionings, with the real operator's schema
-    and 1:1 row shape. A deployment swaps the body for
-    PIL ``Image.resize`` inside the same generator; the Spark plan
-    (one mapInPandas, no shuffle, output partitioning inherited) is
-    unchanged."""
-    n_out = width * height
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for payload in pdf[bytes_col]:
-                payload = _as_bytes(payload)
-                h = hashlib.sha256(payload)
-                raw = b""
-                while len(raw) < n_out:
-                    h = hashlib.sha256(h.digest())
-                    raw += h.digest()
-                out.append(raw[:n_out])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].to_numpy(),
-                    "width": np.full(len(pdf), width, dtype=np.int32),
-                    "height": np.full(len(pdf), height, dtype=np.int32),
-                    "content": out,
-                }
-            )
-
-    return _par(media).mapInPandas(gen, _RESIZED_SCHEMA)
 
 
 def resize_raw_images(
@@ -949,7 +869,7 @@ def dhash_images(
     small pixel noise, and cheap enough to compute inline with decode.
 
     REAL pixel math end to end (no codec; the decode seam stays in
-    ``extract_features``): numpy mean over channels, gather resample,
+    ``_decode_image_real``): numpy mean over channels, gather resample,
     elementwise compare, packbits. One mapInPandas, no shuffle, 1:1
     rows; exact bit equality with an independent numpy/int replay is
     pinned in tests/test_multimodal.py.

@@ -6,7 +6,7 @@ pushed predicates → paginated scan → per-granule first stac.json link
 
 Spark shape: parameter → ``format("cmr")`` scan (predicates pushed
 into the source request) → higher-order-function link extraction
-(array filter + element_at: **zero shuffle** — the reference's A6
+(array filter + try_element_at: **zero shuffle** — the reference's A6
 loop becomes a single projected expression) → manifest sink.
 
 The reference runs one Lambda per day (A22/A24); here a date *range*
@@ -38,15 +38,17 @@ def extract_stac_json_links(
     an explicit filter, not an exception swallow.
 
     Pure higher-order functions: no explode, no groupBy, no shuffle.
+    ``try_element_at`` because under ANSI mode ``element_at`` raises
+    on a linkless granule's empty match array.
     """
-    first_match = F.element_at(
+    first_match = F.try_element_at(
         F.filter(
             F.col("links"),
             lambda l: l["href"].isNotNull()
             & l["href"].endswith("stac.json")
             & l["href"].startswith(protocol),
         ),
-        1,
+        F.lit(1),
     )["href"]
     return granules.withColumn("url", first_match).filter(
         F.col("url").isNotNull()

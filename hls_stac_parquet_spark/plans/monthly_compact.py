@@ -143,16 +143,26 @@ def write_monthly_stac_geoparquet(
         "item", F.from_json("body", STAC_ITEM_SCHEMA)
     ).select("url", "mgrs_tile", "lat", "lon", "hilbert_idx", "item.*")
 
+    # a GeoJSON bbox is [xmin, ymin, xmax, ymax] or, in 3D, [xmin, ymin,
+    # zmin, xmax, ymax, zmax]; any other length hoists NULL, which both
+    # read tiers treat as non-intersecting
+    n_bbox = F.size("bbox")
+
+    def bbox_at(i_2d: int, i_3d: int):
+        return F.when(
+            n_bbox == 4, F.try_element_at("bbox", F.lit(i_2d))
+        ).when(n_bbox == 6, F.try_element_at("bbox", F.lit(i_3d)))
+
     hoisted = items.select(
         "id",
         F.lit(collection_id).alias("collection"),  # A20 stamp
         F.to_timestamp(F.col("properties.datetime")).alias("datetime"),
         F.col("properties.`eo:cloud_cover`").alias("eo_cloud_cover"),
         "mgrs_tile", "lon", "lat", "hilbert_idx",
-        F.element_at("bbox", 1).alias("bbox_xmin"),
-        F.element_at("bbox", 2).alias("bbox_ymin"),
-        F.element_at("bbox", 3).alias("bbox_xmax"),
-        F.element_at("bbox", 4).alias("bbox_ymax"),
+        bbox_at(1, 1).alias("bbox_xmin"),
+        bbox_at(2, 2).alias("bbox_ymin"),
+        bbox_at(3, 4).alias("bbox_xmax"),
+        bbox_at(4, 5).alias("bbox_ymax"),
         # raw GeoJSON coordinates ride to the sink as-is; the Arrow
         # writer stage encodes WKB batch-wise (geoparquet.py::
         # polygon_coords_to_wkb_array) — no per-row Python in the plan

@@ -590,8 +590,7 @@ def q_ivm_refresh(spark, sf_dir):
     the full recompute row-for-row (both sides derive from the same
     events split at a mid-range cutoff, so both paths are non-empty).
     At 100 TB this is the difference between a nightly full rebuild
-    and a minutes-long delta merge; the same shape backs the
-    streaming foreachBatch upsert sink.
+    and a minutes-long delta merge.
     """
     cutoff = F.expr("TIMESTAMP_NTZ'2024-01-15 00:00:00'")
     ev = t(spark, sf_dir, "events")

@@ -156,7 +156,7 @@ def q_sessionize(spark, sf_dir):
 def q_tumbling_window_agg(spark, sf_dir):
     """Tumbling-window aggregate via Spark's window() — the same
     expression runs unchanged under Structured Streaming with a
-    watermark (streaming/incremental.py).
+    watermark.
 
     NULL semantics declared on BOTH engines: a NULL-ts event belongs
     to no window (Spark's window() silently drops it; the oracle

@@ -89,10 +89,12 @@ def get_spark(
         # -Xss8m: the streaming error path (ForeachBatchUserFuncException
         # wrapping a py4j callback failure) intermittently dies with
         # java.lang.StackOverflowError in the stream execution thread on
-        # the default ~1m stack, leaving the query ACTIVE forever — the
-        # r7/r8 kill-and-resume suite hang (reproduced in isolation,
-        # r9). A larger thread stack lets the failure propagate so
-        # awaitTermination() raises instead of hanging.
+        # the default ~1m stack, leaving the query ACTIVE forever — a
+        # kill-and-resume suite hang (reproduced in isolation). A larger
+        # thread stack lets the failure propagate so awaitTermination()
+        # raises instead of hanging. tests/test_streaming.py::
+        # test_cmr_stream_kill_and_resume_exactly_once_manifests raises
+        # through foreachBatch on purpose and relies on it.
         "spark.driver.extraJavaOptions": (
             "-XX:+UseG1GC -XX:MaxGCPauseMillis=200 -Xss8m"
         ),

@@ -19,6 +19,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import posixpath
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,19 +125,27 @@ def read_manifests(
     spark: SparkSession, dest: str, collection_id: str, year: int, month: int
 ) -> DataFrame:
     """Read a month of manifests → (collection_id, year, month, day,
-    urls) rows. Spark's file listing over the prefix glob is the
-    distributed version of the reference's obstore.list + sequential
-    GET loop (write.py:152-168). For a store without a Hadoop
-    filesystem (memory://), the prefix listing + GETs run driver-side
-    — a month is ≤31 small JSON objects by construction."""
+    urls) rows. The store's prefix listing picks the day files, as the
+    reference's obstore.list does (write.py:152-168), and Spark reads
+    them in one scan. For a store without a Hadoop filesystem
+    (memory://), the GETs run driver-side — a month is ≤31 small JSON
+    objects by construction."""
     store = get_store(dest)
     prefix = posixpath.join("links", collection_id, str(year), f"{month:02d}")
     day_re = r"(\d{4})-(\d{2})-(\d{2})\.json$"
+    keys = [k for k in store.list(prefix) if re.search(day_re, k)]
 
     spark_base = store.spark_url(prefix)
     if spark_base is not None:
+        # the listed files, in name (= day) order: a directory read
+        # lists in filesystem order, which reorders E2's same-tile rows
+        # and so its output bytes from one disk to the next, and a glob
+        # path logs a stack trace while Spark probes it as a directory.
+        # The glob stays for a month with no day files, so that a
+        # missing month raises PATH_NOT_FOUND.
+        paths = [store.spark_url(k) for k in keys]
         raw = spark.read.text(
-            posixpath.join(spark_base, "*.json"), wholetext=True
+            paths or posixpath.join(spark_base, "*.json"), wholetext=True
         ).withColumn("path", F.input_file_name())
         day = F.regexp_extract("path", day_re, 3).cast("int")
         return raw.select(
@@ -147,15 +156,11 @@ def read_manifests(
             F.from_json("value", "array<string>").alias("urls"),
         )
 
-    import re
-
     rows = []
-    for key in store.list(prefix):
-        m = re.search(day_re, key)
-        if not m:
-            continue
+    for key in keys:
+        day_of_month = int(re.search(day_re, key).group(3))
         urls = json.loads(store.get_bytes(key).decode())
-        rows.append((collection_id, year, month, int(m.group(3)), urls))
+        rows.append((collection_id, year, month, day_of_month, urls))
     return spark.createDataFrame(
         rows,
         "collection_id string, year int, month int, day int, "

@@ -134,8 +134,7 @@ class S3Store(Store):
     def _auth_headers(
         self, method: str, url: str, data: bytes
     ) -> dict[str, str]:
-        """Per-request auth — SigV4 here; subclasses override (the
-        GCS store swaps in an OAuth bearer token)."""
+        """Per-request auth — SigV4 (none without credentials)."""
         if self.credentials is None:
             return {}
         creds = self.credentials()

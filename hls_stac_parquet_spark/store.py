@@ -20,11 +20,10 @@ accepted POSIX paths (round-3 verdict, "What's missing" #1).
   processes, so sinks route memory-store writes through the driver
   (manifest groups and month files are tiny by construction — the
   same driver-side shape the reference always uses).
-- ``s3://`` / ``gs://`` / ``az://`` → resolved via
-  :func:`register_store_scheme` hooks. Native stdlib-HTTP stores ship
-  for all three (sources/s3store.py, gcsstore.py, azstore.py — one
-  ``register_*_scheme(...)`` call each wires credentials + endpoint);
-  none is registered by default because credentials are deployment
+- other schemes → resolved via :func:`register_store_scheme` hooks.
+  A native stdlib-HTTP ``s3://`` store ships in sources/s3store.py
+  (``register_s3_scheme(...)`` wires credentials + endpoint); it is
+  not registered by default because credentials are deployment
   decisions. Unknown schemes get an error message naming the seam
   instead of a bare KeyError.
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import collections
 import datetime as dt
 import http.server
+import json
 import math
 import os
 import threading
@@ -179,3 +180,48 @@ def test_empty_month_writes_nothing(spark, tmp_path):
         require_complete_links=False,
     )
     assert result == {"skipped": False, "written": 0, "failed": 0, "files": []}
+
+
+def test_degenerate_bboxes_hoist_by_length(spark, tmp_path):
+    """A STAC item whose bbox is ``[]`` hoists NULL bbox columns instead
+    of failing the month (under ANSI mode ``element_at`` past the end
+    raises), and a 3D bbox ``[xmin, ymin, zmin, xmax, ymax, zmax]``
+    hoists its 2D extent: element 3 is zmin, not xmax."""
+    cmr_dir, stac_dir = make_fixtures(
+        str(tmp_path), days=DAYS[:1], granules_per_day=4
+    )
+    items = sorted(os.listdir(stac_dir))
+    edited = {}
+    for name, bbox_of in (
+        (items[0], lambda b: []),
+        (items[1], lambda b: [b[0], b[1], -5.0, b[2], b[3], 250.0]),
+    ):
+        path = os.path.join(stac_dir, name)
+        with open(path) as fh:
+            item = json.load(fh)
+        edited[item["id"]] = item["bbox"]
+        item["bbox"] = bbox_of(item["bbox"])
+        with open(path, "w") as fh:
+            json.dump(item, fh)
+    links = str(tmp_path / "links")
+    cache_daily_stac_json_links(
+        spark, COLL_CID, COLL_ID, DAYS[0], links,
+        protocol="file", fixture_dir=cmr_dir,
+    )
+
+    result = write_monthly_stac_geoparquet(
+        spark, COLL_ID, 2025, 10, links, str(tmp_path / "gpq"),
+        require_complete_links=False,
+    )
+    assert (result["written"], result["failed"]) == (4, 0)
+    cols = ["id", "bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax"]
+    rows = {
+        r["id"]: [r[c] for c in cols[1:]]
+        for r in pq.read_table(result["files"], columns=cols).to_pylist()
+    }
+    empty_id, id_3d = list(edited)
+    assert rows[empty_id] == [None] * 4
+    assert rows[id_3d] == edited[id_3d]
+    for item_id, bbox in rows.items():
+        if item_id not in edited:
+            assert None not in bbox and bbox[0] < bbox[2] and bbox[1] < bbox[3]

@@ -7,11 +7,9 @@ import numpy as np
 import pytest
 
 from hls_stac_parquet_spark.operators.multimodal import (
-    FEATURE_DIM,
     MEDIA_SCHEMA,
     _decode_image_real,
     deterministic_feature,
-    extract_features,
     sample_frames,
 )
 
@@ -24,24 +22,6 @@ def media(spark):
         (3, "video", bytes(range(256)) * 20),  # 5 KiB → 5 frames
     ]
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_extract_features_schema_and_shape(media):
-    out = extract_features(media)
-    rows = {r.media_id: r for r in out.collect()}
-    assert set(rows) == {1, 2, 3}
-    assert all(len(r.feature) == FEATURE_DIM for r in rows.values())
-    assert rows[1].n_bytes == 2048
-    assert all(0.0 <= v < 1.0 for v in rows[1].feature)
-
-
-def test_features_deterministic_across_partitionings(media):
-    one = {r.media_id: r.feature for r in extract_features(media).collect()}
-    many = {
-        r.media_id: r.feature
-        for r in extract_features(media.repartition(3)).collect()
-    }
-    assert one == many
 
 
 def test_deterministic_feature_is_content_addressed():
@@ -141,22 +121,6 @@ class TestResizeRawImages:
         ).collect()[0]
         assert bytes(row.content) == self._numpy_nn(payload, 16, 16, 4, 4, ch=3)
         assert len(row.content) == 4 * 4 * 3
-
-
-def test_resize_images_shape_and_determinism(media):
-    from hls_stac_parquet_spark.operators.multimodal import resize_images
-
-    out = resize_images(media, width=8, height=4).collect()
-    assert len(out) == 3  # 1:1 row shape
-    by_id = {r.media_id: r for r in out}
-    assert all(len(r.content) == 8 * 4 for r in out)
-    assert all((r.width, r.height) == (8, 4) for r in out)
-    # content-addressed: same input bytes -> same resized bytes
-    again = {r.media_id: r for r in resize_images(media, 8, 4).collect()}
-    assert all(bytes(by_id[i].content) == bytes(again[i].content) for i in by_id)
-    # no shuffle in the plan
-    plan = resize_images(media, 8, 4)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 def test_pcm_stats_sine_wave(spark):

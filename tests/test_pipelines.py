@@ -65,6 +65,31 @@ def test_extract_stac_json_links(spark, fx):
     )
 
 
+def test_extract_stac_json_links_drops_linkless_granules(spark, fx):
+    """A granule with no stac.json link of the requested protocol (no
+    links at all, or only the s3:// twin) drops out via NULL, and the
+    others come through. Under ANSI mode ``element_at`` on the empty
+    match array raises and would fail the whole run."""
+    granules = _granules(spark, fx)
+    links_type = granules.schema["links"].dataType
+    empty = granules.limit(1).select(
+        *[c for c in granules.columns if c not in ("id", "links")],
+        F.lit("G-no-links").alias("id"),
+        F.array().cast(links_type).alias("links"),
+    )
+    s3_only = granules.limit(1).select(
+        *[c for c in granules.columns if c not in ("id", "links")],
+        F.lit("G-s3-only").alias("id"),
+        F.filter("links", lambda l: l["href"].startswith("s3://")).alias("links"),
+    )
+    mixed = granules.unionByName(empty).unionByName(s3_only)
+
+    got = extract_stac_json_links(mixed, protocol="file").select("id", "url")
+    want = extract_stac_json_links(granules, protocol="file").select("id", "url")
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert len(want.collect()) == 18
+
+
 # 2+3 — mirror write/cache round-trip: manifest at templated path,
 # set-equality on re-read
 def test_cache_daily_links_roundtrip(spark, fx, tmp_path):

@@ -1,6 +1,6 @@
-"""Structured Streaming tests: AvailableNow incremental manifest
-ingest (checkpointed exactly-once), watermarked tumbling agg, and the
-custom stateful sessionizer."""
+"""Structured Streaming tests for the CMR day-cursor source
+(``sources/cmr.py CmrStreamReader``, the CLI's ``stream-daily-ingest``):
+fixture and endpoint modes, and kill-and-resume exactly-once manifests."""
 
 from __future__ import annotations
 
@@ -8,21 +8,8 @@ import datetime as dt
 import json
 import os
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-from hls_stac_parquet_spark.streaming.incremental import (
-    dedup_urls_within_watermark,
-    foreach_batch_upsert,
-    stream_enrich_with_dim,
-    stream_manifest_links,
-    stream_session_window_agg,
-    stream_sessionize,
-    stream_tumbling_counts,
-)
-
-COLL = "HLSL30_2.0"
 
 
 @pytest.fixture(autouse=True)
@@ -32,10 +19,8 @@ def _no_leaked_queries(spark):
     Every awaitTermination in this file is bounded; under full-suite
     CPU contention a bound can expire while the query is still active,
     and a leaked AvailableNow query keeps firing batches against the
-    shared session — the round-7/8 full-suite hang
-    (test_sessionize_kill_and_resume_state_recovery flake, VERDICT r8
-    item 2). Stopping leftovers after each test bounds the blast
-    radius of a slow run to that one test."""
+    shared session. Stopping leftovers after each test bounds the
+    blast radius of a slow run to that one test."""
     yield
     for q in spark.streams.active:
         try:
@@ -43,379 +28,6 @@ def _no_leaked_queries(spark):
             q.awaitTermination(30)
         except Exception:
             pass
-
-
-def _await_or_stop(q, timeout):
-    """awaitTermination with a loud, non-hanging timeout path: if the
-    bound expires while the query is still active, stop it (so it
-    cannot wedge later tests) and fail the test explicitly."""
-    finished = q.awaitTermination(timeout)
-    if not finished:
-        q.stop()
-        q.awaitTermination(30)
-        raise AssertionError(
-            f"streaming query did not terminate within {timeout}s"
-        )
-
-
-def _await_done(q, done, timeout=240):
-    """Wait until ``done()`` (or self-termination / query error), then
-    stop the query.
-
-    Needed because an AvailableNow query over a stateful operator with
-    PROCESSING-TIME timers never self-terminates:
-    ``shouldRunAnotherBatch`` is unconditionally true under
-    ProcessingTimeTimeout / timeMode="ProcessingTime", so the query
-    spins empty micro-batches forever once the source is exhausted.
-    The old ``q.awaitTermination(120)`` pattern burned the full bound
-    and then LEAKED the spinning query into the shared session — the
-    r7/r8 full-suite hang. A query error propagates (awaitTermination
-    raises)."""
-    import time as _time
-
-    deadline = _time.time() + timeout
-    while _time.time() < deadline and not done():
-        if q.awaitTermination(1):
-            break
-        _time.sleep(0.1)
-    ok = done()
-    if q.isActive:
-        q.stop()
-        q.awaitTermination(60)
-    if not ok:
-        raise AssertionError(
-            f"streaming query did not reach expected state in {timeout}s"
-        )
-
-
-def _write_manifest(dest, day, urls):
-    d = dt.date.fromisoformat(day)
-    path = os.path.join(
-        dest, "links", COLL, str(d.year), f"{d.month:02d}", f"{day}.json"
-    )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(urls, f)
-
-
-def _drain(stream_df, ckpt, out_name, mode="append"):
-    """Run ``stream_df`` AvailableNow into memory table ``out_name``
-    until every data batch has committed, then stop it.
-
-    Contract: the first executed batch with no input rows ends the
-    run, so output that a stateful query emits only in a LATER
-    no-data batch (a watermark or processing-time timer firing after
-    the source is exhausted) is not guaranteed to be there. Callers
-    that wait on such output use :func:`_await_done` with a
-    predicate on the expected state instead."""
-    import time as _time
-
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(out_name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # Stateless AvailableNow queries self-terminate (first branch).
-    # Stateful operators with processing-time timers do NOT (see
-    # _await_done) — for those, an executed batch with zero input rows
-    # means every data batch has committed; stop there instead of
-    # burning the bound and leaking a spinning query.
-    deadline = _time.time() + 240
-    while _time.time() < deadline and q.isActive:
-        if q.awaitTermination(1):
-            return q
-        p = q.lastProgress
-        if p and p.get("numInputRows", 0) == 0 and p.get("batchId", 0) > 0:
-            break
-        _time.sleep(0.1)
-    if q.isActive:
-        q.stop()
-        q.awaitTermination(60)
-    return q
-
-
-def test_incremental_manifest_ingest_exactly_once(spark, tmp_path):
-    dest, ckpt = str(tmp_path / "links"), str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    _write_manifest(dest, "2025-10-01", ["u1", "u2"])
-    _write_manifest(dest, "2025-10-02", ["u3"])
-
-    def drain():
-        q = (
-            stream_manifest_links(spark, dest, COLL)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    got = spark.read.parquet(out).collect()
-    assert {(str(r.day), r.url) for r in got} == {
-        ("2025-10-01", "u1"), ("2025-10-01", "u2"), ("2025-10-02", "u3"),
-    }
-
-    # new file arrives; re-trigger drains ONLY the new day (checkpoint
-    # = the reference's skip-existing guard, links.py:100-103) —
-    # exactly-once: reprocessing would duplicate u1-u3
-    _write_manifest(dest, "2025-10-03", ["u4"])
-    drain()
-    got2 = spark.read.parquet(out).collect()
-    assert len(got2) == 4
-    assert {(str(r.day), r.url) for r in got2} - {(str(r.day), r.url) for r in got} == {
-        ("2025-10-03", "u4")
-    }
-
-
-def test_streaming_tumbling_counts(spark, tmp_path):
-    src = str(tmp_path / "events")
-    pdf = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:05", "2024-01-01 00:55", "2024-01-01 01:05"]
-            ),
-            "value": [1.0, 2.0, 4.0],
-        }
-    )
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema("ts timestamp, value double").parquet(src)
-    )
-    # complete mode: a finite availableNow drain never advances the
-    # watermark past the last window, so append would emit nothing
-    _drain(stream_tumbling_counts(stream), str(tmp_path / "ckpt"), "tumble",
-           mode="complete")
-    rows = {
-        str(r.win_start): (r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM tumble").collect()
-    }
-    assert rows["2024-01-01 00:00:00"] == (2, 3.0)
-    assert rows["2024-01-01 01:00:00"] == (1, 4.0)
-
-
-def test_stream_session_window_agg(spark, tmp_path):
-    """Native session_window streaming twin of the batch query: events
-    ≤gap apart merge into one session per user."""
-    src = str(tmp_path / "sw-events")
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (1, base),
-        (1, base + dt.timedelta(minutes=10)),   # merges (gap 30m)
-        (1, base + dt.timedelta(hours=3)),      # new session
-        (2, base + dt.timedelta(minutes=1)),
-    ]
-    spark.createDataFrame(
-        pd.DataFrame(rows, columns=["user_id", "ts"])
-    ).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-    # complete mode: finite drain doesn't advance the watermark past
-    # the final session, so append would hold everything back
-    _drain(stream_session_window_agg(stream), str(tmp_path / "ckpt"),
-           "sw_sessions", mode="complete")
-    got = {
-        (r.user_id, r.session_start, r.n_events)
-        for r in spark.sql("SELECT * FROM sw_sessions").collect()
-    }
-    assert got == {
-        (1, base, 2),
-        (1, base + dt.timedelta(hours=3), 1),
-        (2, base + dt.timedelta(minutes=1), 1),
-    }
-
-
-def test_dedup_urls_within_watermark(spark, tmp_path):
-    """Re-published URLs inside the watermark window must come out
-    once; state is bounded by the delay, not corpus lifetime."""
-    src = str(tmp_path / "dup-events")
-    base = dt.datetime(2025, 10, 1, 0, 0, 0)
-    rows = [
-        ("u1", base),
-        ("u1", base + dt.timedelta(hours=1)),  # re-publish → dropped
-        ("u2", base + dt.timedelta(hours=2)),
-    ]
-    spark.createDataFrame(
-        pd.DataFrame(rows, columns=["url", "seen_at"])
-    ).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("url string, seen_at timestamp").parquet(src)
-    _drain(dedup_urls_within_watermark(stream), str(tmp_path / "ckpt"), "dedup")
-    urls = [r.url for r in spark.sql("SELECT * FROM dedup").collect()]
-    assert sorted(urls) == ["u1", "u2"]
-
-
-def test_stream_enrich_with_dim(spark, tmp_path):
-    src = str(tmp_path / "enrich-events")
-    spark.createDataFrame(
-        pd.DataFrame({"coll": ["A", "B", "C"], "n": [1, 2, 3]})
-    ).write.mode("overwrite").parquet(src)
-    dim = spark.createDataFrame(
-        pd.DataFrame({"coll": ["A", "B"], "weight": [0.7, 0.3]})
-    )
-    stream = spark.readStream.schema("coll string, n long").parquet(src)
-    _drain(stream_enrich_with_dim(stream, dim, "coll"),
-           str(tmp_path / "ckpt"), "enriched")
-    got = {r.coll: r.weight for r in spark.sql("SELECT * FROM enriched").collect()}
-    assert got == {"A": 0.7, "B": 0.3, "C": None}  # left join keeps unmatched
-
-
-def test_foreach_batch_upsert_update_wins(spark, tmp_path):
-    """Two drains: the second batch's rows replace same-key rows in
-    the snapshot (update-wins), new keys append."""
-    src, dest = str(tmp_path / "cdc"), str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    def emit(name, rows):
-        pd.DataFrame(rows, columns=["k", "v", "seq"]).to_parquet(
-            os.path.join(src, name)
-        )
-
-    emit("b1.parquet", [(1, "a", 1), (2, "b", 1)])
-    stream = spark.readStream.schema("k long, v string, seq long").parquet(src)
-    foreach_batch_upsert(stream, dest, ckpt, ["k"], "seq").awaitTermination(120)
-    assert {(r.k, r.v) for r in spark.read.parquet(dest).collect()} == {
-        (1, "a"), (2, "b"),
-    }
-
-    emit("b2.parquet", [(2, "B2", 2), (2, "B3", 3), (3, "c", 2)])
-    stream = spark.readStream.schema("k long, v string, seq long").parquet(src)
-    foreach_batch_upsert(stream, dest, ckpt, ["k"], "seq").awaitTermination(120)
-    assert {(r.k, r.v) for r in spark.read.parquet(dest).collect()} == {
-        (1, "a"), (2, "B3"), (3, "c"),  # highest seq wins within the batch
-    }
-
-
-def test_stream_sessionize_closes_gapped_sessions(spark, tmp_path):
-    src = str(tmp_path / "sess-events")
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (1, base),
-        (1, base + dt.timedelta(minutes=5)),
-        (1, base + dt.timedelta(hours=2)),  # >30min gap → closes session 1
-        (2, base),
-    ]
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts"])
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-    _drain(stream_sessionize(stream), str(tmp_path / "ckpt"), "sessions")
-    out = spark.sql("SELECT * FROM sessions").collect()
-    got = {(r.user_id, r.session_start, r.session_end, r.n_events) for r in out}
-    # the gap-closed session MUST be emitted in-batch; the two still-open
-    # sessions may also appear if the processing-time timeout fires
-    # before the drain finishes (timing-dependent, both are correct)
-    closed = (1, base, base + dt.timedelta(minutes=5), 2)
-    open_ok = {
-        (1, base + dt.timedelta(hours=2), base + dt.timedelta(hours=2), 1),
-        (2, base, base, 1),
-    }
-    assert closed in got
-    assert got - {closed} <= open_ok
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """view→purchase attribution: purchases join only to views at
-    most 1h earlier for the same user."""
-    from hls_stac_parquet_spark.streaming.incremental import (
-        stream_stream_interval_join,
-    )
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    vsrc, psrc = str(tmp_path / "views"), str(tmp_path / "purchases")
-    spark.createDataFrame(
-        pd.DataFrame(
-            [(1, base), (2, base), (3, base + dt.timedelta(hours=5))],
-            columns=["user_id", "l_ts"],
-        )
-    ).write.mode("overwrite").parquet(vsrc)
-    spark.createDataFrame(
-        pd.DataFrame(
-            [
-                (1, base + dt.timedelta(minutes=30)),  # attributed
-                (2, base + dt.timedelta(hours=2)),     # too late
-                (3, base + dt.timedelta(hours=5, minutes=1)),  # attributed
-            ],
-            columns=["user_id", "r_ts"],
-        )
-    ).write.mode("overwrite").parquet(psrc)
-    views = spark.readStream.schema("user_id long, l_ts timestamp").parquet(vsrc)
-    purchases = (
-        spark.readStream.schema("user_id long, r_ts timestamp")
-        .parquet(psrc)
-        .withColumnRenamed("user_id", "r_user_id")
-    )
-    joined = stream_stream_interval_join(
-        views, purchases, "user_id", tolerance="1 hour", delay="1 hour"
-    )
-    _drain(joined, str(tmp_path / "ckpt"), "attributed")
-    got = {(r.user_id, r.r_ts) for r in spark.sql("SELECT * FROM attributed").collect()}
-    assert got == {
-        (1, base + dt.timedelta(minutes=30)),
-        (3, base + dt.timedelta(hours=5, minutes=1)),
-    }
-
-
-def test_transform_with_state_running_profile(spark, tmp_path):
-    """transformWithStateInPandas running profile: two drains over a
-    growing source must show RUNNING totals (state carries across
-    micro-batches via the RocksDB store) and emit only touched keys."""
-    # the transformWithState state-server protocol speaks protobuf;
-    # absent in this sandbox (no installs) — runs on any real cluster
-    pytest.importorskip("google.protobuf")
-    from hls_stac_parquet_spark.streaming.incremental import stream_running_profile
-
-    src = str(tmp_path / "tws-events")
-    ckpt = str(tmp_path / "tws-ckpt")
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        pd.DataFrame(
-            {
-                "user_id": [1, 1, 2],
-                "ts": [base, base + dt.timedelta(minutes=5), base],
-                "value": [1.5, 2.5, 10.0],
-            }
-        ).pipe(spark.createDataFrame).write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(
-            "user_id long, ts timestamp, value double"
-        ).parquet(src)
-        _drain(stream_running_profile(stream), ckpt, "profiles", mode="update")
-        got = {
-            r.user_id: (r.n_events, r.total_value)
-            for r in spark.sql("SELECT * FROM profiles").collect()
-        }
-        assert got == {1: (2, 4.0), 2: (1, 10.0)}
-
-        # second file: only user 1 active → only user 1 re-emitted,
-        # with totals continuing from stored state
-        pd.DataFrame(
-            {
-                "user_id": [1],
-                "ts": [base + dt.timedelta(hours=1)],
-                "value": [6.0],
-            }
-        ).pipe(spark.createDataFrame).write.mode("append").parquet(src)
-        stream2 = spark.readStream.schema(
-            "user_id long, ts timestamp, value double"
-        ).parquet(src)
-        _drain(stream_running_profile(stream2), ckpt, "profiles2", mode="update")
-        got2 = {
-            r.user_id: (r.n_events, r.total_value, r.last_seen)
-            for r in spark.sql("SELECT * FROM profiles2").collect()
-        }
-        assert got2 == {1: (3, 10.0, base + dt.timedelta(hours=1))}
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_cmr_stream_source_incremental_days(spark, tmp_path):
@@ -561,86 +173,6 @@ def test_cmr_stream_endpoint_mode_requires_start_day(spark):
         CmrStreamReader(CMR_GRANULE_SCHEMA, {"endpoint": "http://x/search"})
 
 
-def test_stream_countmin_monitor_equals_batch_sketch(spark, tmp_path):
-    """The streamed (per-micro-batch, cell-wise-merged) Count-Min
-    sketch must EQUAL the single-pass batch sketch over the same rows
-    — the mergeability contract carried into Structured Streaming."""
-    from hls_stac_parquet_spark.operators.sketches import countmin_build
-    from hls_stac_parquet_spark.streaming.incremental import (
-        foreach_batch_sketch_monitor,
-    )
-
-    src = str(tmp_path / "src")
-    rows = [(i % 37,) for i in range(4000)]
-    df = spark.createDataFrame(rows, "k long")
-    # several input files → several source partitions in the stream
-    df.repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("k long")
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .parquet(src)
-    )
-    dest, ckpt = str(tmp_path / "sketch"), str(tmp_path / "ckpt")
-    q = foreach_batch_sketch_monitor(
-        stream, dest, ckpt, "k", depth=3, width=64
-    ).start()
-    q.awaitTermination(120)
-
-    got = {
-        (r.d, r.bucket): r.cnt for r in spark.read.parquet(dest).collect()
-    }
-    want = {
-        (r.d, r.bucket): r.cnt
-        for r in countmin_build(df, "k", depth=3, width=64).collect()
-    }
-    assert got == want
-
-
-def test_stream_digest_monitor_quantiles_within_bound(spark, tmp_path):
-    """The streamed per-group t-digest snapshot answers quantile
-    queries within the documented rank-error envelope (~#levels/k) of
-    the exact quantiles over the same rows — bounded state per group
-    no matter how long the stream runs."""
-    from hls_stac_parquet_spark.operators.sketches import merge_digest_tables
-    from hls_stac_parquet_spark.streaming.incremental import (
-        foreach_batch_digest_monitor,
-    )
-
-    src = str(tmp_path / "src")
-    # two groups with different uniform ranges so a group mix-up fails
-    rows = [("a", (i % 1000) / 1000.0) for i in range(3000)]
-    rows += [("b", 5.0 + (i % 800) / 800.0) for i in range(2400)]
-    df = spark.createDataFrame(rows, "g string, v double")
-    df.repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("g string, v double")
-        .option("maxFilesPerTrigger", 1)  # several micro-batches
-        .parquet(src)
-    )
-    dest, ckpt = str(tmp_path / "digest"), str(tmp_path / "ckpt")
-    q = foreach_batch_digest_monitor(
-        stream, dest, ckpt, "g", "v", k=200
-    ).start()
-    q.awaitTermination(120)
-
-    snap = spark.read.parquet(dest)
-    assert snap.count() == 2  # one digest row per group, O(k) state
-    est = {
-        r["g"]: (r["q_10"], r["q_50"], r["q_90"])
-        for r in merge_digest_tables(snap, ["g"], [0.1, 0.5, 0.9]).collect()
-    }
-    import numpy as np
-
-    for g, base in (("a", rows[:3000]), ("b", rows[3000:])):
-        vals = np.sort([v for _, v in base])
-        for got, p in zip(est[g], (0.1, 0.5, 0.9)):
-            exact = float(np.quantile(vals, p))
-            span = vals[-1] - vals[0]
-            assert abs(got - exact) <= 0.05 * span, (g, p, got, exact)
-
-
 def test_cmr_stream_kill_and_resume_exactly_once_manifests(spark, tmp_path):
     """Round-3 verdict item 8: kill the CMR day-cursor stream mid-run
     (crash injected AFTER the manifest write, BEFORE the offset
@@ -729,283 +261,3 @@ def test_cmr_stream_kill_and_resume_exactly_once_manifests(spark, tmp_path):
             urls = json.load(fh)
         assert len(urls) == 3, f  # granules_per_day, no duplicates
         assert len(set(urls)) == 3, f
-
-
-def test_stream_hll_monitor_equals_batch_sketch(spark, tmp_path):
-    """Streamed per-group HLL distinct monitor: the union of
-    per-micro-batch sketches answers the same question as the
-    one-shot batch sketch (datasketches unions may land in a
-    different sketch representation, so estimates agree to within
-    the HLL error envelope rather than bit-exactly), and both sit
-    within the envelope of the exact distinct counts."""
-    from hls_stac_parquet_spark.streaming.incremental import (
-        foreach_batch_hll_monitor,
-    )
-
-    src = str(tmp_path / "src")
-    rows = [("a", i % 700) for i in range(4000)]
-    rows += [("b", i % 150) for i in range(1500)]
-    df = spark.createDataFrame(rows, "g string, user_id long")
-    df.repartition(5).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("g string, user_id long")
-        .option("maxFilesPerTrigger", 1)  # several micro-batches
-        .parquet(src)
-    )
-    dest, ckpt = str(tmp_path / "hll"), str(tmp_path / "ckpt")
-    q = foreach_batch_hll_monitor(stream, dest, ckpt, "g", "user_id").start()
-    q.awaitTermination(120)
-
-    snap = spark.read.parquet(dest)
-    assert snap.count() == 2  # one sketch row per group — O(1) state
-    streamed = {
-        r["g"]: r["est"]
-        for r in snap.select(
-            "g", F.expr("hll_sketch_estimate(sk)").alias("est")
-        ).collect()
-    }
-    oneshot = {
-        r["g"]: r["est"]
-        for r in df.groupBy("g")
-        .agg(F.expr("hll_sketch_estimate(hll_sketch_agg(user_id))").alias("est"))
-        .collect()
-    }
-    for g, exact in (("a", 700), ("b", 150)):
-        assert abs(streamed[g] - oneshot[g]) <= 0.03 * exact, (
-            g, streamed[g], oneshot[g],
-        )
-        assert abs(streamed[g] - exact) <= 0.05 * exact, (g, streamed[g])
-
-
-def test_upsert_sink_kill_and_resume_exactly_once(spark, tmp_path):
-    """Round-4 verdict item 6a: crash the foreachBatch upsert sink
-    AFTER the snapshot swap, BEFORE the offset commit (worst case for
-    a non-transactional sink) and resume from the same checkpoint.
-    The replayed batch must converge to the identical snapshot —
-    update-wins merge is idempotent — and already-committed batches
-    must not reprocess."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    src, dest = str(tmp_path / "cdc"), str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    def emit(name, rows):
-        pd.DataFrame(rows, columns=["k", "v", "seq"]).to_parquet(
-            os.path.join(src, name)
-        )
-
-    emit("b1.parquet", [(1, "a", 1), (2, "b", 1)])
-    emit("b2.parquet", [(2, "B", 2), (3, "c", 1)])
-    emit("b3.parquet", [(1, "A", 2), (4, "d", 1)])
-
-    seen: list[int] = []
-    crash_armed = {"on": True}
-
-    def barrier(batch_id: int) -> None:
-        seen.append(batch_id)
-        if crash_armed["on"] and batch_id == 1:
-            raise RuntimeError("injected crash after swap, before commit")
-
-    def run():
-        stream = (
-            spark.readStream.schema("k long, v string, seq long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = foreach_batch_upsert(
-            stream, dest, ckpt, ["k"], "seq", on_batch_complete=barrier
-        )
-        _await_or_stop(q, 240)
-
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        run()  # batch 0 commits; batch 1 swaps the snapshot, then dies
-    assert seen == [0, 1]
-    # the crashed batch's output IS on disk (swap happened)
-    mid = {(r.k, r.v) for r in spark.read.parquet(dest).collect()}
-    assert mid == {(1, "a"), (2, "B"), (3, "c")}
-
-    crash_armed["on"] = False
-    run()  # resume: replay batch 1, then batch 2
-    assert seen == [0, 1, 1, 2], seen  # replayed 1, never re-ran 0
-    final = {(r.k, r.v) for r in spark.read.parquet(dest).collect()}
-    assert final == {(1, "A"), (2, "B"), (3, "c"), (4, "d")}
-    # exactly-once end state: one row per key
-    assert spark.read.parquet(dest).groupBy("k").count().filter(
-        "count > 1"
-    ).count() == 0
-
-
-def test_sessionize_kill_and_resume_state_recovery(spark, tmp_path):
-    """Round-4 verdict item 6b: kill the stateful sessionizer
-    (applyInPandasWithState) mid-run and resume from the checkpoint.
-    A session SPANS the crash point — its open state is written by
-    batch 0 and closed by the replayed batch 1 — so the test proves
-    the state store restores the pre-crash version and the replay
-    re-derives the same closed session; the idempotent upsert sink
-    (keyed on user_id+session_start) makes the end state exactly-once."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    src, dest = str(tmp_path / "sess-src"), str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def emit(name, rows):
-        pdf = pd.DataFrame(rows, columns=["user_id", "ts"])
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # Spark-readable
-        pdf.to_parquet(os.path.join(src, name))
-
-    m = dt.timedelta  # noqa: N806 — shorthand
-    emit("e1.parquet", [(1, base), (1, base + m(minutes=1))])
-    emit("e2.parquet", [(1, base + m(minutes=40)),
-                        (1, base + m(minutes=41))])
-    emit("e3.parquet", [(1, base + m(minutes=120))])
-
-    seen: list[int] = []
-    crash_armed = {"on": True}
-
-    def barrier(batch_id: int) -> None:
-        seen.append(batch_id)
-        if crash_armed["on"] and batch_id == 1:
-            raise RuntimeError("injected crash after swap, before commit")
-
-    def run(resume=False):
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = foreach_batch_upsert(
-            stream_sessionize(stream), dest, ckpt,
-            ["user_id", "session_start"], "n_events",
-            on_batch_complete=barrier,
-        )
-        if resume:
-            # the open third session holds a processing-time timer, so
-            # the resumed query never self-terminates (_await_done);
-            # wait for batch 2's commit barrier, then stop.
-            _await_done(q, lambda: 2 in seen)
-        else:
-            _await_or_stop(q, 240)
-
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        run()  # batch 0: opens session 1; batch 1: closes it, dies
-    crash_armed["on"] = False
-    run(resume=True)  # replay batch 1 from restored state, then batch 2
-
-    assert seen[0] == 0 and seen[1] == 1 and 1 in seen[2:], seen
-    assert 0 not in seen[2:], "committed batch must NOT reprocess"
-
-    rows = spark.read.parquet(dest).collect()
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in rows
-    }
-    closed = {
-        (1, base, base + m(minutes=1), 2),  # spans the crash point
-        (1, base + m(minutes=40), base + m(minutes=41), 2),
-    }
-    # still-open third session may flush via processing-time timeout
-    open_ok = {
-        (1, base + m(minutes=120), base + m(minutes=120), 1),
-    }
-    assert closed <= got, got
-    assert got - closed <= open_ok, got
-    assert len(rows) == len(got)  # no duplicate session rows
-
-
-def test_running_profile_kill_and_resume_state_recovery(spark, tmp_path):
-    """Round-5: fourth cell of the exactly-once matrix —
-    transformWithStateInPandas (RocksDB ValueState) killed mid-run.
-    A user's profile SPANS the crash (batch 0 opens it, the replayed
-    batch 1 extends it), so the test proves the RocksDB store
-    restores the pre-crash version; the idempotent upsert sink keyed
-    on user_id (order by n_events — the running count is monotone)
-    makes replays converge."""
-    pytest.importorskip("google.protobuf")
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from hls_stac_parquet_spark.streaming.incremental import (
-        stream_running_profile,
-    )
-
-    src, dest = str(tmp_path / "twsk-src"), str(tmp_path / "profiles")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
-    def emit(name, rows):
-        pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        pdf.to_parquet(os.path.join(src, name))
-
-    m = dt.timedelta  # noqa: N806
-    emit("e1.parquet", [(1, base, 1.5), (2, base, 10.0)])
-    emit("e2.parquet", [(1, base + m(minutes=5), 2.5)])
-    emit("e3.parquet", [(1, base + m(hours=1), 6.0),
-                        (2, base + m(hours=1), 1.0)])
-
-    seen: list[int] = []
-    crash_armed = {"on": True}
-
-    def barrier(batch_id: int) -> None:
-        seen.append(batch_id)
-        if crash_armed["on"] and batch_id == 1:
-            raise RuntimeError("injected crash after swap, before commit")
-
-    def run(resume=False):
-        stream = (
-            spark.readStream.schema(
-                "user_id long, ts timestamp, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = foreach_batch_upsert(
-            stream_running_profile(stream), dest, ckpt,
-            ["user_id"], "n_events", on_batch_complete=barrier,
-        )
-        if resume:
-            # timeMode="ProcessingTime" (the TTL machinery) keeps the
-            # resumed AvailableNow query alive forever (_await_done);
-            # wait for batch 2's commit barrier, then stop.
-            _await_done(q, lambda: 2 in seen)
-        else:
-            _await_or_stop(q, 240)
-
-    try:
-        with pytest.raises(StreamingQueryException, match="injected crash"):
-            run()  # batch 0 commits; batch 1 updates state, dies
-        crash_armed["on"] = False
-        run(resume=True)  # replay batch 1 from restored state, then 2
-
-        assert seen[0] == 0 and seen[1] == 1 and 1 in seen[2:], seen
-        assert 0 not in seen[2:], "committed batch must NOT reprocess"
-        got = {
-            r.user_id: (r.n_events, r.total_value, r.last_seen)
-            for r in spark.read.parquet(dest).collect()
-        }
-        # exactly-once end state: totals as if the stream never died
-        assert got == {
-            1: (3, 10.0, base + m(hours=1)),
-            2: (2, 11.0, base + m(hours=1)),
-        }, got
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )

@@ -22,19 +22,4 @@ from hls_stac_parquet_spark.functions.text import (  # noqa: F401
 from hls_stac_parquet_spark.functions.urls import (  # noqa: F401
     MGRS_TILE_PATTERN,
     extract_mgrs,
-    url_host,
-    url_scheme,
 )
-
-
-def register_sql_functions(spark) -> None:
-    """Register the engine's function library for plain-SQL callers
-    (``spark.sql``): a user of the reference switching to this engine
-    can use these from SQL without touching the Python API.
-
-    Pure-expression helpers (tokens, fingerprint, quality…) are
-    Column builders and compose in SQL via their underlying built-ins
-    already; what genuinely needs registration are the vectorized
-    pandas UDFs with no built-in equivalent.
-    """
-    spark.udf.register("hilbert_index", hilbert_index_udf)

@@ -223,20 +223,3 @@ def winnow_fingerprints(
         )
 
     return F.element_at(F.transform(F.array(grams), _select_minima), 1)
-
-
-def shingles(text: Column | str, k: int = 3) -> Column:
-    """Word k-shingles (array<string>) for MinHash/Jaccard dedup.
-
-    Built from built-ins only: tokenize, then slide a window with
-    ``transform`` over index positions and join k consecutive tokens.
-    """
-    toks = tokens(F.lower(_col(text)))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n >= k, F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]
-        ),
-    )).otherwise(F.array(F.concat_ws(" ", toks)))

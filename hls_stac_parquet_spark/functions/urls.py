@@ -1,8 +1,7 @@
 """URL and identifier extraction functions.
 
-The reference parses STAC hrefs with ``urlparse`` (cmr_api.py:101,
-write.py:223) and pulls the MGRS tile out of the URL with a regex
-(write.py:41-55). Both are single built-in expressions in Spark.
+The reference pulls the MGRS tile out of a granule URL with a regex
+(write.py:41-55); here that is one built-in expression.
 """
 
 from __future__ import annotations
@@ -25,11 +24,3 @@ def extract_mgrs(url: Column | str) -> Column:
     normalized to NULL to keep the sentinel semantics explicit)."""
     m = F.regexp_extract(_col(url), MGRS_TILE_PATTERN, 1)
     return F.when(m != "", m)
-
-
-def url_scheme(url: Column | str) -> Column:
-    return F.parse_url(_col(url), F.lit("PROTOCOL"))
-
-
-def url_host(url: Column | str) -> Column:
-    return F.parse_url(_col(url), F.lit("HOST"))

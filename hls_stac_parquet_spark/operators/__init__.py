@@ -7,13 +7,11 @@ demands (dedup, similarity search, text quality, multimodal).
 
 from hls_stac_parquet_spark.operators.asof import asof_join  # noqa: F401
 from hls_stac_parquet_spark.operators.completeness import (  # noqa: F401
-    completeness_check,
     expected_days,
 )
 from hls_stac_parquet_spark.operators.dedup import (  # noqa: F401
     dedup_exact,
     minhash_candidate_pairs,
-    minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
     simhash_candidate_pairs,
@@ -40,7 +38,6 @@ from hls_stac_parquet_spark.operators.tokenizer import (  # noqa: F401
     word_frequencies,
 )
 from hls_stac_parquet_spark.operators.graph import (  # noqa: F401
-    connected_components,
     connected_components_auto,
     connected_components_star,
     pagerank,

@@ -5,9 +5,9 @@ month (origin-date-aware: the collection's first month starts at the
 origin day, not day 1 — write.py:180-196) and raises if the listing
 differs (write.py:172-202). Here: generate the expected keys with
 ``sequence`` + ``explode`` and compare the two key sets both ways
-(``completeness_check``: two anti-joins; ``require_complete``: one
-grouped pass, one action) — set algebra instead of driver loops, so
-the same gate works for a month or a decade of partitions.
+in one grouped pass (``require_complete``, one action) — set algebra
+instead of driver loops, so the same gate works for a month or a
+decade of partitions.
 """
 
 from __future__ import annotations
@@ -37,17 +37,6 @@ def expected_days(
         "SELECT explode(sequence(to_date(:lo), to_date(:hi), interval 1 day)) AS day",
         args={"lo": lo.isoformat(), "hi": end.isoformat()},
     )
-
-
-def completeness_check(
-    expected: DataFrame, actual: DataFrame, key: str = "day"
-) -> tuple[DataFrame, DataFrame]:
-    """(missing, unexpected) — both-direction anti-joins. Callers
-    assert both are empty; the DataFrames double as the error report.
-    """
-    missing = expected.join(actual, key, "left_anti")
-    unexpected = actual.join(expected, key, "left_anti")
-    return missing, unexpected
 
 
 def require_complete(expected: DataFrame, actual: DataFrame, key: str = "day") -> None:

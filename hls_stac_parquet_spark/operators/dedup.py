@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from hls_stac_parquet_spark.functions.text import (
     doc_fingerprint,
     shingle_hashes_from,
-    shingles,
     token_hashes,
 )
 
@@ -57,34 +56,6 @@ def _minhash_params(num_hashes: int, seed: int = 42):
     a = rng.integers(1, 1 << 31, size=num_hashes, dtype=np.int64) | 1
     b = rng.integers(0, 1 << 31, size=num_hashes, dtype=np.int64)
     return a.tolist(), b.tolist()
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Per-document MinHash signature (array<bigint> of length
-    ``num_hashes``).
-
-    Shuffle-free hybrid (same pattern as :func:`simhash`, and
-    measured faster than the alternatives — explode+groupBy with 64
-    min-aggregates pays seconds of codegen compilation; per-(seed,
-    shingle) string hashing pays 64× the string throughput):
-
-    - JVM side: hashed word shingles (fixed-width hash combining,
-      zero shingle-string allocation — see
-      :func:`~...functions.text.hashed_shingles`), 31-bit masked.
-    - Arrow batch side: the ``num_hashes`` permutations are a
-      universal-hash family h_i(x) = (a_i·x + b_i) mod (2^61-1)
-      evaluated as one numpy broadcast multiply-add + segmented min
-      (``minimum.reduceat``).
-    """
-    return _minhash_sig_bands(df, text_col, id_col, num_hashes, shingle_k, None).select(
-        id_col, "signature"
-    )
 
 
 def _minhash_sig_bands(

@@ -24,102 +24,6 @@ CORE_NUMBERS_DRIVER_MAX = 200_000
 CC_DRIVER_MAX = 1_000_000
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Min-label-propagation connected components.
-
-    Returns ``(node, component)`` where ``component`` is the smallest
-    node id reachable from ``node`` — deterministic, independent of
-    partitioning. Nodes are the distinct endpoints of ``edges``
-    (isolated nodes never enter a dedup graph).
-
-    Algorithm: alternating-direction min propagation — each round every
-    node adopts ``min(label, min(neighbor labels))`` via a join on the
-    symmetrized edge list, until a round changes nothing (driver-side
-    convergence check on a single aggregate). Converges in O(diameter)
-    rounds; near-dup graphs are unions of small cliques, so 2-3 rounds
-    in practice.
-
-    Scale posture: each round is one shuffle join on node id plus a
-    groupBy min. Labels are single longs; the edge list is never
-    widened. Each round's labels are ``localCheckpoint``-ed: every
-    round references the previous labels TWICE (directly + via the
-    neighbor minimum), so without lineage truncation the logical plan
-    doubles per round — a 10-round run builds a 2^10-leaf plan and
-    the DRIVER dies assembling plan strings/optimizing, regardless of
-    data size. (``persist`` alone caches data but not the plan.) On a
-    cluster, prefer ``spark.sparkContext.setCheckpointDir`` + eager
-    ``checkpoint()`` if executor loss must be survivable mid-run.
-    This is one-hop min-label propagation — O(diameter) rounds, NOT
-    the O(log d) Hash-to-Min / large-star–small-star family (Rastogi
-    et al.; Kiveris et al.) — which is the right trade for dedup
-    graphs (unions of small cliques, diameter 2-3). For
-    high-diameter graphs raise ``max_iter`` or switch algorithms.
-
-    Raises ``RuntimeError`` if the loop exhausts ``max_iter`` without
-    converging — silently returning unconverged labels would split
-    clusters with no error signal.
-    """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        # localCheckpoint, not persist: joined every round — truncate
-        # lineage once, immune to cache eviction mid-fixpoint
-        .localCheckpoint()
-    )
-    # eager localCheckpoint: materializes AND truncates lineage, so
-    # round N's plan is a constant-size join of two checkpointed
-    # relations (old checkpoint RDDs are dropped by the ContextCleaner
-    # once unreferenced)
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
-    sym.count()  # materialize once; reused every round
-
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy(sym.a.alias("node"))
-            .agg(F.min("component").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    "component", F.coalesce("nmin", F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds (graph diameter exceeds max_iter); raise max_iter"
-        )
-    return labels
-
-
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
@@ -128,24 +32,24 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond" —
-    public algorithm). Same output contract as
-    :func:`connected_components`: ``(node, component)`` with
-    ``component`` = the smallest reachable node id.
+    public algorithm): ``(node, component)`` with ``component`` =
+    the smallest reachable node id, deterministic and independent of
+    partitioning. Nodes are the distinct endpoints of ``edges``.
 
-    Use this instead of min-label propagation when components can be
-    LONG CHAINS rather than small cliques (e.g. transitive near-dup
-    chains A~B~C~... from embedding similarity): label propagation
-    needs O(diameter) rounds, large-star/small-star contracts the
-    graph toward a star forest in O(log² n) rounds regardless of
-    diameter — a 10^6-long chain converges in ~20 rounds, not 10^6.
+    Components can be LONG CHAINS rather than small cliques (e.g.
+    transitive near-dup chains A~B~C~... from embedding similarity):
+    min-label propagation needs O(diameter) rounds, large-star/
+    small-star contracts the graph toward a star forest in O(log² n)
+    rounds regardless of diameter — a 10^6-long chain converges in
+    ~20 rounds, not 10^6.
 
     Per round: two (groupBy-min + join) shuffles, each keyed on node
     id and carrying only (node, node) long pairs; the edge set can
     only shrink or re-point (never densify beyond the original size
     in undirected form), so round cost is bounded by the input edge
-    count. Every round ``localCheckpoint``s the edge frame — same
-    lineage-truncation argument as label propagation (each round
-    reads its predecessor twice).
+    count. Every round ``localCheckpoint``s the edge frame: each round
+    reads its predecessor twice, so without lineage truncation the
+    logical plan doubles per round and the driver dies planning it.
 
     large-star(u): every neighbor v > u re-points to m = min(N(u)∪{u})
     small-star(u): every neighbor v ≤ u re-points to m (plus u itself)

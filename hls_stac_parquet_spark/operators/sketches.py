@@ -220,58 +220,3 @@ def countmin_estimate(
         .groupBy(key_col)
         .agg(F.min(F.coalesce("cnt", F.lit(0))).alias("est_count"))
     )
-
-
-def tdigest_build(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    k: int = 200,
-) -> DataFrame:
-    """Build PERSISTABLE digest rows — one (group, means, weights) row
-    per group — without reading quantiles off them: the artifact a
-    daily job stores and :func:`merge_digest_tables` rolls up later.
-    Same two-stage shape as :func:`tdigest_quantiles` (map-side
-    partition compression, one sketch-row shuffle, per-group
-    recompression); only the output differs (arrays, not estimates).
-    """
-    group_cols = list(group_cols)
-
-    digest_schema = StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            StructField("means", ArrayType(DoubleType())),
-            StructField("weights", ArrayType(DoubleType())),
-        ]
-    )
-
-    def build(batches):
-        for pdf in batches:
-            rows = []
-            for key, grp in pdf.groupby(group_cols, dropna=False, sort=False):
-                vals = grp[value_col].to_numpy(dtype=np.float64)
-                vals = vals[~np.isnan(vals)]
-                if not len(vals):
-                    continue
-                m, w = _compress(vals, np.ones_like(vals), k)
-                key = key if isinstance(key, tuple) else (key,)
-                rows.append((*key, list(m), list(w)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=group_cols + ["means", "weights"]
-                )
-
-    def merge(key, pdfs):
-        m = np.concatenate([np.asarray(x, dtype=np.float64) for x in pdfs["means"]])
-        w = np.concatenate([np.asarray(x, dtype=np.float64) for x in pdfs["weights"]])
-        m, w = _compress(m, w, k)
-        return pd.DataFrame(
-            [(*key, list(m), list(w))], columns=group_cols + ["means", "weights"]
-        )
-
-    from hls_stac_parquet_spark.tuning import parallelize_for_udf
-
-    partials = parallelize_for_udf(df.select(*group_cols, value_col)).mapInPandas(
-        build, digest_schema
-    )
-    return partials.groupBy(*group_cols).applyInPandas(merge, digest_schema)

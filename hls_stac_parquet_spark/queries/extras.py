@@ -433,20 +433,27 @@ def q_hll_overlap(spark, sf_dir):
         "count(*) - count(l_quantity) AS n_null, "
         "count(DISTINCT l_quantity) AS n_distinct, "
         "round(min(l_quantity), 6) AS min_v, round(max(l_quantity), 6) AS max_v, "
-        "round(avg(l_quantity), 6) AS mean_v FROM lineitem "
+        "(sum(CAST(round(l_quantity * 100) AS BIGINT)) * 20000 "
+        "+ count(l_quantity)) // (2 * count(l_quantity)) / 1e6 AS mean_v "
+        "FROM lineitem "
         "UNION ALL "
         "SELECT 'l_extendedprice', count(*), count(*) - count(l_extendedprice), "
         "count(DISTINCT l_extendedprice), round(min(l_extendedprice), 6), "
-        "round(max(l_extendedprice), 6), round(avg(l_extendedprice), 6) "
+        "round(max(l_extendedprice), 6), "
+        "(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) * 20000 "
+        "+ count(l_extendedprice)) // (2 * count(l_extendedprice)) / 1e6 "
         "FROM lineitem "
         "UNION ALL "
         "SELECT 'l_discount', count(*), count(*) - count(l_discount), "
         "count(DISTINCT l_discount), round(min(l_discount), 6), "
-        "round(max(l_discount), 6), round(avg(l_discount), 6) FROM lineitem "
+        "round(max(l_discount), 6), "
+        "(sum(CAST(round(l_discount * 100) AS BIGINT)) * 20000 "
+        "+ count(l_discount)) // (2 * count(l_discount)) / 1e6 FROM lineitem "
         "UNION ALL "
         "SELECT 'l_tax', count(*), count(*) - count(l_tax), "
         "count(DISTINCT l_tax), round(min(l_tax), 6), round(max(l_tax), 6), "
-        "round(avg(l_tax), 6) FROM lineitem"
+        "(sum(CAST(round(l_tax * 100) AS BIGINT)) * 20000 "
+        "+ count(l_tax)) // (2 * count(l_tax)) / 1e6 FROM lineitem"
     ),
 )
 def q_profile_columns(spark, sf_dir):
@@ -457,7 +464,13 @@ def q_profile_columns(spark, sf_dir):
     naive per-column loop would rescan the table per column); the
     wide 1-row result is then unpivoted JVM-side with stack(). The
     exact distinct counts shuffle one value set per column; swap in
-    approx_count_distinct at the 100 TB tier when ±2% suffices."""
+    approx_count_distinct at the 100 TB tier when ±2% suffices.
+
+    The mean comes from the exact sum of cents (each column holds
+    TPC-H's two-decimal values as doubles), rounded half-up to 6
+    decimals in integer arithmetic: a double ``avg`` depends on the
+    summation order, and at sf0.01 the ``l_discount`` and ``l_tax``
+    means sit exactly on a rounding half-boundary."""
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
@@ -476,7 +489,10 @@ def q_profile_columns(spark, sf_dir):
             F.count_distinct(c).alias(f"{c}__dist"),
             F.round(F.min(c), 6).alias(f"{c}__min"),
             F.round(F.max(c), 6).alias(f"{c}__max"),
-            F.round(F.avg(c), 6).alias(f"{c}__mean"),
+            F.expr(
+                f"(CAST(sum(CAST(round({c} * 100) AS BIGINT)) AS DECIMAL(38, 0))"
+                f" * 20000 + count({c})) div (2 * count({c})) / 1e6"
+            ).alias(f"{c}__mean"),
         ]
     wide = li.agg(*aggs)
     stack_args = ", ".join(

@@ -7,7 +7,6 @@ from hls_stac_parquet_spark.sinks.geoparquet import (  # noqa: F401
 )
 from hls_stac_parquet_spark.sinks.manifest import (  # noqa: F401
     manifest_key,
-    manifest_path,
     read_manifests,
     write_manifests,
 )

@@ -15,10 +15,9 @@ is a two-stage Spark-first design:
    which would re-copy every byte at 100 TB).
 
 ``dest`` is a store URL (``hls_stac_parquet_spark.store.get_store``
-— the ``obstore.from_url`` analog, links.py:92-96): POSIX path,
-``s3://…`` via a registered factory, or ``memory://`` (test double;
-writes route through the driver since Spark worker processes can't
-see an in-process store).
+— the ``obstore.from_url`` analog, links.py:92-96): a POSIX path or
+``s3://…`` via a registered factory. Either way the executor tasks
+write the files.
 
 Layout: this module alone decides how a collection-month is laid out.
 A month of ``n`` rows is ``ceil(n / ROWS_PER_FILE)`` range-partitioned
@@ -347,9 +346,7 @@ def write_geoparquet_partitions(
 ) -> DataFrame:
     """Write each partition of ``df``, rows in their current order, as
     one footer-stamped GeoParquet file named by its partition id; an
-    empty partition writes nothing (an in-process store, which the
-    workers cannot reach, gets one object for the whole frame, written
-    from the driver). The caller has already clustered
+    empty partition writes nothing. The caller has already clustered
     ``df`` (:func:`cluster_month`; :func:`write_geoparquet` does it
     for a plain frame);
     ``reference_layout=True`` names the file the reference's way and
@@ -358,63 +355,44 @@ def write_geoparquet_partitions(
     Returns the write manifest (one row per file).
     """
     store = get_store(dest)
-    manifest_schema = (
-        "path string, n_rows bigint, xmin double, ymin double, "
-        "xmax double, ymax double"
-    )
-
-    def _file_key(pid: int) -> str:
-        return _month_path(
-            collection_id, year, month, version, reference_layout,
-            part=pid, token=uuid.uuid4().hex[:8],
-        )
-
-    def _write_file(table: pa.Table, key: str) -> dict:
-        """Encode, stamp and write one file; its manifest row."""
-        table = _encode_geometry_column(table, GEOMETRY_COL)
-        table, bbox = _stamp_geo_footer(table, GEOMETRY_COL)
-        with store.open_output(key) as f:
-            pq.write_table(
-                table, f,
-                compression=COMPRESSION,
-                compression_level=COMPRESSION_LEVEL,
-            )
-        return {
-            "path": store.full_url(key),
-            "n_rows": table.num_rows,
-            "xmin": bbox[0] if bbox else None,
-            "ymin": bbox[1] if bbox else None,
-            "xmax": bbox[2] if bbox else None,
-            "ymax": bbox[3] if bbox else None,
-        }
-
-    if not store.distributed:
-        # in-process test store: materialize the (already clustered
-        # and sorted) result on the driver and write one object —
-        # toArrow preserves partition order, so the total order holds
-        table = df.toArrow()
-        spark = df.sparkSession
-        if table.num_rows == 0:
-            return spark.createDataFrame([], manifest_schema)
-        row = _write_file(table, _file_key(0))
-        return spark.createDataFrame([tuple(row.values())], manifest_schema)
 
     def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
         batch_list = list(batches)
         if not batch_list:
             return
         table = pa.Table.from_batches(batch_list)
         if table.num_rows == 0:
             return
+        table = _encode_geometry_column(table, GEOMETRY_COL)
+        table, bbox = _stamp_geo_footer(table, GEOMETRY_COL)
+        key = _month_path(
+            collection_id, year, month, version, reference_layout,
+            part=TaskContext.get().partitionId(), token=uuid.uuid4().hex[:8],
+        )
         # `store` pickles into the task (config only); resolving the
         # URL here would miss driver-side scheme registrations
-        row = _write_file(table, _file_key(pid))
-        yield pa.RecordBatch.from_pylist([row])
+        with store.open_output(key) as f:
+            pq.write_table(
+                table, f,
+                compression=COMPRESSION,
+                compression_level=COMPRESSION_LEVEL,
+            )
+        yield pa.RecordBatch.from_pylist([{
+            "path": store.full_url(key),
+            "n_rows": table.num_rows,
+            "xmin": bbox[0] if bbox else None,
+            "ymin": bbox[1] if bbox else None,
+            "xmax": bbox[2] if bbox else None,
+            "ymax": bbox[3] if bbox else None,
+        }])
 
-    return df.mapInArrow(write_partition, manifest_schema)
+    return df.mapInArrow(
+        write_partition,
+        "path string, n_rows bigint, xmin double, ymin double, "
+        "xmax double, ymax double",
+    )
 
 
 def optimize_geoparquet_month(
@@ -440,8 +418,7 @@ def optimize_geoparquet_month(
     (new files land before old ones are removed; re-running converges
     because the rewrite reads whatever is present) — the same
     at-least-once-then-idempotent discipline as the manifest sink.
-    Requires a Spark-readable store (POSIX, or s3 with Hadoop s3a);
-    in-process test stores can't feed a distributed re-sort.
+    Requires a Spark-readable store (POSIX, or s3 with Hadoop s3a).
 
     Returns {files_before, files_after, n_rows, manifest}.
     """

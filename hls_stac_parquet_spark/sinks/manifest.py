@@ -9,9 +9,9 @@ preserved (the reference's own round-trip test compares as sets,
 tests/test_workflow.py:49-51).
 
 ``dest`` is a store URL, like the reference's ``from_url(dest)``
-(links.py:92-96): a POSIX path, ``file://…``, ``memory://bucket``
-(test double), or any scheme registered via
-``hls_stac_parquet_spark.store.register_store_scheme``.
+(links.py:92-96): a POSIX path, ``file://…``, or any scheme
+registered via ``hls_stac_parquet_spark.store.register_store_scheme``
+(``s3://`` through sources/s3store.py).
 """
 
 from __future__ import annotations
@@ -40,10 +40,6 @@ def manifest_key(collection_id: str, date: dt.date) -> str:
     )
 
 
-def manifest_path(dest: str, collection_id: str, date: dt.date) -> str:
-    return get_store(dest).full_url(manifest_key(collection_id, date))
-
-
 def write_manifests(
     df: DataFrame,
     dest: str,
@@ -63,39 +59,14 @@ def write_manifests(
     retries are safe (at-least-once write per group).
     skip_existing mirrors links.py:100-103; the existence probe runs
     executor-side against the same store the write targets.
-
-    Store dispatch: distributed stores (POSIX, real object stores)
-    write ON THE EXECUTORS as above. A non-distributed store
-    (``memory://`` — the in-process test double) is invisible to
-    Spark's worker processes, so the same grouped aggregate is
-    collected and written by the driver; the collected rows are one
-    (day, urls) pair per group, not fact data.
     """
     import pandas as pd
-
-    store = get_store(dest)
-
-    if not store.distributed:
-        rows = (
-            df.select("collection_id", "date", "url")
-            .groupBy("collection_id", "date")
-            .agg(F.sort_array(F.collect_list("url")).alias("urls"))
-            .collect()  # one row per (collection, day)
-        )
-        written = []
-        for r in rows:
-            key = manifest_key(r.collection_id, r.date)
-            if skip_existing and store.exists(key):
-                continue
-            store.put_bytes(key, json.dumps(list(r.urls)).encode())
-            written.append(store.full_url(key))
-        return sorted(written)
 
     # the resolved Store pickles into the tasks (stores carry only
     # config — URL/region/credential callable); resolving by URL
     # inside the task would miss driver-side register_store_scheme
     # registrations (worker processes have a fresh registry)
-    task_store = store
+    task_store = get_store(dest)
 
     def _write_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
         collection_id = pdf["collection_id"].iloc[0]
@@ -127,9 +98,10 @@ def read_manifests(
     """Read a month of manifests → (collection_id, year, month, day,
     urls) rows. The store's prefix listing picks the day files, as the
     reference's obstore.list does (write.py:152-168), and Spark reads
-    them in one scan. For a store without a Hadoop filesystem
-    (memory://), the GETs run driver-side — a month is ≤31 small JSON
-    objects by construction."""
+    them in one scan. For a store Spark cannot read (an S3 store on a
+    cluster without hadoop-aws, as the reference reads manifests), the
+    GETs run driver-side — a month is ≤31 small JSON objects by
+    construction."""
     store = get_store(dest)
     prefix = posixpath.join("links", collection_id, str(year), f"{month:02d}")
     day_re = r"(\d{4})-(\d{2})-(\d{2})\.json$"

@@ -51,14 +51,16 @@ class S3Store(Store):
     cheaply like the other stores.
     """
 
-    distributed = True
-
     #: objects above this size upload via multipart (AWS caps a single
     #: PUT at 5 GiB; far below that, one-shot PUTs of month-scale
     #: objects buffer the whole body per request and cannot resume).
-    DEFAULT_MULTIPART_THRESHOLD = 64 * 1024 * 1024
+    MULTIPART_THRESHOLD = 64 * 1024 * 1024
     #: per-part size (AWS minimum is 5 MiB for all but the last part).
-    DEFAULT_PART_SIZE = 64 * 1024 * 1024
+    PART_SIZE = 64 * 1024 * 1024
+    #: attempts per request (sources/retry.py backoff between them)
+    RETRY_ATTEMPTS = 3
+    #: per-request socket timeout, seconds
+    TIMEOUT = 60.0
 
     def __init__(
         self,
@@ -66,11 +68,7 @@ class S3Store(Store):
         credentials: Callable[[], dict] | None = None,
         region: str = "us-west-2",
         endpoint: str | None = None,
-        timeout: float = 60.0,
         spark_readable: bool = True,
-        multipart_threshold: int | None = None,
-        part_size: int | None = None,
-        retry_attempts: int = 3,
     ):
         parsed = urlparse(url)
         self.bucket = parsed.netloc
@@ -82,20 +80,10 @@ class S3Store(Store):
             if endpoint
             else f"https://{self.bucket}.s3.{region}.amazonaws.com"
         )
-        self.timeout = timeout
         # whether the Spark runtime can read these objects directly
         # via Hadoop s3a (cluster with hadoop-aws). False → readers
         # fall back to driver-side listing+GET through this store.
         self.spark_readable = spark_readable
-        self.multipart_threshold = (
-            multipart_threshold
-            if multipart_threshold is not None
-            else self.DEFAULT_MULTIPART_THRESHOLD
-        )
-        self.part_size = (
-            part_size if part_size is not None else self.DEFAULT_PART_SIZE
-        )
-        self.retry_attempts = retry_attempts
 
     def _key(self, path: str) -> str:
         return f"{self.prefix}/{path}" if self.prefix else path
@@ -126,10 +114,10 @@ class S3Store(Store):
                 url, data=data if method in ("PUT", "POST") else None,
                 headers=headers, method=method,
             )
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
+            with urllib.request.urlopen(req, timeout=self.TIMEOUT) as resp:
                 return resp.status, resp.read(), dict(resp.headers)
 
-        return request_with_retries(send, attempts=self.retry_attempts)
+        return request_with_retries(send, attempts=self.RETRY_ATTEMPTS)
 
     def _auth_headers(
         self, method: str, url: str, data: bytes
@@ -175,7 +163,7 @@ class S3Store(Store):
         return self.credentials is not None
 
     def put_bytes(self, path: str, data: bytes) -> None:
-        if len(data) > self.multipart_threshold:
+        if len(data) > self.MULTIPART_THRESHOLD:
             self._put_multipart(path, data)
             return
         status, body, _ = self._request("PUT", self._key(path), data=data)
@@ -204,9 +192,9 @@ class S3Store(Store):
         try:
             etags: list[str] = []
             for n, off in enumerate(
-                range(0, len(data), self.part_size), start=1
+                range(0, len(data), self.PART_SIZE), start=1
             ):
-                part = data[off : off + self.part_size]
+                part = data[off : off + self.PART_SIZE]
                 status, body, headers = self._request(
                     "PUT", key, data=part,
                     query=f"partNumber={n}&uploadId={uid}",
@@ -258,8 +246,14 @@ class S3Store(Store):
             raise IOError(f"DELETE {path}: HTTP {status} {body[:200]!r}")
 
     def list(self, prefix: str) -> list[str]:
-        """ListObjectsV2 with continuation (paged, 1000 keys/page)."""
-        key_prefix = self._key(prefix).rstrip("/") + "/"
+        """ListObjectsV2 with continuation (paged, 1000 keys/page).
+
+        Same contract as the local store: the key equal to ``prefix``
+        and every key under ``prefix/``, but not a sibling that only
+        shares leading characters (``a`` lists ``a/b``, not ``ab``).
+        ``list("")`` lists the whole root."""
+        key_prefix = self._key(prefix).rstrip("/")
+        under = key_prefix + "/" if key_prefix else ""
         strip = len(self.prefix) + 1 if self.prefix else 0
         keys: list[str] = []
         token: str | None = None
@@ -273,7 +267,8 @@ class S3Store(Store):
             ns = "{http://s3.amazonaws.com/doc/2006-03-01/}"
             root = ET.fromstring(body)
             for c in root.findall(f"{ns}Contents/{ns}Key"):
-                keys.append(c.text[strip:])
+                if c.text.startswith(under) or (prefix and c.text == key_prefix):
+                    keys.append(c.text[strip:])
             token = (
                 root.findtext(f"{ns}NextContinuationToken")
                 if root.findtext(f"{ns}IsTruncated") == "true"

@@ -13,9 +13,8 @@ reference only logs failures, write.py:227-228; a dead-letter table
 makes retries a join).
 
 Transport: ``file://`` / plain paths read locally (the test path —
-the reference's own tests swap object storage for MemoryStore/tmpdir
-the same way, tests/test_workflow.py:43,56-64); http(s) uses stdlib
-urllib. Credentials plug in via ``credential_provider`` — a callable
+the reference's own tests read tmpdir fixtures the same way,
+tests/test_workflow.py:56-64); http(s) uses stdlib urllib. Credentials plug in via ``credential_provider`` — a callable
 ``netloc -> headers`` resolved once per netloc per task, mirroring
 the reference's per-netloc credentialed-store reuse
 (fetch.py:30-48, NasaEarthdataAsyncCredentialProvider at :39-44).

@@ -2,8 +2,7 @@
 
 The reference addresses object storage through ``obstore.store.
 from_url(dest)`` (links.py:92-96, write.py:134, fetch.py:46) so a
-caller can point ``dest`` at ``s3://…``, ``file://…``, or a
-``MemoryStore`` test double (tests/test_workflow.py:43) without the
+caller can point ``dest`` at ``s3://…`` or ``file://…`` without the
 pipeline code changing. Spark's own DataFrame reads/writes already
 get this for free from Hadoop filesystems (``s3a://`` et al.) — but
 this repo's *custom* executor-side writers (the per-day manifest
@@ -14,12 +13,6 @@ accepted POSIX paths (round-3 verdict, "What's missing" #1).
 ``get_store(url)`` is the ``from_url`` analog:
 
 - no scheme or ``file://`` → :class:`LocalStore` (POSIX).
-- ``memory://bucket`` → :class:`MemoryStore`, a process-local dict —
-  the analog of obstore's MemoryStore test double. It is
-  ``distributed=False``: Spark python workers are separate
-  processes, so sinks route memory-store writes through the driver
-  (manifest groups and month files are tiny by construction — the
-  same driver-side shape the reference always uses).
 - other schemes → resolved via :func:`register_store_scheme` hooks.
   A native stdlib-HTTP ``s3://`` store ships in sources/s3store.py
   (``register_s3_scheme(...)`` wires credentials + endpoint); it is
@@ -27,16 +20,18 @@ accepted POSIX paths (round-3 verdict, "What's missing" #1).
   decisions. Unknown schemes get an error message naming the seam
   instead of a bare KeyError.
 
-Stores carry only their root URL and are pickled into tasks; each
-task re-binds cheaply (LocalStore holds no handles). Paths passed to
-store methods are RELATIVE to the root, exactly like the reference's
-relative manifest paths under its ``from_url(dest)`` store.
+Every store must be reachable from Spark's Python worker processes:
+the sinks write from executor tasks, never from the driver. Stores
+carry only their root URL and config and are pickled into tasks;
+each task re-binds cheaply (LocalStore holds no handles). Paths
+passed to store methods are RELATIVE to the root, exactly like the
+reference's relative manifest paths under its ``from_url(dest)``
+store.
 """
 
 from __future__ import annotations
 
 import os
-import posixpath
 from typing import BinaryIO, Callable
 from urllib.parse import urlparse
 
@@ -44,12 +39,6 @@ from urllib.parse import urlparse
 class Store:
     """Minimal object-store protocol the sinks need (HEAD/PUT/GET/
     LIST — the four obstore calls the reference makes)."""
-
-    #: True when a write from one Spark task process is visible to
-    #: every other process (driver included). LocalStore on one host
-    #: or any real object store: yes. MemoryStore: no — sinks must
-    #: route through the driver.
-    distributed: bool = True
 
     def full_url(self, path: str) -> str:
         raise NotImplementedError
@@ -79,14 +68,13 @@ class Store:
 
     def spark_url(self, path: str = "") -> str | None:
         """URL Spark/Hadoop can read directly (``spark.read.*``), or
-        None when the store has no Hadoop filesystem (memory://)."""
+        None when the runtime has no Hadoop filesystem for it (an
+        S3 store on a cluster without hadoop-aws)."""
         return None
 
 
 class LocalStore(Store):
     """POSIX-backed store rooted at a directory."""
-
-    distributed = True
 
     def __init__(self, root: str):
         self.root = root
@@ -112,9 +100,9 @@ class LocalStore(Store):
 
     def list(self, prefix: str) -> list[str]:
         base = self._abs(prefix)
-        # a key can BE the prefix (object stores have no dir/file
-        # distinction; MemoryStore returns it, so must we —
-        # tests/test_store.py's differential property check)
+        # a key can BE the prefix: object stores have no dir/file
+        # distinction, and an S3 prefix listing returns the key equal
+        # to the prefix, so a file listed by its own path is returned
         if os.path.isfile(base):
             return [prefix]
         out = []
@@ -136,82 +124,9 @@ class LocalStore(Store):
         return self._abs(path)
 
 
-#: process-global memory buckets: {netloc: {key: bytes}} — the
-#: obstore MemoryStore analog. Lives for the process; distinct
-#: bucket names isolate tests.
-_MEMORY_BUCKETS: dict[str, dict[str, bytes]] = {}
-
-
-class MemoryStore(Store):
-    """In-process dict-backed store (``memory://bucket[/prefix]``).
-
-    Test double for the object-store code path, like the reference's
-    obstore MemoryStore (tests/test_workflow.py:43). NOT visible
-    across Spark worker processes — sinks check ``distributed`` and
-    write via the driver."""
-
-    distributed = False
-
-    def __init__(self, bucket: str, prefix: str = ""):
-        self.bucket = bucket
-        self.prefix = prefix.strip("/")
-        _MEMORY_BUCKETS.setdefault(bucket, {})
-
-    @property
-    def _data(self) -> dict[str, bytes]:
-        return _MEMORY_BUCKETS.setdefault(self.bucket, {})
-
-    def _key(self, path: str) -> str:
-        return posixpath.join(self.prefix, path) if self.prefix else path
-
-    def full_url(self, path: str) -> str:
-        return f"memory://{self.bucket}/" + self._key(path)
-
-    def exists(self, path: str) -> bool:
-        return self._key(path) in self._data
-
-    def put_bytes(self, path: str, data: bytes) -> None:
-        self._data[self._key(path)] = bytes(data)
-
-    def get_bytes(self, path: str) -> bytes:
-        return self._data[self._key(path)]
-
-    def list(self, prefix: str) -> list[str]:
-        key_prefix = self._key(prefix).rstrip("/")
-        strip = len(self.prefix) + 1 if self.prefix else 0
-        if not key_prefix:
-            # root listing: contract parity with LocalStore, which
-            # walks the whole root for list("")
-            return sorted(k[strip:] for k in self._data)
-        return sorted(
-            k[strip:]
-            for k in self._data
-            if k == key_prefix or k.startswith(key_prefix + "/")
-        )
-
-    def delete(self, path: str) -> None:
-        del self._data[self._key(path)]
-
-    def open_output(self, path: str) -> BinaryIO:
-        import io
-
-        store, key = self, self._key(path)
-
-        class _Buf(io.BytesIO):
-            def close(buf) -> None:  # noqa: N805 — commit on close
-                store._data[key] = buf.getvalue()
-                io.BytesIO.close(buf)
-
-        return _Buf()
-
-
 #: scheme → factory(url) hooks for cloud stores (registered by the
 #: deployment; e.g. an fsspec/boto3-backed S3 store)
 _SCHEME_FACTORIES: dict[str, Callable[[str], Store]] = {}
-
-#: scheme → Hadoop filesystem scheme for direct Spark reads of the
-#: same URL (the DataFrame half of the sink doesn't need the Store)
-HADOOP_SCHEME = {"s3": "s3a", "s3a": "s3a", "gs": "gs", "abfs": "abfs"}
 
 
 def register_store_scheme(
@@ -224,13 +139,10 @@ def register_store_scheme(
 
 def get_store(url: str) -> Store:
     """``obstore.store.from_url`` analog: URL → bound Store."""
-    parsed = urlparse(url)
-    scheme = parsed.scheme
+    scheme = urlparse(url).scheme
     if scheme in ("", "file"):
         root = url[len("file://"):] if scheme == "file" else url
         return LocalStore(root)
-    if scheme == "memory":
-        return MemoryStore(parsed.netloc, parsed.path)
     if scheme in _SCHEME_FACTORIES:
         return _SCHEME_FACTORIES[scheme](url)
     raise ValueError(

@@ -192,10 +192,25 @@ def test_bbox_query_rejects_nan_bounds(spark, pipeline_out):
 
 
 def test_spark_unreadable_store_is_a_clear_error(spark):
-    with pytest.raises(ValueError, match="needs a Spark-readable store"):
-        read_geoparquet(spark, "memory://gpq-unreadable", "HLSL30_2.0")
-    with pytest.raises(ValueError, match="needs a Spark-readable store"):
-        bbox_query(spark, "memory://gpq-unreadable", "HLSL30_2.0", WORLD)
+    """An S3 store on a cluster without hadoop-aws: the readers refuse
+    before making any request (the local endpoint is never contacted)."""
+    from hls_stac_parquet_spark.sources.s3store import S3Store
+    from hls_stac_parquet_spark.store import (
+        _SCHEME_FACTORIES,
+        register_store_scheme,
+    )
+
+    register_store_scheme(
+        "s3", lambda url: S3Store(url, endpoint="http://127.0.0.1:9",
+                                  spark_readable=False),
+    )
+    try:
+        with pytest.raises(ValueError, match="needs a Spark-readable store"):
+            read_geoparquet(spark, "s3://gpq-unreadable", "HLSL30_2.0")
+        with pytest.raises(ValueError, match="needs a Spark-readable store"):
+            bbox_query(spark, "s3://gpq-unreadable", "HLSL30_2.0", WORLD)
+    finally:
+        _SCHEME_FACTORIES.pop("s3", None)
 
 
 def test_read_back_clustered_order_within_files(spark, pipeline_out):

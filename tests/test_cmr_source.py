@@ -245,14 +245,11 @@ def test_stream_endpoint_batch_reads_spanning_granule_once(cmr_stub):
     assert _ids(rows) == sorted(g["id"] for g in MIDNIGHT_GRANULES)
 
 
-@pytest.mark.parametrize("dest_kind", ["posix", "memory"])
-def test_granule_spanning_midnight_written_once(spark, cmr_stub, tmp_path,
-                                                dest_kind):
+def test_granule_spanning_midnight_written_once(spark, cmr_stub, tmp_path):
     """CMR returns a granule overlapping both day windows for both
     days; E1 files it under its ``time_start`` day, once."""
     cmr_stub.granules.extend(MIDNIGHT_GRANULES)
-    dest = (str(tmp_path / "links") if dest_kind == "posix"
-            else f"memory://cmr-span-{tmp_path.name}")
+    dest = str(tmp_path / "links")
     written = cache_daily_stac_json_links(
         spark, COLL_CID, COLL_ID, D0, dest, end_date=D1,
         protocol="https", endpoint=cmr_stub.endpoint,

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from hls_stac_parquet_spark.operators.completeness import (
     IncompleteInputError,
-    completeness_check,
     expected_days,
     require_complete,
 )
@@ -53,6 +52,8 @@ def test_missing_day_raises(spark):
 def test_unexpected_day_detected(spark):
     exp = expected_days(spark, dt.date(2025, 1, 1), dt.date(2025, 1, 2))
     act = _days(spark, ["2025-01-01", "2025-01-02", "2025-01-05"])
-    missing, unexpected = completeness_check(exp, act)
-    assert missing.count() == 0
-    assert [r.day for r in unexpected.collect()] == [dt.date(2025, 1, 5)]
+    with pytest.raises(
+        IncompleteInputError,
+        match=r"missing=\[\] unexpected=\[datetime\.date\(2025, 1, 5\)\]",
+    ):
+        require_complete(exp, act)

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from hls_stac_parquet_spark.operators.dedup import (
     dedup_exact,
     minhash_candidate_pairs,
-    minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
     simhash_candidate_pairs,
@@ -35,16 +34,6 @@ def test_dedup_exact_groups(docs):
     out = {r.keep_id: r.n_copies for r in dedup_exact(docs).collect()}
     assert out[1] == 3  # 1, 2 (case), 5 (identical)
     assert out[3] == 1 and out[4] == 1
-
-
-def test_minhash_signature_shape(docs):
-    sig = minhash_signatures(docs, num_hashes=32).collect()
-    assert all(len(r.signature) == 32 for r in sig)
-    by_id = {r.doc_id: r.signature for r in sig}
-    assert by_id[1] == by_id[5]  # identical docs → identical signatures
-    common_13 = sum(a == b for a, b in zip(by_id[1], by_id[3]))
-    common_14 = sum(a == b for a, b in zip(by_id[1], by_id[4]))
-    assert common_13 > common_14  # near-dup shares more minhashes
 
 
 def test_minhash_candidates_find_near_dup(docs):

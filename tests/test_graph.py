@@ -3,12 +3,15 @@
 import pandas as pd
 import pytest
 
-from hls_stac_parquet_spark.operators.graph import connected_components
+from hls_stac_parquet_spark.operators.graph import (
+    connected_components_auto,
+    connected_components_star,
+)
 
 
 def _cc(spark, edges, **kw):
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
-    rows = connected_components(df, **kw).collect()
+    rows = connected_components_star(df, **kw).collect()
     return {r.node: r.component for r in rows}
 
 
@@ -24,6 +27,15 @@ def test_chain_converges_to_min(spark):
 
 
 def test_self_loop_and_duplicate_edges(spark):
+    """connected_components_auto's driver union-find tier."""
+    df = spark.createDataFrame(
+        pd.DataFrame([(7, 7), (8, 9), (9, 8), (8, 9)], columns=["src", "dst"])
+    )
+    got = {r.node: r.component for r in connected_components_auto(df).collect()}
+    assert got == {7: 7, 8: 8, 9: 8}
+
+
+def test_star_self_loop_and_duplicates(spark):
     got = _cc(spark, [(7, 7), (8, 9), (9, 8), (8, 9)])
     assert got == {7: 7, 8: 8, 9: 8}
 
@@ -35,37 +47,30 @@ def test_clique_one_round(spark):
 
 
 def test_non_convergence_raises(spark):
-    """A chain whose diameter exceeds max_iter must raise, not return
-    silently-split clusters."""
+    """A chain that has not reached its fixpoint after max_iter rounds
+    must raise, not return silently-split clusters."""
     edges = [(i, i + 1) for i in range(10)]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(df, max_iter=2)
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        connected_components_star(df, max_iter=1)
     # the same graph converges when max_iter is sufficient
-    rows = connected_components(df, max_iter=15).collect()
+    rows = connected_components_star(df, max_iter=15).collect()
     assert {r.component for r in rows} == {0}
-
-
-# --- large-star/small-star variant ------------------------------------------
-
-def _cc_star(spark, edges, **kw):
-    from hls_stac_parquet_spark.operators.graph import connected_components_star
-
-    df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
-    return {r.node: r.component for r in connected_components_star(df, **kw).collect()}
 
 
 def test_star_long_chain_logarithmic_rounds(spark):
     """A 40-node chain converges in O(log^2) star rounds — far below a
     max_iter that label propagation's O(diameter) would blow through."""
     edges = [(i, i + 1) for i in range(40)]
-    got = _cc_star(spark, edges, max_iter=15)
+    got = _cc(spark, edges, max_iter=15)
     assert set(got.values()) == {0}
     assert len(got) == 41
 
 
-def test_star_matches_label_propagation_on_random_graphs(spark):
-    """Both algorithms must produce the identical (node -> min id) map."""
+def test_star_matches_driver_union_find_on_random_graphs(spark):
+    """The two tiers of connected_components_auto — large-star/
+    small-star and the driver-side union-find it runs below
+    CC_DRIVER_MAX — produce the identical (node -> min id) map."""
     import random
 
     rng = random.Random(7)
@@ -75,14 +80,12 @@ def test_star_matches_label_propagation_on_random_graphs(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(45 + 15 * trial)
         ]
         edges = [e for e in edges if e[0] != e[1]]
-        star = _cc_star(spark, edges)
-        prop = _cc(spark, edges, max_iter=60)
-        assert star == prop
-
-
-def test_star_self_loop_and_duplicates(spark):
-    got = _cc_star(spark, [(7, 7), (8, 9), (9, 8), (8, 9)])
-    assert got == {7: 7, 8: 8, 9: 8}
+        df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+        union_find = {
+            r.node: r.component
+            for r in connected_components_auto(df).collect()
+        }
+        assert _cc(spark, edges) == union_find
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):

@@ -48,12 +48,3 @@ def test_approx_percentile_error_bound(spark):
     for k in exact:
         for e, a in zip(exact[k], approx[k]):
             assert abs(a - e) / e < 0.01, (k, e, a)
-
-
-def test_register_sql_functions(spark):
-    """The pandas-UDF library is reachable from plain SQL."""
-    from hls_stac_parquet_spark.functions import register_sql_functions
-
-    register_sql_functions(spark)
-    row = spark.sql("SELECT hilbert_index(0.0D, 0.0D) AS h").collect()[0]
-    assert isinstance(row.h, int)

@@ -1,7 +1,7 @@
 """E1/E2 end-to-end tests — the Spark re-expression of the
 reference's 4 workflow tests (tests/test_workflow.py), offline via
-synthesized fixtures + file:// transport (the reference swaps object
-storage for MemoryStore/tmpdir the same way)."""
+synthesized fixtures + file:// transport (the reference reads tmpdir
+fixtures the same way)."""
 
 from __future__ import annotations
 
@@ -24,7 +24,7 @@ from hls_stac_parquet_spark.plans.daily_ingest import (
     extract_stac_json_links,
 )
 from hls_stac_parquet_spark.plans.monthly_compact import write_monthly_stac_geoparquet
-from hls_stac_parquet_spark.sinks.manifest import manifest_path, read_manifests
+from hls_stac_parquet_spark.sinks.manifest import manifest_key, read_manifests
 from hls_stac_parquet_spark.sources.cmr import register_cmr_source
 from tests.fixtures import make_fixtures
 
@@ -99,7 +99,7 @@ def test_cache_daily_links_roundtrip(spark, fx, tmp_path):
         end_date=DAYS[-1], protocol="file", fixture_dir=fx["cmr"],
     )
     assert len(written) == 3
-    expect = manifest_path(dest, COLL_ID, DAYS[0])
+    expect = os.path.join(dest, manifest_key(COLL_ID, DAYS[0]))
     assert os.path.exists(expect)
     with open(expect) as f:
         urls = json.load(f)

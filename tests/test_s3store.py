@@ -1,190 +1,18 @@
-"""S3Store (sources/s3store.py) against a local fake S3 — signed
-HEAD/PUT/GET/ListObjectsV2 over HTTP, plus the E1 pipeline writing
-manifests to ``s3://`` from executor tasks."""
+"""S3Store (sources/s3store.py) against a local fake S3 (the
+``fake_s3`` fixture in conftest.py) — signed HEAD/PUT/GET/
+ListObjectsV2 over HTTP, plus the E1 and E2 pipelines writing
+manifests and GeoParquet to ``s3://`` from executor tasks."""
 
 from __future__ import annotations
 
 import datetime as dt
+import io
 import json
-import threading
-from types import SimpleNamespace
-from http.server import BaseHTTPRequestHandler, HTTPServer
-from urllib.parse import parse_qs, unquote, urlparse
 
+import pyarrow.parquet as pq
 import pytest
 
 from hls_stac_parquet_spark.sources.s3store import S3Store
-
-PAGE = 2  # tiny ListObjectsV2 page size to exercise continuation
-
-
-@pytest.fixture()
-def fake_s3():
-    """Dict-backed S3-compatible endpoint: PUT/GET/HEAD + paged
-    ListObjectsV2; records Authorization headers."""
-    objects: dict[str, bytes] = {}
-    auth_seen: list[str | None] = []
-    # multipart state + event log (create/part/complete/abort) and a
-    # fault hook tests can set to fail specific part uploads
-    uploads: dict[str, dict] = {}
-    upload_seq = [0]
-    mpu_events: list[tuple] = []
-    part_fault: dict = {"fail": None}  # (part_number, times_left)
-
-    class Handler(BaseHTTPRequestHandler):
-        protocol_version = "HTTP/1.1"
-
-        def _key(self):
-            return unquote(urlparse(self.path).path.lstrip("/"))
-
-        def _respond(self, code, body=b"", etag=None):
-            self.send_response(code)
-            if etag:
-                self.send_header("ETag", etag)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            if body:
-                self.wfile.write(body)
-
-        def do_POST(self):
-            auth_seen.append(self.headers.get("Authorization"))
-            qs = parse_qs(urlparse(self.path).query, keep_blank_values=True)
-            key = self._key()
-            if "uploads" in qs:
-                upload_seq[0] += 1
-                uid = f"up-{upload_seq[0]}"
-                uploads[uid] = {"key": key, "parts": {}}
-                mpu_events.append(("create", uid, key))
-                body = (
-                    "<InitiateMultipartUploadResult>"
-                    f"<UploadId>{uid}</UploadId>"
-                    "</InitiateMultipartUploadResult>"
-                ).encode()
-                self._respond(200, body)
-            elif "uploadId" in qs:
-                uid = qs["uploadId"][0]
-                n = int(self.headers.get("Content-Length", 0))
-                self.rfile.read(n)  # completion XML (part list)
-                up = uploads.pop(uid, None)
-                if up is None or up["key"] != key:
-                    self._respond(404, b"<Error>NoSuchUpload</Error>")
-                    return
-                objects[key] = b"".join(
-                    up["parts"][i] for i in sorted(up["parts"])
-                )
-                mpu_events.append(
-                    ("complete", uid, key, sorted(up["parts"]))
-                )
-                self._respond(
-                    200, b"<CompleteMultipartUploadResult/>"
-                )
-            else:
-                self._respond(400, b"<Error>BadRequest</Error>")
-
-        def do_PUT(self):
-            auth_seen.append(self.headers.get("Authorization"))
-            n = int(self.headers.get("Content-Length", 0))
-            data = self.rfile.read(n)
-            qs = parse_qs(urlparse(self.path).query)
-            if "partNumber" in qs and "uploadId" in qs:
-                uid, pn = qs["uploadId"][0], int(qs["partNumber"][0])
-                fault = part_fault["fail"]
-                if fault and fault[0] == pn and fault[1] > 0:
-                    part_fault["fail"] = (pn, fault[1] - 1)
-                    mpu_events.append(("part-fault", uid, pn))
-                    self._respond(503, b"<Error>SlowDown</Error>")
-                    return
-                if uid not in uploads:
-                    self._respond(404, b"<Error>NoSuchUpload</Error>")
-                    return
-                uploads[uid]["parts"][pn] = data
-                mpu_events.append(("part", uid, pn, len(data)))
-                self._respond(200, etag=f'"etag-{uid}-{pn}"')
-                return
-            objects[self._key()] = data
-            self._respond(200)
-
-        def do_HEAD(self):
-            auth_seen.append(self.headers.get("Authorization"))
-            if self._key() in objects:
-                self.send_response(200)
-                self.send_header(
-                    "Content-Length", str(len(objects[self._key()]))
-                )
-                self.end_headers()
-            else:
-                self.send_response(404)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
-
-        def do_GET(self):
-            auth_seen.append(self.headers.get("Authorization"))
-            parsed = urlparse(self.path)
-            qs = parse_qs(parsed.query)
-            if qs.get("list-type") == ["2"]:
-                prefix = qs.get("prefix", [""])[0]
-                start = qs.get("continuation-token", [""])[0]
-                keys = sorted(k for k in objects if k.startswith(prefix))
-                if start:
-                    keys = [k for k in keys if k > start]
-                page, rest = keys[:PAGE], keys[PAGE:]
-                ns = "http://s3.amazonaws.com/doc/2006-03-01/"
-                parts = [f'<ListBucketResult xmlns="{ns}">']
-                parts.append(
-                    f"<IsTruncated>{'true' if rest else 'false'}"
-                    "</IsTruncated>"
-                )
-                if rest:
-                    parts.append(
-                        f"<NextContinuationToken>{page[-1]}"
-                        "</NextContinuationToken>"
-                    )
-                for k in page:
-                    parts.append(f"<Contents><Key>{k}</Key></Contents>")
-                parts.append("</ListBucketResult>")
-                body = "".join(parts).encode()
-                self.send_response(200)
-            elif self._key() in objects:
-                body = objects[self._key()]
-                self.send_response(200)
-            else:
-                body = b"<Error><Code>NoSuchKey</Code></Error>"
-                self.send_response(404)
-            self.send_header("Content-Type", "application/xml")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def do_DELETE(self):
-            auth_seen.append(self.headers.get("Authorization"))
-            qs = parse_qs(urlparse(self.path).query)
-            if "uploadId" in qs:
-                uid = qs["uploadId"][0]
-                uploads.pop(uid, None)
-                mpu_events.append(("abort", uid))
-                self._respond(204)
-                return
-            objects.pop(self._key(), None)
-            self._respond(204)
-
-        def log_message(self, *a):
-            pass
-
-    srv = HTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    state = SimpleNamespace(
-        endpoint=f"http://127.0.0.1:{srv.server_port}",
-        objects=objects,
-        auth_seen=auth_seen,
-        uploads=uploads,
-        mpu_events=mpu_events,
-        part_fault=part_fault,
-    )
-    try:
-        yield state.endpoint, objects, auth_seen, state
-    finally:
-        srv.shutdown()
 
 
 def _creds():
@@ -242,15 +70,14 @@ def test_s3_anonymous_requests_unsigned(fake_s3):
     assert all(a is None for a in auth_seen)
 
 
-def test_s3_multipart_upload_above_threshold(fake_s3):
+def test_s3_multipart_upload_above_threshold(fake_s3, monkeypatch):
     """put_bytes above the threshold goes through CreateMultipartUpload
     / UploadPart / CompleteMultipartUpload and the assembled object is
     byte-identical; below the threshold stays a single PUT."""
     endpoint, objects, _, st = fake_s3
-    store = S3Store(
-        "s3://b/px", credentials=_creds, endpoint=endpoint,
-        multipart_threshold=100, part_size=64,
-    )
+    monkeypatch.setattr(S3Store, "MULTIPART_THRESHOLD", 100)
+    monkeypatch.setattr(S3Store, "PART_SIZE", 64)
+    store = S3Store("s3://b/px", credentials=_creds, endpoint=endpoint)
     small = b"s" * 100  # == threshold → plain PUT
     store.put_bytes("small.bin", small)
     assert objects["px/small.bin"] == small
@@ -267,14 +94,14 @@ def test_s3_multipart_upload_above_threshold(fake_s3):
     assert not st.uploads  # no dangling upload state
 
 
-def test_s3_multipart_transient_part_failure_retries(fake_s3):
+def test_s3_multipart_transient_part_failure_retries(fake_s3, monkeypatch):
     """A part PUT that 503s twice succeeds on the in-request retry —
     the object completes without a new upload id."""
     endpoint, objects, _, st = fake_s3
-    store = S3Store(
-        "s3://b", credentials=_creds, endpoint=endpoint,
-        multipart_threshold=10, part_size=16, retry_attempts=3,
-    )
+    monkeypatch.setattr(S3Store, "MULTIPART_THRESHOLD", 10)
+    monkeypatch.setattr(S3Store, "PART_SIZE", 16)
+    monkeypatch.setattr(S3Store, "RETRY_ATTEMPTS", 3)
+    store = S3Store("s3://b", credentials=_creds, endpoint=endpoint)
     st.part_fault["fail"] = (2, 2)  # part 2 fails twice, then succeeds
     data = b"x" * 40  # 3 parts
     store.put_bytes("k.bin", data)
@@ -285,15 +112,15 @@ def test_s3_multipart_transient_part_failure_retries(fake_s3):
     assert kinds.count("abort") == 0
 
 
-def test_s3_multipart_abort_and_replay_converges(fake_s3):
+def test_s3_multipart_abort_and_replay_converges(fake_s3, monkeypatch):
     """A part that keeps failing aborts the upload server-side and
     raises; a caller replay (fault cleared) converges to the correct
     object under a fresh upload id."""
     endpoint, objects, _, st = fake_s3
-    store = S3Store(
-        "s3://b", credentials=_creds, endpoint=endpoint,
-        multipart_threshold=10, part_size=16, retry_attempts=2,
-    )
+    monkeypatch.setattr(S3Store, "MULTIPART_THRESHOLD", 10)
+    monkeypatch.setattr(S3Store, "PART_SIZE", 16)
+    monkeypatch.setattr(S3Store, "RETRY_ATTEMPTS", 2)
+    store = S3Store("s3://b", credentials=_creds, endpoint=endpoint)
     st.part_fault["fail"] = (2, 99)  # part 2 fails permanently
     data = b"y" * 40
     with pytest.raises(IOError, match="UploadPart"):
@@ -383,5 +210,97 @@ def test_e1_pipeline_writes_manifests_to_s3_from_executors(
             end_date=days[-1], protocol="file", fixture_dir=cmr_dir,
         )
         assert again == []
+    finally:
+        _SCHEME_FACTORIES.pop("s3", None)
+
+
+def test_e2_pipeline_writes_geoparquet_to_s3_from_executors(
+    spark, fake_s3, tmp_path
+):
+    """E2 against an object store through the production write path:
+    the month's manifests come back through the store's driver-side
+    GETs (no hadoop-aws), and the ``mapInArrow`` GeoParquet writer PUTs
+    the month's one reference-named object from an executor task."""
+    endpoint, objects, _, st = fake_s3
+    from hls_stac_parquet_spark.plans.daily_ingest import (
+        cache_daily_stac_json_links,
+    )
+    from hls_stac_parquet_spark.plans.monthly_compact import (
+        write_monthly_stac_geoparquet,
+    )
+    from hls_stac_parquet_spark.store import (
+        _SCHEME_FACTORIES,
+        register_store_scheme,
+    )
+    from tests.fixtures import make_fixtures
+
+    days = [dt.date(2025, 10, d) for d in (1, 2, 3)]
+    cmr_dir, _ = make_fixtures(
+        str(tmp_path), days=days, granules_per_day=6, broken_stac_urls=1
+    )
+
+    # defined inside the test so cloudpickle ships it BY VALUE into
+    # the executor tasks; the session token names where the request
+    # was signed, which the fake endpoint logs per request
+    def creds():
+        from pyspark import TaskContext
+
+        return {
+            "accessKeyId": "AKIDEXAMPLE",
+            "secretAccessKey": "wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY",
+            "sessionToken": "task" if TaskContext.get() else "driver",
+        }
+
+    register_store_scheme(
+        "s3",
+        lambda url: S3Store(url, credentials=creds, endpoint=endpoint,
+                            spark_readable=False),
+    )
+    try:
+        links_dest = "s3://e2-bucket/links"
+        out_dest = "s3://e2-bucket/gpq"
+        cache_daily_stac_json_links(
+            spark, "C2021957657-LPCLOUD", "HLSL30_2.0", days[0], links_dest,
+            end_date=days[-1], protocol="file", fixture_dir=cmr_dir,
+        )
+        result = write_monthly_stac_geoparquet(
+            spark, "HLSL30_2.0", 2025, 10, links_dest, out_dest,
+            require_complete_links=False, reference_layout=True,
+        )
+        assert result["written"] == 15  # 18 links - 3 dead-lettered
+        assert result["failed"] == 3
+        # exact reference path contract (constants.py:8): one object,
+        # unpadded month, {collection_id}-{year}-{month}.parquet
+        key = (
+            "gpq/v1/HLSL30_2.0/year=2025/month=10/HLSL30_2.0-2025-10.parquet"
+        )
+        assert result["files"] == [f"s3://e2-bucket/{key}"]
+        month_prefix = "gpq/v1/HLSL30_2.0/year=2025/month=10/"
+        assert [k for k in objects if k.startswith(month_prefix)] == [key]
+
+        table = pq.read_table(io.BytesIO(objects[key]))
+        assert table.num_rows == 15
+        # clustered: hilbert key globally sorted inside the one object
+        vals = table["hilbert_idx"].to_pylist()
+        assert vals == sorted(vals)
+        # GeoParquet footer metadata survived the streamed PUT
+        geo = json.loads(table.schema.metadata[b"geo"])
+        assert geo["primary_column"] == "geometry"
+        assert geo["columns"]["geometry"]["encoding"] == "WKB"
+
+        # the object was PUT, SigV4-signed, from an executor task
+        puts = [(tok, auth) for m, k, tok, auth in st.requests
+                if m == "PUT" and k == key]
+        assert puts and all(
+            tok == "task" and auth.startswith("AWS4-HMAC-SHA256")
+            for tok, auth in puts
+        )
+
+        # skip-existing probes the object store
+        again = write_monthly_stac_geoparquet(
+            spark, "HLSL30_2.0", 2025, 10, links_dest, out_dest,
+            require_complete_links=False, reference_layout=True,
+        )
+        assert again["skipped"] is True
     finally:
         _SCHEME_FACTORIES.pop("s3", None)

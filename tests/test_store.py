@@ -1,23 +1,21 @@
-"""Object-store layer + E1/E2 pipelines against ``memory://`` — the
-Spark analog of the reference's obstore MemoryStore workflow tests
-(tests/test_workflow.py:43), closing the round-3 verdict's "sinks
-only write POSIX paths" gap."""
+"""Object-store layer: the ``get_store`` scheme seam, the store
+contract against a plain dict model (``LocalStore``, and ``S3Store``
+on the fake endpoint), and E2's reference-named output on POSIX.
+E1/E2 on ``s3://`` live in tests/test_s3store.py."""
 
 from __future__ import annotations
 
 import datetime as dt
-import io
-import json
+import uuid
 
 import pyarrow.parquet as pq
 import pytest
 
 from hls_stac_parquet_spark.plans.daily_ingest import cache_daily_stac_json_links
 from hls_stac_parquet_spark.plans.monthly_compact import write_monthly_stac_geoparquet
-from hls_stac_parquet_spark.sinks.manifest import manifest_key, read_manifests
+from hls_stac_parquet_spark.sources.s3store import S3Store
 from hls_stac_parquet_spark.store import (
     LocalStore,
-    MemoryStore,
     get_store,
     register_store_scheme,
 )
@@ -34,7 +32,6 @@ DAYS = [dt.date(2025, 10, d) for d in (1, 2, 3)]
 def test_local_store_roundtrip(tmp_path):
     store = get_store(str(tmp_path / "root"))
     assert isinstance(store, LocalStore)
-    assert store.distributed
     assert not store.exists("a/b.json")
     store.put_bytes("a/b.json", b"[1]")
     assert store.exists("a/b.json")
@@ -49,56 +46,23 @@ def test_local_store_roundtrip(tmp_path):
     assert via_url.get_bytes("a/b.json") == b"[1]"
 
 
-def test_memory_store_roundtrip():
-    store = get_store("memory://unit-bucket")
-    assert isinstance(store, MemoryStore)
-    assert not store.distributed
-    store.put_bytes("x/y.json", b"[]")
-    assert store.exists("x/y.json")
-    assert store.get_bytes("x/y.json") == b"[]"
-    # a second binding of the same URL sees the write (obstore
-    # MemoryStore analog: per-process shared state)
-    again = get_store("memory://unit-bucket")
-    assert again.get_bytes("x/y.json") == b"[]"
-    # distinct buckets are isolated
-    other = get_store("memory://unit-bucket-2")
-    assert not other.exists("x/y.json")
-    # prefix listing + full_url
-    store.put_bytes("x/z.json", b"[]")
-    store.put_bytes("w/q.json", b"[]")
-    assert store.list("x") == ["x/y.json", "x/z.json"]
-    assert store.full_url("x/y.json") == "memory://unit-bucket/x/y.json"
-    # open_output commits on close
-    with store.open_output("x/out.bin") as f:
-        f.write(b"data")
-    assert store.get_bytes("x/out.bin") == b"data"
-
-
-def test_memory_store_url_prefix():
-    store = get_store("memory://pfx-bucket/some/prefix")
-    store.put_bytes("k.json", b"1")
-    assert (
-        get_store("memory://pfx-bucket").get_bytes("some/prefix/k.json") == b"1"
-    )
-    assert store.full_url("k.json") == "memory://pfx-bucket/some/prefix/k.json"
-
-
-def test_unregistered_scheme_raises_with_hook_hint():
+def test_unregistered_scheme_raises_with_hook_hint(tmp_path):
     with pytest.raises(ValueError, match="register_store_scheme"):
         get_store("s3://some-bucket/prefix")
     # the deployment hook: one line makes the scheme resolvable
-    register_store_scheme("fakes3", lambda url: MemoryStore("fakes3-backing"))
+    backing = str(tmp_path / "fakes3-backing")
+    register_store_scheme("fakes3", lambda url: LocalStore(backing))
     try:
         store = get_store("fakes3://bucket/x")
         store.put_bytes("k", b"v")
-        assert get_store("memory://fakes3-backing").get_bytes("k") == b"v"
+        assert get_store(backing).get_bytes("k") == b"v"
     finally:
         from hls_stac_parquet_spark.store import _SCHEME_FACTORIES
 
         _SCHEME_FACTORIES.pop("fakes3", None)
 
 
-# --- E1/E2 pipelines on memory:// -------------------------------------------
+# --- E2 reference layout on POSIX ---------------------------------------------
 
 
 @pytest.fixture(scope="module")
@@ -108,71 +72,6 @@ def fx(spark, tmp_path_factory):
         str(base), days=DAYS, granules_per_day=6, broken_stac_urls=1
     )
     return {"base": str(base), "cmr": cmr_dir, "stac": stac_dir}
-
-
-def test_e1_daily_links_on_memory_store(spark, fx):
-    dest = "memory://e1-bucket/links-dest"
-    written = cache_daily_stac_json_links(
-        spark, COLL_CID, COLL_ID, DAYS[0], dest,
-        end_date=DAYS[-1], protocol="file", fixture_dir=fx["cmr"],
-    )
-    assert len(written) == 3
-    assert all(p.startswith("memory://e1-bucket/") for p in written)
-
-    store = get_store(dest)
-    urls = json.loads(store.get_bytes(manifest_key(COLL_ID, DAYS[0])))
-    assert len(urls) == 6 and all(u.endswith("stac.json") for u in urls)
-
-    # spark-side re-read goes through the driver-side listing path
-    m = read_manifests(spark, dest, COLL_ID, 2025, 10)
-    assert {r.day for r in m.collect()} == {1, 2, 3}
-
-    # idempotent second run (A9 against the object store)
-    again = cache_daily_stac_json_links(
-        spark, COLL_CID, COLL_ID, DAYS[0], dest,
-        end_date=DAYS[-1], protocol="file", fixture_dir=fx["cmr"],
-    )
-    assert again == []
-
-
-def test_e2_monthly_geoparquet_on_memory_store(spark, fx):
-    links_dest = "memory://e2-bucket/links"
-    out_dest = "memory://e2-bucket/gpq"
-    cache_daily_stac_json_links(
-        spark, COLL_CID, COLL_ID, DAYS[0], links_dest,
-        end_date=DAYS[-1], protocol="file", fixture_dir=fx["cmr"],
-    )
-    result = write_monthly_stac_geoparquet(
-        spark, COLL_ID, 2025, 10, links_dest, out_dest,
-        require_complete_links=False, reference_layout=True,
-    )
-    assert result["written"] == 15  # 18 links - 3 dead-lettered
-    assert result["failed"] == 3
-    # exact reference path contract (constants.py:8): one object,
-    # unpadded month, {collection_id}-{year}-{month}.parquet
-    assert result["files"] == [
-        "memory://e2-bucket/gpq/v1/HLSL30_2.0/year=2025/month=10/"
-        "HLSL30_2.0-2025-10.parquet"
-    ]
-
-    store = get_store(out_dest)
-    key = "v1/HLSL30_2.0/year=2025/month=10/HLSL30_2.0-2025-10.parquet"
-    table = pq.read_table(io.BytesIO(store.get_bytes(key)))
-    assert table.num_rows == 15
-    # clustered: hilbert key globally sorted inside the single object
-    vals = table["hilbert_idx"].to_pylist()
-    assert vals == sorted(vals)
-    # GeoParquet footer metadata survived the stream write
-    geo = json.loads(table.schema.metadata[b"geo"])
-    assert geo["primary_column"] == "geometry"
-    assert geo["columns"]["geometry"]["encoding"] == "WKB"
-
-    # skip-existing probes the object store
-    again = write_monthly_stac_geoparquet(
-        spark, COLL_ID, 2025, 10, links_dest, out_dest,
-        require_complete_links=False, reference_layout=True,
-    )
-    assert again["skipped"] is True
 
 
 def test_reference_layout_on_posix(spark, fx, tmp_path):
@@ -200,7 +99,7 @@ def test_reference_layout_on_posix(spark, fx, tmp_path):
 
 # --- property tests: the store contract under arbitrary keys/bytes ----------
 
-from hypothesis import assume, given, settings
+from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
 _key_segment = st.text(
@@ -213,70 +112,65 @@ _key_segment = st.text(
 _keys = st.lists(_key_segment, min_size=1, max_size=4).map("/".join)
 
 
-@settings(max_examples=30, deadline=None)
-@given(
-    entries=st.dictionaries(_keys, st.binary(max_size=64), max_size=8),
-)
-def test_memory_store_contract(entries):
-    """put/get/exists/list/delete round-trip on arbitrary key/byte
-    maps — list returns exactly the put keys under the prefix."""
-    import uuid
-
-    store = MemoryStore(f"prop-{uuid.uuid4().hex}")
+def assert_store_matches_model(store, entries: dict[str, bytes]) -> None:
+    """put/get/exists/list/delete on an empty ``store`` agree with a
+    plain dict holding ``entries``: ``list(p)`` is the key equal to
+    ``p`` plus every key under ``p/``, and ``list("")`` every key."""
     for k, v in entries.items():
         assert not store.exists(k)
         store.put_bytes(k, v)
     for k, v in entries.items():
         assert store.exists(k)
         assert store.get_bytes(k) == v
-    top = sorted({k.split("/")[0] for k in entries})
-    for seg in top:
-        listed = store.list(seg)
+    for seg in sorted({k.split("/")[0] for k in entries}):
         expected = sorted(
             k for k in entries if k == seg or k.startswith(seg + "/")
         )
-        assert listed == expected, (seg, listed, expected)
+        assert store.list(seg) == expected, seg
+    assert store.list("") == sorted(entries)
     for k in entries:
         store.delete(k)
         assert not store.exists(k)
-    assert all(store.list(seg) == [] for seg in top)
+    assert store.list("") == []
 
 
 @settings(max_examples=15, deadline=None)
 @given(
     entries=st.dictionaries(_keys, st.binary(max_size=64), max_size=6),
 )
-def test_local_store_contract_matches_memory(entries, tmp_path_factory):
-    """LocalStore obeys the same contract (differential check vs
-    MemoryStore on identical operations) — over key sets where no key
+def test_local_store_contract_matches_model(entries, tmp_path_factory):
+    """LocalStore obeys the store contract — over key sets where no key
     is a path-prefix of another. A real object store lets keys "a"
     and "a/b" coexist (flat namespace); a filesystem cannot (a path
     is a file XOR a directory), so that corner is a DECLARED contract
     restriction of the local dev backend, not a bug: production
-    manifests go to s3://-/gs://-style stores, and the manifest sink
-    only ever writes leaf-file-shaped keys."""
-    import uuid
-
+    manifests go to s3://-style stores, and the manifest sink only
+    ever writes leaf-file-shaped keys."""
     ks = sorted(entries)
     assume(
         not any(
             b.startswith(a + "/") for a in ks for b in ks if a != b
         )
     )
-
     root = tmp_path_factory.mktemp("store-prop")
-    local = LocalStore(str(root / uuid.uuid4().hex))
-    mem = MemoryStore(f"prop-{uuid.uuid4().hex}")
-    for k, v in entries.items():
-        local.put_bytes(k, v)
-        mem.put_bytes(k, v)
-    for k, v in entries.items():
-        assert local.get_bytes(k) == mem.get_bytes(k) == v
-    for seg in sorted({k.split("/")[0] for k in entries}):
-        assert local.list(seg) == mem.list(seg)
-    # root listing: both backends return every key for list("")
-    assert local.list("") == mem.list("") == sorted(entries)
-    for k in entries:
-        local.delete(k)
-        mem.delete(k)
-        assert local.exists(k) == mem.exists(k) is False
+    assert_store_matches_model(LocalStore(str(root / uuid.uuid4().hex)), entries)
+
+
+@settings(
+    max_examples=30, deadline=None,
+    # one fake endpoint serves every example; each gets its own prefix
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    entries=st.dictionaries(_keys, st.binary(max_size=64), max_size=8),
+)
+def test_s3_store_contract_matches_model(entries, fake_s3):
+    """S3Store on the fake endpoint obeys the same contract, with no
+    key-set restriction: "a" and "a/b" coexist in a flat namespace."""
+    endpoint, _, _, _ = fake_s3
+    store = S3Store(
+        f"s3://prop/{uuid.uuid4().hex}",
+        credentials=lambda: {"accessKeyId": "AK", "secretAccessKey": "SK"},
+        endpoint=endpoint,
+    )
+    assert_store_matches_model(store, entries)

@@ -10,11 +10,10 @@ from hls_stac_parquet_spark.functions.text import (
     doc_fingerprint,
     language_id,
     punct_ratio,
-    shingles,
     stopword_ratio,
     token_count,
 )
-from hls_stac_parquet_spark.functions.urls import extract_mgrs, url_host, url_scheme
+from hls_stac_parquet_spark.functions.urls import extract_mgrs
 
 HLS_URL = (
     "https://data.lpdaac.earthdatacloud.nasa.gov/lp-prod-public/HLSL30.020/"
@@ -55,23 +54,10 @@ def test_fingerprint_normalization(one):
     assert a == b and len(a) == 32
 
 
-def test_shingles(one):
-    got = _val(one("a b c d"), shingles("text", 3))
-    assert got == ["a b c", "b c d"]
-    short = _val(one("a b"), shingles("text", 3))
-    assert short == ["a b"]
-
-
 def test_extract_mgrs(one):
     df = one(HLS_URL)
     assert _val(df, extract_mgrs("text")) == "15TWN"
     assert _val(one("https://x/no-tile.json"), extract_mgrs("text")) is None
-
-
-def test_url_parts(one):
-    df = one(HLS_URL)
-    assert _val(df, url_scheme("text")) == "https"
-    assert _val(df, url_host("text")) == "data.lpdaac.earthdatacloud.nasa.gov"
 
 
 class TestWinnowing:

@@ -20,6 +20,8 @@ Layout
 - ``sinks``      — manifest JSON sink, GeoParquet writer shim
 - ``plans``      — end-to-end pipelines (daily ingest E1, monthly
                    compaction E2) built from the pieces above
+- ``worker_daemon`` — Spark's Python worker daemon, with numpy,
+                   pandas and pyarrow imported before it forks
 """
 
 __version__ = "0.1.0"

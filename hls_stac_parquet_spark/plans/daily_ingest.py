@@ -4,17 +4,20 @@ Reference flow (links.py:62-119): idempotency HEAD → CMR query with
 pushed predicates → paginated scan → per-granule first stac.json link
 → one JSON manifest per (collection, day).
 
-Spark shape: parameter → ``format("cmr")`` scan (predicates pushed
-into the source request) → higher-order-function link extraction
-(array filter + try_element_at: **zero shuffle** — the reference's A6
-loop becomes a single projected expression) → manifest sink.
+Spark shape: the uncached days → :func:`scan_cmr` (the collection,
+bbox and day windows compiled into each catalog request) →
+higher-order-function link extraction (array filter +
+try_element_at: **zero shuffle** — the reference's A6 loop becomes a
+single projected expression) → manifest sink.
 
-The reference runs one Lambda per day (A22/A24); here a date *range*
-is one job whose source partitions are contiguous runs of days, at
-most ``defaultParallelism`` of them (a Python task has a fixed cost,
-so cores-many tasks beat one per day) — the control plane collapses
-into the plan. Catalog concurrency is unchanged: each day is still
-its own cursor-paged query, and no more tasks than cores run at once.
+The reference runs one Lambda per day (A22/A24); here a list of days
+is one job whose scan tasks are contiguous runs of those days, at
+most ``defaultParallelism`` of them, run as ``mapInArrow`` tasks in
+the session's ordinary Python workers — no Data Source planner
+processes start. The control plane collapses into the plan. Catalog
+concurrency is unchanged: each day is still its own cursor-paged
+query, and no more tasks than cores run at once. Days already cached
+are never queried, even when they sit between uncached ones.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hls_stac_parquet_spark.sinks.manifest import manifest_key, write_manifests
-from hls_stac_parquet_spark.sources.cmr import register_cmr_source
+from hls_stac_parquet_spark.sources.cmr import scan_cmr
 from hls_stac_parquet_spark.store import get_store
 
 
@@ -87,21 +90,14 @@ def cache_daily_stac_json_links(
     if not days:
         return []
 
-    register_cmr_source(spark)
-    reader = (
-        spark.read.format("cmr")
-        .option("collection_concept_id", collection_concept_id)
-        .option("temporal_start", days[0].isoformat())
-        .option("temporal_end", days[-1].isoformat())
-    )
+    options = {"collection_concept_id": collection_concept_id}
     if bbox:
-        reader = reader.option("bbox", ",".join(str(v) for v in bbox))
+        options["bbox"] = ",".join(str(v) for v in bbox)
     if fixture_dir:
-        reader = reader.option("fixture_dir", fixture_dir)
+        options["fixture_dir"] = fixture_dir
     if endpoint:
-        reader = reader.option("endpoint", endpoint)
-
-    granules = reader.load().filter(
+        options["endpoint"] = endpoint
+    granules = scan_cmr(spark, [d.isoformat() for d in days], options).filter(
         F.col("collection_concept_id") == collection_concept_id
     )
     links = extract_stac_json_links(granules, protocol=protocol)

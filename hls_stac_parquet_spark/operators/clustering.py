@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hls_stac_parquet_spark.tuning import materialize
+
 
 def dbscan(
     points: DataFrame,
@@ -83,7 +85,7 @@ def dbscan(
     # every pair (a, b) with dist ≤ eps appears exactly once as
     # (probe=a, home=b): a's probe fan-out covers b's home cell iff
     # |cells| ≤ 1 apart, which ≤eps distance guarantees
-    pairs = (
+    pairs = materialize(  # read by 3 consumers below
         probe.join(home, ["_cx", "_cy"])
         .filter(
             (F.col("_px") - F.col("_x")) * (F.col("_px") - F.col("_x"))
@@ -91,15 +93,13 @@ def dbscan(
             <= F.lit(float(eps) * float(eps))
         )
         .select(F.col("_pid").alias("_a"), F.col("_id").alias("_b"))
-        .localCheckpoint()  # read by 3 consumers below
     )
     # |N_eps(p)| includes p itself (p probes its own home cell)
-    core = (
+    core = materialize(
         pairs.groupBy("_a")
         .agg(F.count("*").alias("_n"))
         .filter(F.col("_n") >= int(min_pts))
         .select(F.col("_a").alias("_id"))
-        .localCheckpoint()
     )
     core_a = core.select(F.col("_id").alias("_a"))
     core_b = core.select(F.col("_id").alias("_b"))
@@ -115,12 +115,11 @@ def dbscan(
     cc = connected_components_auto(core_edges, "_a", "_b")
     # isolated cores (min_pts-dense but no OTHER core within eps) are
     # their own singleton cluster
-    core_clusters = (
+    core_clusters = materialize(
         core.join(cc, core._id == cc.node, "left")
         .select(
             "_id", F.coalesce("component", "_id").alias("_cluster")
         )
-        .localCheckpoint()
     )
     # border: non-core with ≥1 core neighbor → smallest such cluster
     border = (

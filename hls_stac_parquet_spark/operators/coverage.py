@@ -10,7 +10,7 @@ k — each pick changes every remaining gain), but each round is fully
 distributed: one broadcast anti-join of the postings against the
 covered-token set (bounded by k × max-doc-tokens, always tiny) + one
 doc-keyed count + a TakeOrdered(1). The postings relation is
-localCheckpoint-ed once and shrinks as picked docs drop out; only k
+materialized once and shrinks as picked docs drop out; only k
 single-row collects cross the control plane. Cost: k postings scans —
 the operator's documented envelope (k is a user knob, never
 corpus-sized).
@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from hls_stac_parquet_spark.tuning import driver_rows_to_df, materialize
 
 _COVER_SCHEMA = StructType(
     [
@@ -56,12 +58,11 @@ def greedy_max_cover(
     (every further gain would be 0). Ties break on smaller doc id.
     """
     spark = posts.sparkSession
-    p = (
+    p = materialize(
         posts.select(
             F.col(doc_col).alias("_d"), F.col(tok_col).alias("_t")
         )
         .distinct()
-        .localCheckpoint()
     )
     covered: DataFrame | None = None
     picks: list[tuple] = []
@@ -85,12 +86,11 @@ def greedy_max_cover(
         total += int(gain)
         picks.append((rank, int(doc), int(gain), total))
         newly = p.filter(F.col("_d") == doc).select(F.col("_t").alias("_ct"))
-        covered = (
+        covered = materialize(
             newly if covered is None else covered.union(newly).distinct()
-        ).localCheckpoint()
+        )
         # picked docs leave the candidate relation (and their postings
         # stop being scanned) — the relation only shrinks
-        p = p.filter(F.col("_d") != doc).localCheckpoint()
-    from hls_stac_parquet_spark.tuning import driver_rows_to_df
+        p = materialize(p.filter(F.col("_d") != doc))
 
     return driver_rows_to_df(spark, picks, _COVER_SCHEMA)

@@ -25,6 +25,7 @@ from hls_stac_parquet_spark.functions.text import (
     shingle_hashes_from,
     token_hashes,
 )
+from hls_stac_parquet_spark.tuning import materialize
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -163,10 +164,7 @@ def minhash_candidate_pairs(
 
     sig = _minhash_sig_bands(df, text_col, id_col, num_hashes, shingle_k, bands)
     # branch point: banded view + two verification joins reuse it
-    from pyspark.storagelevel import StorageLevel
-
-    # r9: serialized blocks (§5 — see tuning.compact_checkpoint)
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    sig = materialize(sig)
 
     # band hashes were folded in the same Arrow pass as the signature;
     # only (id, band, hash) shuffles — signatures stay out of the pairing
@@ -282,10 +280,7 @@ def simhash_candidate_pairs(
     from hls_stac_parquet_spark.operators.lsh import bucket_pairs
 
     # sketch feeds the pairing AND both Hamming lookups — compute once
-    from pyspark.storagelevel import StorageLevel
-
-    # r9: serialized blocks (§5 — see tuning.compact_checkpoint)
-    sh = simhash(df, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(simhash(df, text_col, id_col))
     band_width = 63 // bands + 1
     banded = sh.select(
         id_col,

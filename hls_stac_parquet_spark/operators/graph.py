@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hls_stac_parquet_spark.tuning import materialize
+
 #: canonical edges up to which :func:`core_numbers` peels on the driver
 CORE_NUMBERS_DRIVER_MAX = 200_000
 #: pairs up to which :func:`connected_components_auto` runs union-find
@@ -47,7 +49,7 @@ def connected_components_star(
     id and carrying only (node, node) long pairs; the edge set can
     only shrink or re-point (never densify beyond the original size
     in undirected form), so round cost is bounded by the input edge
-    count. Every round ``localCheckpoint``s the edge frame: each round
+    count. Every round materializes the edge frame: each round
     reads its predecessor twice, so without lineage truncation the
     logical plan doubles per round and the driver dies planning it.
 
@@ -65,16 +67,14 @@ def connected_components_star(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-    e = (
+    e = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
             F.greatest(F.col(src), F.col(dst)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
 
     converged = False
@@ -101,7 +101,7 @@ def connected_components_star(
         msmall = large.groupBy(F.col("v").alias("c")).agg(
             F.min("u").alias("m")
         )
-        new_e = (
+        new_e = materialize(
             large.join(msmall, large.v == msmall.c)
             .select(
                 F.least("u", "m").alias("nu"), F.greatest("u", "m").alias("nv")
@@ -114,7 +114,6 @@ def connected_components_star(
             .filter(F.col("nu") != F.col("nv"))
             .select(F.col("nu").alias("u"), F.col("nv").alias("v"))
             .distinct()
-            .localCheckpoint()
         )
         # convergence probe, cheap-first: both relations are DISTINCT
         # sets, so |new| == |old| together with new\old = ∅ implies
@@ -165,25 +164,24 @@ def pagerank(
     entirely.
 
     The fixed iteration count bounds the job graph. Every round's
-    ranks are eager ``localCheckpoint``s, NOT persists: checkpointing
-    materializes once AND truncates lineage, so round k's plan never
+    ranks are materialized (``tuning.materialize``), NOT persisted: that
+    computes them once AND truncates lineage, so round k's plan never
     replays rounds 1..k-1 and the task binaries stay constant-size —
     the same persist-was-bimodal lesson as triangle_count (measured
     here: 8 rounds on a tiny word graph went ~93 s with persist-only
     lineage to ~2 s with per-round checkpoints). The edge relation
-    and degree dim are checkpointed too — they are joined EVERY
+    and degree dim are materialized too — they are joined EVERY
     round, and callers often derive them from corpus-sized scans.
     Convergence at d=0.85 is ~|Δ| < 1e-3 after 8-10 rounds on most
     graphs — tests/test_graph.py pins exact agreement with a numpy
     power iteration on the same edges.
     """
-    e = edges.select(src, dst).localCheckpoint()
-    out_deg = e.groupBy(src).agg(F.count("*").alias("_deg")).localCheckpoint()
-    nodes = (
+    e = materialize(edges.select(src, dst))
+    out_deg = materialize(e.groupBy(src).agg(F.count("*").alias("_deg")))
+    nodes = materialize(
         e.select(F.col(src).alias("node"))
         .unionAll(e.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     ranks = nodes.withColumn("rank", F.lit(1.0))
 
@@ -200,7 +198,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("_c").alias("_sum"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(contribs, "node", "left")
             .select(
                 "node",
@@ -209,7 +207,6 @@ def pagerank(
                     + F.lit(damping) * F.coalesce("_sum", F.lit(0.0))
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
     return ranks
 
@@ -231,17 +228,16 @@ def hits(
     in-edges (auth) or out-edges (hub). Same scale discipline as
     :func:`pagerank`: each half-step is ONE keyed shuffle (edge join +
     destination aggregate) plus a 1-row sum broadcast for the
-    normalization; per-round localCheckpoints truncate lineage so
+    normalization; per-round materialization truncates lineage so
     round k never replays rounds 1..k-1.
     """
     if iterations < 1:
         raise ValueError(f"hits() needs iterations >= 1, got {iterations}")
-    e = edges.select(src, dst).localCheckpoint()
+    e = materialize(edges.select(src, dst))
     nodes = (
         e.select(F.col(src).alias("node"))
         .unionAll(e.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     hub = e.select(F.col(src).alias("node")).distinct().withColumn(
         "hub", F.lit(1.0)
@@ -254,13 +250,12 @@ def hits(
             .agg(F.sum("hub").alias("_v"))
         )
         a_sum = a_raw.agg(F.sum("_v").alias("_s"))
-        auth = (
+        auth = materialize(
             a_raw.join(F.broadcast(a_sum))
             .select(
                 F.col(dst).alias("node"),
                 (F.col("_v") / F.col("_s")).alias("auth"),
             )
-            .localCheckpoint()
         )
         h_raw = (
             e.join(auth.withColumnRenamed("node", dst), dst)
@@ -268,13 +263,12 @@ def hits(
             .agg(F.sum("auth").alias("_v"))
         )
         h_sum = h_raw.agg(F.sum("_v").alias("_s"))
-        hub = (
+        hub = materialize(
             h_raw.join(F.broadcast(h_sum))
             .select(
                 F.col(src).alias("node"),
                 (F.col("_v") / F.col("_s")).alias("hub"),
             )
-            .localCheckpoint()
         )
     return (
         nodes.join(auth, "node", "left")
@@ -305,15 +299,11 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     edge. Equi-joins on node ids only; no materialized wedge relation
     (the Σ_v in(v)·out(v) blow-up of the naive two-join plan).
     """
-    # eager localCheckpoint, not persist: e is read by 2 downstream
-    # subtrees; checkpointing materializes once AND truncates
-    # lineage, so no consumer ever recomputes the basket self-join
-    # and the cache manager's plan-matching is out of the picture
-    # (measured: persist here was bimodal, 9-88 s at sf0.1;
-    # checkpoint holds ~4 s steady)
-    from hls_stac_parquet_spark.tuning import compact_checkpoint
-
-    e = compact_checkpoint(
+    # materialized, not persisted: e is read by 2 downstream subtrees,
+    # and an eager checkpoint also truncates lineage, so no consumer
+    # ever recomputes the basket self-join (measured: persist here was
+    # bimodal, 9-88 s at sf0.1; checkpoint holds ~4 s steady)
+    e = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("_a"),
             F.greatest(F.col(src), F.col(dst)).alias("_b"),
@@ -356,7 +346,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # the same exchange the operator needs (no extra shuffle) with a
     # REPARTITION_BY_NUM pin AQE won't coalesce.
     n_part = edges.sparkSession.sparkContext.defaultParallelism
-    adj = compact_checkpoint(
+    adj = materialize(
         oriented.repartition(n_part, "_u")
         .groupBy("_u")
         .agg(F.collect_set("_v").alias("ns"))
@@ -424,20 +414,23 @@ def propagate_labels(
     are driver-sequenced (iterative algorithms are control-plane
     loops over data-plane shuffles, like pagerank above).
     """
-    # localCheckpoint: every round joins against the SAME symmetrized
+    # materialized: every round joins against the SAME symmetrized
     # edge set — checkpointing materializes it once AND truncates
     # lineage, so no round re-runs the union+distinct over raw edges
     # and round-k task binaries don't carry the full history (the
     # persist-was-bimodal lesson from triangle_count/pagerank).
-    sym = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).union(
-        edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
-    ).filter(F.col("_s") != F.col("_d")).distinct().localCheckpoint()
+    sym = materialize(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+        .union(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
+        .filter(F.col("_s") != F.col("_d"))
+        .distinct()
+    )
 
-    seed_labels = seeds.select(
-        F.col(node_col).alias("_n"), F.col(label_col).alias("_lbl")
-    ).withColumn("_seed", F.lit(True)).localCheckpoint()
+    seed_labels = materialize(
+        seeds.select(
+            F.col(node_col).alias("_n"), F.col(label_col).alias("_lbl")
+        ).withColumn("_seed", F.lit(True))
+    )
 
     # Lineage is cut every 4th round instead of every round (r8): each
     # round references the previous labels 3× (vote join, seed
@@ -475,7 +468,7 @@ def propagate_labels(
             )
         )
         if (i + 1) % 4 == 0 and (i + 1) < max_iter:
-            labels = labels.localCheckpoint()
+            labels = materialize(labels)
     return labels.select(
         F.col("_n").alias(node_col),
         F.col("_lbl").alias(label_col),
@@ -516,7 +509,7 @@ def core_numbers(
     neighborhood. (An earlier draft also clipped neighbor values at
     the node's own estimate — correct but a second join per round
     buying nothing the distinct-value bound doesn't already give.)
-    Values are localCheckpoint-ed each round (each round reads the
+    Values are materialized each round (each round reads the
     previous values twice; without truncation the plan doubles per
     round and the driver dies optimizing it long before data size
     matters).
@@ -529,14 +522,13 @@ def core_numbers(
     collect. The property tests set the cap to 0 to force the
     distributed path and pin both tiers to textbook peeling.
     """
-    e = (
+    e = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("_u"),
             F.greatest(F.col(src), F.col(dst)).alias("_v"),
         )
         .filter(F.col("_u") != F.col("_v"))
         .distinct()
-        .localCheckpoint()
     )
     if e.count() <= CORE_NUMBERS_DRIVER_MAX:
         adj: dict = {}
@@ -575,13 +567,14 @@ def core_numbers(
         )
         return driver_rows_to_df(spark, core.items(), schema)
 
-    sym = e.select(F.col("_u").alias("_n"), F.col("_v").alias("_nb")).union(
-        e.select(F.col("_v").alias("_n"), F.col("_u").alias("_nb"))
-    ).localCheckpoint()
-    cur = (
+    sym = materialize(
+        e.select(F.col("_u").alias("_n"), F.col("_v").alias("_nb")).union(
+            e.select(F.col("_v").alias("_n"), F.col("_u").alias("_nb"))
+        )
+    )
+    cur = materialize(
         sym.groupBy("_n")
         .agg(F.count("*").cast("long").alias("_c"))
-        .localCheckpoint()
     )
 
     # h-index of a (value, count) histogram sorted by value DESC:
@@ -616,7 +609,7 @@ def core_numbers(
         # checkpoint (old value joined in before truncation), so the
         # convergence probe is a filter over checkpointed rows, not a
         # second join job per round
-        new_cur = (
+        new_cur = materialize(
             hist.groupBy("_n")
             .agg(
                 F.collect_list(
@@ -626,7 +619,6 @@ def core_numbers(
             .select("_n", _hindex(F.col("_h")).alias("_c"))
             .join(cur.select("_n", F.col("_c").alias("_old")), "_n")
             .select("_n", "_c", (F.col("_c") != F.col("_old")).alias("_chg"))
-            .localCheckpoint()
         )
         changed = new_cur.filter("_chg").limit(1).count()
         cur = new_cur.select("_n", "_c")
@@ -666,7 +658,7 @@ def connected_components_auto(
     count(), the collect (small tier), or the star rounds (large
     tier) all reuse one materialization — callers can pass the raw
     candidate-generation pipeline without it running twice."""
-    edges = edges.select(src, dst).localCheckpoint()
+    edges = materialize(edges.select(src, dst))
     n = edges.count()
     if n > CC_DRIVER_MAX:
         return connected_components_star(edges, src, dst, max_iter)
@@ -720,7 +712,7 @@ def sssp_bounded(
     source endpoint, relaxed candidates union the standing distances,
     and a min-aggregate per node keeps the best — node-bounded state,
     never a path relation (the recursive-CTE oracle enumerates paths;
-    this never does). Distances are localCheckpoint-ed per round so
+    this never does). Distances are materialized per round so
     round k's plan does not replay rounds 1..k-1.
 
     FP contract: Bellman-Ford's dist_k(v) = min(dist_{k-1}(v),
@@ -733,28 +725,29 @@ def sssp_bounded(
     per-round shuffle is |dist| ⋈ |edges| on node keys — AQE handles
     hub skew; state never exceeds one row per reached node.
     """
-    e = edges.select(
-        F.col(src).alias("_a"), F.col(dst).alias("_b"), F.col(weight).alias("_w")
-    ).localCheckpoint()
+    e = materialize(
+        edges.select(
+            F.col(src).alias("_a"), F.col(dst).alias("_b"),
+            F.col(weight).alias("_w"),
+        )
+    )
     # anchor: DISTINCT source row (0 rows when the edge list is empty,
     # matching the oracle's `WHERE a = (SELECT min(a) ...)` anchor)
     src_dim = e.agg(F.min("_a").alias("_s"))
-    dist = (
+    dist = materialize(
         e.select(F.col("_a").alias("node"))
         .distinct()
         .join(F.broadcast(src_dim), F.col("node") == F.col("_s"))
         .select("node", F.lit(0.0).alias("dist"))
-        .localCheckpoint()
     )
     for _ in range(rounds):
         relaxed = (
             dist.join(e, dist.node == e._a)
             .select(F.col("_b").alias("node"), (F.col("dist") + F.col("_w")).alias("dist"))
         )
-        dist = (
+        dist = materialize(
             dist.unionAll(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
         )
     return dist

@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hls_stac_parquet_spark.tuning import materialize
+
 #: Largest feature matrix, in cells (rows × (features + intercept)),
 #: that logreg_fit collects to the driver and fits in numpy. 4M cells
 #: is 32 MB of float64 and keeps the 1M-row cap measured for the
@@ -142,7 +144,7 @@ def bradley_terry_fit(
     rescale pins the parameterization). Every round is TWO keyed
     joins + one aggregate over the |entities|²-bounded pair-count
     relation — entity-bounded state, the same per-round
-    localCheckpoint discipline as operators/graph.py::pagerank (the
+    materialization discipline as operators/graph.py::pagerank (the
     relation is joined every round; lineage must not replay).
     Entities with zero wins converge to strength 0, the MM fixpoint.
     Deterministic: fixed init (1.0), fixed rounds, no RNG — the
@@ -153,7 +155,7 @@ def bradley_terry_fit(
         F.col(winner_col).alias("a"), F.col(loser_col).alias("b")
     ).agg(F.count("*").alias("n"))
     # ordered relation with per-ordered-pair totals n_ab (symmetric)
-    rel = (
+    rel = materialize(
         wl.unionByName(
             wl.select(
                 F.col("b").alias("a"), F.col("a").alias("b"), "n"
@@ -161,19 +163,18 @@ def bradley_terry_fit(
         )
         .groupBy("a", "b")
         .agg(F.sum("n").alias("n"))
-        .localCheckpoint()
     )
-    wins = (
-        pairs.groupBy(F.col(winner_col).alias("entity"))
-        .agg(F.count("*").cast("double").alias("w"))
-        .localCheckpoint()
+    wins = pairs.groupBy(F.col(winner_col).alias("entity")).agg(
+        F.count("*").cast("double").alias("w")
     )
     entities = rel.select(F.col("a").alias("entity")).distinct()
-    p = entities.join(wins, "entity", "left").select(
-        "entity",
-        F.coalesce("w", F.lit(0.0)).alias("w"),
-        F.lit(1.0).alias("p"),
-    ).localCheckpoint()
+    p = materialize(
+        entities.join(wins, "entity", "left").select(
+            "entity",
+            F.coalesce("w", F.lit(0.0)).alias("w"),
+            F.lit(1.0).alias("p"),
+        )
+    )
 
     for _ in range(iters):
         denom = (
@@ -199,10 +200,9 @@ def bradley_terry_fit(
         )
         # rescale to mean 1 via a broadcast 1-row scalar dim
         mean_p = raw.agg(F.avg("p").alias("mp"))
-        p = (
+        p = materialize(
             raw.join(F.broadcast(mean_p))
             .select("entity", "w", (F.col("p") / F.col("mp")).alias("p"))
-            .localCheckpoint()
         )
     return p.select("entity", F.col("w").cast("bigint").alias("n_wins"), "p")
 

@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hls_stac_parquet_spark.tuning import materialize
+
 
 def _par(df):
     """Spread media rows across cores before the CPU-heavy Arrow
@@ -954,9 +956,9 @@ def hamming_near_dup_pairs(
 
     width = 64 // bands
     mask = (1 << width) - 1
-    h = hashes.select(
-        F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")
-    ).localCheckpoint()  # read by the band explode + both verify joins
+    h = materialize(  # read by the band explode + both verify joins
+        hashes.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
+    )
     banded = h.select(
         "_id",
         F.explode(

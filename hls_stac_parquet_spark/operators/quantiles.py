@@ -27,6 +27,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from hls_stac_parquet_spark.tuning import materialize
+
 #: ``grouped_quantiles(ranged="auto")`` takes the range tier above this
 #: optimizer size estimate: the tier's ~1 s fixed overhead pays off
 #: only above a few hundred MB (measured at sf0.1, r8).
@@ -187,7 +189,7 @@ def grouped_weighted_median(
       (pid, group) cells are re-read (broadcast semi join); their
       in-partition cumulative weight plus the broadcast prefix offset
       reproduces the window's cumulative weight exactly. The
-      partitioned relation is localCheckpoint-ed so the sampling-based
+      partitioned relation is materialized so the sampling-based
       range assignment is IDENTICAL for the cell pass and the re-read
       (repartitionByRange samples; two plans would draw different
       boundaries).
@@ -227,7 +229,7 @@ def grouped_weighted_median(
             .agg(F.min(value_col).alias("weighted_median"))
         )
     n_part = df.sparkSession.sparkContext.defaultParallelism
-    part = (
+    part = materialize(
         df.select(*gcols, value_col, weight_col)
         .repartitionByRange(
             n_part, *[F.col(c) for c in gcols], F.col(value_col),
@@ -237,7 +239,6 @@ def grouped_weighted_median(
             *gcols, value_col, weight_col,
             F.spark_partition_id().alias("_pid"),
         )
-        .localCheckpoint()
     )
     cells = part.groupBy("_pid", *gcols).agg(F.sum(weight_col).alias("_w"))
     w_off = (

@@ -28,13 +28,15 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from hls_stac_parquet_spark.tuning import materialize
+
 _PID = "_gr_pid"
 
 
 def _range_partitioned(
     df: DataFrame, order_by: Sequence[Column], checkpoint: bool = True
 ):
-    # localCheckpoint first: repartitionByRange SAMPLES its input to
+    # materialize first: repartitionByRange SAMPLES its input to
     # pick boundaries, so the upstream plan would otherwise run twice
     # (once for the sample job, once for the shuffle write) — ruinous
     # when the input is itself an aggregate/explode chain. One eager
@@ -44,7 +46,7 @@ def _range_partitioned(
     # costs less than a materialization barrier — measured r8 on the
     # job-latency-bound rank queries).
     if checkpoint:
-        df = df.localCheckpoint()
+        df = materialize(df)
     part = df.repartitionByRange(*order_by).withColumn(
         _PID, F.spark_partition_id()
     )

@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hls_stac_parquet_spark.tuning import materialize
+
 _TOPK_SCHEMA = StructType(
     [
         StructField("vec_id", LongType()),
@@ -227,7 +229,7 @@ def _ivf_assign_probe(
     twice and the centroid GEMM ran twice (measured r9: the two
     passes were ~90% of q_ann_ivf's task time; the cogrouped search
     was 0.7 s of 18 s). One mapInPandas computes sims once, emits
-    (id, vec, cluster, probes), and a localCheckpoint materializes it
+    (id, vec, cluster, probes), and one materialization holds it
     for both cogroup branches. Per-row results are identical: cluster
     and probes derive from the same sims by the same argmax/argsort
     expressions the two UDFs used. The probe branch uses fresh column
@@ -274,10 +276,9 @@ def _ivf_assign_probe(
 
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
-    enriched = (
+    enriched = materialize(
         parallelize_for_udf(df.select(id_col, vec_col))
         .mapInPandas(enrich, enriched_schema)
-        .localCheckpoint()
     )
     corpus = enriched.select(id_col, vec_col, "cluster")
     probes = enriched.select(

@@ -29,6 +29,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hls_stac_parquet_spark.tuning import materialize
+
 #: separator for the symbol-string representation; never appears in
 #: the corpora (unit separator control byte)
 SEP = "\x1f"
@@ -77,9 +79,9 @@ def bpe_train(
     limitation).
     """
     # symbols-as-string: "c1 SEP c2 SEP ..." per word
-    sym = words.select(
-        F.concat_ws(SEP, F.split("word", "")).alias("syms"), "freq"
-    ).persist()
+    sym = materialize(
+        words.select(F.concat_ws(SEP, F.split("word", "")).alias("syms"), "freq")
+    )
 
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(num_merges):
@@ -114,16 +116,14 @@ def bpe_train(
         # lookarounds anchor both symbol boundaries without consuming
         # them, so adjacent runs merge greedily and a pair never
         # matches inside a longer symbol (e.g. 'ar'+'r' vs '...xar')
-        old = sym
-        sym = sym.select(
-            F.regexp_replace(
-                F.col("syms"), _pair_regex(left, right), _repl(left + right)
-            ).alias("syms"),
-            "freq",
-        ).persist()
-        sym.count()
-        old.unpersist()
-    sym.unpersist()
+        sym = materialize(
+            sym.select(
+                F.regexp_replace(
+                    F.col("syms"), _pair_regex(left, right), _repl(left + right)
+                ).alias("syms"),
+                "freq",
+            )
+        )
     return merges
 
 

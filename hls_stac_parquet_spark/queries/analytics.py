@@ -24,6 +24,7 @@ from hls_stac_parquet_spark.queries.registry import (
     query,
     t,
 )
+from hls_stac_parquet_spark.tuning import materialize
 
 
 @query(
@@ -291,14 +292,13 @@ def q_spell_variants(spark, sf_dir):
     the vocab aggregate is the only fact-table pass.
     """
     d = t(spark, sf_dir, "documents")
-    # localCheckpoint: the vocab aggregate is read FOUR times (both
+    # materialized: the vocab aggregate is read FOUR times (both
     # sides of both block joins) — one corpus pass instead of four
-    vocab = (
+    vocab = materialize(
         d.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
         .filter(F.length("tok") >= 2)
         .groupBy("tok")
         .agg(F.count("*").alias("freq"))
-        .localCheckpoint()
     )
     a = vocab.select(
         F.col("tok").alias("tok_a"), F.col("freq").alias("freq_a")
@@ -778,10 +778,7 @@ def q_adamic_adar(spark, sf_dir):
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    from hls_stac_parquet_spark.tuning import compact_checkpoint
-
-    # r9: serialized block storage (§5 — see tuning.compact_checkpoint)
-    e = compact_checkpoint(
+    e = materialize(
         self_join_pairs(od, ["l_orderkey"], "l_partkey").select(
             F.col("id_a").alias("pa"), F.col("id_b").alias("pb")
         ).distinct()
@@ -1014,28 +1011,24 @@ def q_bfs_reachability(spark, sf_dir):
             F.concat(F.lit("s"), "l_suppkey").alias("b"),
         )
     )
-    und = edges.unionAll(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).persist()
+    und = materialize(
+        edges.unionAll(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    )
 
     visited = spark.createDataFrame([("c1", 0)], "node string, dist int")
     frontier = visited.select("node")
     for hop in range(1, 4):
-        nxt = (
+        # each hop is materialized, so its anti-join never recomputes
+        # the prior hops
+        nxt = materialize(
             frontier.join(und, frontier.node == und.a)
             .select(F.col("b").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(hop))
-            .persist()
         )
         visited = visited.unionAll(nxt)
         frontier = nxt.select("node")
-    # one job materializes the whole loop; persists above keep each
-    # hop's anti-join from recomputing prior hops
-    visited = visited.persist()
-    visited.count()
-    und.unpersist()
     return visited
 
 
@@ -1246,11 +1239,11 @@ def q_seq_pairs(spark, sf_dir):
     |types|²-sized key space. The naive pattern-growth over raw
     event sequences is what this plan deliberately avoids."""
     ev = t(spark, sf_dir, "events")
-    # localCheckpoint: the pair expansion reads the first-occurrence
+    # materialized: the pair expansion reads the first-occurrence
     # aggregate on BOTH sides — one fact pass instead of two
-    firsts = ev.groupBy("user_id", "event_type").agg(
-        F.min("ts").alias("fts")
-    ).localCheckpoint()
+    firsts = materialize(
+        ev.groupBy("user_id", "event_type").agg(F.min("ts").alias("fts"))
+    )
     a = firsts.select(
         "user_id", F.col("event_type").alias("type_a"), F.col("fts").alias("fa")
     )
@@ -1690,18 +1683,20 @@ def q_er_sorted_neighborhood(spark, sf_dir):
     """
     p = t(spark, sf_dir, "part")
     w = Window.partitionBy("blk").orderBy("p_name", "p_partkey")
-    s = p.select(
-        "p_partkey",
-        "p_name",
-        F.split("p_name", " ").getItem(0).alias("blk"),
-    ).select(
-        "p_partkey",
-        "p_name",
-        F.lead("p_partkey", 1).over(w).alias("k1"),
-        F.lead("p_name", 1).over(w).alias("n1"),
-        F.lead("p_partkey", 2).over(w).alias("k2"),
-        F.lead("p_name", 2).over(w).alias("n2"),
-    ).localCheckpoint()  # read twice (next-1 and next-2 candidate legs)
+    s = materialize(  # read twice (next-1 and next-2 candidate legs)
+        p.select(
+            "p_partkey",
+            "p_name",
+            F.split("p_name", " ").getItem(0).alias("blk"),
+        ).select(
+            "p_partkey",
+            "p_name",
+            F.lead("p_partkey", 1).over(w).alias("k1"),
+            F.lead("p_name", 1).over(w).alias("n1"),
+            F.lead("p_partkey", 2).over(w).alias("k2"),
+            F.lead("p_name", 2).over(w).alias("n2"),
+        )
+    )
     cand = s.filter(F.col("k1").isNotNull()).select(
         F.col("p_partkey").alias("key_a"),
         F.col("k1").alias("key_b"),
@@ -1790,18 +1785,20 @@ def q_golden_record(spark, sf_dir):
 
     p = t(spark, sf_dir, "part")
     w = Window.partitionBy("blk").orderBy("p_name", "p_partkey")
-    s = p.select(
-        "p_partkey",
-        "p_name",
-        F.split("p_name", " ").getItem(0).alias("blk"),
-    ).select(
-        "p_partkey",
-        "p_name",
-        F.lead("p_partkey", 1).over(w).alias("k1"),
-        F.lead("p_name", 1).over(w).alias("n1"),
-        F.lead("p_partkey", 2).over(w).alias("k2"),
-        F.lead("p_name", 2).over(w).alias("n2"),
-    ).localCheckpoint()  # read twice (next-1 and next-2 candidate legs)
+    s = materialize(  # read twice (next-1 and next-2 candidate legs)
+        p.select(
+            "p_partkey",
+            "p_name",
+            F.split("p_name", " ").getItem(0).alias("blk"),
+        ).select(
+            "p_partkey",
+            "p_name",
+            F.lead("p_partkey", 1).over(w).alias("k1"),
+            F.lead("p_name", 1).over(w).alias("n1"),
+            F.lead("p_partkey", 2).over(w).alias("k2"),
+            F.lead("p_name", 2).over(w).alias("n2"),
+        )
+    )
     cand = s.filter(F.col("k1").isNotNull()).select(
         F.col("p_partkey").alias("a"),
         F.col("k1").alias("b"),

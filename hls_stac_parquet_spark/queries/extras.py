@@ -834,9 +834,6 @@ def q_bitmap_distinct(spark, sf_dir):
     bitmaps = e.groupBy("event_type", "bucket").agg(
         F.bit_or("mask").alias("bits")
     )
-    # cheap branch reuse: the bitmap table is tiny (|users|/64 rows
-    # per group) — persist it so per-type and global rollups share it.
-    bitmaps = bitmaps.persist()
     per_type = bitmaps.groupBy("event_type").agg(
         F.sum(F.bit_count("bits")).alias("n_users")
     )
@@ -1054,17 +1051,14 @@ def q_source_overlap(spark, sf_dir):
             F.array_join(F.slice(ts, i, 8), " ")
         ),
     )
-    from hls_stac_parquet_spark.tuning import parallelize_for_udf
+    from hls_stac_parquet_spark.tuning import materialize, parallelize_for_udf
 
     # spread the per-window md5 fingerprinting across cores BEFORE the
     # explode: a compact single-file scan is ONE partition, which
     # serialized this whole pass on one task (guide §2.5 input skew;
     # measured r8: 2.9 s eager build → sub-second). No-op at scale.
-    from hls_stac_parquet_spark.tuning import compact_checkpoint
-
-    # r9: serialized blocks (§5 — see tuning.compact_checkpoint);
-    # reused by the pair join (twice) + sizes
-    fp = compact_checkpoint(
+    # Materialized: reused by the pair join (twice) + sizes.
+    fp = materialize(
         parallelize_for_udf(
             t(spark, sf_dir, "documents").select("source", "text")
         )

@@ -43,6 +43,7 @@ from hls_stac_parquet_spark.queries.registry import (
     query,
     t,
 )
+from hls_stac_parquet_spark.tuning import materialize
 
 _STOPS_SQL = "(" + ", ".join(f"'{w}'" for w in EN_STOPWORDS) + ")"
 _SW_RATIO_SQL = (
@@ -3349,20 +3350,24 @@ def q_logreg_train(spark, sf_dir):
     pure-numpy GD replay is pinned in tests/test_mlfit.py."""
     from hls_stac_parquet_spark.operators.mlfit import logreg_fit, logreg_score
 
-    docs = t(spark, sf_dir, "documents").select(
-        (F.size(F.split(F.col("text"), " ")) / 100.0).alias("f_len"),
-        (F.length("text") / F.greatest(F.size(F.split(F.col("text"), " ")), F.lit(1)) / 10.0).alias("f_wordlen"),
-        (
-            F.size(
-                F.filter(
-                    F.split(F.lower(F.col("text")), " "),
-                    lambda w: w.isin("the", "a", "of", "and", "to"),
+    # the fit reads docs once per pass and the returned accuracy
+    # reads it again
+    docs = materialize(
+        t(spark, sf_dir, "documents").select(
+            (F.size(F.split(F.col("text"), " ")) / 100.0).alias("f_len"),
+            (F.length("text") / F.greatest(F.size(F.split(F.col("text"), " ")), F.lit(1)) / 10.0).alias("f_wordlen"),
+            (
+                F.size(
+                    F.filter(
+                        F.split(F.lower(F.col("text")), " "),
+                        lambda w: w.isin("the", "a", "of", "and", "to"),
+                    )
                 )
-            )
-            / F.greatest(F.size(F.split(F.col("text"), " ")), F.lit(1))
-        ).alias("f_stop"),
-        (F.col("lang") == "en").cast("double").alias("y"),
-    ).persist()
+                / F.greatest(F.size(F.split(F.col("text"), " ")), F.lit(1))
+            ).alias("f_stop"),
+            (F.col("lang") == "en").cast("double").alias("y"),
+        )
+    )
     feats = ["f_len", "f_wordlen", "f_stop"]
     w = logreg_fit(docs, feats, "y", iters=20, lr=0.5)
     scored = logreg_score(docs, w, feats)
@@ -3371,7 +3376,6 @@ def q_logreg_train(spark, sf_dir):
             (F.col("score") > 0.5).cast("double") == F.col("y")
         ).cast("double").alias("ok")
     ).agg(F.round(F.avg("ok"), 4).alias("train_acc"))
-    docs.unpersist()
     out = spark.createDataFrame(
         [tuple(round(x, 4) for x in w)],
         "w_len double, w_wordlen double, w_stop double, intercept double",
@@ -3444,11 +3448,7 @@ def q_lang_id_trigram(spark, sf_dir):
             )
         ).alias("g"),
     )
-    # r9: serialized block storage (91 MB deserialized re-read twice
-    # -> compact blocks; §5, see tuning.compact_checkpoint)
-    from hls_stac_parquet_spark.tuning import compact_checkpoint
-
-    grams = compact_checkpoint(grams)
+    grams = materialize(grams)
     counts = grams.groupBy("lang", "g").agg(F.count("*").alias("c"))
     w = Window.partitionBy("lang").orderBy(F.desc("c"), "g")
     profile = (
@@ -3665,15 +3665,13 @@ def q_dedup_recall_eval(spark, sf_dir):
     # each pair set feeds TWO consumers (its own count + the hit
     # join); checkpoint the pairs-sized results so neither generator
     # runs twice
-    exact = (
+    exact = materialize(
         prefix_filter_jaccard_pairs(d, n=3, min_jaccard=0.5)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
     )
-    cand = (
+    cand = materialize(
         minhash_candidate_pairs(d, shingle_k=3)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
     )
     hits = exact.join(cand, ["doc_a", "doc_b"], "left_semi")
     n_exact = exact.agg(F.count("*").cast("bigint").alias("n_exact"))
@@ -4043,11 +4041,9 @@ def q_textrank(spark, sf_dir):
     edges = co.select(
         F.col("wa").alias("src"), F.col("wb").alias("dst")
     ).unionAll(co.select(F.col("wb").alias("src"), F.col("wa").alias("dst")))
-    # materialize + truncate lineage: pagerank joins the edge relation
-    # EVERY round — without this the corpus-wide position joins replay
-    # 8×+ (measured 18.8 s → ~2 s at sf0.1)
-    edges = edges.distinct().localCheckpoint()
-    pr = pagerank(edges, iterations=8)
+    # pagerank materializes its edge relation before the rounds, so
+    # the corpus-wide position joins run once
+    pr = pagerank(edges.distinct(), iterations=8)
     return (
         pr.select(F.col("node").alias("word"), F.round("rank", 6).alias("rank"))
         .orderBy(F.desc("rank"), "word")
@@ -4919,22 +4915,21 @@ def q_minhash_portable(spark, sf_dir):
     # (md5 evaluation, not agg state, dominates; slices of a crypto
     # hash are as independent as separately-keyed hashes for min-hash
     # purposes). Oracle twin slices identically via substr.
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{i // 4}:"), F.col("s"))),
-                    (i % 4) * 8 + 1,
-                    8,
-                )
-            ).alias(f"h{i}")
-            for i in range(_MHP_N)
-        ]
+    # materialized: the banded view and both signature lookups read it
+    sig = materialize(
+        sh.groupBy("doc_id").agg(
+            *[
+                F.min(
+                    F.substring(
+                        F.md5(F.concat(F.lit(f"{i // 4}:"), F.col("s"))),
+                        (i % 4) * 8 + 1,
+                        8,
+                    )
+                ).alias(f"h{i}")
+                for i in range(_MHP_N)
+            ]
+        )
     )
-    from pyspark.storagelevel import StorageLevel
-
-    # r9: serialized blocks (§5 — see tuning.compact_checkpoint)
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
     banded = sig.select(
         "doc_id",
         F.posexplode(F.array(*[F.col(f"h{i}") for i in range(_MHP_N)])).alias(
@@ -5014,7 +5009,6 @@ def q_mutual_info(spark, sf_dir):
     jt = base.groupBy("lang", "source").agg(
         F.count("*").cast("bigint").alias("c")
     )
-    jt = jt.persist()
     l_m = jt.groupBy("lang").agg(F.sum("c").cast("bigint").alias("cl"))
     s_m = jt.groupBy("source").agg(F.sum("c").cast("bigint").alias("cs"))
     n = jt.agg(F.sum("c").cast("bigint").alias("n"))
@@ -5122,7 +5116,6 @@ def q_ngram_entropy_rate(spark, sf_dir):
     cab = bg.groupBy("source", "a", "b").agg(
         F.count("*").cast("bigint").alias("c")
     )
-    cab = cab.persist()
     ca = cab.groupBy("source", "a").agg(
         F.sum("c").cast("bigint").alias("cprev")
     )
@@ -5206,7 +5199,6 @@ def q_keyness_loglr(spark, sf_dir):
     tk = toks.groupBy("source", "term").agg(
         F.count("*").cast("bigint").alias("a")
     )
-    tk = tk.persist()
     tm = tk.groupBy("term").agg(F.sum("a").cast("bigint").alias("tt"))
     sm = tk.groupBy("source").agg(F.sum("a").cast("bigint").alias("st"))
     nn = tk.agg(F.sum("a").cast("bigint").alias("n"))
@@ -5320,7 +5312,6 @@ def q_crossentropy_matrix(spark, sf_dir):
     cab = bg.groupBy("source", "a", "b").agg(
         F.count("*").cast("bigint").alias("c")
     )
-    cab = cab.persist()
     ca = cab.groupBy("source", "a").agg(
         F.sum("c").cast("bigint").alias("cprev")
     )

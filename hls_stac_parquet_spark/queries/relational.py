@@ -1951,7 +1951,6 @@ def q_interpolate_linear(spark, sf_dir):
         )
         .agg(F.avg("value").alias("v"))
     )
-    obs = obs.persist()
     types = obs.select("event_type").distinct()
     grid = types.crossJoin(
         e.sparkSession.range(720).select(F.col("id").cast("int").alias("h"))

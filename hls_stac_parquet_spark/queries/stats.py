@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hls_stac_parquet_spark.queries.registry import finite as _finite, query, t
+from hls_stac_parquet_spark.tuning import materialize
 
 
 @query(
@@ -364,22 +365,16 @@ def q_market_basket(spark, sf_dir):
     threshold is the standard a-priori prune that keeps the ranked
     output bounded at scale.
     """
-    # localCheckpoint: od feeds support dim + scalar total + pair join
+    # materialized: od feeds support dim + scalar total + pair join
     # — three consumers, one materialization instead of three
     # distincts. (r8: re-materializing the checkpoint at full 32-way
     # width was A/B-tested and REJECTED — the 5-partition layout AQE
     # picks reads back with ~10x less task time than 32 spread
     # partitions on this host; see OPTIMIZATION_r08.md.)
-    # r9: serialized checkpoint storage was A/B-tested here and
-    # REJECTED — interleaved min-of-4 showed the default deserialized
-    # level ~0.1-0.2 s faster per query (the read-back is this query's
-    # hot loop; the ser/deser tax outweighs the footprint win, echoing
-    # the r8 layout note above).
-    od = (
+    od = materialize(
         t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint()
     )
     part_orders = od.groupBy("l_partkey").agg(
         F.count("*").cast("double").alias("n_orders_part")
@@ -1647,18 +1642,12 @@ def q_itemsets_3(spark, sf_dir):
     at TPC-H basket sizes (~4 distinct parts) the direct join is
     cheaper than materializing the pair dimension. TakeOrdered
     top-20, no global sort."""
-    # localCheckpoint: the triple self-join reads od three times —
-    # one materialized distinct instead of three
-    # r9: serialized checkpoint storage was A/B-tested here and
-    # REJECTED — interleaved min-of-4 showed the default deserialized
-    # level ~0.1-0.2 s faster per query (the read-back is this query's
-    # hot loop; the ser/deser tax outweighs the footprint win, echoing
-    # the r8 layout note above).
-    od = (
+    # materialized: the triple self-join reads od three times — one
+    # distinct instead of three
+    od = materialize(
         t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint()
     )
     a = od.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa")
@@ -2150,14 +2139,12 @@ def q_item_item_cf(spark, sf_dir):
     cut is float-stable across engines.
     """
     from hls_stac_parquet_spark.operators.lsh import self_join_pairs
-    from hls_stac_parquet_spark.tuning import compact_checkpoint
 
-    # localCheckpoint at both branch points: od feeds the support dim
+    # materialized at both branch points: od feeds the support dim
     # AND the pair join (the distinct would otherwise run twice), and
     # pr is unioned in both directions (the whole blocked self-join
     # would otherwise replay). Measured at sf0.1: 2.1 -> 0.9 s warm.
-    # r9: serialized block storage (§5 — see tuning.compact_checkpoint)
-    od = compact_checkpoint(
+    od = materialize(
         t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
@@ -2188,7 +2175,7 @@ def q_item_item_cf(spark, sf_dir):
             ).alias("sim"),
         )
     )
-    simc = compact_checkpoint(simc)
+    simc = materialize(simc)
     sims = simc.select(
         F.col("id_a").alias("item"),
         F.col("id_b").alias("neighbor"),
@@ -2922,16 +2909,14 @@ def q_hill_tail_index(spark, sf_dir):
     w = Window.partitionBy("event_type").orderBy(
         F.desc("value"), F.col("event_id")
     )
-    rk = (
+    # one eager materialization: the pruned relation is <=
+    # 101·|types| rows but feeds THREE consumers (xmin anchor, hill
+    # head, final projection) — without it each consumer re-scans the
+    # fact table (3 full scans at 100 TB)
+    rk = materialize(
         base.select(
             "event_type", "value", F.row_number().over(w).alias("rnk")
-        )
-        .filter(F.col("rnk") <= 101)
-        # one eager materialization: the pruned relation is <=
-        # 101·|types| rows but feeds THREE consumers (xmin anchor,
-        # hill head, final projection) — without it each consumer
-        # re-scans the fact table (3 full scans at 100 TB)
-        .localCheckpoint()
+        ).filter(F.col("rnk") <= 101)
     )
     xm = rk.filter(F.col("rnk") == 101).select(
         "event_type", F.col("value").alias("xmin")
@@ -3056,7 +3041,6 @@ def q_cramers_v(spark, sf_dir):
     cells = base.groupBy("x", "y").agg(
         F.count("*").cast("double").alias("o")
     )
-    cells = cells.persist()
     from pyspark.sql import Window
 
     m = cells.select(
@@ -3211,7 +3195,7 @@ def q_emd_1d(spark, sf_dir):
         F.sum("c2").cast("bigint").alias("n2"),
     )
     cum = with_global_cumsum(pv, [F.col("v")], {"k1": "c1", "k2": "c2"})
-    rk = with_global_rank(cum, [F.col("v")], "rn").localCheckpoint()
+    rk = materialize(with_global_rank(cum, [F.col("v")], "rn"))
     nxt = rk.select((F.col("rn") - 1).alias("rn"), F.col("v").alias("nxt"))
     stepped = rk.join(nxt, "rn")  # inner: the max-v row has no next
     return (
@@ -3349,7 +3333,6 @@ def q_spearman_rho(spark, sf_dir):
             F.col("value").alias("yv"),
         )
     )
-    base = base.persist()
 
     def rank_map(col, out):
         per = base.groupBy("event_type", col).agg(
@@ -3432,7 +3415,6 @@ def q_theil_index(spark, sf_dir):
         F.sum("x").alias("sx"),
         F.sum(F.col("x") * F.log("x")).alias("sxlx"),
     )
-    g = g.persist()
     tot = g.agg(
         F.sum("ng").cast("bigint").alias("n"),
         F.sum("sx").alias("tsx"),
@@ -3672,7 +3654,6 @@ def q_cohen_kappa(spark, sf_dir):
         )
     )
     cells = r.groupBy("a", "b").agg(F.count("*").cast("double").alias("o"))
-    cells = cells.persist()
     m = cells.select(
         "a",
         "b",

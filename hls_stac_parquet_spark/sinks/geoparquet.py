@@ -414,10 +414,11 @@ def optimize_geoparquet_month(
     one object under the reference's path name). The row count comes
     from the parquet footers.
 
-    Write-then-delete ordering makes a crash safe-but-duplicating
-    (new files land before old ones are removed; re-running converges
-    because the rewrite reads whatever is present) — the same
-    at-least-once-then-idempotent discipline as the manifest sink.
+    New files land before old ones are removed, so a crash loses no
+    rows, but a re-run does not converge: a crash between the write
+    and the delete loop leaves old and new files side by side, and a
+    re-run lists and reads both, so it writes every row twice. An
+    exactly-once month commit is ROADMAP direction 1.
     Requires a Spark-readable store (POSIX, or s3 with Hadoop s3a).
 
     Returns {files_before, files_after, n_rows, manifest}.

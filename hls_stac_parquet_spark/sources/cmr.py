@@ -194,16 +194,14 @@ class CmrReader(DataSourceReader):
         return _on_day(entry, day)
 
     def _read_fixture(self, day: str) -> Iterator[tuple]:
-        days = _fixture_days(self.fixture_dir) if day == "all" else [day]
-        for d in days:
-            path = os.path.join(self.fixture_dir, f"{d}.json")
-            if not os.path.exists(path):
-                continue
-            with open(path) as fh:
-                data = json.load(fh)
-            for entry in data.get("feed", {}).get("entry", []):
-                if self._matches(entry, day):
-                    yield self._entry_to_row(entry)
+        path = os.path.join(self.fixture_dir, f"{day}.json")
+        if not os.path.exists(path):
+            return
+        with open(path) as fh:
+            data = json.load(fh)
+        for entry in data.get("feed", {}).get("entry", []):
+            if self._matches(entry, day):
+                yield self._entry_to_row(entry)
 
     def _read_http(self, day: str) -> Iterator[tuple]:
         """Cursor-paginated scan of one day window (cmr_api.py:55-71):
@@ -436,12 +434,6 @@ class CmrStreamReader(SimpleDataSourceStreamReader):
         # materialized list, not a generator: the prefetching cache
         # copy.copy()s the iterator on partition planning, and daily
         # manifests are control-plane-sized by construction
-        rows: list = []
-        for day in days:
-            if self.fixture_dir:
-                rows.extend(self._batch._read_fixture(day))
-            else:
-                rows.extend(self._batch._read_http(day))
-        return rows
+        return list(self._batch.read(_DaysPartition(days)))
 
 

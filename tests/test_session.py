@@ -9,12 +9,37 @@ import re
 import subprocess
 import sys
 
+import pytest
+
 import hls_stac_parquet_spark
 from hls_stac_parquet_spark import worker_daemon
 from hls_stac_parquet_spark.session import default_driver_memory
 
 PACKAGE = pathlib.Path(hls_stac_parquet_spark.__file__).parent
 SESSION_STATE = re.compile(r"spark\.conf\.set|conf\.unset|os\.environ|os\.getenv")
+MATERIALIZE = re.compile(r"\.(persist|cache|checkpoint|localCheckpoint|unpersist)\(")
+#: every query that persisted a frame before tuning.materialize was the
+#: one materialization call, plus q_minhash_dedup and q_simhash_dedup
+#: for operators/dedup.py's sketch frames
+PERSISTING_QUERIES = (
+    "q_bfs_reachability",
+    "q_bitmap_distinct",
+    "q_bpe_train",
+    "q_cohen_kappa",
+    "q_cramers_v",
+    "q_crossentropy_matrix",
+    "q_dedup_recall_eval",
+    "q_interpolate_linear",
+    "q_keyness_loglr",
+    "q_logreg_train",
+    "q_minhash_dedup",
+    "q_minhash_portable",
+    "q_mutual_info",
+    "q_ngram_entropy_rate",
+    "q_simhash_dedup",
+    "q_spearman_rho",
+    "q_theil_index",
+)
 
 
 def test_driver_memory_is_half_the_host_capped_at_32g(tmp_path, monkeypatch):
@@ -48,6 +73,33 @@ def test_only_session_module_reads_env_or_sets_conf():
         if SESSION_STATE.search(line)
     ]
     assert offenders == []
+
+
+def test_only_tuning_module_materializes():
+    """One materialization policy: only ``tuning.materialize`` caches,
+    persists or checkpoints a frame."""
+    offenders = [
+        f"{path.relative_to(PACKAGE)}:{n}: {line.strip()}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "tuning.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if MATERIALIZE.search(line)
+    ]
+    assert offenders == []
+
+
+@pytest.mark.parametrize("name", PERSISTING_QUERIES)
+def test_query_leaves_session_cache_empty(spark, name):
+    """A query registers nothing with the session's CacheManager, so no
+    cached relation outlives it for a later query to hit."""
+    from hls_stac_parquet_spark.queries import REGISTRY
+    from tests.conftest import SF0001
+
+    spark.catalog.clearCache()
+    REGISTRY[name].fn(spark, SF0001).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_worker_daemon_import_runs_nothing():

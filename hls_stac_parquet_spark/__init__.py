@@ -25,5 +25,3 @@ Layout
 """
 
 __version__ = "0.1.0"
-
-from hls_stac_parquet_spark.session import get_spark  # noqa: F401

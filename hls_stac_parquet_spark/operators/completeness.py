@@ -5,9 +5,9 @@ month (origin-date-aware: the collection's first month starts at the
 origin day, not day 1 — write.py:180-196) and raises if the listing
 differs (write.py:172-202). Here: generate the expected keys with
 ``sequence`` + ``explode`` and compare the two key sets both ways
-in one grouped pass (``require_complete``, one action) — set algebra
-instead of driver loops, so the same gate works for a month or a
-decade of partitions.
+in one grouped pass (``require_complete``, one action), for a decade
+of partitions as for a month. E2 compares its ≤31 listed days as
+Python sets on the driver and raises the same error.
 """
 
 from __future__ import annotations

@@ -2,8 +2,8 @@
 
 Two small reference behaviors as set/flow algebra:
 
-- fan-in (A12, write.py:161-168): multi-file read + explode — Spark's
-  file listing does the driver loop's job in parallel
+- fan-in (A12, write.py:161-168): explode a month's manifest rows
+  into URL rows (E2 itself flattens its ≤31 days on the driver)
 - failure split (A19, fetch.py:78-88): tag rows with an error column,
   fork into ok/dead-letter streams
 """

@@ -4,18 +4,16 @@ Reference flow (write.py:99-245): list month's manifests →
 sequential fan-in → completeness gate → driver-side Hilbert sort of
 the whole month → semaphore(50) fetch → rustac GeoParquet write.
 
-Spark shape — plan the month from its URLs, then fetch each item once:
+Spark shape — plan the month on the driver, then fetch each item once:
 
-    read_manifests (parallel multi-file scan)
-      → completeness gate (sequence + anti-join)
-      → plan: explode urls → MGRS regex → per-tile URL counts,
-        collected (≤ ~56k HLS tiles) → tile centres + Hilbert keys in
-        numpy on the driver (functions/mgrs.py::tile_keys)
-      → broadcast-join the keys onto the URL rows (JVM side)
+    read_month_urls (store LIST + ≤31 GETs, on the driver)
+      → completeness gate (listed days vs expected days)
+      → MGRS regex per URL → centres + Hilbert keys of the distinct
+        tiles (functions/mgrs.py::tile_keys) → keyed URL rows, to
+        Spark once as Arrow
       → the sink clusters the URL rows into its month layout
         (geoparquet.py::cluster_month: one range partition on the key
-        per output file, sorted within) — the sampler re-reads only
-        manifests
+        per output file, sorted within)
       → one stage per file: fetch (mapInPandas thread pools, the key
         columns ride along in order) → failures counted by
         df.observe → from_json(explicit STAC schema) → hoist columns
@@ -25,6 +23,8 @@ Spark shape — plan the month from its URLs, then fetch each item once:
 The clustering key never depends on an item body (the tile comes
 from the URL, the key from the tile centre), so nothing after the
 fetch shuffles, and every item is requested exactly once per run.
+Planning runs no Spark job: a one-file month is AQE's map-stage job
+for the range exchange plus the write job.
 
 The reference's month-in-memory sort (write.py:219) is the exact
 anti-pattern this replaces: its 64 GiB Batch instance ceiling
@@ -33,58 +33,63 @@ anti-pattern this replaces: its 64 GiB Batch instance ceiling
 
 from __future__ import annotations
 
+import calendar
 import datetime as dt
+import re
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hls_stac_parquet_spark.functions.mgrs import tile_keys
-from hls_stac_parquet_spark.functions.urls import extract_mgrs
+from hls_stac_parquet_spark.functions.urls import MGRS_TILE_PATTERN
 from hls_stac_parquet_spark.model import STAC_ITEM_SCHEMA
-from hls_stac_parquet_spark.operators.completeness import (
-    expected_days,
-    require_complete,
-)
-from hls_stac_parquet_spark.operators.manifests import fan_in_manifests, split_failures
+from hls_stac_parquet_spark.operators.completeness import IncompleteInputError
+from hls_stac_parquet_spark.operators.manifests import split_failures
 from hls_stac_parquet_spark.sinks.geoparquet import (
     cluster_month,
     geoparquet_month_dir,
     write_geoparquet_partitions,
 )
-from hls_stac_parquet_spark.sinks.manifest import read_manifests
+from hls_stac_parquet_spark.sinks.manifest import read_month_urls
 from hls_stac_parquet_spark.sources.stac_fetch import fetch_stac_items
 from hls_stac_parquet_spark.store import get_store
+from hls_stac_parquet_spark.tuning import driver_rows_to_df
 
-_KEYS_SCHEMA = "mgrs_tile string, lat double, lon double, hilbert_idx bigint"
-
-
-def _month_end(year: int, month: int) -> dt.date:
-    nxt = dt.date(year + (month == 12), month % 12 + 1, 1)
-    return nxt - dt.timedelta(days=1)
+_KEYED_SCHEMA = (
+    "url string, mgrs_tile string, lat double, lon double, hilbert_idx bigint"
+)
 
 
-def key_urls(urls: DataFrame) -> tuple[DataFrame, int]:
-    """Attach the clustering key to URL rows before any fetch.
+def _require_month_days(days, year: int, month: int, origin_date) -> None:
+    """Raise IncompleteInputError unless the listed days of the month
+    are exactly the expected ones: the 1st, or ``origin_date`` if later
+    (the reference's origin-month override, write.py:180-186), to the
+    month's last day. The report keeps the first 20 per side, sorted."""
+    first = max(dt.date(year, month, 1), origin_date or dt.date.min)
+    last = dt.date(year, month, calendar.monthrange(year, month)[1])
+    expected = set(range(first.day, last.day + 1)) if first <= last else set()
+    miss = sorted(expected - set(days))[:20]
+    extra = sorted(set(days) - expected)[:20]
+    if miss or extra:
+        raise IncompleteInputError(
+            f"expected these links: missing={miss} unexpected={extra}"
+        )
 
-    One small aggregate collects the per-tile URL counts; the driver
-    computes each tile's centre and Hilbert key (:func:`tile_keys`),
-    and a broadcast join puts them on the URL rows. Returns the keyed
-    rows (url, mgrs_tile, lat, lon, hilbert_idx) and the URL count.
-    """
-    spark = urls.sparkSession
-    tiled = urls.select("url", extract_mgrs("url").alias("mgrs_tile"))
-    counts = tiled.groupBy("mgrs_tile").count().collect()
-    n_urls = sum(r["count"] for r in counts)
-    keys = spark.createDataFrame(
-        tile_keys([r.mgrs_tile for r in counts]), _KEYS_SCHEMA
-    )
-    # null-safe: URLs without a tile match the NULL row's sentinel key
-    keyed = tiled.join(
-        F.broadcast(keys),
-        tiled["mgrs_tile"].eqNullSafe(keys["mgrs_tile"]),
-        "left",
-    ).select("url", tiled["mgrs_tile"], "lat", "lon", "hilbert_idx")
-    return keyed, n_urls
+
+def driver_keyed_urls(spark: SparkSession, urls: list[str]) -> DataFrame:
+    """(url, mgrs_tile, lat, lon, hilbert_idx) rows in ``urls`` order,
+    keyed on the driver: the tile is the first ``MGRS_TILE_PATTERN``
+    match (NULL without one, as :func:`extract_mgrs` gives), the keys
+    :func:`tile_keys` of the distinct tiles."""
+    pattern = re.compile(MGRS_TILE_PATTERN)
+    tiles = [m.group(1) if (m := pattern.search(u)) else None for u in urls]
+    keys = {
+        k.mgrs_tile: (k.lat, k.lon, k.hilbert_idx)
+        for k in tile_keys(set(tiles)).itertuples(index=False)
+    }
+    rows = [(u, t, *keys[t]) for u, t in zip(urls, tiles)]
+    return driver_rows_to_df(spark, rows, StructType.fromDDL(_KEYED_SCHEMA))
 
 
 def write_monthly_stac_geoparquet(
@@ -114,22 +119,20 @@ def write_monthly_stac_geoparquet(
     ):
         return {"skipped": True, "written": 0, "failed": 0, "files": []}
 
-    manifests = read_manifests(spark, links_src, collection_id, year, month)
-
+    day_urls = read_month_urls(links_src, collection_id, year, month)
     if require_complete_links:
-        exp = expected_days(
-            spark, dt.date(year, month, 1), _month_end(year, month), origin_date
-        ).select(F.dayofmonth("day").alias("day"))
-        actual = manifests.select("day")
-        require_complete(exp, actual, key="day")
+        _require_month_days(day_urls, year, month, origin_date)
 
-    keyed, n_urls = key_urls(fan_in_manifests(manifests))
-    if n_urls == 0:
+    # day order, then file order: same-key rows keep it through the
+    # range sort, so it fixes the output bytes
+    urls = [u for day_list in day_urls.values() for u in day_list]
+    if not urls:
         return {"skipped": False, "written": 0, "failed": 0, "files": []}
+    keyed = driver_keyed_urls(spark, urls)
 
     # clustering the URL rows clusters the items: the fetch and the
     # hoist keep row order, so nothing after the fetch shuffles
-    clustered = cluster_month(keyed, n_urls, reference_layout)
+    clustered = cluster_month(keyed, len(urls), reference_layout)
 
     fetch_stats = Observation()
     fetched = fetch_stac_items(clustered).observe(

@@ -22,7 +22,6 @@ import posixpath
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from hls_stac_parquet_spark.store import get_store
 
@@ -92,47 +91,43 @@ def write_manifests(
     return sorted(r.path for r in results if r.written)
 
 
+def read_month_urls(
+    dest: str, collection_id: str, year: int, month: int
+) -> dict[int, list[str]]:
+    """A month of manifests → {day of month: urls}, in day order, read
+    on the driver as the reference does (write.py:152-168): the store's
+    prefix listing, then one GET per day file (≤31 small objects). A
+    file that is not a JSON array of strings raises ``ValueError``
+    naming its key."""
+    store = get_store(dest)
+    prefix = posixpath.join("links", collection_id, str(year), f"{month:02d}")
+    day_re = re.compile(r"(\d{4})-(\d{2})-(\d{2})\.json$")
+    out = {}
+    for key in store.list(prefix):  # sorted: day order
+        m = day_re.search(key)
+        if m is None:
+            continue
+        try:
+            urls = json.loads(store.get_bytes(key))
+            if not isinstance(urls, list) or {type(u) for u in urls} - {str}:
+                raise ValueError("not a JSON array of strings")
+        except ValueError as e:
+            raise ValueError(
+                f"malformed manifest {store.full_url(key)}: {e}"
+            ) from e
+        out[int(m.group(3))] = urls
+    return out
+
+
 def read_manifests(
     spark: SparkSession, dest: str, collection_id: str, year: int, month: int
 ) -> DataFrame:
-    """Read a month of manifests → (collection_id, year, month, day,
-    urls) rows. The store's prefix listing picks the day files, as the
-    reference's obstore.list does (write.py:152-168), and Spark reads
-    them in one scan. For a store Spark cannot read (an S3 store on a
-    cluster without hadoop-aws, as the reference reads manifests), the
-    GETs run driver-side — a month is ≤31 small JSON objects by
-    construction."""
-    store = get_store(dest)
-    prefix = posixpath.join("links", collection_id, str(year), f"{month:02d}")
-    day_re = r"(\d{4})-(\d{2})-(\d{2})\.json$"
-    keys = [k for k in store.list(prefix) if re.search(day_re, k)]
-
-    spark_base = store.spark_url(prefix)
-    if spark_base is not None:
-        # the listed files, in name (= day) order: a directory read
-        # lists in filesystem order, which reorders E2's same-tile rows
-        # and so its output bytes from one disk to the next, and a glob
-        # path logs a stack trace while Spark probes it as a directory.
-        # The glob stays for a month with no day files, so that a
-        # missing month raises PATH_NOT_FOUND.
-        paths = [store.spark_url(k) for k in keys]
-        raw = spark.read.text(
-            paths or posixpath.join(spark_base, "*.json"), wholetext=True
-        ).withColumn("path", F.input_file_name())
-        day = F.regexp_extract("path", day_re, 3).cast("int")
-        return raw.select(
-            F.lit(collection_id).alias("collection_id"),
-            F.lit(year).alias("year"),
-            F.lit(month).alias("month"),
-            day.alias("day"),
-            F.from_json("value", "array<string>").alias("urls"),
-        )
-
-    rows = []
-    for key in keys:
-        day_of_month = int(re.search(day_re, key).group(3))
-        urls = json.loads(store.get_bytes(key).decode())
-        rows.append((collection_id, year, month, day_of_month, urls))
+    """A month of manifests as (collection_id, year, month, day, urls)
+    rows: :func:`read_month_urls` as a DataFrame."""
+    rows = [
+        (collection_id, year, month, day, urls)
+        for day, urls in read_month_urls(dest, collection_id, year, month).items()
+    ]
     return spark.createDataFrame(
         rows,
         "collection_id string, year int, month int, day int, "

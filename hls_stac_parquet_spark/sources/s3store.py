@@ -81,8 +81,8 @@ class S3Store(Store):
             else f"https://{self.bucket}.s3.{region}.amazonaws.com"
         )
         # whether the Spark runtime can read these objects directly
-        # via Hadoop s3a (cluster with hadoop-aws). False → readers
-        # fall back to driver-side listing+GET through this store.
+        # via Hadoop s3a (cluster with hadoop-aws). False → the Spark
+        # readers (bbox query, OPTIMIZE) refuse the store.
         self.spark_readable = spark_readable
 
     def _key(self, path: str) -> str:

@@ -1,6 +1,8 @@
 """E2 plan (plans/monthly_compact.py): every STAC item is requested
 exactly once, the driver-side cluster keys equal the column (UDF)
-path's, and an empty month writes nothing."""
+path's, planning runs no Spark job, the completeness gate compares
+the listed days, a malformed manifest fails the month, and an empty
+month writes nothing."""
 
 from __future__ import annotations
 
@@ -10,6 +12,8 @@ import http.server
 import json
 import math
 import os
+import re
+import shutil
 import threading
 import types
 from urllib.parse import urlparse
@@ -24,9 +28,10 @@ from hls_stac_parquet_spark.functions.spatial import (
     hilbert_index_udf,
 )
 from hls_stac_parquet_spark.functions.urls import extract_mgrs
+from hls_stac_parquet_spark.operators.completeness import IncompleteInputError
 from hls_stac_parquet_spark.plans.daily_ingest import cache_daily_stac_json_links
 from hls_stac_parquet_spark.plans.monthly_compact import (
-    key_urls,
+    driver_keyed_urls,
     write_monthly_stac_geoparquet,
 )
 from hls_stac_parquet_spark.sinks import geoparquet
@@ -135,26 +140,22 @@ def test_e2_requests_each_url_once(spark, origin, tmp_path, monkeypatch, n_files
 
 
 def test_driver_keys_match_udf_path(spark):
-    """The driver-computed tile centres and Hilbert keys equal the
-    mgrs_dim_table + hilbert_index_udf column path, including the
-    sentinel for a tile the decoder rejects and for a URL without a
-    tile."""
+    """The driver-computed tiles, tile centres and Hilbert keys equal
+    the extract_mgrs + mgrs_dim_table + hilbert_index_udf column path,
+    including the sentinel for a tile the decoder rejects and for a
+    URL without a tile: Python's ``re`` and Spark's Java regex read
+    the same tile out of each URL."""
     valid = "https://h/HLS.L30.T15TWN.2025274T170400.v2.0/x_stac.json"
     rejected = "https://h/HLS.L30.T15III.2025274T170400.v2.0/x_stac.json"
     no_tile = "https://h/some/item_stac.json"
-    urls = spark.createDataFrame(
-        [(valid,), (valid.replace("T1704", "T1705"),), (rejected,), (no_tile,)],
-        "url string",
-    )
+    urls = [valid, valid.replace("T1704", "T1705"), rejected, no_tile]
 
-    keyed, n_urls = key_urls(urls)
-    assert n_urls == 4
-    got = {
-        r.url: (r.mgrs_tile, r.lat, r.lon, r.hilbert_idx)
-        for r in keyed.collect()
-    }
+    keyed = driver_keyed_urls(spark, urls).collect()
+    assert [r.url for r in keyed] == urls  # input order kept
+    got = {r.url: (r.mgrs_tile, r.lat, r.lon, r.hilbert_idx) for r in keyed}
 
-    tiled = urls.withColumn("mgrs_tile", extract_mgrs("url"))
+    tiled = spark.createDataFrame([(u,) for u in urls], "url string")
+    tiled = tiled.withColumn("mgrs_tile", extract_mgrs("url"))
     dim = mgrs_dim_table(spark, tiled, "mgrs_tile")
     udf_path = tiled.join(F.broadcast(dim), "mgrs_tile", "left").withColumn(
         "hilbert_idx", hilbert_index_udf(F.col("tile_lon"), F.col("tile_lat"))
@@ -168,6 +169,125 @@ def test_driver_keys_match_udf_path(spark):
     assert tile == "15TWN" and lat is not None and key < HILBERT_ERROR_SENTINEL
     assert got[rejected] == ("15III", None, None, HILBERT_ERROR_SENTINEL)
     assert got[no_tile] == (None, None, None, HILBERT_ERROR_SENTINEL)
+
+
+def test_malformed_manifest_names_its_key(spark, origin, tmp_path):
+    """A truncated day manifest fails the month with an error that
+    names the day's key, instead of dropping that day's URLs."""
+    links = str(tmp_path / "links")
+    shutil.copytree(origin.links, links)
+    path = os.path.join(links, manifest_key(COLL_ID, DAYS[1]))
+    with open(path, "rb") as fh:
+        body = fh.read()
+    with open(path, "wb") as fh:
+        fh.write(body[: len(body) // 2])
+    with pytest.raises(
+        ValueError, match=re.escape(manifest_key(COLL_ID, DAYS[1]))
+    ):
+        write_monthly_stac_geoparquet(
+            spark, COLL_ID, 2025, 10, links, str(tmp_path / "gpq"),
+            require_complete_links=False,
+        )
+    assert not os.path.exists(tmp_path / "gpq")
+
+
+@pytest.fixture(scope="module")
+def full_month(spark, tmp_path_factory):
+    """E1 over every day of October 2025, 2 items a day (62 URLs, one
+    output file)."""
+    base = str(tmp_path_factory.mktemp("e2-full-month"))
+    days = [dt.date(2025, 10, d) for d in range(1, 32)]
+    cmr_dir, _ = make_fixtures(base, days=days, granules_per_day=2)
+    links = os.path.join(base, "links")
+    written = cache_daily_stac_json_links(
+        spark, COLL_CID, COLL_ID, days[0], links,
+        end_date=days[-1], protocol="file", fixture_dir=cmr_dir,
+    )
+    assert len(written) == len(days)
+    return links
+
+
+def test_complete_month_with_an_empty_day_passes_gate(
+    spark, full_month, tmp_path
+):
+    """Every day's manifest is listed, so the gate passes, though one
+    day's manifest is ``[]``; the other days' items are written."""
+    links = str(tmp_path / "links")
+    shutil.copytree(full_month, links)
+    get_store(links).put_bytes(
+        manifest_key(COLL_ID, dt.date(2025, 10, 17)), b"[]"
+    )
+    result = write_monthly_stac_geoparquet(
+        spark, COLL_ID, 2025, 10, links, str(tmp_path / "gpq"),
+        require_complete_links=True,
+    )
+    assert (result["written"], result["failed"]) == (60, 0)
+    days = {
+        d.day
+        for d in pq.read_table(result["files"], columns=["datetime"])[
+            "datetime"
+        ].to_pylist()
+    }
+    assert days == set(range(1, 32)) - {17}
+
+
+def test_gate_clips_the_origin_month(spark, tmp_path):
+    """In the collection's first month the gate expects the days from
+    the origin day on (HLSL30: 2013-04-11, so April 2013 has 20); the
+    report lists each side sorted, first 20."""
+    links = str(tmp_path / "links")
+    store = get_store(links)
+    for d in range(11, 31):
+        store.put_bytes(manifest_key(COLL_ID, dt.date(2013, 4, d)), b"[]")
+    origin_date = dt.date(2013, 4, 11)
+    result = write_monthly_stac_geoparquet(
+        spark, COLL_ID, 2013, 4, links, str(tmp_path / "gpq"),
+        origin_date=origin_date,
+    )
+    assert result["written"] == 0
+    store.put_bytes(manifest_key(COLL_ID, dt.date(2013, 4, 10)), b"[]")
+    with pytest.raises(
+        IncompleteInputError, match=re.escape("missing=[] unexpected=[10]")
+    ):
+        write_monthly_stac_geoparquet(
+            spark, COLL_ID, 2013, 4, links, str(tmp_path / "gpq"),
+            origin_date=origin_date,
+        )
+    with pytest.raises(IncompleteInputError) as err:  # no origin clip
+        write_monthly_stac_geoparquet(
+            spark, COLL_ID, 2013, 4, links, str(tmp_path / "gpq"),
+        )
+    assert str(err.value) == (
+        f"expected these links: missing={list(range(1, 10))} unexpected=[]"
+    )
+    with pytest.raises(IncompleteInputError) as err:
+        write_monthly_stac_geoparquet(
+            spark, COLL_ID, 2013, 5, links, str(tmp_path / "gpq"),
+        )
+    assert str(err.value) == (
+        f"expected these links: missing={list(range(1, 21))} unexpected=[]"
+    )
+
+
+def test_e2_plans_without_spark_jobs(spark, full_month, tmp_path):
+    """A one-file month runs at most 2 Spark jobs (AQE's map-stage job
+    for the range exchange and the write), gate included: reading,
+    gating and keying the month run on the driver, so a planning
+    action added back fails here."""
+    sc = spark.sparkContext
+    group = "test-e2-plan-shape"
+    sc.setJobGroup(group, group)
+    try:
+        result = write_monthly_stac_geoparquet(
+            spark, COLL_ID, 2025, 10, full_month, str(tmp_path / "gpq"),
+            require_complete_links=True,
+        )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert result["written"] == 62 and len(result["files"]) == 1
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs
 
 
 def test_empty_month_writes_nothing(spark, tmp_path):

@@ -116,6 +116,19 @@ def test_worker_daemon_import_runs_nothing():
                    cwd=PACKAGE.parent, timeout=120)
 
 
+def test_package_import_leaves_worker_daemon_unimported():
+    """``python -m`` imports the package before it runs the daemon
+    module as ``__main__``; a package ``__init__`` that imported the
+    module first would make runpy warn, and run its body twice, at
+    every daemon start."""
+    probe = (
+        f"import sys, {hls_stac_parquet_spark.__name__}\n"
+        f"assert {worker_daemon.__name__!r} not in sys.modules\n"
+    )
+    subprocess.run([sys.executable, "-c", probe], check=True,
+                   cwd=PACKAGE.parent, timeout=120)
+
+
 def test_python_workers_fork_from_worker_daemon(spark):
     """A pandas task runs in a worker forked from the package's daemon,
     which imported pandas before forking."""

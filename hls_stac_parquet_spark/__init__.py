@@ -17,7 +17,8 @@ Layout
 - ``sources``    — CMR catalog DataSource (pushdown + pagination,
                    plus its streaming reader) and the distributed
                    STAC fetcher
-- ``sinks``      — manifest JSON sink, GeoParquet writer shim
+- ``sinks``      — manifest JSON, clustered GeoParquet month and
+                   training-shard writers
 - ``plans``      — end-to-end pipelines (daily ingest E1, monthly
                    compaction E2) built from the pieces above
 - ``worker_daemon`` — Spark's Python worker daemon, with numpy,

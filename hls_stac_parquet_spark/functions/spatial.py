@@ -33,7 +33,6 @@ from pyspark.sql.types import LongType
 
 #: grid resolution used by the reference (write.py:37): p=14 → 16384²
 HILBERT_P = 14
-HILBERT_N = 2
 #: sentinel for unparseable rows (write.py:88) — sorts after any real key
 HILBERT_ERROR_SENTINEL = 2**28
 

@@ -3,7 +3,8 @@
 The reference infers every schema at write time from Python dicts
 (rustac does the Arrow inference, write.py:240-245). Schema-on-read
 over 100 TB of JSON is the #1 scale killer, so this engine pins
-StructTypes for all four shapes (D1-D4) and parses with
+StructTypes for the two JSON shapes it parses (D1 CMR granules, D3
+STAC items) and parses with
 ``from_json(col, schema)`` + a corrupt-record column instead of
 silently skipping malformed rows (cmr_api.py:89-104).
 """
@@ -12,16 +13,13 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
-    IntegerType,
     LongType,
     MapType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 #: D1 — one row per CMR granule search result (cassette-observed shape,
@@ -58,18 +56,6 @@ CMR_GRANULE_SCHEMA = StructType(
             ),
         ),
         StructField("_corrupt_record", StringType()),
-    ]
-)
-
-#: D2 — one row per (collection, day) manifest (links.py:53-59;
-#: path-encoded keys become real columns)
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("collection_id", StringType()),
-        StructField("year", IntegerType()),
-        StructField("month", IntegerType()),
-        StructField("day", IntegerType()),
-        StructField("urls", ArrayType(StringType())),
     ]
 )
 
@@ -130,29 +116,6 @@ STAC_ITEM_SCHEMA = StructType(
             ),
         ),
         StructField("collection", StringType()),
-    ]
-)
-
-#: D4 — the GeoParquet row layout: properties hoisted to top-level
-#: columns, geometry as WKB (GeoParquet convention), clustering key
-#: materialized.
-GEOPARQUET_ROW_SCHEMA = StructType(
-    [
-        StructField("id", StringType()),
-        StructField("collection", StringType()),
-        StructField("datetime", TimestampType()),
-        StructField("eo_cloud_cover", DoubleType()),
-        StructField("mgrs_tile", StringType()),
-        StructField("lon", DoubleType()),
-        StructField("lat", DoubleType()),
-        StructField("hilbert_idx", LongType()),
-        StructField("bbox_xmin", DoubleType()),
-        StructField("bbox_ymin", DoubleType()),
-        StructField("bbox_xmax", DoubleType()),
-        StructField("bbox_ymax", DoubleType()),
-        StructField("geometry", BinaryType()),
-        StructField("assets", MapType(StringType(), _ASSET_STRUCT)),
-        StructField("url", StringType()),
     ]
 )
 

@@ -29,7 +29,6 @@ from pyspark.sql.types import (
     FloatType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -69,14 +68,6 @@ def one_pass(media, batch_fns, schema):
             yield pdf
 
     return _par(media).mapInPandas(gen, schema)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),  # image/audio/video
-        StructField("content", BinaryType()),  # opaque media payload
-    ]
-)
 
 FEATURE_DIM = 32
 
@@ -242,33 +233,6 @@ def resize_raw_images(
     return _par(media).mapInPandas(gen, _RESIZED_SCHEMA)
 
 
-def encode_images_png(
-    media: DataFrame,
-    src_width: int,
-    src_height: int,
-    channels: int = 1,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """REAL PNG encode of raw pixel buffers (operators/codecs.py):
-    payloads are uint8 (src_height, src_width, channels) buffers (the
-    resize/patchify layout; short blobs zero-pad, long ones truncate),
-    the filter type rotates per image id so a corpus exercises every
-    PNG filter path. Emits (id, content=png bytes). One mapInPandas,
-    no shuffle."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    return one_pass(
-        media,
-        [encode_images_png_batch(src_width, src_height, channels, id_col, bytes_col)],
-        schema,
-    )
-
-
 def encode_images_png_batch(
     src_width: int,
     src_height: int,
@@ -276,8 +240,12 @@ def encode_images_png_batch(
     id_col: str = "media_id",
     bytes_col: str = "content",
 ):
-    """Per-batch transform of :func:`encode_images_png` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: REAL PNG encode of raw pixel
+    buffers (operators/codecs.py). Payloads are uint8 (src_height,
+    src_width, channels) buffers (the resize/patchify layout; short
+    blobs zero-pad, long ones truncate); the filter type rotates per
+    image id so a corpus exercises every PNG filter path. Emits (id,
+    content=png bytes)."""
     from hls_stac_parquet_spark.operators.codecs import encode_png
 
     n_src = src_height * src_width * channels
@@ -298,37 +266,6 @@ def encode_images_png_batch(
     return fn
 
 
-def encode_images_jpeg(
-    media: DataFrame,
-    src_width: int,
-    src_height: int,
-    channels: int = 1,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """REAL baseline-JPEG encode of raw pixel buffers
-    (operators/codecs.py): payloads are uint8 (src_height, src_width,
-    channels) buffers (the resize/patchify layout; short blobs
-    zero-pad, long ones truncate). Quality cycles {35, 60, 85}, RGB
-    images alternate 4:4:4 / 4:2:0 per image id, every 3rd image
-    carries restart markers, and every 5th encodes PROGRESSIVE
-    (SOF2, multi-scan successive approximation) — so a corpus
-    exercises the quantization sweep, both subsampling layouts, the
-    RSTn resync path, and all four progressive scan kinds. Emits
-    (id, content=jpeg bytes). One mapInPandas, no shuffle."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    return one_pass(
-        media,
-        [encode_images_jpeg_batch(src_width, src_height, channels, id_col, bytes_col)],
-        schema,
-    )
-
-
 def encode_images_jpeg_batch(
     src_width: int,
     src_height: int,
@@ -336,8 +273,15 @@ def encode_images_jpeg_batch(
     id_col: str = "media_id",
     bytes_col: str = "content",
 ):
-    """Per-batch transform of :func:`encode_images_jpeg` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: REAL baseline-JPEG encode of
+    raw pixel buffers (operators/codecs.py), laid out as for
+    :func:`encode_images_png_batch`. Quality cycles {35, 60, 85}, RGB
+    images alternate 4:4:4 / 4:2:0 per image id, every 3rd image
+    carries restart markers, and every 5th encodes PROGRESSIVE (SOF2,
+    multi-scan successive approximation) — so a corpus exercises the
+    quantization sweep, both subsampling layouts, the RSTn resync
+    path, and all four progressive scan kinds. Emits (id,
+    content=jpeg bytes)."""
     from hls_stac_parquet_spark.operators.codecs import (
         encode_jpeg,
         encode_jpeg_progressive,
@@ -391,31 +335,15 @@ _PNG_STATS_SCHEMA = StructType(
 )
 
 
-def decode_image_stats(
-    media: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """REAL compressed-image decode: payloads are encoded image files
-    (PNG in this environment — operators/codecs.py; the dispatch in
-    ``_decode_image_real`` is where a deployment adds JPEG), decoded
-    Arrow-batch-wise to pixel arrays, reduced to shape + mean
-    luminance per image. The decode is exact (round-trip tested
-    against the encoder bit-for-bit), so the emitted stats have a
-    numpy oracle on the original pixels. Undecodable payloads yield
-    a (-1, -1, -1, NaN) row — a malformed blob must never kill a
-    100 TB decode stage. One mapInPandas, no shuffle, 1:1 rows."""
-
-    return one_pass(
-        media, [decode_image_stats_batch(id_col, bytes_col)], _PNG_STATS_SCHEMA
-    )
-
-
 def decode_image_stats_batch(
     id_col: str = "media_id", bytes_col: str = "content"
 ):
-    """Per-batch transform of :func:`decode_image_stats` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: REAL compressed-image decode
+    (PNG or JPEG via ``_decode_image_real``), reduced to shape + mean
+    luminance per image (``_PNG_STATS_SCHEMA``, 1:1 rows). The decode
+    is exact, so the stats have a numpy oracle on the original pixels.
+    Undecodable payloads yield a (-1, -1, -1, NaN) row — a malformed
+    blob must never kill a 100 TB decode stage."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         hs, ws, cs, means, sizes = [], [], [], [], []
@@ -454,32 +382,13 @@ def decode_image_stats_batch(
     return fn
 
 
-def encode_audio_wav(
-    media: DataFrame,
-    sample_rate: int = 16000,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """REAL WAV encode: payload bytes are little-endian int16 samples
-    (the raw-PCM convention of pcm_stats/resample_pcm; odd trailing
-    byte dropped), wrapped as a 16-bit PCM RIFF/WAVE file
-    (operators/codecs.py). One mapInPandas, no shuffle."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    return one_pass(
-        media, [encode_audio_wav_batch(sample_rate, id_col, bytes_col)], schema
-    )
-
-
 def encode_audio_wav_batch(
     sample_rate: int, id_col: str = "media_id", bytes_col: str = "content"
 ):
-    """Per-batch transform of :func:`encode_audio_wav` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: REAL WAV encode. Payload
+    bytes are little-endian int16 samples (the raw-PCM convention of
+    the PCM kernels; odd trailing byte dropped), wrapped as a 16-bit
+    PCM RIFF/WAVE file (operators/codecs.py). Emits (id, content)."""
     from hls_stac_parquet_spark.operators.codecs import encode_wav
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -496,33 +405,14 @@ def encode_audio_wav_batch(
     return fn
 
 
-def decode_audio_wav(
-    media: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """REAL WAV decode (operators/codecs.py): RIFF/WAVE payloads →
-    (sample_rate, content = first channel as raw little-endian int16
-    bytes), the layout the downstream PCM DSP operators consume.
-    Malformed payloads survive as (sample_rate = -1, empty content)
-    rows. One mapInPandas, no shuffle, 1:1 rows."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("sample_rate", IntegerType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    return one_pass(
-        media, [decode_audio_wav_batch(id_col, bytes_col)], schema
-    )
-
-
 def decode_audio_wav_batch(
     id_col: str = "media_id", bytes_col: str = "content"
 ):
-    """Per-batch transform of :func:`decode_audio_wav` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: REAL WAV decode
+    (operators/codecs.py). RIFF/WAVE payloads → (id, sample_rate,
+    content = first channel as raw little-endian int16 bytes), the
+    layout the PCM kernels consume. Malformed payloads survive as
+    (sample_rate = -1, empty content) rows."""
     from hls_stac_parquet_spark.operators.codecs import decode_wav
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -557,15 +447,6 @@ _PCM_STATS_SCHEMA = StructType(
     ]
 )
 
-_PCM_RESAMPLE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("n_samples", IntegerType()),
-        StructField("content", BinaryType()),
-    ]
-)
-
-
 def _pcm_to_float(payload: bytes) -> np.ndarray:
     """Raw little-endian int16 PCM → float64 in [-1, 1). REAL DSP —
     no codec involved, so unlike the image decode seam this path has
@@ -576,24 +457,11 @@ def _pcm_to_float(payload: bytes) -> np.ndarray:
     return np.frombuffer(payload[:n], dtype="<i2").astype(np.float64) / 32768.0
 
 
-def pcm_stats(
-    media: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """Per-clip audio statistics (RMS level, peak, zero-crossing
-    rate) over raw int16 PCM payloads — the audio-corpus health
-    triage (silence / clipping / noise detection) before any model
-    sees a waveform.  Arrow-batched numpy, zero shuffle."""
-
-    return one_pass(
-        media, [pcm_stats_batch(id_col, bytes_col)], _PCM_STATS_SCHEMA
-    )
-
-
 def pcm_stats_batch(id_col: str = "media_id", bytes_col: str = "content"):
-    """Per-batch transform of :func:`pcm_stats` for :func:`one_pass`
-    fusion."""
+    """Per-batch :func:`one_pass` kernel: per-clip audio statistics
+    (RMS level, peak, zero-crossing rate; ``_PCM_STATS_SCHEMA``) over
+    raw int16 PCM payloads — the audio-corpus health triage (silence /
+    clipping / noise detection) before any model sees a waveform."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         ids, ns, rms, peak, zcr = [], [], [], [], []
@@ -624,33 +492,17 @@ def pcm_stats_batch(id_col: str = "media_id", bytes_col: str = "content"):
     return fn
 
 
-def resample_pcm(
-    media: DataFrame,
-    src_rate: int,
-    dst_rate: int,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """Sample-rate conversion of raw int16 PCM by linear
-    interpolation — the unify-to-16 kHz stage every audio training
-    pipeline runs.  Real resampling math (numpy interp over the
-    resample grid), Arrow-batched, zero shuffle; output is again raw
-    int16 bytes so stages compose."""
-    return one_pass(
-        media,
-        [resample_pcm_batch(src_rate, dst_rate, id_col, bytes_col)],
-        _PCM_RESAMPLE_SCHEMA,
-    )
-
-
 def resample_pcm_batch(
     src_rate: int,
     dst_rate: int,
     id_col: str = "media_id",
     bytes_col: str = "content",
 ):
-    """Per-batch transform of :func:`resample_pcm` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: sample-rate conversion of raw
+    int16 PCM by linear interpolation (numpy interp over the resample
+    grid) — the unify-to-16 kHz stage every audio training pipeline
+    runs. Emits (id, n_samples, content = raw int16 bytes), so stages
+    compose."""
     if src_rate <= 0 or dst_rate <= 0:
         raise ValueError("sample rates must be positive")
 
@@ -855,34 +707,6 @@ _DHASH_SCHEMA = StructType(
 )
 
 
-def dhash_images(
-    media: DataFrame,
-    src_width: int,
-    src_height: int,
-    channels: int = 1,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """Perceptual difference-hash (dHash) of RAW images: grayscale →
-    9×8 nearest-neighbor downsample (same index-map resample as
-    resize_raw_images) → 64 horizontal-gradient bits packed big-endian
-    into one signed int64. The standard perceptual fingerprint for
-    image near-duplicate detection: resize-invariant, robust to
-    small pixel noise, and cheap enough to compute inline with decode.
-
-    REAL pixel math end to end (no codec; the decode seam stays in
-    ``_decode_image_real``): numpy mean over channels, gather resample,
-    elementwise compare, packbits. One mapInPandas, no shuffle, 1:1
-    rows; exact bit equality with an independent numpy/int replay is
-    pinned in tests/test_multimodal.py.
-    """
-    return one_pass(
-        media,
-        [dhash_images_batch(src_width, src_height, channels, id_col, bytes_col)],
-        _DHASH_SCHEMA,
-    )
-
-
 def dhash_images_batch(
     src_width: int,
     src_height: int,
@@ -890,8 +714,13 @@ def dhash_images_batch(
     id_col: str = "media_id",
     bytes_col: str = "content",
 ):
-    """Per-batch transform of :func:`dhash_images` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: perceptual difference-hash
+    (dHash) of RAW images (``_DHASH_SCHEMA``, 1:1 rows): grayscale →
+    9×8 nearest-neighbor downsample (the index-map resample of
+    resize_raw_images) → 64 horizontal-gradient bits packed big-endian
+    into one signed int64. Resize-invariant and robust to small pixel
+    noise; exact bit equality with an independent numpy/int replay is
+    pinned in tests/test_multimodal.py."""
     n_src = src_height * src_width * channels
     row_map = (np.arange(8, dtype=np.int64) * src_height) // 8
     col_map = (np.arange(9, dtype=np.int64) * src_width) // 9
@@ -1003,44 +832,21 @@ _AUDIO_FP_SCHEMA = StructType(
 )
 
 
-def audio_fingerprint(
-    media: DataFrame,
-    frame_len: int = 256,
-    hop: int = 128,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """Spectral audio fingerprint (chromaprint-style, minimal): raw
-    int16 PCM → framed Hann+rFFT power spectra (the same REAL DSP as
-    :func:`stft_features`) → 9 linear frequency-band energies per
-    frame → 8-row nearest-neighbor time resample → 64
-    time×frequency LOG-energy gradient bits packed into one signed
-    int64. The audio analogue of the image dHash: amplitude-invariant
-    (log-gradient compares relative band energies, so volume changes
-    cancel) and robust to small edits, which is what near-duplicate
-    audio detection needs.
-
-    One mapInPandas, 1:1 rows, no shuffle; pair finding reuses
-    :func:`hamming_near_dup_pairs` unchanged (it is hash-agnostic).
-    Clips shorter than one frame fingerprint as 0 (accounted, not
-    dropped). Amplitude invariance + numpy replay are pinned in
-    tests/test_multimodal.py.
-    """
-    return one_pass(
-        media,
-        [audio_fingerprint_batch(frame_len, hop, id_col, bytes_col)],
-        _AUDIO_FP_SCHEMA,
-    )
-
-
 def audio_fingerprint_batch(
     frame_len: int = 256,
     hop: int = 128,
     id_col: str = "media_id",
     bytes_col: str = "content",
 ):
-    """Per-batch transform of :func:`audio_fingerprint` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: spectral audio fingerprint
+    (chromaprint-style, minimal; ``_AUDIO_FP_SCHEMA``, 1:1 rows). Raw
+    int16 PCM → framed Hann+rFFT power spectra (the DSP of
+    :func:`stft_features`) → 9 linear frequency-band energies per
+    frame → 8-row nearest-neighbor time resample → 64 time×frequency
+    LOG-energy gradient bits packed into one signed int64. The audio
+    analogue of the image dHash: amplitude-invariant and robust to
+    small edits; pair finding reuses :func:`hamming_near_dup_pairs`.
+    Clips shorter than one frame fingerprint as 0."""
     if hop <= 0 or frame_len <= 0:
         raise ValueError("frame_len and hop must be positive")
     window = np.hanning(frame_len)
@@ -1093,30 +899,15 @@ _GIF_FRAMES_SCHEMA = StructType(
 )
 
 
-def decode_gif_frames(
-    media: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """REAL video-frame extraction: payloads are animated GIFs
-    (operators/codecs.py — LZW, interlace, disposal composition), each
-    decoded to its composed RGB frame sequence; one output row per
-    frame carrying shape, mean luminance, and the grayscale frame
-    buffer (feeding resize/patchify/dhash downstream). The same
-    1→N in-UDF fan-out shape as sample_frames, but the frames are
-    decoded pixels, not byte slices. Undecodable payloads yield one
-    (-1, -1, -1, NaN, empty) sentinel row. One mapInPandas, no
-    shuffle."""
-    return one_pass(
-        media, [decode_gif_frames_batch(id_col, bytes_col)], _GIF_FRAMES_SCHEMA
-    )
-
-
 def decode_gif_frames_batch(
     id_col: str = "media_id", bytes_col: str = "content"
 ):
-    """Per-batch transform of :func:`decode_gif_frames` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: REAL video-frame extraction
+    (``_GIF_FRAMES_SCHEMA``). Animated GIF payloads (operators/codecs.py
+    — LZW, interlace, disposal composition) decode to their composed
+    frames; one row per frame carries shape, mean luminance and the
+    grayscale frame buffer. Undecodable payloads yield one (-1, -1,
+    -1, NaN, empty) sentinel row."""
     from hls_stac_parquet_spark.operators.codecs import decode_gif
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1155,32 +946,6 @@ def decode_gif_frames_batch(
     return fn
 
 
-def encode_gifs(
-    media: DataFrame,
-    src_width: int,
-    src_height: int,
-    n_frames: int = 4,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-) -> DataFrame:
-    """REAL animated-GIF encode of raw byte payloads: each payload is
-    sliced into ``n_frames`` (src_height, src_width) grayscale frames
-    (zero-padded), LZW-compressed into one GIF89a; interlace rotates
-    per id so a corpus exercises both row orders. Lossless: the
-    decoded frames are bit-identical to the input slices."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    return one_pass(
-        media,
-        [encode_gifs_batch(src_width, src_height, n_frames, id_col, bytes_col)],
-        schema,
-    )
-
-
 def encode_gifs_batch(
     src_width: int,
     src_height: int,
@@ -1188,8 +953,11 @@ def encode_gifs_batch(
     id_col: str = "media_id",
     bytes_col: str = "content",
 ):
-    """Per-batch transform of :func:`encode_gifs` for
-    :func:`one_pass` fusion."""
+    """Per-batch :func:`one_pass` kernel: REAL animated-GIF encode of
+    raw byte payloads. Each payload is sliced into ``n_frames``
+    (src_height, src_width) grayscale frames (zero-padded) and
+    LZW-compressed into one GIF89a; interlace rotates per id so a
+    corpus exercises both row orders. Lossless. Emits (id, content)."""
     from hls_stac_parquet_spark.operators.codecs import encode_gif
 
     n_px = src_height * src_width

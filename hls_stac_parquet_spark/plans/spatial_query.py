@@ -43,7 +43,7 @@ from hls_stac_parquet_spark.sinks.geoparquet import GEOPARQUET_DATASET_DIR
 from hls_stac_parquet_spark.store import LocalStore, get_store
 
 #: largest total on-disk size of the partition-pruned files that
-#: ``bbox_query`` reads on the driver. Measured on OPTIMIZE'd months of
+#: ``bbox_query`` reads on the driver. Measured on clustered months of
 #: 0.4-24 MB (4 vCPUs, process-tree CPU per query): for 0.5-8 degree
 #: boxes the driver tier costs 135-300 ms against the Spark tier's
 #: 380-1030 ms at every size, so there is no break-even below 24 MB;
@@ -55,8 +55,8 @@ from hls_stac_parquet_spark.store import LocalStore, get_store
 DRIVER_READ_MAX_BYTES = 10 << 20
 
 
-def _dataset_root(dest: str, collection_id: str, version: str,
-                  caller: str) -> tuple[bool, str]:
+def _dataset_root(dest: str, collection_id: str,
+                  version: str) -> tuple[bool, str]:
     """(is a local POSIX path, Spark-readable root) of a collection."""
     store = get_store(dest)
     root = store.spark_url(
@@ -64,22 +64,10 @@ def _dataset_root(dest: str, collection_id: str, version: str,
     )
     if root is None:
         raise ValueError(
-            f"{caller} needs a Spark-readable store "
+            "bbox_query needs a Spark-readable store "
             "(POSIX path or s3a-capable cluster)"
         )
     return isinstance(store, LocalStore), root
-
-
-def _spark_read(spark: SparkSession, root: str) -> DataFrame:
-    return spark.read.option("basePath", root).parquet(root)
-
-
-def read_geoparquet(spark: SparkSession, dest: str, collection_id: str,
-                    version: str = "1") -> DataFrame:
-    """Read the whole clustered dataset (hive year=/month= partitions
-    discovered and pruned by Spark's file index)."""
-    _, root = _dataset_root(dest, collection_id, version, "read_geoparquet")
-    return _spark_read(spark, root)
 
 
 def bbox_filter(w: float, s: float, e: float, n: float):
@@ -177,12 +165,12 @@ def bbox_query(
     pruning and pushed bbox filters show in its plan."""
     if any(math.isnan(v) for v in bbox):
         raise ValueError(f"bbox_query needs a bbox without NaN, got {bbox}")
-    local, root = _dataset_root(dest, collection_id, version, "bbox_query")
+    local, root = _dataset_root(dest, collection_id, version)
     if local:
         df = _driver_read(spark, root, bbox, year, month)
         if df is not None:
             return df
-    df = _spark_read(spark, root)
+    df = spark.read.option("basePath", root).parquet(root)
     if year is not None:
         df = df.filter(F.col("year") == year)
     if month is not None:

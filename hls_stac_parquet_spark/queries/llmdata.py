@@ -1601,7 +1601,7 @@ def q_image_dhash_dedup(spark, sf_dir):
     (documents' bytes standing in for decoded pixels, as in
     q_resize_raw_images) → REAL grayscale/resample/gradient dHash →
     banded bucket join on 16-bit hash bands → codegen'd
-    bit_count(xor) verify (operators/multimodal.py::dhash_images /
+    bit_count(xor) verify (operators/multimodal.py::dhash_images_batch /
     hamming_near_dup_pairs). Complete for hamming ≤ 3 by pigeonhole
     (4 bands); only 8-byte hashes ever shuffle — image bytes stay in
     the scan stage. Output: near-dup pair counts per hamming
@@ -1796,7 +1796,7 @@ def q_audio_fingerprint_dedup(spark, sf_dir):
     stand in for int16 PCM (as in q_pcm_audio_pipeline); the REAL DSP
     runs — framed Hann+rFFT power spectra → 9-band energies → 8-row
     time resample → 64 log-energy gradient bits
-    (operators/multimodal.py::audio_fingerprint, amplitude-invariant
+    (operators/multimodal.py::audio_fingerprint_batch, amplitude-invariant
     by construction) — then the SAME banded hamming join as the image
     path (hamming_near_dup_pairs is hash-agnostic: only 8-byte
     fingerprints shuffle, bit_count verify in codegen). Output: pair
@@ -1922,7 +1922,7 @@ def q_pcm_audio_pipeline(spark, sf_dir):
     """Audio pipeline stage chain (multimodal): documents' text bytes
     stand in for raw int16 PCM payloads; the REAL DSP runs — 16 kHz →
     8 kHz linear-interpolation resample, then RMS/peak/zero-crossing
-    stats on the resampled waveform (operators/multimodal.pcm_stats).
+    stats on the resampled waveform (operators/multimodal.pcm_stats_batch).
     Scalar-only output for the harness hash.  FULL oracle (round-5
     upgrade from rows-only): identical SQL twin as
     q_wav_decode_pipeline — the raw-PCM convention (int16 LE pairs,
@@ -4457,7 +4457,7 @@ def q_gif_frame_pipeline(spark, sf_dir):
     multi-frame container (operators/codecs.py: LZW compress/
     decompress, interlace rotating per id, frame composition):
     documents' bytes become 4-frame 8x8 grayscale GIFs, decoded back
-    through decode_gif_frames' 1→N fan-out to per-frame shape + pixel
+    through decode_gif_frames_batch's 1→N fan-out to per-frame shape + pixel
     sum. GIF is lossless over the gray palette, so the decoded frame
     stats are EXACTLY the raw-slice stats (pinned in
     tests/test_codecs.py) — which makes the pipeline FULLY

@@ -22,7 +22,7 @@ write the files.
 Layout: this module alone decides how a collection-month is laid out.
 A month of ``n`` rows is ``ceil(n / ROWS_PER_FILE)`` range-partitioned
 files (:func:`cluster_month`), named by :data:`GEOPARQUET_PATH_TEMPLATE`;
-E2, OPTIMIZE and the bbox reader all go through it.
+E2 writes through it and the bbox reader finds its files by it.
 ``reference_layout=True`` emits the EXACT reference path contract
 instead — :data:`REFERENCE_PARQUET_PATH_FORMAT` (constants.py:8, month
 unpadded, one object per collection-month) — so a consumer globbing
@@ -38,7 +38,6 @@ import json
 import math
 import posixpath
 import struct
-import uuid
 from typing import Iterator
 
 import pyarrow as pa
@@ -50,11 +49,11 @@ from hls_stac_parquet_spark.store import get_store
 #: one collection's dataset root; both month templates extend it
 GEOPARQUET_DATASET_DIR = "v{version}/{collection_id}"
 
-#: default output path: one file per range partition ``part``, plus a
-#: random ``token`` so a rewrite never overwrites a file it still reads
+#: default output path: one file per range partition ``part``, so a
+#: re-run or retried write task overwrites its own file
 GEOPARQUET_PATH_TEMPLATE = (
     GEOPARQUET_DATASET_DIR + "/year={year}/month={month:02d}/"
-    "{collection_id}-{year}-{month:02d}-{part:05d}-{token}.parquet"
+    "{collection_id}-{year}-{month:02d}-{part:05d}.parquet"
 )
 
 #: the reference's exact path contract (constants.py:8): one object
@@ -200,8 +199,7 @@ def _encode_geometry_column(table: pa.Table, geometry_col: str) -> pa.Table:
     """If the geometry column still carries raw GeoJSON coordinates
     (a list type), encode it to WKB here in the Arrow writer stage —
     keeping the Spark plan free of per-row Python. Binary columns
-    (already WKB, e.g. the optimize/compact read-back path) pass
-    through untouched."""
+    (already WKB) pass through untouched."""
     if geometry_col not in table.column_names:
         return table
     idx = table.schema.get_field_index(geometry_col)
@@ -237,7 +235,6 @@ def _month_path(
     version: str,
     reference_layout: bool,
     part: int = 0,
-    token: str = "",
 ) -> str:
     """Store-relative key of one month file, from the layout's template."""
     template = (
@@ -247,7 +244,7 @@ def _month_path(
     )
     return template.format(
         version=version, collection_id=collection_id, year=year,
-        month=month, part=part, token=token,
+        month=month, part=part,
     )
 
 
@@ -367,9 +364,11 @@ def write_geoparquet_partitions(
             return
         table = _encode_geometry_column(table, GEOMETRY_COL)
         table, bbox = _stamp_geo_footer(table, GEOMETRY_COL)
+        # one live attempt per partition (the package enables no
+        # speculation), so no two tasks write this key at once
         key = _month_path(
             collection_id, year, month, version, reference_layout,
-            part=TaskContext.get().partitionId(), token=uuid.uuid4().hex[:8],
+            part=TaskContext.get().partitionId(),
         )
         # `store` pickles into the task (config only); resolving the
         # URL here would miss driver-side scheme registrations
@@ -393,64 +392,3 @@ def write_geoparquet_partitions(
         "path string, n_rows bigint, xmin double, ymin double, "
         "xmax double, ymax double",
     )
-
-
-def optimize_geoparquet_month(
-    spark,
-    dest: str,
-    collection_id: str,
-    year: int,
-    month: int,
-    version: str = "1",
-    reference_layout: bool = False,
-) -> dict:
-    """Compact/re-cluster an already-written collection-month in
-    place — the lakehouse ``OPTIMIZE``/small-file-compaction analog
-    for the GeoParquet sink: N incremental writes (late-arriving
-    days, retries, small appends) accumulate small files; this reads
-    the month back, re-runs the range-partitioned Hilbert sort, and
-    replaces the files with ``ceil(rows / ROWS_PER_FILE)`` clustered
-    ones — the rule E2 writes by (``reference_layout=True`` → exactly
-    one object under the reference's path name). The row count comes
-    from the parquet footers.
-
-    New files land before old ones are removed, so a crash loses no
-    rows, but a re-run does not converge: a crash between the write
-    and the delete loop leaves old and new files side by side, and a
-    re-run lists and reads both, so it writes every row twice. An
-    exactly-once month commit is ROADMAP direction 1.
-    Requires a Spark-readable store (POSIX, or s3 with Hadoop s3a).
-
-    Returns {files_before, files_after, n_rows, manifest}.
-    """
-    store = get_store(dest)
-    rel_dir = geoparquet_month_dir(
-        collection_id, year, month, version, reference_layout
-    )
-    spark_base = store.spark_url(rel_dir)
-    if spark_base is None:
-        raise ValueError(
-            "optimize_geoparquet_month needs a Spark-readable store "
-            "(POSIX path or s3a-capable cluster)"
-        )
-    old_keys = [k for k in store.list(rel_dir) if k.endswith(".parquet")]
-    if not old_keys:
-        return {"files_before": 0, "files_after": 0, "n_rows": 0,
-                "manifest": []}
-    df = spark.read.parquet(spark_base)
-    manifest = write_geoparquet(
-        df, dest, collection_id, year, month, version=version,
-        reference_layout=reference_layout,
-    ).collect()
-    new_urls = {r.path for r in manifest}
-    # remove only the superseded objects (never a freshly written one
-    # — reference_layout reuses the deterministic name, so exclude)
-    for key in old_keys:
-        if store.full_url(key) not in new_urls:
-            store.delete(key)
-    return {
-        "files_before": len(old_keys),
-        "files_after": len(new_urls),
-        "n_rows": sum(r.n_rows for r in manifest),
-        "manifest": manifest,
-    }

@@ -65,11 +65,6 @@ def write_training_shards(
     )
 
 
-def read_training_shards(spark, dest: str) -> DataFrame:
-    """Read a shard export back (shard partition column included)."""
-    return spark.read.parquet(dest)
-
-
 def shard_balance_report(manifest: DataFrame, token_col: str = "n_tokens") -> dict:
     """Driver-side balance summary of a |K|-row manifest (tiny by
     construction): max/min/mean token mass and relative spread."""

@@ -1,4 +1,1 @@
 """Sources: CMR catalog DataSource and the distributed STAC fetcher."""
-
-from hls_stac_parquet_spark.sources.cmr import CmrDataSource, register_cmr_source  # noqa: F401
-from hls_stac_parquet_spark.sources.stac_fetch import fetch_stac_items  # noqa: F401

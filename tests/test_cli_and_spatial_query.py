@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from hls_stac_parquet_spark.cli import main as cli_main
 from hls_stac_parquet_spark.plans import spatial_query
-from hls_stac_parquet_spark.plans.spatial_query import bbox_query, read_geoparquet
+from hls_stac_parquet_spark.plans.spatial_query import bbox_query
 from tests.fixtures import make_fixtures
 
 DAYS = [dt.date(2025, 10, d) for d in (1, 2, 3)]
@@ -192,7 +192,7 @@ def test_bbox_query_rejects_nan_bounds(spark, pipeline_out):
 
 
 def test_spark_unreadable_store_is_a_clear_error(spark):
-    """An S3 store on a cluster without hadoop-aws: the readers refuse
+    """An S3 store on a cluster without hadoop-aws: the reader refuses
     before making any request (the local endpoint is never contacted)."""
     from hls_stac_parquet_spark.sources.s3store import S3Store
     from hls_stac_parquet_spark.store import (
@@ -206,15 +206,13 @@ def test_spark_unreadable_store_is_a_clear_error(spark):
     )
     try:
         with pytest.raises(ValueError, match="needs a Spark-readable store"):
-            read_geoparquet(spark, "s3://gpq-unreadable", "HLSL30_2.0")
-        with pytest.raises(ValueError, match="needs a Spark-readable store"):
             bbox_query(spark, "s3://gpq-unreadable", "HLSL30_2.0", WORLD)
     finally:
         _SCHEME_FACTORIES.pop("s3", None)
 
 
 def test_read_back_clustered_order_within_files(spark, pipeline_out):
-    df = read_geoparquet(spark, pipeline_out["gpq"], "HLSL30_2.0")
+    df = bbox_query(spark, pipeline_out["gpq"], "HLSL30_2.0", WORLD)
     assert df.count() > 0
     assert "hilbert_idx" in df.columns
 

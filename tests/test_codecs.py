@@ -14,6 +14,10 @@ from hls_stac_parquet_spark.operators.codecs import (
     encode_wav,
 )
 
+#: the (id, payload) frame every Spark pipeline test starts from, and
+#: the schema of every encode kernel's output
+ENCODED = "media_id long, content binary"
+
 
 @pytest.mark.parametrize("channels", [1, 2, 3, 4])
 @pytest.mark.parametrize("filter_type", [0, 1, 2, 3, 4])
@@ -64,8 +68,10 @@ def test_decode_image_stats_real_png_pipeline(spark):
     id rotation) -> codec-seam decode -> stats equal a numpy replay
     on the ORIGINAL pixels (the round-trip is lossless)."""
     from hls_stac_parquet_spark.operators.multimodal import (
-        decode_image_stats,
-        encode_images_png,
+        _PNG_STATS_SCHEMA,
+        decode_image_stats_batch,
+        encode_images_png_batch,
+        one_pass,
     )
 
     rng = np.random.default_rng(11)
@@ -73,11 +79,14 @@ def test_decode_image_stats_real_png_pipeline(spark):
         (int(i), rng.integers(0, 256, size=16 * 16, dtype=np.uint8).tobytes())
         for i in range(10)
     ]
-    media = spark.createDataFrame(rows, "media_id long, content binary")
+    media = spark.createDataFrame(rows, ENCODED)
+    png = one_pass(
+        media, [encode_images_png_batch(src_width=16, src_height=16)], ENCODED
+    )
     got = {
         r["media_id"]: r
-        for r in decode_image_stats(
-            encode_images_png(media, src_width=16, src_height=16)
+        for r in one_pass(
+            png, [decode_image_stats_batch()], _PNG_STATS_SCHEMA
         ).collect()
     }
     for mid, payload in rows:
@@ -105,23 +114,32 @@ def test_wav_pipeline_equals_raw_pcm_pipeline(spark):
 
 
 def test_decode_audio_wav_malformed_blob_survives(spark):
-    from hls_stac_parquet_spark.operators.multimodal import decode_audio_wav
-
-    media = spark.createDataFrame(
-        [(1, b"not audio"), (2, None)], "media_id long, content binary"
+    from hls_stac_parquet_spark.operators.multimodal import (
+        decode_audio_wav_batch,
+        one_pass,
     )
-    rows = {r["media_id"]: r for r in decode_audio_wav(media).collect()}
+
+    media = spark.createDataFrame([(1, b"not audio"), (2, None)], ENCODED)
+    decoded = one_pass(
+        media,
+        [decode_audio_wav_batch()],
+        "media_id long, sample_rate int, content binary",
+    )
+    rows = {r["media_id"]: r for r in decoded.collect()}
     assert rows[1]["sample_rate"] == -1 and rows[1]["content"] == bytearray()
     assert rows[2]["sample_rate"] == -1
 
 
 def test_decode_image_stats_malformed_blob_survives(spark):
-    from hls_stac_parquet_spark.operators.multimodal import decode_image_stats
-
-    media = spark.createDataFrame(
-        [(1, b"not an image"), (2, None)], "media_id long, content binary"
+    from hls_stac_parquet_spark.operators.multimodal import (
+        _PNG_STATS_SCHEMA,
+        decode_image_stats_batch,
+        one_pass,
     )
-    rows = {r["media_id"]: r for r in decode_image_stats(media).collect()}
+
+    media = spark.createDataFrame([(1, b"not an image"), (2, None)], ENCODED)
+    stats = one_pass(media, [decode_image_stats_batch()], _PNG_STATS_SCHEMA)
+    rows = {r["media_id"]: r for r in stats.collect()}
     assert rows[1]["height"] == -1 and rows[2]["height"] == -1
 
 
@@ -316,7 +334,7 @@ def test_jpeg_malformed_ids_raise_value_error_not_key_error():
     """Round-3 advice (codecs.py:914): a bad SOS component id used to
     surface as StopIteration (→ RuntimeError under PEP 479 inside the
     mapInPandas generator) and undefined Huffman/quant table ids as
-    KeyError — all of which escaped decode_image_stats' except tuple
+    KeyError — all of which escaped decode_image_stats_batch's except tuple
     and killed the task. All three must be ValueError."""
     img = np.zeros((8, 8), dtype=np.uint8)
     good = encode_jpeg(img, 85)
@@ -423,8 +441,10 @@ def test_decode_image_stats_real_jpeg_pipeline(spark):
         encode_jpeg,
     )
     from hls_stac_parquet_spark.operators.multimodal import (
-        decode_image_stats,
-        encode_images_jpeg,
+        _PNG_STATS_SCHEMA,
+        decode_image_stats_batch,
+        encode_images_jpeg_batch,
+        one_pass,
     )
 
     rng = np.random.default_rng(13)
@@ -432,11 +452,14 @@ def test_decode_image_stats_real_jpeg_pipeline(spark):
         (int(i), rng.integers(0, 256, size=16 * 16, dtype=np.uint8).tobytes())
         for i in range(9)
     ]
-    media = spark.createDataFrame(rows, "media_id long, content binary")
+    media = spark.createDataFrame(rows, ENCODED)
+    jpeg = one_pass(
+        media, [encode_images_jpeg_batch(src_width=16, src_height=16)], ENCODED
+    )
     got = {
         r["media_id"]: r
-        for r in decode_image_stats(
-            encode_images_jpeg(media, src_width=16, src_height=16)
+        for r in one_pass(
+            jpeg, [decode_image_stats_batch()], _PNG_STATS_SCHEMA
         ).collect()
     }
     qualities = (35, 60, 85)
@@ -507,8 +530,10 @@ def test_gif_frame_pipeline_equals_raw_slices(spark):
     replay (lossless round trip), including zero-padding of short
     payloads."""
     from hls_stac_parquet_spark.operators.multimodal import (
-        decode_gif_frames,
-        encode_gifs,
+        _GIF_FRAMES_SCHEMA,
+        decode_gif_frames_batch,
+        encode_gifs_batch,
+        one_pass,
     )
 
     rng = np.random.default_rng(17)
@@ -516,9 +541,14 @@ def test_gif_frame_pipeline_equals_raw_slices(spark):
         (int(i), rng.integers(0, 256, size=int(n), dtype=np.uint8).tobytes())
         for i, n in enumerate([256, 100, 0, 300])
     ]
-    media = spark.createDataFrame(rows, "media_id long, content binary")
-    got = decode_gif_frames(
-        encode_gifs(media, src_width=8, src_height=8, n_frames=4)
+    media = spark.createDataFrame(rows, ENCODED)
+    gifs = one_pass(
+        media,
+        [encode_gifs_batch(src_width=8, src_height=8, n_frames=4)],
+        ENCODED,
+    )
+    got = one_pass(
+        gifs, [decode_gif_frames_batch()], _GIF_FRAMES_SCHEMA
     ).collect()
     by_key = {(r["media_id"], r["frame_idx"]): r for r in got}
     assert len(by_key) == 16
@@ -549,17 +579,21 @@ def test_truncated_jpeg_yields_sentinel_row_not_task_death(spark):
     """A truncated JPEG raises IndexError from the bit reader — the
     decode stage must convert it to the (-1,-1,-1,NaN) sentinel, not
     kill the Spark task (the 100 TB malformed-row contract)."""
-    from hls_stac_parquet_spark.operators.multimodal import decode_image_stats
+    from hls_stac_parquet_spark.operators.multimodal import (
+        _PNG_STATS_SCHEMA,
+        decode_image_stats_batch,
+        one_pass,
+    )
 
     px = np.arange(256, dtype=np.uint8).reshape(16, 16)
     full = encode_jpeg(px, 60)
     with pytest.raises((IndexError, ValueError)):
         decode_jpeg(full[: len(full) // 2])
     media = spark.createDataFrame(
-        [(1, full[: len(full) // 2]), (2, full[:-4]), (3, full)],
-        "media_id long, content binary",
+        [(1, full[: len(full) // 2]), (2, full[:-4]), (3, full)], ENCODED
     )
-    rows = {r["media_id"]: r for r in decode_image_stats(media).collect()}
+    stats = one_pass(media, [decode_image_stats_batch()], _PNG_STATS_SCHEMA)
+    rows = {r["media_id"]: r for r in stats.collect()}
     assert rows[1]["height"] == -1 and rows[2]["height"] == -1
     assert rows[3]["height"] == 16
 

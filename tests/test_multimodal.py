@@ -7,11 +7,33 @@ import numpy as np
 import pytest
 
 from hls_stac_parquet_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
+    _AUDIO_FP_SCHEMA,
+    _DHASH_SCHEMA,
+    _PCM_STATS_SCHEMA,
     _decode_image_real,
+    audio_fingerprint_batch,
+    dhash_images_batch,
     deterministic_feature,
+    one_pass,
+    pcm_stats_batch,
+    resample_pcm_batch,
     sample_frames,
 )
+
+MEDIA_SCHEMA = "media_id long, media_type string, content binary"
+#: an (id, payload) frame, and each kernel's output schema without a
+#: named constant in the module
+ENCODED = "media_id long, content binary"
+RESAMPLED = "media_id long, n_samples int, content binary"
+DECODED_WAV = "media_id long, sample_rate int, content binary"
+
+
+def _dhash(df, w, h):
+    return one_pass(df, [dhash_images_batch(w, h)], _DHASH_SCHEMA)
+
+
+def _fingerprint(df):
+    return one_pass(df, [audio_fingerprint_batch()], _AUDIO_FP_SCHEMA)
 
 
 @pytest.fixture(scope="module")
@@ -44,7 +66,7 @@ def test_real_codec_seam_dispatch():
     """PNG and baseline JPEG both decode for real through the seam;
     unsupported formats raise the explicit NotImplementedError naming
     the deployment hook, and malformed JPEG raises ValueError (which
-    decode_image_stats converts to a sentinel row)."""
+    decode_image_stats_batch converts to a sentinel row)."""
     import numpy as np
 
     from hls_stac_parquet_spark.operators.codecs import encode_jpeg, encode_png
@@ -128,17 +150,16 @@ def test_pcm_stats_sine_wave(spark):
     real DSP math, verified against closed forms."""
     import numpy as np
 
-    from hls_stac_parquet_spark.operators.multimodal import pcm_stats
-
     rate, f, amp, secs = 16000, 440, 0.5, 1.0
     t = np.arange(int(rate * secs)) / rate
     x = (amp * np.sin(2 * np.pi * f * t) * 32767).astype("<i2")
     silent = np.zeros(1000, dtype="<i2")
     df = spark.createDataFrame(
         [(1, bytearray(x.tobytes())), (2, bytearray(silent.tobytes()))],
-        "media_id long, content binary",
+        ENCODED,
     )
-    rows = {r.media_id: r for r in pcm_stats(df).collect()}
+    stats = one_pass(df, [pcm_stats_batch()], _PCM_STATS_SCHEMA)
+    rows = {r.media_id: r for r in stats.collect()}
     assert rows[1].n_samples == rate
     assert abs(rows[1].rms - amp / np.sqrt(2)) < 0.01
     assert abs(rows[1].peak - amp) < 0.01
@@ -151,21 +172,16 @@ def test_resample_pcm_halves_and_preserves_level(spark):
     band-limited signal; output bytes remain valid int16 PCM."""
     import numpy as np
 
-    from hls_stac_parquet_spark.operators.multimodal import (
-        pcm_stats,
-        resample_pcm,
-    )
-
     rate, f, amp = 16000, 440, 0.5
     t = np.arange(rate) / rate
     x = (amp * np.sin(2 * np.pi * f * t) * 32767).astype("<i2")
-    df = spark.createDataFrame(
-        [(1, bytearray(x.tobytes()))], "media_id long, content binary"
+    df = spark.createDataFrame([(1, bytearray(x.tobytes()))], ENCODED)
+    out = one_pass(
+        df, [resample_pcm_batch(src_rate=16000, dst_rate=8000)], RESAMPLED
     )
-    out = resample_pcm(df, src_rate=16000, dst_rate=8000)
     row = out.collect()[0]
     assert row.n_samples == 8000
-    stats = pcm_stats(out).collect()[0]
+    stats = one_pass(out, [pcm_stats_batch()], _PCM_STATS_SCHEMA).collect()[0]
     assert abs(stats.rms - amp / np.sqrt(2)) < 0.01
     assert abs(stats.zero_crossing_rate - 2 * f / 8000) < 0.005
 
@@ -312,8 +328,6 @@ class TestDhash:
         return val - (1 << 64) if val >= (1 << 63) else val
 
     def test_dhash_matches_numpy_replay(self, spark):
-        from hls_stac_parquet_spark.operators.multimodal import dhash_images
-
         rng = np.random.default_rng(4)
         rows = [
             (int(i), rng.integers(0, 256, 32 * 32, dtype=np.uint8).tobytes())
@@ -322,7 +336,7 @@ class TestDhash:
         df = spark.createDataFrame(rows, "media_id long, content binary")
         got = {
             r.media_id: r.dhash
-            for r in dhash_images(df, 32, 32).collect()
+            for r in _dhash(df, 32, 32).collect()
         }
         for mid, payload in rows:
             assert got[mid] == self._numpy_dhash(payload, 32, 32), mid
@@ -331,7 +345,6 @@ class TestDhash:
         """Every pair within max_hamming=3 must be found (pigeonhole:
         bands=4 > 3) — checked against brute force over the hashes."""
         from hls_stac_parquet_spark.operators.multimodal import (
-            dhash_images,
             hamming_near_dup_pairs,
         )
 
@@ -347,8 +360,8 @@ class TestDhash:
             img[j * 7: j * 7 + 2] ^= 255
             rows.append((100 + j, img.tobytes()))
         rows.append((200, base.tobytes()))
-        df = spark.createDataFrame(rows, "media_id long, content binary")
-        hashes = dhash_images(df, 32, 32)
+        df = spark.createDataFrame(rows, ENCODED)
+        hashes = _dhash(df, 32, 32)
         hmap = {r.media_id: r.dhash for r in hashes.collect()}
         want = set()
         ids = sorted(hmap)
@@ -367,14 +380,11 @@ class TestDhash:
 
     def test_band_guard_rejects_insufficient_bands(self, spark):
         from hls_stac_parquet_spark.operators.multimodal import (
-            dhash_images,
             hamming_near_dup_pairs,
         )
 
-        df = spark.createDataFrame(
-            [(1, b"\x00" * 1024)], "media_id long, content binary"
-        )
-        hashes = dhash_images(df, 32, 32)
+        df = spark.createDataFrame([(1, b"\x00" * 1024)], ENCODED)
+        hashes = _dhash(df, 32, 32)
         with pytest.raises(ValueError, match="pigeonhole"):
             hamming_near_dup_pairs(hashes, max_hamming=4, bands=4)
         with pytest.raises(ValueError, match="divide"):
@@ -393,10 +403,6 @@ class TestAudioFingerprint:
         return x
 
     def test_amplitude_invariance_and_discrimination(self, spark):
-        from hls_stac_parquet_spark.operators.multimodal import (
-            audio_fingerprint,
-        )
-
         # broadband floor on top of the tones: pure sines leave most
         # bands at the int16 quantization-noise floor, whose ratios
         # are amplitude-dependent — real audio always has real energy
@@ -409,7 +415,7 @@ class TestAudioFingerprint:
             (3, self._pcm(self._tones([600, 2500, 5200], noise=0.02, seed=2))),
         ]
         df = spark.createDataFrame(rows, "media_id long, content binary")
-        fp = {r.media_id: r.fingerprint for r in audio_fingerprint(df).collect()}
+        fp = {r.media_id: r.fingerprint for r in _fingerprint(df).collect()}
         # 4x quieter: log-gradients cancel the gain; only int16
         # quantization noise can flip near-tie bits, so the distance
         # stays inside the near-dup band rather than exactly 0
@@ -419,10 +425,6 @@ class TestAudioFingerprint:
         assert d13 > 8, f"different spectra must be far apart, got {d13}"
 
     def test_noise_robustness_small_hamming(self, spark):
-        from hls_stac_parquet_spark.operators.multimodal import (
-            audio_fingerprint,
-        )
-
         base = self._tones([440, 1320, 3000], noise=0.02, seed=3)
         # a small ADDITIONAL perturbation on top of the same floor —
         # re-rolling the floor itself would change every quiet band
@@ -431,21 +433,17 @@ class TestAudioFingerprint:
             [(1, self._pcm(base)), (2, self._pcm(perturbed))],
             "media_id long, content binary",
         )
-        fp = {r.media_id: r.fingerprint for r in audio_fingerprint(df).collect()}
+        fp = {r.media_id: r.fingerprint for r in _fingerprint(df).collect()}
         d = bin((fp[1] ^ fp[2]) & ((1 << 64) - 1)).count("1")
         assert d <= 3, f"small perturbation must stay near-dup, got {d}"
 
     def test_matches_numpy_replay_and_short_clip(self, spark):
-        from hls_stac_parquet_spark.operators.multimodal import (
-            audio_fingerprint,
-        )
-
         x = self._tones([900, 2100], secs=0.1)
         df = spark.createDataFrame(
             [(1, self._pcm(x)), (2, bytearray(b"\x00\x01"))],
             "media_id long, content binary",
         )
-        fp = {r.media_id: r.fingerprint for r in audio_fingerprint(df).collect()}
+        fp = {r.media_id: r.fingerprint for r in _fingerprint(df).collect()}
         # independent replay
         frame_len, hop, n_bands, n_rows = 256, 128, 9, 8
         xi = np.frombuffer(self._pcm(x), dtype="<i2").astype(np.float64) / 32768.0
@@ -485,16 +483,8 @@ def test_one_pass_fusion_matches_chained_operators(spark):
     from pyspark.sql import functions as F
 
     from hls_stac_parquet_spark.operators.multimodal import (
-        _PCM_STATS_SCHEMA,
-        decode_audio_wav,
         decode_audio_wav_batch,
-        encode_audio_wav,
         encode_audio_wav_batch,
-        one_pass,
-        pcm_stats,
-        pcm_stats_batch,
-        resample_pcm,
-        resample_pcm_batch,
     )
     from hls_stac_parquet_spark.queries.registry import t
     from tests.conftest import SF0001
@@ -513,14 +503,15 @@ def test_one_pass_fusion_matches_chained_operators(spark):
         ],
         _PCM_STATS_SCHEMA,
     )
-    chained = pcm_stats(
-        resample_pcm(
-            decode_audio_wav(encode_audio_wav(media, sample_rate=16000))
-            .select("media_id", "content"),
-            src_rate=16000,
-            dst_rate=8000,
-        )
+    # the chained reference: one single-kernel pass per stage
+    wav = one_pass(media, [encode_audio_wav_batch(sample_rate=16000)], ENCODED)
+    pcm = one_pass(wav, [decode_audio_wav_batch()], DECODED_WAV)
+    resampled = one_pass(
+        pcm.select("media_id", "content"),
+        [resample_pcm_batch(src_rate=16000, dst_rate=8000)],
+        RESAMPLED,
     )
+    chained = one_pass(resampled, [pcm_stats_batch()], _PCM_STATS_SCHEMA)
     got = sorted(map(tuple, fused.collect()))
     want = sorted(map(tuple, chained.collect()))
     assert got == want and len(got) > 0

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-import math
 import os
 
 import pyarrow.parquet as pq
@@ -217,74 +216,3 @@ def test_cmr_source_pushdown_plan(spark, fx):
         .filter(F.col("collection_concept_id") == "C000-NOPE")
     )
     assert none.count() == 0
-
-
-def test_optimize_geoparquet_month_compacts_and_reclusters(
-    spark, fx, tmp_path, monkeypatch
-):
-    """The OPTIMIZE analog follows E2's file-count rule: with the
-    sink's ROWS_PER_FILE at k, E2 writes an n-row month as ceil(n/k)
-    range-partitioned files and OPTIMIZE rewrites it to ceil(n/k)
-    clustered ones; at the default, OPTIMIZE compacts it to one file.
-    Same rows, total order restored, footer intact, superseded files
-    gone. Write-then-delete ordering, so a re-run converges."""
-    from hls_stac_parquet_spark.sinks import geoparquet
-    from hls_stac_parquet_spark.sinks.geoparquet import (
-        optimize_geoparquet_month,
-    )
-
-    links_dest = str(tmp_path / "links")
-    out_dest = str(tmp_path / "gpq")
-    cache_daily_stac_json_links(
-        spark, COLL_CID, COLL_ID, DAYS[0], links_dest,
-        end_date=DAYS[-1], protocol="file", fixture_dir=fx["cmr"],
-    )
-    # 18 URLs over 6 tiles (3 a tile), 3 of them dead: E2 sizes by URLs
-    # (ceil(18/6)), OPTIMIZE by rows (ceil(15/6)); both give 3 files
-    k = 6
-    monkeypatch.setattr(geoparquet, "ROWS_PER_FILE", k)
-    result = write_monthly_stac_geoparquet(
-        spark, COLL_ID, 2025, 10, links_dest, out_dest,
-        require_complete_links=False,
-    )
-    n = result["written"]
-    month_dir = os.path.join(out_dest, "v1", COLL_ID, "year=2025", "month=10")
-    before = sorted(os.listdir(month_dir))
-    assert len(before) == math.ceil(n / k) > 1  # small-file accumulation
-
-    res = optimize_geoparquet_month(spark, out_dest, COLL_ID, 2025, 10)
-    assert res["files_before"] == len(before)
-    assert res["files_after"] == math.ceil(n / k)
-    assert res["n_rows"] == n
-    rewritten = sorted(os.listdir(month_dir))  # part-number order
-    assert len(rewritten) == math.ceil(n / k)
-    assert not set(rewritten) & set(before)
-    keys = [
-        v
-        for name in rewritten
-        for v in pq.read_table(os.path.join(month_dir, name))[
-            "hilbert_idx"
-        ].to_pylist()
-    ]
-    assert len(keys) == n and keys == sorted(keys)  # order across files
-
-    monkeypatch.undo()  # the default ROWS_PER_FILE: a one-file month
-    res = optimize_geoparquet_month(spark, out_dest, COLL_ID, 2025, 10)
-    assert res["files_before"] == len(rewritten)
-    assert res["files_after"] == 1
-    assert res["n_rows"] == n
-
-    after = os.listdir(month_dir)
-    assert len(after) == 1 and after[0] not in rewritten
-    t = pq.read_table(os.path.join(month_dir, after[0]))
-    assert t.num_rows == n
-    vals = t["hilbert_idx"].to_pylist()
-    assert vals == sorted(vals)  # re-clustered total order
-    geo = json.loads(t.schema.metadata[b"geo"])
-    assert geo["columns"]["geometry"]["encoding"] == "WKB"
-
-    # idempotent-ish: optimizing an already-compacted month rewrites
-    # to the same file count and row total
-    res2 = optimize_geoparquet_month(spark, out_dest, COLL_ID, 2025, 10)
-    assert res2["files_before"] == 1 and res2["files_after"] == 1
-    assert res2["n_rows"] == n

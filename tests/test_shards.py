@@ -3,7 +3,6 @@
 import pandas as pd
 
 from hls_stac_parquet_spark.sinks.shards import (
-    read_training_shards,
     shard_balance_report,
     write_training_shards,
 )
@@ -29,7 +28,7 @@ def test_shard_write_roundtrip_and_manifest(spark, tmp_path):
     assert [r.shard for r in rows] == list(range(8))
     assert sum(r.n_docs for r in rows) == 400
     # round-trip: every doc present exactly once, shard column attached
-    back = read_training_shards(spark, dest)
+    back = spark.read.parquet(dest)
     assert back.count() == 400
     assert back.select("doc_id").distinct().count() == 400
     assert back.select("shard").distinct().count() == 8
@@ -44,10 +43,10 @@ def test_shard_assignment_deterministic(spark, tmp_path):
     write_training_shards(docs.repartition(3), d1, num_shards=4)
     write_training_shards(docs.repartition(11), d2, num_shards=4)
     a = sorted(
-        (r.doc_id, r.shard) for r in read_training_shards(spark, d1).collect()
+        (r.doc_id, r.shard) for r in spark.read.parquet(d1).collect()
     )
     b = sorted(
-        (r.doc_id, r.shard) for r in read_training_shards(spark, d2).collect()
+        (r.doc_id, r.shard) for r in spark.read.parquet(d2).collect()
     )
     assert a == b
 
@@ -91,6 +90,6 @@ def test_cli_export_training_shards(spark, tmp_path):
         ]
     )
     assert rc == 0
-    back = read_training_shards(spark, dest)
+    back = spark.read.parquet(dest)
     assert back.select("shard").distinct().count() == 4
     assert {"doc_id", "n_tokens", "split"} <= set(back.columns)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,19 +77,42 @@ def test_morton_sql_matches_column_expr(spark):
     assert [r.m for r in a] == [r.m for r in b]
 
 
-def test_cluster_by_hilbert_total_order(spark, monkeypatch):
-    monkeypatch.setattr(geoparquet, "ROWS_PER_FILE", 50)  # 4 partitions
+def _keyed_points(spark, n: int = 200):
     pdf = pd.DataFrame(
         {
-            "id": range(200),
-            "lon": np.random.default_rng(0).uniform(-180, 180, 200),
-            "lat": np.random.default_rng(1).uniform(-90, 90, 200),
+            "id": range(n),
+            "lon": np.random.default_rng(0).uniform(-180, 180, n),
+            "lat": np.random.default_rng(1).uniform(-90, 90, n),
         }
     )
-    keyed = spark.createDataFrame(pdf).withColumn(
+    return spark.createDataFrame(pdf).withColumn(
         "hilbert_idx", hilbert_index_udf(F.col("lon"), F.col("lat"))
     )
-    out = geoparquet.cluster_month(keyed, len(pdf))
+
+
+def test_cluster_by_hilbert_total_order(spark, monkeypatch):
+    monkeypatch.setattr(geoparquet, "ROWS_PER_FILE", 50)  # 4 partitions
+    out = geoparquet.cluster_month(_keyed_points(spark), 200)
     # partition-wise sorted and partitions range-ordered → global order
     keys = [r.hilbert_idx for r in out.select("hilbert_idx").collect()]
     assert keys == sorted(keys)
+
+
+def test_rewritten_month_overwrites_its_part_files(spark, tmp_path, monkeypatch):
+    """A re-run or retried write of a month names each file by its part
+    alone, so it replaces the earlier file: one file per part and every
+    row once, not a second copy of each part."""
+    monkeypatch.setattr(geoparquet, "ROWS_PER_FILE", 50)  # 4 parts
+    clustered = geoparquet.cluster_month(_keyed_points(spark), 200)
+    dest = str(tmp_path / "gpq")
+    for _ in range(2):
+        manifest = geoparquet.write_geoparquet_partitions(
+            clustered, dest, "HLSL30_2.0", 2025, 10
+        ).collect()
+    month_dir = tmp_path / "gpq" / geoparquet.geoparquet_month_dir(
+        "HLSL30_2.0", 2025, 10
+    )
+    files = sorted(month_dir.glob("*.parquet"))
+    assert len(files) == len(manifest) == 4
+    ids = [i for f in files for i in pq.read_table(f)["id"].to_pylist()]
+    assert sorted(ids) == list(range(200))

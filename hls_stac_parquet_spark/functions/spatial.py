@@ -35,6 +35,8 @@ from pyspark.sql.types import LongType
 HILBERT_P = 14
 #: sentinel for unparseable rows (write.py:88) — sorts after any real key
 HILBERT_ERROR_SENTINEL = 2**28
+#: bits per coordinate of a Morton key (inputs are ints below 256)
+MORTON_BITS = 8
 
 
 def _bit_sql(expr: str, i: int, dialect: str) -> str:
@@ -43,30 +45,30 @@ def _bit_sql(expr: str, i: int, dialect: str) -> str:
     return f"(({expr} >> {i}) & 1)"
 
 
-def morton_key_sql(x_expr: str, y_expr: str, bits: int = 8, dialect: str = "spark") -> str:
+def morton_key_sql(x_expr: str, y_expr: str, dialect: str = "spark") -> str:
     """SQL text for a 2-D Morton (Z-order) interleave of two ints.
 
     ``x_expr``/``y_expr`` must already be non-negative integers below
-    ``2**bits``. The same generator emits Spark SQL and DuckDB SQL so
+    ``2**MORTON_BITS``. The same generator emits Spark SQL and DuckDB SQL so
     the oracle can verify the engine bit-for-bit.
     """
     xs = f"CAST({x_expr} AS BIGINT)"
     ys = f"CAST({y_expr} AS BIGINT)"
     terms = []
-    for i in range(bits):
+    for i in range(MORTON_BITS):
         terms.append(f"{_bit_sql(xs, i, dialect)} * {1 << (2 * i)}")
         terms.append(f"{_bit_sql(ys, i, dialect)} * {1 << (2 * i + 1)}")
     return "(" + " + ".join(terms) + ")"
 
 
-def morton_key(x: Column | str, y: Column | str, bits: int = 8) -> Column:
+def morton_key(x: Column | str, y: Column | str) -> Column:
     """Morton key as a Spark Column (pure built-ins → codegen)."""
     xs = F.col(x) if isinstance(x, str) else x
     ys = F.col(y) if isinstance(y, str) else y
     xs = xs.cast("bigint")
     ys = ys.cast("bigint")
     out = F.lit(0).cast("bigint")
-    for i in range(bits):
+    for i in range(MORTON_BITS):
         out = out + F.shiftright(xs, i).bitwiseAND(F.lit(1)) * F.lit(1 << (2 * i))
         out = out + F.shiftright(ys, i).bitwiseAND(F.lit(1)) * F.lit(1 << (2 * i + 1))
     return out
@@ -142,14 +144,14 @@ def hilbert_xy2d(order: int, x: np.ndarray, y: np.ndarray) -> np.ndarray:
 
 
 def lonlat_to_grid(
-    lon: np.ndarray, lat: np.ndarray, order: int = HILBERT_P
+    lon: np.ndarray, lat: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Normalize lon/lat to the 2**order grid with clamping.
+    """Normalize lon/lat to the 2**HILBERT_P grid with clamping.
 
     Mirrors the reference's grid math (write.py:76-81): scale to
     [0, side), floor, clamp to the valid cell range.
     """
-    side = 1 << order
+    side = 1 << HILBERT_P
     gx = np.floor((lon + 180.0) / 360.0 * side)
     gy = np.floor((lat + 90.0) / 180.0 * side)
     gx = np.clip(gx, 0, side - 1).astype(np.int64)

@@ -51,13 +51,13 @@ def punct_ratio(text: Column | str) -> Column:
     return punct / F.greatest(F.length(c), F.lit(1))
 
 
-def language_id(text: Column | str, threshold: float = 0.08) -> Column:
+def language_id(text: Column | str) -> Column:
     """Heuristic language ID: stopword density → 'en' else 'unknown'.
 
     A real deployment swaps in a fastText/CLD3 pandas UDF; the Spark
     plumbing (expression shape, nullable string out) is identical.
     """
-    return F.when(stopword_ratio(text) >= threshold, F.lit("en")).otherwise(
+    return F.when(stopword_ratio(text) >= 0.08, F.lit("en")).otherwise(
         F.lit("unknown")
     )
 
@@ -142,8 +142,7 @@ def token_hashes(text: Column | str) -> Column:
     return F.transform(tokens(F.lower(_col(text))), lambda t: F.xxhash64(t))
 
 
-def shingle_hashes_from(tok_hash_col: Column | str, k: int = 3,
-                        mask_bits: int = 31) -> Column:
+def shingle_hashes_from(tok_hash_col: Column | str, k: int = 3) -> Column:
     """Word k-shingle *hashes* from a MATERIALIZED token-hash column:
     combine each window of k token hashes with one fixed-width
     xxhash64 call — no shingle-string construction (concat of k
@@ -159,7 +158,7 @@ def shingle_hashes_from(tok_hash_col: Column | str, k: int = 3,
     EMPTY array (a padded pseudo-window would both create spurious
     shared shingles across unrelated short docs and crash under ANSI
     mode, where out-of-bounds ``element_at`` throws instead of
-    returning NULL). Result masked to ``mask_bits`` bits
+    returning NULL). Result masked to 31 bits
     (non-negative, multiply-safe for universal hashing).
     """
     tok_h = _col(tok_hash_col)
@@ -171,29 +170,25 @@ def shingle_hashes_from(tok_hash_col: Column | str, k: int = 3,
             windows,
             lambda i: F.xxhash64(
                 *[F.element_at(tok_h, (i + j).cast("int")) for j in range(k)]
-            ).bitwiseAND(F.lit((1 << mask_bits) - 1)),
+            ).bitwiseAND(F.lit((1 << 31) - 1)),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def winnow_fingerprints(
-    tok_hash_col: Column | str,
-    k: int = 3,
-    window: int = 4,
-) -> Column:
+def winnow_fingerprints(tok_hash_col: Column | str) -> Column:
     """Winnowing document fingerprints (Schleimer et al., MOSS): the
-    distinct minima of every ``window`` consecutive k-gram hashes,
-    sorted. Guarantees: any shared substring of length ≥ k + window - 1
-    tokens produces at least one shared fingerprint, and the selected
-    set is position-independent — the standard rolling-hash local-
+    distinct minima of every 4 consecutive 3-gram hashes, sorted.
+    Guarantees: any shared substring of length ≥ 6 tokens produces at
+    least one shared fingerprint, and the selected set is
+    position-independent — the standard rolling-hash local-
     fingerprinting scheme for plagiarism/near-dup detection.
 
     Pure built-in HOFs over a materialized token-hash column (project
     :func:`token_hashes` first — same inlining caveat as
     :func:`shingle_hashes_from`): k-gram hashes via fixed-width hash
     combining, window minima via ``array_min`` over ``slice``. Zero
-    Python, zero shuffle — a per-row map that keeps ~2/(window+1) of
-    the k-gram hashes, so the downstream (fingerprint → doc) inverted
+    Python, zero shuffle — a per-row map that keeps ~2/5 of the
+    k-gram hashes, so the downstream (fingerprint → doc) inverted
     index shuffles a constant fraction of the corpus hash volume.
 
     The k-gram array is let-bound via ``transform(array(grams), g ->
@@ -201,11 +196,11 @@ def winnow_fingerprints(
     expression directly inside the sliding-window lambda would re-hash
     the whole document at every window position (O(n²·k) per doc).
     """
-    grams = shingle_hashes_from(tok_hash_col, k)
+    grams = shingle_hashes_from(tok_hash_col)
 
     def _select_minima(g: Column) -> Column:
         starts = F.sequence(
-            F.lit(1), F.greatest(F.size(g) - (window - 1), F.lit(1))
+            F.lit(1), F.greatest(F.size(g) - 3, F.lit(1))
         )
         # filter(isNotNull) guards the no-k-gram case: with empty
         # grams, starts is forced to [1] and array_min(slice([],1,w))
@@ -215,7 +210,7 @@ def winnow_fingerprints(
             F.array_distinct(
                 F.filter(
                     F.transform(
-                        starts, lambda i: F.array_min(F.slice(g, i, window))
+                        starts, lambda i: F.array_min(F.slice(g, i, 4))
                     ),
                     lambda x: x.isNotNull(),
                 )

@@ -33,22 +33,19 @@ def asof_join(
     right: DataFrame,
     by: Sequence[str],
     ts_col: str = "ts",
-    right_ts_col: str | None = None,
     matched_ts_alias: str = "matched_ts",
-    inclusive: bool = True,
     direction: str = "backward",
     tolerance: str | int | float | None = None,
 ) -> DataFrame:
     """Left as-of join: for every left row, attach the payload of the
-    latest right row of the same ``by`` key with ``right.ts <= left.ts``
-    (``<`` when ``inclusive=False``); left rows with no prior right row
-    keep NULL payloads (ASOF LEFT semantics).
+    latest right row of the same ``by`` key with ``right.ts <= left.ts``;
+    left rows with no prior right row keep NULL payloads (ASOF LEFT
+    semantics). Both sides carry their time in ``ts_col``.
 
     ``direction`` selects which right row matches:
 
     - ``"backward"`` (default): latest right row at/before left.ts;
-    - ``"forward"``: earliest right row at/after left.ts
-      (strictly after when ``inclusive=False``);
+    - ``"forward"``: earliest right row at/after left.ts;
     - ``"nearest"``: whichever of the two is closer in time, ties
       (equal distance, including an exact-ts match at distance 0)
       resolving backward. Still ONE shuffle + ONE partition sort:
@@ -80,8 +77,7 @@ def asof_join(
     by = list(by)
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward/forward/nearest, got {direction!r}")
-    rts = right_ts_col or ts_col
-    payload = [c for c in right.columns if c not in by and c != rts]
+    payload = [c for c in right.columns if c not in by and c != ts_col]
     overlap = set(payload) & set(left.columns)
     if overlap:
         raise ValueError(f"right payload columns collide with left: {sorted(overlap)}")
@@ -90,15 +86,13 @@ def asof_join(
     # backward carries with last() over (preceding, current): the right
     # row is visible at equal ts iff it sorts BEFORE the left row.
     # forward carries with first() over (current, following): visible
-    # at equal ts iff it sorts AFTER the left row. nearest uses
-    # backward-inclusive + forward-exclusive in one pass (an exact-ts
-    # match is distance 0 and wins via the backward arm anyway).
-    if direction == "forward" and inclusive:
+    # at equal ts iff it sorts AFTER the left row. Both are inclusive;
+    # nearest rides the backward order (an exact-ts match is distance
+    # 0 and wins via the backward arm anyway).
+    if direction == "forward":
         left_side, right_side = 0, 1
-    elif direction == "forward":
-        left_side, right_side = 1, 0
     else:  # backward / nearest
-        right_side, left_side = (0, 1) if inclusive else (1, 0)
+        right_side, left_side = 0, 1
 
     # The whole right payload rides in ONE struct column so last(...,
     # ignorenulls=True) carries the matched row as a unit. Per-column
@@ -106,7 +100,7 @@ def asof_join(
     # latest right row would be back-filled from an OLDER right row,
     # yielding a frankenrow that never existed.
     payload_type = StructType(
-        [StructField(matched_ts_alias, right.schema[rts].dataType)]
+        [StructField(matched_ts_alias, right.schema[ts_col].dataType)]
         + [StructField(c, right.schema[c].dataType) for c in payload]
     )
     l_tagged = left.select(
@@ -118,7 +112,7 @@ def asof_join(
     )
     r_tagged = right.select(
         *by,
-        F.col(rts).alias("_asof_ts"),
+        F.col(ts_col).alias("_asof_ts"),
         F.lit(right_side).alias("_asof_side"),
         *[
             F.lit(None).cast(left.schema[c].dataType).alias(c)
@@ -126,7 +120,7 @@ def asof_join(
             if c not in by and c != ts_col
         ],
         F.struct(
-            F.col(rts).alias(matched_ts_alias),
+            F.col(ts_col).alias(matched_ts_alias),
             *[F.col(c) for c in payload],
         ).alias("_asof_payload"),
     )

@@ -18,7 +18,7 @@ Plan shape, and why it scales:
    (the repo's scalar-dim pattern); the k membership tests are pure
    JVM expressions inside whole-stage codegen. The FULL fact is
    never shuffled and never joined.
-3. verify (optional, default) — an exact left-semi join of the
+3. verify — an exact left-semi join of the
    *survivors* against the dim keys removes bloom false positives,
    so the result is EXACT. Only `true matches + fp` rows reach this
    shuffle — at high selectivity that is the difference between
@@ -37,6 +37,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from hls_stac_parquet_spark.tuning import materialize
+
+#: bitset size and hash count: 2^17 bits keep fpp low up to ~10k keys
+BLOOM_BITS = 1 << 17
+BLOOM_HASHES = 5
 
 
 def _bloom_row(dim: DataFrame, dim_key: str, m_bits: int, k: int) -> DataFrame:
@@ -85,29 +89,31 @@ def _hit_cond(fact_key: str, m_bits: int, k: int):
     return cond
 
 
+def _bloom_survivors(
+    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str,
+    m_bits: int, k: int,
+) -> DataFrame:
+    """The fact rows that pass the bloom test: a superset of the
+    matches, with no false negatives."""
+    bloom = _bloom_row(dim, dim_key, m_bits, k)
+    return fact.join(F.broadcast(bloom)).filter(
+        _hit_cond(fact_key, m_bits, k)
+    ).drop("_bloom")
+
+
 def bloom_semi_join(
     fact: DataFrame,
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    m_bits: int = 1 << 17,
-    k: int = 5,
-    verify: bool = True,
 ) -> DataFrame:
-    """fact ⋉ dim on fact_key == dim_key, bloom-prefiltered.
-
-    With ``verify=True`` (default) the result is EXACT: survivors of
-    the bloom test are left-semi joined against the real dim keys.
-    ``verify=False`` returns the superset (no false negatives —
-    property-tested in tests/test_bloomjoin.py) for pipelines that
-    tolerate fpp in exchange for zero shuffle.
+    """fact ⋉ dim on fact_key == dim_key, bloom-prefiltered. The
+    result is EXACT: survivors of the bloom test are left-semi joined
+    against the real dim keys.
     """
-    bloom = _bloom_row(dim, dim_key, m_bits, k)
-    survivors = fact.join(F.broadcast(bloom)).filter(
-        _hit_cond(fact_key, m_bits, k)
-    ).drop("_bloom")
-    if not verify:
-        return survivors
+    survivors = _bloom_survivors(
+        fact, dim, fact_key, dim_key, BLOOM_BITS, BLOOM_HASHES
+    )
     keys = dim.select(F.col(dim_key).alias("_k")).dropDuplicates()
     return survivors.join(
         keys, survivors[fact_key] == F.col("_k"), "left_semi"
@@ -119,8 +125,6 @@ def bloom_anti_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    m_bits: int = 1 << 17,
-    k: int = 5,
 ) -> DataFrame:
     """fact ▷ dim (EXACT anti-join), bloom-accelerated: bloom-miss
     rows are definitely absent from dim (no false negatives) and
@@ -130,9 +134,9 @@ def bloom_anti_join(
     # the ONE-row bloom so the dim aggregation isn't rebuilt per branch
     # (the fact side is scanned twice by design — at high selectivity
     # two scans beat one full shuffle, and the scan is columnar-cheap)
-    bloom = materialize(_bloom_row(dim, dim_key, m_bits, k))
+    bloom = materialize(_bloom_row(dim, dim_key, BLOOM_BITS, BLOOM_HASHES))
     tagged = fact.join(F.broadcast(bloom)).withColumn(
-        "_bloom_hit", _hit_cond(fact_key, m_bits, k)
+        "_bloom_hit", _hit_cond(fact_key, BLOOM_BITS, BLOOM_HASHES)
     ).drop("_bloom")
     misses = tagged.filter(~F.col("_bloom_hit")).drop("_bloom_hit")
     keys = dim.select(F.col(dim_key).alias("_k")).dropDuplicates()

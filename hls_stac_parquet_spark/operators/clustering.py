@@ -23,9 +23,6 @@ def dbscan(
     points: DataFrame,
     eps: float,
     min_pts: int,
-    id_col: str = "id",
-    x_col: str = "x",
-    y_col: str = "y",
 ) -> DataFrame:
     """Exact DBSCAN over 2-D points, grid-blocked so no all-pairs
     distance join ever materializes.
@@ -54,9 +51,9 @@ def dbscan(
     true density scale).
     """
     p = points.select(
-        F.col(id_col).alias("_id"),
-        F.col(x_col).cast("double").alias("_x"),
-        F.col(y_col).cast("double").alias("_y"),
+        F.col("id").alias("_id"),
+        F.col("x").cast("double").alias("_x"),
+        F.col("y").cast("double").alias("_y"),
     )
     cx = F.floor(F.col("_x") / eps)
     cy = F.floor(F.col("_y") / eps)
@@ -144,7 +141,7 @@ def dbscan(
         p.select("_id")
         .join(labeled, "_id", "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("id"),
             F.coalesce("role", F.lit("noise")).alias("role"),
             F.col("_cluster").alias("cluster"),
         )

@@ -1172,19 +1172,15 @@ def _interlace_order(height: int) -> np.ndarray:
 def encode_gif(
     frames: np.ndarray | list,
     interlace: bool = False,
-    disposals: list[int] | None = None,
 ) -> bytes:
     """Encode (n, h, w) uint8 grayscale frames as an animated GIF89a
     (256-entry gray palette; frame k's palette index IS its gray
-    value, so the round trip is bit-exact)."""
+    value, so the round trip is bit-exact). Every frame is written
+    with disposal 1 (leave in place)."""
     fr = np.ascontiguousarray(np.asarray(frames, dtype=np.uint8))
     if fr.ndim == 2:
         fr = fr[None]
     n, h, w = fr.shape
-    if disposals is not None and len(disposals) != n:
-        raise ValueError(
-            f"disposals has {len(disposals)} entries for {n} frames"
-        )
     out = bytearray(b"GIF89a")
     out += struct.pack("<HH", w, h)
     out += bytes([0xF7, 0, 0])  # global table, 8-bit, 256 entries
@@ -1192,8 +1188,7 @@ def encode_gif(
         out += bytes([i, i, i])  # gray palette
     out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"  # loop ext
     for k in range(n):
-        disp = (disposals or [1] * n)[k]
-        out += b"\x21\xf9" + bytes([4, (disp & 7) << 2, 2, 0, 0, 0])
+        out += b"\x21\xf9" + bytes([4, 1 << 2, 2, 0, 0, 0])
         out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
         out += bytes([0x40 if interlace else 0x00])
         px = fr[k]

@@ -3,8 +3,9 @@
 The reference builds the expected list of daily manifest paths for a
 month (origin-date-aware: the collection's first month starts at the
 origin day, not day 1 — write.py:180-196) and raises if the listing
-differs (write.py:172-202). Here: generate the expected keys with
-``sequence`` + ``explode`` and compare the two key sets both ways
+differs (write.py:172-202); E2 applies that origin clip in
+``plans/monthly_compact.py _require_month_days``. Here: generate the
+expected keys with ``sequence`` + ``explode`` and compare the two key sets both ways
 in one grouped pass (``require_complete``, one action), for a decade
 of partitions as for a month. E2 compares its ≤31 listed days as
 Python sets on the driver and raises the same error.
@@ -27,15 +28,11 @@ def expected_days(
     spark: SparkSession,
     start: dt.date,
     end: dt.date,
-    origin_date: dt.date | None = None,
 ) -> DataFrame:
-    """One row per expected day in [start, end], clipped to the
-    collection origin (the reference's origin-month override,
-    write.py:180-186)."""
-    lo = max(start, origin_date) if origin_date else start
+    """One row per expected day in [start, end]."""
     return spark.sql(
         "SELECT explode(sequence(to_date(:lo), to_date(:hi), interval 1 day)) AS day",
-        args={"lo": lo.isoformat(), "hi": end.isoformat()},
+        args={"lo": start.isoformat(), "hi": end.isoformat()},
     )
 
 

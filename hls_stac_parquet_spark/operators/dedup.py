@@ -28,46 +28,42 @@ from hls_stac_parquet_spark.functions.text import (
 from hls_stac_parquet_spark.tuning import materialize
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Exact dedup groups: one row per distinct normalized content.
 
     Returns (fp, keep_id, n_copies): keep the min id per group —
     deterministic, unlike dropDuplicates' arbitrary pick.
     """
     return (
-        df.select(F.col(id_col), doc_fingerprint(text_col).alias("fp"))
+        df.select(F.col("doc_id"), doc_fingerprint("text").alias("fp"))
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count("*").alias("n_copies"),
         )
     )
 
 
 _MERSENNE61 = (1 << 61) - 1
+#: MinHash signature length and its LSH bands (4 rows per band)
+MINHASH_HASHES = 64
+MINHASH_BANDS = 16
 
 
-def _minhash_params(num_hashes: int, seed: int = 42):
+def _minhash_params():
     """Deterministic (a_i, b_i) pairs for the universal-hash family
     h_i(x) = (a_i·x + b_i) mod (2^61-1), with 31-bit a_i so every
     intermediate fits a signed 64-bit long (ANSI-safe: no overflow)."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, 1 << 31, size=num_hashes, dtype=np.int64) | 1
-    b = rng.integers(0, 1 << 31, size=num_hashes, dtype=np.int64)
+    rng = np.random.default_rng(42)
+    a = rng.integers(1, 1 << 31, size=MINHASH_HASHES, dtype=np.int64) | 1
+    b = rng.integers(0, 1 << 31, size=MINHASH_HASHES, dtype=np.int64)
     return a.tolist(), b.tolist()
 
 
-def _minhash_sig_bands(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    shingle_k: int,
-    bands: int | None,
-) -> DataFrame:
-    """(id, signature[, bands]) in ONE Arrow pass: the LSH band hashes
+def _minhash_sig_bands(df: DataFrame, shingle_k: int) -> DataFrame:
+    """(doc_id, signature, bands) in ONE Arrow pass: the LSH band hashes
     are an FNV fold over each band's signature slice computed right
     next to the signature mins in numpy — no separate JVM
     hash-of-slice projection stage (measured: that stage cost a wide
@@ -76,22 +72,16 @@ def _minhash_sig_bands(
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    if bands and num_hashes % bands != 0:
-        # fail on the driver with a readable message — inside the
-        # pandas UDF the reshape raises an opaque executor-side error
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
-    a_params, b_params = _minhash_params(num_hashes)
+    a_params, b_params = _minhash_params()
     a = np.asarray(a_params, dtype=np.int64)
     b = np.asarray(b_params, dtype=np.int64)
     empty_sig = np.asarray((a * 0 + b) % _MERSENNE61, dtype=np.int64)
-    rpb = num_hashes // bands if bands else 0
-
-    fields = [StructField("signature", ArrayType(LongType()))]
-    if bands:
-        fields.append(StructField("bands", ArrayType(LongType())))
-    out_type = StructType(fields)
+    bands = MINHASH_BANDS
+    rpb = MINHASH_HASHES // bands
+    out_type = StructType([
+        StructField("signature", ArrayType(LongType())),
+        StructField("bands", ArrayType(LongType())),
+    ])
 
     @F.pandas_udf(out_type)
     def fold(hash_arrays):
@@ -106,72 +96,65 @@ def _minhash_sig_bands(
             flat = np.concatenate(
                 [np.asarray(row, dtype=np.int64) for row in hash_arrays]
             )
-            # (n_shingles, num_hashes): a_i·h31 + b_i fits int64
+            # (n_shingles, MINHASH_HASHES): a_i·h31 + b_i fits int64
             perms = (flat[:, None] * a[None, :] + b[None, :]) % _MERSENNE61
             offsets = np.concatenate(([0], np.cumsum(lengths)[:-1]))
             nonzero = lengths > 0
             sig[nonzero] = np.minimum.reduceat(perms, offsets[nonzero], axis=0)
-        cols = {"signature": list(sig.tolist())}
-        if bands:
-            # FNV-1a fold over each band's slice; uint64 wraparound is
-            # deterministic, viewed back as signed for the LongType
-            u = sig.view(np.uint64).reshape(n, bands, rpb)
-            h = np.full((n, bands), np.uint64(0xCBF29CE484222325))
-            for k in range(rpb):
-                h = (h ^ u[:, :, k]) * np.uint64(1099511628211)
-            cols["bands"] = list(h.view(np.int64).tolist())
-        return pd.DataFrame(cols)
+        # FNV-1a fold over each band's slice; uint64 wraparound is
+        # deterministic, viewed back as signed for the LongType
+        u = sig.view(np.uint64).reshape(n, bands, rpb)
+        h = np.full((n, bands), np.uint64(0xCBF29CE484222325))
+        for k in range(rpb):
+            h = (h ^ u[:, :, k]) * np.uint64(1099511628211)
+        return pd.DataFrame({
+            "signature": list(sig.tolist()),
+            "bands": list(h.view(np.int64).tolist()),
+        })
 
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
     # a compact corpus file scans as ONE partition — without this the
     # CPU-heavy signature UDF runs on a single core
     tok = parallelize_for_udf(df).select(
-        F.col(id_col), token_hashes(text_col).alias("_tok_h")
+        F.col("doc_id"), token_hashes("text").alias("_tok_h")
     )
     hashed = tok.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_distinct(shingle_hashes_from("_tok_h", shingle_k)).alias("_h31"),
     )
-    out = hashed.select(F.col(id_col), fold("_h31").alias("_sb"))
-    members = ["_sb.signature"] + (["_sb.bands"] if bands else [])
-    return out.select(F.col(id_col), *[F.col(m) for m in members])
+    out = hashed.select(F.col("doc_id"), fold("_h31").alias("_sb"))
+    return out.select("doc_id", "_sb.signature", "_sb.bands")
 
 
 def minhash_candidate_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
     shingle_k: int = 3,
-    min_est_jaccard: float = 0.5,
-    max_bucket: int = 1000,
 ) -> DataFrame:
     """LSH-banded MinHash near-duplicate candidate pairs.
 
-    signature → ``bands`` band-hashes → explode → bucket groupBy →
-    in-bucket pair expansion (operators/lsh.bucket_pairs: ONE shuffle,
+    signature → ``MINHASH_BANDS`` band-hashes → explode → bucket
+    groupBy → in-bucket pair expansion (operators/lsh.bucket_pairs: ONE shuffle,
     no self-join) → estimate Jaccard as the matching fraction of the
     two signatures (zip_with, JVM-side, AQE-adaptive signature join).
 
-    ``max_bucket`` drops degenerate buckets (e.g. the empty-document
-    bucket) whose quadratic blow-up would dominate at scale — the
-    standard guard; dropped buckets are all-identical docs anyway,
+    Buckets over 1000 docs are dropped: degenerate buckets (e.g. the
+    empty-document bucket) whose quadratic blow-up would dominate at
+    scale — the standard guard; dropped buckets are all-identical docs anyway,
     which exact dedup already catches.
     """
     from hls_stac_parquet_spark.operators.lsh import bucket_pairs
 
-    sig = _minhash_sig_bands(df, text_col, id_col, num_hashes, shingle_k, bands)
+    sig = _minhash_sig_bands(df, shingle_k)
     # branch point: banded view + two verification joins reuse it
     sig = materialize(sig)
 
     # band hashes were folded in the same Arrow pass as the signature;
     # only (id, band, hash) shuffles — signatures stay out of the pairing
     banded = sig.select(
-        F.col(id_col), F.posexplode("bands").alias("band", "band_hash")
+        F.col("doc_id"), F.posexplode("bands").alias("band", "band_hash")
     )
-    pairs = bucket_pairs(banded, ["band", "band_hash"], id_col, max_bucket).select(
+    pairs = bucket_pairs(banded, ["band", "band_hash"], "doc_id", 1000).select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
 
@@ -180,8 +163,8 @@ def minhash_candidate_pairs(
     # scale) and falls back to a shuffle join keyed on doc id when the
     # corpus outgrows any broadcast (1B docs × 64 longs ≈ 0.5 TB of
     # signatures — the candidate-pair side is the sparse one there)
-    sig_a = sig.select(F.col(id_col).alias("doc_a"), F.col("signature").alias("sig_a"))
-    sig_b = sig.select(F.col(id_col).alias("doc_b"), F.col("signature").alias("sig_b"))
+    sig_a = sig.select(F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a"))
+    sig_b = sig.select(F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b"))
     est = (
         pairs.join(sig_a, "doc_a")
         .join(sig_b, "doc_b")
@@ -192,20 +175,15 @@ def minhash_candidate_pairs(
                 F.lit(0),
                 lambda acc, v: acc + v,
             )
-            / F.lit(num_hashes),
+            / F.lit(MINHASH_HASHES),
         )
     )
-    return est.filter(F.col("est_jaccard") >= min_est_jaccard).select(
+    return est.filter(F.col("est_jaccard") >= 0.5).select(
         "doc_a", "doc_b", F.round("est_jaccard", 6).alias("est_jaccard")
     )
 
 
-def simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 63,
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """63-bit SimHash sketch per document (sign-sum of token hashes).
 
     Shuffle-free hybrid: token hashing stays JVM-side (split +
@@ -223,7 +201,7 @@ def simhash(
     import pandas as pd
     from pyspark.sql.types import LongType
 
-    masks = np.int64(1) << np.arange(bits, dtype=np.int64)
+    masks = np.int64(1) << np.arange(63, dtype=np.int64)
 
     @F.pandas_udf(LongType())
     def fold(hashes):
@@ -237,7 +215,7 @@ def simhash(
         offsets = np.concatenate(([0], np.cumsum(lengths)[:-1]))
         # reduceat needs non-empty segments; guard zero-length docs
         nonzero = lengths > 0
-        sums = np.zeros((len(hashes), bits), dtype=np.int64)
+        sums = np.zeros((len(hashes), 63), dtype=np.int64)
         if nonzero.all():
             sums = np.add.reduceat(signs, offsets, axis=0)
         else:
@@ -250,29 +228,23 @@ def simhash(
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
     hashed = parallelize_for_udf(df).select(
-        F.col(id_col),
+        F.col("doc_id"),
         # coalesce: NULL text → empty token list → simhash 0, same as
         # an empty document (a None row would TypeError inside fold)
         F.coalesce(
             F.transform(
-                F.split(F.lower(F.col(text_col)), r"\s+"),
+                F.split(F.lower(F.col("text")), r"\s+"),
                 lambda t: F.xxhash64(t),
             ),
             F.expr("CAST(array() AS array<bigint>)"),
         ).alias("_hashes"),
     )
-    return hashed.select(F.col(id_col), fold("_hashes").alias("simhash"))
+    return hashed.select(F.col("doc_id"), fold("_hashes").alias("simhash"))
 
 
-def simhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup candidates: equal ~16-bit SimHash band → bucket pair
-    expansion (one shuffle, operators/lsh.bucket_pairs) → exact
+def simhash_candidate_pairs(df: DataFrame) -> DataFrame:
+    """Near-dup candidates (Hamming distance ≤ 3): equal ~16-bit
+    SimHash band → bucket pair expansion (one shuffle, operators/lsh.bucket_pairs) → exact
     Hamming distance filter (popcount) against the sketch table.
     Verification joins are plain equi-joins: AQE broadcasts the
     sketch side while it fits and shuffle-joins the sparse pair list
@@ -280,10 +252,11 @@ def simhash_candidate_pairs(
     from hls_stac_parquet_spark.operators.lsh import bucket_pairs
 
     # sketch feeds the pairing AND both Hamming lookups — compute once
-    sh = materialize(simhash(df, text_col, id_col))
+    sh = materialize(simhash(df))
+    bands = 4
     band_width = 63 // bands + 1
     banded = sh.select(
-        id_col,
+        "doc_id",
         F.posexplode(
             F.array(
                 *[
@@ -295,26 +268,24 @@ def simhash_candidate_pairs(
             )
         ).alias("band", "band_val"),
     )
-    pairs = bucket_pairs(banded, ["band", "band_val"], id_col).select(
+    pairs = bucket_pairs(banded, ["band", "band_val"], "doc_id").select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
-    sh_a = sh.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("_sh_a"))
-    sh_b = sh.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("_sh_b"))
+    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("_sh_a"))
+    sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("_sh_b"))
     return (
         pairs.join(sh_a, "doc_a")
         .join(sh_b, "doc_b")
         .withColumn(
             "hamming", F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b")))
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .select("doc_a", "doc_b", "hamming")
     )
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 2,
     min_jaccard: float = 0.5,
 ) -> DataFrame:
@@ -325,10 +296,10 @@ def ngram_jaccard_pairs(
     Quadratic in per-shingle doc frequency — at scale, run *after*
     LSH candidate generation, not instead of it.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    base = df.select(F.col(id_col), toks.alias("ts")).filter(F.size("ts") >= n)
+    toks = F.split(F.lower(F.col("text")), " ")
+    base = df.select(F.col("doc_id"), toks.alias("ts")).filter(F.size("ts") >= n)
     grams = base.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array_distinct(
                 F.transform(
@@ -340,22 +311,22 @@ def ngram_jaccard_pairs(
             )
         ).alias("shingle"),
     )
-    counts = grams.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
+    counts = grams.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     a = grams.alias("a")
     b = grams.alias("b")
     common = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .agg(F.count("*").alias("n_common"))
     )
-    ca = counts.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    cb = counts.select(F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("n_b"))
+    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
+    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
     j = (
         common.join(ca, "doc_a")
         .join(cb, "doc_b")
@@ -371,8 +342,6 @@ def ngram_jaccard_pairs(
 
 def shared_window_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 8,
     min_shared: int = 2,
     max_df: int = 50,
@@ -399,7 +368,7 @@ def shared_window_pairs(
     only 32-char digests and ids.
     """
     toks = df.select(
-        F.col(id_col), F.split(F.lower(F.col(text_col)), " ").alias("_ts")
+        F.col("doc_id"), F.split(F.lower(F.col("text")), " ").alias("_ts")
     )
     n = F.size("_ts")
     wins = F.when(
@@ -410,11 +379,11 @@ def shared_window_pairs(
         ),
     ).otherwise(F.array().cast("array<string>"))
     postings = toks.select(
-        F.col(id_col), F.explode(F.array_distinct(wins)).alias("fp")
+        F.col("doc_id"), F.explode(F.array_distinct(wins)).alias("fp")
     )
     buckets = (
         postings.groupBy("fp")
-        .agg(F.sort_array(F.collect_set(id_col)).alias("_ids"))
+        .agg(F.sort_array(F.collect_set("doc_id")).alias("_ids"))
         .filter((F.size("_ids") >= 2) & (F.size("_ids") <= max_df))
     )
     ids = F.col("_ids")
@@ -441,8 +410,6 @@ def shared_window_pairs(
 
 def prefix_filter_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 2,
     min_jaccard: float = 0.5,
 ) -> DataFrame:
@@ -471,8 +438,8 @@ def prefix_filter_jaccard_pairs(
     """
     from hls_stac_parquet_spark.operators.lsh import bucket_pairs
 
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    base = df.select(F.col(id_col), toks.alias("ts")).filter(F.size("ts") >= n)
+    toks = F.split(F.lower(F.col("text")), " ")
+    base = df.select(F.col("doc_id"), toks.alias("ts")).filter(F.size("ts") >= n)
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.size("ts") - (n - 1)),
@@ -481,7 +448,7 @@ def prefix_filter_jaccard_pairs(
             ),
         )
     )
-    docs = base.select(F.col(id_col), grams.alias("grams"))
+    docs = base.select(F.col("doc_id"), grams.alias("grams"))
     ordered = F.array_sort(
         F.transform(
             "grams", lambda g: F.struct(F.xxhash64(g).alias("h"), g.alias("g"))
@@ -493,15 +460,15 @@ def prefix_filter_jaccard_pairs(
         + F.lit(1)
     )
     prefixed = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.slice(ordered, F.lit(1), prefix_len)).alias("p"),
-    ).select(F.col(id_col), F.col("p.g").alias("shingle"))
+    ).select(F.col("doc_id"), F.col("p.g").alias("shingle"))
 
     # exact: no bucket cap — a dropped bucket could drop a true pair
-    cand = bucket_pairs(prefixed, ["shingle"], id_col, max_bucket=None)
+    cand = bucket_pairs(prefixed, ["shingle"], "doc_id", max_bucket=None)
 
-    ga = docs.select(F.col(id_col).alias("doc_a"), F.col("grams").alias("ga"))
-    gb = docs.select(F.col(id_col).alias("doc_b"), F.col("grams").alias("gb"))
+    ga = docs.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))
+    gb = docs.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("gb"))
     verified = (
         cand.select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         .join(ga, "doc_a")
@@ -520,8 +487,6 @@ def prefix_filter_jaccard_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 2,
     min_containment: float = 0.6,
     max_df: int = 1000,
@@ -542,10 +507,10 @@ def containment_pairs(
     MinHash/LSH candidate generation for the symmetric case and keep
     this as the exact verify/asymmetric tier.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    base = df.select(F.col(id_col), toks.alias("ts")).filter(F.size("ts") >= n)
+    toks = F.split(F.lower(F.col("text")), " ")
+    base = df.select(F.col("doc_id"), toks.alias("ts")).filter(F.size("ts") >= n)
     grams = base.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array_distinct(
                 F.transform(
@@ -564,22 +529,22 @@ def containment_pairs(
         .select("shingle")
     )
     pruned = grams.join(eligible, "shingle")
-    counts = grams.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
+    counts = grams.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     a = pruned.alias("a")
     b = pruned.alias("b")
     common = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") != F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
         .agg(F.count("*").alias("n_common"))
     )
-    ca = counts.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("n_a"))
+    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
     out = common.join(ca, "doc_a").withColumn(
         "containment", F.col("n_common") / F.col("n_a")
     )
@@ -591,8 +556,6 @@ def containment_pairs(
 def ngram_jaccard_pairs_between(
     probe: DataFrame,
     base: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 2,
     min_jaccard: float = 0.5,
 ) -> DataFrame:
@@ -609,12 +572,12 @@ def ngram_jaccard_pairs_between(
     """
 
     def grams(df):
-        toks = F.split(F.lower(F.col(text_col)), " ")
-        b = df.select(F.col(id_col), toks.alias("ts")).filter(
+        toks = F.split(F.lower(F.col("text")), " ")
+        b = df.select(F.col("doc_id"), toks.alias("ts")).filter(
             F.size("ts") >= n
         )
         return b.select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.array_distinct(
                     F.transform(
@@ -633,19 +596,19 @@ def ngram_jaccard_pairs_between(
 
     gp = grams(probe)
     gb = grams(base)
-    cp = gp.groupBy(id_col).agg(F.count("*").alias("n_p"))
-    cb = gb.groupBy(id_col).agg(F.count("*").alias("n_b"))
+    cp = gp.groupBy("doc_id").agg(F.count("*").alias("n_p"))
+    cb = gb.groupBy("doc_id").agg(F.count("*").alias("n_b"))
     common = (
-        gp.select(F.col(id_col).alias("probe_id"), "shingle")
-        .join(gb.select(F.col(id_col).alias("base_id"), "shingle"), "shingle")
+        gp.select(F.col("doc_id").alias("probe_id"), "shingle")
+        .join(gb.select(F.col("doc_id").alias("base_id"), "shingle"), "shingle")
         .groupBy("probe_id", "base_id")
         .agg(F.count("*").alias("n_common"))
     )
     return (
         common.join(
-            cp.select(F.col(id_col).alias("probe_id"), "n_p"), "probe_id"
+            cp.select(F.col("doc_id").alias("probe_id"), "n_p"), "probe_id"
         )
-        .join(cb.select(F.col(id_col).alias("base_id"), "n_b"), "base_id")
+        .join(cb.select(F.col("doc_id").alias("base_id"), "n_b"), "base_id")
         .select(
             "probe_id",
             "base_id",

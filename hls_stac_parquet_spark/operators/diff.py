@@ -17,8 +17,6 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     key_cols: list[str],
-    compare_cols: list[str] | None = None,
-    hash_compare: bool = False,
     check_unique: bool = False,
 ) -> DataFrame:
     """Row-level diff of ``new`` against ``old`` keyed on ``key_cols``.
@@ -36,16 +34,10 @@ def snapshot_diff(
     instead.
 
     Plan: ONE key-partitioned full outer join; change detection is a
-    null-safe compare of ``compare_cols`` (default: all shared
-    non-key columns). With ``hash_compare=True`` each side reduces to
-    (key, xxhash64(compare cols)) before the join, so only ~16 bytes
-    per row cross the shuffle regardless of table width — the 100 TB
-    shape; the trade is that the output can't echo the differing
-    values, only the status.
+    null-safe compare of every shared non-key column.
     """
-    if compare_cols is None:
-        shared = [c for c in old.columns if c in set(new.columns)]
-        compare_cols = [c for c in shared if c not in set(key_cols)]
+    shared = [c for c in old.columns if c in set(new.columns)]
+    compare_cols = [c for c in shared if c not in set(key_cols)]
 
     if check_unique:
         for side, df in (("old", old), ("new", new)):
@@ -62,10 +54,6 @@ def snapshot_diff(
                     "out — dedup the input or fix the key"
                 )
 
-    if hash_compare:
-        old = old.select(*key_cols, F.xxhash64(*compare_cols).alias("_h"))
-        new = new.select(*key_cols, F.xxhash64(*compare_cols).alias("_h"))
-        compare_cols = ["_h"]
     # explicit presence markers — inferring presence from key nullity
     # would misclassify rows whose key column is itself NULL
     a = old.withColumn("_present", F.lit(True)).alias("a")

@@ -24,13 +24,17 @@ CORE_NUMBERS_DRIVER_MAX = 200_000
 #: pairs up to which :func:`connected_components_auto` runs union-find
 #: on the driver
 CC_DRIVER_MAX = 1_000_000
+#: large-star/small-star rounds before :func:`connected_components_star`
+#: gives up (~log²|V| suffice)
+CC_STAR_MAX_ITER = 50
+#: PageRank damping factor
+PAGERANK_DAMPING = 0.85
 
 
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond" —
@@ -57,7 +61,7 @@ def connected_components_star(
     small-star(u): every neighbor v ≤ u re-points to m (plus u itself)
     Fixpoint = a star forest whose centers are component minima.
 
-    Raises ``RuntimeError`` if ``max_iter`` rounds pass without a
+    Raises ``RuntimeError`` if ``CC_STAR_MAX_ITER`` rounds pass without a
     fixpoint (cannot happen below ~log²|V| rounds of headroom).
     """
     # node universe from the RAW edge list (a self-loop-only node is
@@ -79,7 +83,7 @@ def connected_components_star(
 
     converged = False
     prev_count = e.count()
-    for _ in range(max_iter):
+    for _ in range(CC_STAR_MAX_ITER):
         # -- large-star: sym view, each strictly-larger neighbor joins
         #    the neighborhood minimum (which includes u itself)
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -134,7 +138,7 @@ def connected_components_star(
     if not converged:
         raise RuntimeError(
             f"connected_components_star did not reach a fixpoint within "
-            f"max_iter={max_iter} rounds"
+            f"{CC_STAR_MAX_ITER} rounds"
         )
     # fixpoint e is a star forest (center=u=min, leaf=v); centers label
     # themselves, isolated-after-contraction nodes are their own min
@@ -146,9 +150,6 @@ def connected_components_star(
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
     iterations: int = 8,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list (pass both
@@ -176,23 +177,23 @@ def pagerank(
     graphs — tests/test_graph.py pins exact agreement with a numpy
     power iteration on the same edges.
     """
-    e = materialize(edges.select(src, dst))
-    out_deg = materialize(e.groupBy(src).agg(F.count("*").alias("_deg")))
+    e = materialize(edges.select("src", "dst"))
+    out_deg = materialize(e.groupBy("src").agg(F.count("*").alias("_deg")))
     nodes = materialize(
-        e.select(F.col(src).alias("node"))
-        .unionAll(e.select(F.col(dst).alias("node")))
+        e.select(F.col("src").alias("node"))
+        .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
     )
     ranks = nodes.withColumn("rank", F.lit(1.0))
 
     for _ in range(iterations):
         contribs = (
-            e.join(out_deg, src)
+            e.join(out_deg, "src")
             .join(
-                ranks.select(F.col("node").alias(src), "rank"), src
+                ranks.select(F.col("node").alias("src"), "rank"), "src"
             )
             .select(
-                F.col(dst).alias("node"),
+                F.col("dst").alias("node"),
                 (F.col("rank") / F.col("_deg")).alias("_c"),
             )
             .groupBy("node")
@@ -203,8 +204,8 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("_sum", F.lit(0.0))
+                    F.lit(1.0 - PAGERANK_DAMPING)
+                    + F.lit(PAGERANK_DAMPING) * F.coalesce("_sum", F.lit(0.0))
                 ).alias("rank"),
             )
         )
@@ -213,8 +214,6 @@ def pagerank(
 
 def hits(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 8,
 ) -> DataFrame:
     """HITS (hubs & authorities) over a DIRECTED edge list — the
@@ -233,40 +232,40 @@ def hits(
     """
     if iterations < 1:
         raise ValueError(f"hits() needs iterations >= 1, got {iterations}")
-    e = materialize(edges.select(src, dst))
+    e = materialize(edges.select("src", "dst"))
     nodes = (
-        e.select(F.col(src).alias("node"))
-        .unionAll(e.select(F.col(dst).alias("node")))
+        e.select(F.col("src").alias("node"))
+        .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    hub = e.select(F.col(src).alias("node")).distinct().withColumn(
+    hub = e.select(F.col("src").alias("node")).distinct().withColumn(
         "hub", F.lit(1.0)
     )
     auth = None
     for _ in range(iterations):
         a_raw = (
-            e.join(hub.withColumnRenamed("node", src), src)
-            .groupBy(dst)
+            e.join(hub.withColumnRenamed("node", "src"), "src")
+            .groupBy("dst")
             .agg(F.sum("hub").alias("_v"))
         )
         a_sum = a_raw.agg(F.sum("_v").alias("_s"))
         auth = materialize(
             a_raw.join(F.broadcast(a_sum))
             .select(
-                F.col(dst).alias("node"),
+                F.col("dst").alias("node"),
                 (F.col("_v") / F.col("_s")).alias("auth"),
             )
         )
         h_raw = (
-            e.join(auth.withColumnRenamed("node", dst), dst)
-            .groupBy(src)
+            e.join(auth.withColumnRenamed("node", "dst"), "dst")
+            .groupBy("src")
             .agg(F.sum("auth").alias("_v"))
         )
         h_sum = h_raw.agg(F.sum("_v").alias("_s"))
         hub = materialize(
             h_raw.join(F.broadcast(h_sum))
             .select(
-                F.col(src).alias("node"),
+                F.col("src").alias("node"),
                 (F.col("_v") / F.col("_s")).alias("hub"),
             )
         )
@@ -281,7 +280,7 @@ def hits(
     )
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Exact triangle count via the edge-iterator / adjacency-
     intersection algorithm (one row: n_edges, n_triangles).
 
@@ -305,8 +304,8 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # bimodal, 9-88 s at sf0.1; checkpoint holds ~4 s steady)
     e = materialize(
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_a"),
-            F.greatest(F.col(src), F.col(dst)).alias("_b"),
+            F.least(F.col("src"), F.col("dst")).alias("_a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("_b"),
         )
         .filter(F.col("_a") != F.col("_b"))
         .distinct()
@@ -391,10 +390,6 @@ def propagate_labels(
     edges: DataFrame,
     seeds: DataFrame,
     max_iter: int = 5,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
-    label_col: str = "label",
 ) -> DataFrame:
     """Semi-supervised label propagation: spread seed labels over an
     undirected graph by synchronous majority vote.
@@ -420,15 +415,15 @@ def propagate_labels(
     # and round-k task binaries don't carry the full history (the
     # persist-was-bimodal lesson from triangle_count/pagerank).
     sym = materialize(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .union(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
+        edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
+        .union(edges.select(F.col("dst").alias("_s"), F.col("src").alias("_d")))
         .filter(F.col("_s") != F.col("_d"))
         .distinct()
     )
 
     seed_labels = materialize(
         seeds.select(
-            F.col(node_col).alias("_n"), F.col(label_col).alias("_lbl")
+            F.col("node").alias("_n"), F.col("label").alias("_lbl")
         ).withColumn("_seed", F.lit(True))
     )
 
@@ -470,18 +465,13 @@ def propagate_labels(
         if (i + 1) % 4 == 0 and (i + 1) < max_iter:
             labels = materialize(labels)
     return labels.select(
-        F.col("_n").alias(node_col),
-        F.col("_lbl").alias(label_col),
+        F.col("_n").alias("node"),
+        F.col("_lbl").alias("label"),
         F.col("_seed").alias("is_seed"),
     )
 
 
-def core_numbers(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 100,
-) -> DataFrame:
+def core_numbers(edges: DataFrame) -> DataFrame:
     """Coreness (k-core number) of every node via the h-index
     iteration (Lü et al., "The H-index of a network node and its
     relation to degree and coreness", Nat. Commun. 2016): initialize
@@ -494,7 +484,7 @@ def core_numbers(
 
     Returns ``(node, core)`` for every edge endpoint. Deterministic
     and partition-independent (pure function of the graph). Raises
-    ``RuntimeError`` if ``max_iter`` rounds don't reach the fixpoint
+    ``RuntimeError`` if 100 rounds don't reach the fixpoint
     (convergence takes at most O(max coreness) rounds in practice;
     pathological chains converge in O(diameter)).
 
@@ -524,8 +514,8 @@ def core_numbers(
     """
     e = materialize(
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_u"),
-            F.greatest(F.col(src), F.col(dst)).alias("_v"),
+            F.least(F.col("src"), F.col("dst")).alias("_u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("_v"),
         )
         .filter(F.col("_u") != F.col("_v"))
         .distinct()
@@ -597,7 +587,7 @@ def core_numbers(
         )
 
     converged = False
-    for _ in range(max_iter):
+    for _ in range(100):
         nbvals = sym.join(
             cur.select(F.col("_n").alias("_nb"), F.col("_c").alias("_nbc")),
             "_nb",
@@ -627,8 +617,7 @@ def core_numbers(
             break
     if not converged:
         raise RuntimeError(
-            f"core_numbers did not converge within max_iter={max_iter} "
-            "h-index rounds; raise max_iter"
+            "core_numbers did not converge within 100 h-index rounds"
         )
     return cur.select(F.col("_n").alias("node"), F.col("_c").alias("core"))
 
@@ -637,7 +626,6 @@ def connected_components_auto(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Tiered connected components — same ``(node, component=min
     reachable id)`` contract as :func:`connected_components_star`,
@@ -661,7 +649,7 @@ def connected_components_auto(
     edges = materialize(edges.select(src, dst))
     n = edges.count()
     if n > CC_DRIVER_MAX:
-        return connected_components_star(edges, src, dst, max_iter)
+        return connected_components_star(edges, src, dst)
     rows = edges.select(src, dst).collect()
     parent: dict = {}
 
@@ -697,17 +685,12 @@ def connected_components_auto(
 def sssp_bounded(
     edges: DataFrame,
     rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    source_col: str | None = None,
 ) -> DataFrame:
     """Bounded-hop weighted single-source shortest paths (Bellman-Ford
     relaxation): ``(node, dist)`` with dist = min total weight over
     paths of at most ``rounds`` edges from the source node.
 
-    The source is the minimum ``src`` value in the edge list unless a
-    one-row ``source_col`` frame is wired in by the caller. Each round
+    The source is the minimum ``src`` value in the edge list. Each round
     is ONE keyed shuffle: current distances join the edge list on the
     source endpoint, relaxed candidates union the standing distances,
     and a min-aggregate per node keeps the best — node-bounded state,
@@ -727,8 +710,8 @@ def sssp_bounded(
     """
     e = materialize(
         edges.select(
-            F.col(src).alias("_a"), F.col(dst).alias("_b"),
-            F.col(weight).alias("_w"),
+            F.col("src").alias("_a"), F.col("dst").alias("_b"),
+            F.col("w").alias("_w"),
         )
     )
     # anchor: DISTINCT source row (0 rows when the edge list is empty,

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _EPOCH0 = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+#: grid cell width: trades interval fan-out against bucket density
+GRID_SECONDS = 3600
 
 
 def _epoch_s(col: str | Column) -> Column:
@@ -35,15 +37,9 @@ def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,
     by: list[str],
-    left_start: str = "s",
-    left_end: str = "e",
-    right_start: str = "s",
-    right_end: str = "e",
-    grid_seconds: int = 3600,
-    min_overlap_seconds: int = 0,
 ) -> DataFrame:
-    """Join rows whose [start, end] intervals overlap by more than
-    ``min_overlap_seconds``, within equal ``by`` keys.
+    """Join rows whose [s, e] intervals overlap by more than zero,
+    within equal ``by`` keys.
 
     Returns left ⨯ right columns (right's renamed with ``r_`` prefix
     where they collide) plus ``overlap_us``.  Exact: grid
@@ -54,8 +50,8 @@ def interval_overlap_join(
     """
     lcell = F.explode(
         F.sequence(
-            F.floor(_epoch_s(left_start) / grid_seconds),
-            F.floor(_epoch_s(left_end) / grid_seconds),
+            F.floor(_epoch_s("s") / GRID_SECONDS),
+            F.floor(_epoch_s("e") / GRID_SECONDS),
         )
     ).alias("_cell")
 
@@ -67,14 +63,14 @@ def interval_overlap_join(
     r = right
     for old, new in rename.items():
         r = r.withColumnRenamed(old, new)
-    r_start = rename.get(right_start, right_start)
-    r_end = rename.get(right_end, right_end)
+    # both sides carry ``s``/``e``, so the right pair is always renamed
+    r_start, r_end = "r_s", "r_e"
     r_by = [rename.get(k, k) for k in by]
 
     rcell = F.explode(
         F.sequence(
-            F.floor(_epoch_s(r_start) / grid_seconds),
-            F.floor(_epoch_s(r_end) / grid_seconds),
+            F.floor(_epoch_s(r_start) / GRID_SECONDS),
+            F.floor(_epoch_s(r_end) / GRID_SECONDS),
         )
     ).alias("_rcell")
 
@@ -91,20 +87,15 @@ def interval_overlap_join(
     # components
     overlap_us = F.timestamp_diff(
         "MICROSECOND",
-        F.greatest(F.col(left_start), F.col(r_start)),
-        F.least(F.col(left_end), F.col(r_end)),
+        F.greatest(F.col("s"), F.col(r_start)),
+        F.least(F.col("e"), F.col(r_end)),
     )
     anchor = F.floor(
-        _epoch_s(F.greatest(F.col(left_start), F.col(r_start))) / grid_seconds
+        _epoch_s(F.greatest(F.col("s"), F.col(r_start))) / GRID_SECONDS
     )
     out = (
         a.join(b, cond)
-        .filter(
-            # threshold folded in Python: a lit(int32) * 1e6 overflows
-            # under ANSI constant folding for thresholds ≥ ~36 min
-            (overlap_us > F.lit(int(min_overlap_seconds) * 1_000_000))
-            & (F.col("_cell") == anchor)
-        )
+        .filter((overlap_us > 0) & (F.col("_cell") == anchor))
         .withColumn("overlap_us", overlap_us)
         .drop("_cell", "_rcell", *r_by)
     )

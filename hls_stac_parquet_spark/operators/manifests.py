@@ -14,19 +14,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def fan_in_manifests(manifest_df: DataFrame, urls_col: str = "urls") -> DataFrame:
+def fan_in_manifests(manifest_df: DataFrame) -> DataFrame:
     """Explode per-manifest URL arrays into one flat url column,
     keeping the manifest's partition keys on every row."""
-    others = [c for c in manifest_df.columns if c != urls_col]
-    return manifest_df.select(*others, F.explode(urls_col).alias("url"))
+    others = [c for c in manifest_df.columns if c != "urls"]
+    return manifest_df.select(*others, F.explode("urls").alias("url"))
 
 
-def split_failures(
-    df: DataFrame, error_col: str = "fetch_error"
-) -> tuple[DataFrame, DataFrame]:
+def split_failures(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(ok, dead_letter) — the success/failure stream split. The
     dead-letter side is a DataFrame, not a log line; the pipelines
     only count it today (nothing stores it yet)."""
-    ok = df.filter(F.col(error_col).isNull()).drop(error_col)
-    dead = df.filter(F.col(error_col).isNotNull())
+    ok = df.filter(F.col("fetch_error").isNull()).drop("fetch_error")
+    dead = df.filter(F.col("fetch_error").isNotNull())
     return ok, dead

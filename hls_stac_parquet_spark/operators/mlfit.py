@@ -39,13 +39,11 @@ def logreg_fit(
     label_col: str,
     iters: int = 20,
     lr: float = 0.5,
-    reg: float = 0.0,
 ) -> list[float]:
     """Train logistic weights [w_1..w_d, intercept] by full-batch GD.
 
     Each iteration is one aggregate job over the (cached-by-caller if
-    reused) input; the returned list is plain Python floats. ``reg``
-    is L2 on the non-intercept weights.
+    reused) input; the returned list is plain Python floats.
     """
     feats = list(feature_cols)
     d = len(feats)
@@ -86,7 +84,6 @@ def logreg_fit(
         for _ in range(iters):
             p = 1.0 / (1.0 + np.exp(-(Xb @ wv)))
             grad = Xb.T @ (p - y) / n_row
-            grad[:d] += reg * wv[:d]
             wv = wv - lr * grad
         return [float(x) for x in wv]
 
@@ -106,7 +103,7 @@ def logreg_fit(
             ],
             F.coalesce(F.sum(resid), zero).alias("gb"),
         ).collect()[0]
-        grad = [agg[f"g{j}"] / n_row + reg * w[j] for j in range(d)]
+        grad = [agg[f"g{j}"] / n_row for j in range(d)]
         grad.append(agg["gb"] / n_row)
         w = [wi - lr * gi for wi, gi in zip(w, grad)]
     return w
@@ -130,8 +127,6 @@ def logreg_score(
 
 def bradley_terry_fit(
     pairs: DataFrame,
-    winner_col: str = "winner",
-    loser_col: str = "loser",
     iters: int = 10,
 ) -> DataFrame:
     """Bradley–Terry preference strengths via the classic MM update —
@@ -152,7 +147,7 @@ def bradley_terry_fit(
     kernel carry full oracles (q_bradley_terry).
     """
     wl = pairs.groupBy(
-        F.col(winner_col).alias("a"), F.col(loser_col).alias("b")
+        F.col("winner").alias("a"), F.col("loser").alias("b")
     ).agg(F.count("*").alias("n"))
     # ordered relation with per-ordered-pair totals n_ab (symmetric)
     rel = materialize(
@@ -164,7 +159,7 @@ def bradley_terry_fit(
         .groupBy("a", "b")
         .agg(F.sum("n").alias("n"))
     )
-    wins = pairs.groupBy(F.col(winner_col).alias("entity")).agg(
+    wins = pairs.groupBy(F.col("winner").alias("entity")).agg(
         F.count("*").cast("double").alias("w")
     )
     entities = rel.select(F.col("a").alias("entity")).distinct()

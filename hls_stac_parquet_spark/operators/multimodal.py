@@ -70,6 +70,8 @@ def one_pass(media, batch_fns, schema):
     return _par(media).mapInPandas(gen, schema)
 
 FEATURE_DIM = 32
+#: dHash bands for :func:`hamming_near_dup_pairs`; must divide 64
+HAMMING_BANDS = 4
 
 _FRAMES_SCHEMA = StructType(
     [
@@ -122,16 +124,16 @@ def _decode_image_real(payload: bytes) -> np.ndarray:
     )
 
 
-def deterministic_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
+def deterministic_feature(payload: bytes) -> np.ndarray:
     """Deterministic stand-in feature extractor: stretch the sha256
-    of the payload into ``dim`` floats in [0,1). Stable across runs,
+    of the payload into ``FEATURE_DIM`` floats in [0,1). Stable across runs,
     machines, and partitionings — exactly what a test oracle needs."""
     h = hashlib.sha256(payload)
     raw = b""
-    while len(raw) < dim * 4:
+    while len(raw) < FEATURE_DIM * 4:
         h = hashlib.sha256(h.digest())
         raw += h.digest()
-    ints = np.frombuffer(raw[: dim * 4], dtype=np.uint32)
+    ints = np.frombuffer(raw[: FEATURE_DIM * 4], dtype=np.uint32)
     return (ints / np.float64(2**32)).astype(np.float32)
 
 
@@ -139,8 +141,6 @@ def sample_frames(
     media: DataFrame,
     every_n_bytes: int = 1024,
     max_frames: int = 8,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
 ) -> DataFrame:
     """Video-style frame sampling: one feature row per sampled frame.
 
@@ -152,7 +152,7 @@ def sample_frames(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, lens, feats = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["content"]):
                 payload = _as_bytes(payload)
                 n_frames = min(max(len(payload) // every_n_bytes, 1), max_frames)
                 for i in range(n_frames):
@@ -189,41 +189,38 @@ def resize_raw_images(
     src_height: int,
     width: int = 64,
     height: int = 64,
-    channels: int = 1,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
 ) -> DataFrame:
     """REAL nearest-neighbor downsample/upsample for RAW images —
-    payloads are uint8 pixel buffers of shape (src_height, src_width,
-    channels), the layout a decode stage emits. No codec needed: the
-    resample is two vectorized numpy gathers (row/col index maps per
+    payloads are one-channel uint8 pixel buffers of shape
+    (src_height, src_width), the layout a decode stage emits. No codec
+    needed: the resample is two vectorized numpy gathers (row/col index maps per
     the standard nearest-neighbor formula ``src_i = out_i * src / out``)
     — this is the actual pixel operation, not a stand-in, so it has an
     exact external oracle (numpy on the same bytes; see
     tests/test_multimodal.py).
 
-    Payloads shorter than src_height*src_width*channels are
+    Payloads shorter than src_height*src_width are
     zero-padded, longer ones truncated — decode-side contracts should
     make both impossible, but a malformed blob must not kill a 100 TB
     job. Plan shape: one mapInPandas, no shuffle, 1:1 rows.
     """
-    n_src = src_height * src_width * channels
+    n_src = src_height * src_width
     row_map = (np.arange(height, dtype=np.int64) * src_height) // height
     col_map = (np.arange(width, dtype=np.int64) * src_width) // width
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for payload in pdf[bytes_col]:
+            for payload in pdf["content"]:
                 payload = _as_bytes(payload)
                 buf = np.frombuffer(payload[:n_src], dtype=np.uint8)
                 if len(buf) < n_src:
                     buf = np.pad(buf, (0, n_src - len(buf)))
-                img = buf.reshape(src_height, src_width, channels)
+                img = buf.reshape(src_height, src_width)
                 out.append(img[np.ix_(row_map, col_map)].tobytes())
             yield pd.DataFrame(
                 {
-                    "media_id": pdf[id_col].to_numpy(),
+                    "media_id": pdf["media_id"].to_numpy(),
                     "width": np.full(len(pdf), width, dtype=np.int32),
                     "height": np.full(len(pdf), height, dtype=np.int32),
                     "content": out,
@@ -236,31 +233,28 @@ def resize_raw_images(
 def encode_images_png_batch(
     src_width: int,
     src_height: int,
-    channels: int = 1,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
 ):
     """Per-batch :func:`one_pass` kernel: REAL PNG encode of raw pixel
-    buffers (operators/codecs.py). Payloads are uint8 (src_height,
-    src_width, channels) buffers (the resize/patchify layout; short
+    buffers (operators/codecs.py). Payloads are one-channel uint8
+    (src_height, src_width) buffers (the resize/patchify layout; short
     blobs zero-pad, long ones truncate); the filter type rotates per
     image id so a corpus exercises every PNG filter path. Emits (id,
     content=png bytes)."""
     from hls_stac_parquet_spark.operators.codecs import encode_png
 
-    n_src = src_height * src_width * channels
+    n_src = src_height * src_width
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
-        for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
+        for mid, payload in zip(pdf["media_id"], pdf["content"]):
             payload = _as_bytes(payload)
             buf = np.frombuffer(payload[:n_src], dtype=np.uint8)
             if len(buf) < n_src:
                 buf = np.pad(buf, (0, n_src - len(buf)))
-            px = buf.reshape(src_height, src_width, channels)
+            px = buf.reshape(src_height, src_width, 1)
             out.append(encode_png(px, filter_type=int(mid) % 5))
         return pd.DataFrame(
-            {"media_id": pdf[id_col].to_numpy(), "content": out}
+            {"media_id": pdf["media_id"].to_numpy(), "content": out}
         )
 
     return fn
@@ -269,37 +263,31 @@ def encode_images_png_batch(
 def encode_images_jpeg_batch(
     src_width: int,
     src_height: int,
-    channels: int = 1,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
 ):
     """Per-batch :func:`one_pass` kernel: REAL baseline-JPEG encode of
     raw pixel buffers (operators/codecs.py), laid out as for
-    :func:`encode_images_png_batch`. Quality cycles {35, 60, 85}, RGB
-    images alternate 4:4:4 / 4:2:0 per image id, every 3rd image
-    carries restart markers, and every 5th encodes PROGRESSIVE (SOF2,
-    multi-scan successive approximation) — so a corpus exercises the
-    quantization sweep, both subsampling layouts, the RSTn resync
-    path, and all four progressive scan kinds. Emits (id,
+    :func:`encode_images_png_batch`. Quality cycles {35, 60, 85},
+    every 3rd image carries restart markers, and every 5th encodes
+    PROGRESSIVE (SOF2, multi-scan successive approximation) — so a
+    corpus exercises the quantization sweep, the RSTn resync path, and
+    all four progressive scan kinds. Emits (id,
     content=jpeg bytes)."""
     from hls_stac_parquet_spark.operators.codecs import (
         encode_jpeg,
         encode_jpeg_progressive,
     )
 
-    n_src = src_height * src_width * channels
+    n_src = src_height * src_width
     qualities = (35, 60, 85)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
-        for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
+        for mid, payload in zip(pdf["media_id"], pdf["content"]):
             payload = _as_bytes(payload)
             buf = np.frombuffer(payload[:n_src], dtype=np.uint8)
             if len(buf) < n_src:
                 buf = np.pad(buf, (0, n_src - len(buf)))
-            px = buf.reshape(src_height, src_width, channels)
-            if channels == 1:
-                px = px[..., 0]
+            px = buf.reshape(src_height, src_width)
             mid = int(mid)
             if mid % 5 == 0:
                 out.append(
@@ -310,14 +298,11 @@ def encode_images_jpeg_batch(
                 encode_jpeg(
                     px,
                     quality=qualities[mid % 3],
-                    subsampling=(
-                        "4:2:0" if channels == 3 and mid % 2 else "4:4:4"
-                    ),
                     restart_interval=2 if mid % 3 == 0 else 0,
                 )
             )
         return pd.DataFrame(
-            {"media_id": pdf[id_col].to_numpy(), "content": out}
+            {"media_id": pdf["media_id"].to_numpy(), "content": out}
         )
 
     return fn
@@ -335,9 +320,7 @@ _PNG_STATS_SCHEMA = StructType(
 )
 
 
-def decode_image_stats_batch(
-    id_col: str = "media_id", bytes_col: str = "content"
-):
+def decode_image_stats_batch():
     """Per-batch :func:`one_pass` kernel: REAL compressed-image decode
     (PNG or JPEG via ``_decode_image_real``), reduced to shape + mean
     luminance per image (``_PNG_STATS_SCHEMA``, 1:1 rows). The decode
@@ -347,7 +330,7 @@ def decode_image_stats_batch(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         hs, ws, cs, means, sizes = [], [], [], [], []
-        for payload in pdf[bytes_col]:
+        for payload in pdf["content"]:
             payload = _as_bytes(payload)
             sizes.append(len(payload))
             try:
@@ -370,7 +353,7 @@ def decode_image_stats_batch(
                 means.append(np.float32("nan"))
         return pd.DataFrame(
             {
-                "media_id": pdf[id_col].to_numpy(),
+                "media_id": pdf["media_id"].to_numpy(),
                 "n_bytes": np.asarray(sizes, dtype=np.int32),
                 "height": np.asarray(hs, dtype=np.int32),
                 "width": np.asarray(ws, dtype=np.int32),
@@ -382,9 +365,7 @@ def decode_image_stats_batch(
     return fn
 
 
-def encode_audio_wav_batch(
-    sample_rate: int, id_col: str = "media_id", bytes_col: str = "content"
-):
+def encode_audio_wav_batch(sample_rate: int):
     """Per-batch :func:`one_pass` kernel: REAL WAV encode. Payload
     bytes are little-endian int16 samples (the raw-PCM convention of
     the PCM kernels; odd trailing byte dropped), wrapped as a 16-bit
@@ -393,21 +374,19 @@ def encode_audio_wav_batch(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
-        for payload in pdf[bytes_col]:
+        for payload in pdf["content"]:
             payload = _as_bytes(payload)
             n = len(payload) - (len(payload) % 2)
             samples = np.frombuffer(payload[:n], dtype="<i2")
             out.append(encode_wav(sample_rate, samples))
         return pd.DataFrame(
-            {"media_id": pdf[id_col].to_numpy(), "content": out}
+            {"media_id": pdf["media_id"].to_numpy(), "content": out}
         )
 
     return fn
 
 
-def decode_audio_wav_batch(
-    id_col: str = "media_id", bytes_col: str = "content"
-):
+def decode_audio_wav_batch():
     """Per-batch :func:`one_pass` kernel: REAL WAV decode
     (operators/codecs.py). RIFF/WAVE payloads → (id, sample_rate,
     content = first channel as raw little-endian int16 bytes), the
@@ -417,7 +396,7 @@ def decode_audio_wav_batch(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         srs, out = [], []
-        for payload in pdf[bytes_col]:
+        for payload in pdf["content"]:
             payload = _as_bytes(payload)
             try:
                 sr, samples = decode_wav(payload)
@@ -428,7 +407,7 @@ def decode_audio_wav_batch(
                 out.append(b"")
         return pd.DataFrame(
             {
-                "media_id": pdf[id_col].to_numpy(),
+                "media_id": pdf["media_id"].to_numpy(),
                 "sample_rate": np.asarray(srs, dtype=np.int32),
                 "content": out,
             }
@@ -457,7 +436,7 @@ def _pcm_to_float(payload: bytes) -> np.ndarray:
     return np.frombuffer(payload[:n], dtype="<i2").astype(np.float64) / 32768.0
 
 
-def pcm_stats_batch(id_col: str = "media_id", bytes_col: str = "content"):
+def pcm_stats_batch():
     """Per-batch :func:`one_pass` kernel: per-clip audio statistics
     (RMS level, peak, zero-crossing rate; ``_PCM_STATS_SCHEMA``) over
     raw int16 PCM payloads — the audio-corpus health triage (silence /
@@ -465,7 +444,7 @@ def pcm_stats_batch(id_col: str = "media_id", bytes_col: str = "content"):
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         ids, ns, rms, peak, zcr = [], [], [], [], []
-        for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
+        for mid, payload in zip(pdf["media_id"], pdf["content"]):
             x = _pcm_to_float(_as_bytes(payload))
             ids.append(mid)
             ns.append(len(x))
@@ -495,8 +474,6 @@ def pcm_stats_batch(id_col: str = "media_id", bytes_col: str = "content"):
 def resample_pcm_batch(
     src_rate: int,
     dst_rate: int,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
 ):
     """Per-batch :func:`one_pass` kernel: sample-rate conversion of raw
     int16 PCM by linear interpolation (numpy interp over the resample
@@ -508,7 +485,7 @@ def resample_pcm_batch(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         ids, ns, outs = [], [], []
-        for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
+        for mid, payload in zip(pdf["media_id"], pdf["content"]):
             x = _pcm_to_float(_as_bytes(payload))
             n_out = int(round(len(x) * dst_rate / src_rate))
             if len(x) < 2 or n_out == 0:
@@ -549,12 +526,9 @@ def patchify_raw_images(
     src_width: int,
     src_height: int,
     patch: int = 16,
-    channels: int = 1,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
 ) -> DataFrame:
     """ViT-style patch extraction for RAW images: split each
-    (src_height, src_width, channels) uint8 buffer into
+    (src_height, src_width) one-channel uint8 buffer into
     non-overlapping ``patch``×``patch`` tiles, one output row per
     tile with its grid position — the tokenization step of an image
     training pipeline (each tile later embeds to one token).
@@ -570,23 +544,20 @@ def patchify_raw_images(
     downstream ops should aggregate per media_id before any wide
     shuffle.
     """
-    n_src = src_height * src_width * channels
+    n_src = src_height * src_width
     nh, nw = src_height // patch, src_width // patch
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, prs, pcs, bufs = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["content"]):
                 payload = _as_bytes(payload)
                 buf = np.frombuffer(payload[:n_src], dtype=np.uint8)
                 if len(buf) < n_src:
                     buf = np.pad(buf, (0, n_src - len(buf)))
-                img = buf.reshape(src_height, src_width, channels)
+                img = buf.reshape(src_height, src_width)
                 img = img[: nh * patch, : nw * patch]  # crop to multiple
-                tiles = (
-                    img.reshape(nh, patch, nw, patch, channels)
-                    .transpose(0, 2, 1, 3, 4)
-                )
+                tiles = img.reshape(nh, patch, nw, patch).transpose(0, 2, 1, 3)
                 for r in range(nh):
                     for c in range(nw):
                         ids.append(mid)
@@ -621,9 +592,6 @@ def stft_features(
     media: DataFrame,
     frame_len: int = 256,
     hop: int = 128,
-    rolloff_pct: float = 0.85,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
 ) -> DataFrame:
     """Short-time-Fourier-transform spectral features over raw int16
     PCM — REAL DSP (Hann window + numpy rFFT power spectrum), the
@@ -636,7 +604,7 @@ def stft_features(
 
     - centroid   Σk·P(k)/ΣP(k)
     - bandwidth  √(Σ(k−centroid)²·P(k)/ΣP(k))
-    - rolloff    min k with cumΣP ≥ rolloff_pct·ΣP
+    - rolloff    min k with cumΣP ≥ 0.85·ΣP
     - flatness   geometric/arithmetic mean of P (tonality vs noise)
 
     Framing is one strided view per clip and the FFT batches all
@@ -663,7 +631,7 @@ def stft_features(
         bw = np.sqrt(
             (p * (k[None, :] - centroid[:, None]) ** 2).sum(axis=1) / tot
         )
-        roll = (np.cumsum(p, axis=1) >= (rolloff_pct * tot)[:, None]).argmax(
+        roll = (np.cumsum(p, axis=1) >= (0.85 * tot)[:, None]).argmax(
             axis=1
         )
         flat = np.exp(np.mean(np.log(p + 1e-30), axis=1)) / (
@@ -680,7 +648,7 @@ def stft_features(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, nf, ce, bw, ro, fl = [], [], [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["content"]):
                 x = _pcm_to_float(_as_bytes(payload))
                 n, c, b, r, f = _clip_feats(x)
                 ids.append(mid); nf.append(n); ce.append(c)
@@ -710,9 +678,6 @@ _DHASH_SCHEMA = StructType(
 def dhash_images_batch(
     src_width: int,
     src_height: int,
-    channels: int = 1,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
 ):
     """Per-batch :func:`one_pass` kernel: perceptual difference-hash
     (dHash) of RAW images (``_DHASH_SCHEMA``, 1:1 rows): grayscale →
@@ -721,29 +686,25 @@ def dhash_images_batch(
     into one signed int64. Resize-invariant and robust to small pixel
     noise; exact bit equality with an independent numpy/int replay is
     pinned in tests/test_multimodal.py."""
-    n_src = src_height * src_width * channels
+    n_src = src_height * src_width
     row_map = (np.arange(8, dtype=np.int64) * src_height) // 8
     col_map = (np.arange(9, dtype=np.int64) * src_width) // 9
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         hashes = []
-        for payload in pdf[bytes_col]:
+        for payload in pdf["content"]:
             payload = _as_bytes(payload)
             buf = np.frombuffer(payload[:n_src], dtype=np.uint8)
             if len(buf) < n_src:
                 buf = np.pad(buf, (0, n_src - len(buf)))
-            img = (
-                buf.reshape(src_height, src_width, channels)
-                .astype(np.float64)
-                .mean(axis=2)
-            )
+            img = buf.reshape(src_height, src_width).astype(np.float64)
             small = img[np.ix_(row_map, col_map)]
             bits = (small[:, 1:] > small[:, :-1]).flatten()
             val = int.from_bytes(np.packbits(bits).tobytes(), "big")
             hashes.append(val - (1 << 64) if val >= (1 << 63) else val)
         return pd.DataFrame(
             {
-                "media_id": pdf[id_col].to_numpy(),
+                "media_id": pdf["media_id"].to_numpy(),
                 "dhash": np.array(hashes, dtype=np.int64),
             }
         )
@@ -754,39 +715,35 @@ def dhash_images_batch(
 def hamming_near_dup_pairs(
     hashes: DataFrame,
     max_hamming: int = 3,
-    bands: int = 4,
-    id_col: str = "media_id",
     hash_col: str = "dhash",
     max_bucket: int | None = 10000,
 ) -> DataFrame:
     """Image near-duplicate pairs from dHash fingerprints:
     ``(id_a < id_b, hamming)`` for every pair within ``max_hamming``
     bits — COMPLETE by the pigeonhole guarantee as long as
-    ``bands > max_hamming`` (≤ max_hamming differing bits cannot
-    touch all bands, so some band matches exactly).
+    ``HAMMING_BANDS > max_hamming`` (≤ max_hamming differing bits
+    cannot touch all bands, so some band matches exactly).
 
     Scale shape, mirroring the SimHash text path (operators/dedup.py):
-    each hash explodes to ``bands`` (band_idx, 64/bands-bit band
-    value) keys; only these tiny keys shuffle (one groupBy via the
+    each hash explodes to ``HAMMING_BANDS`` (band_idx, 64/bands-bit
+    band value) keys; only these tiny keys shuffle (one groupBy via the
     shared bucket kernel, operators/lsh.py::bucket_pairs); candidates
     are verified with a codegen'd ``bit_count(a ^ b)`` — no image
     bytes and no signatures ever cross the wire. ``max_bucket`` caps
     degenerate buckets (e.g. monochrome images all hashing to 0) —
     pass None for the exact-completeness contract.
     """
-    if 64 % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide 64")
-    if bands <= max_hamming:
+    if HAMMING_BANDS <= max_hamming:
         raise ValueError(
-            f"bands ({bands}) must exceed max_hamming ({max_hamming}) "
-            "for the pigeonhole completeness guarantee"
+            f"bands ({HAMMING_BANDS}) must exceed max_hamming "
+            f"({max_hamming}) for the pigeonhole completeness guarantee"
         )
     from hls_stac_parquet_spark.operators.lsh import bucket_pairs
 
-    width = 64 // bands
+    width = 64 // HAMMING_BANDS
     mask = (1 << width) - 1
     h = materialize(  # read by the band explode + both verify joins
-        hashes.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
+        hashes.select(F.col("media_id").alias("_id"), F.col(hash_col).alias("_h"))
     )
     banded = h.select(
         "_id",
@@ -800,7 +757,7 @@ def hamming_near_dup_pairs(
                             .bitwiseAND(F.lit(mask))
                         ).alias("band_val"),
                     )
-                    for i in range(bands)
+                    for i in range(HAMMING_BANDS)
                 ]
             )
         ).alias("_b"),
@@ -832,12 +789,7 @@ _AUDIO_FP_SCHEMA = StructType(
 )
 
 
-def audio_fingerprint_batch(
-    frame_len: int = 256,
-    hop: int = 128,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
-):
+def audio_fingerprint_batch():
     """Per-batch :func:`one_pass` kernel: spectral audio fingerprint
     (chromaprint-style, minimal; ``_AUDIO_FP_SCHEMA``, 1:1 rows). Raw
     int16 PCM → framed Hann+rFFT power spectra (the DSP of
@@ -846,17 +798,16 @@ def audio_fingerprint_batch(
     LOG-energy gradient bits packed into one signed int64. The audio
     analogue of the image dHash: amplitude-invariant and robust to
     small edits; pair finding reuses :func:`hamming_near_dup_pairs`.
-    Clips shorter than one frame fingerprint as 0."""
-    if hop <= 0 or frame_len <= 0:
-        raise ValueError("frame_len and hop must be positive")
-    window = np.hanning(frame_len)
+    Frames are 256 samples at hop 128; clips shorter than one frame
+    fingerprint as 0."""
+    window = np.hanning(256)
     n_bands = 9
     n_rows = 8
 
     def _fp(x: np.ndarray) -> int:
-        if len(x) < frame_len:
+        if len(x) < 256:
             return 0
-        frames = np.lib.stride_tricks.sliding_window_view(x, frame_len)[::hop]
+        frames = np.lib.stride_tricks.sliding_window_view(x, 256)[::128]
         p = np.abs(np.fft.rfft(frames * window, axis=1)) ** 2
         k = p.shape[1]
         edges = (np.arange(n_bands + 1) * k) // n_bands
@@ -875,11 +826,11 @@ def audio_fingerprint_batch(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         fps = [
-            _fp(_pcm_to_float(_as_bytes(p))) for p in pdf[bytes_col]
+            _fp(_pcm_to_float(_as_bytes(p))) for p in pdf["content"]
         ]
         return pd.DataFrame(
             {
-                "media_id": pdf[id_col].to_numpy(),
+                "media_id": pdf["media_id"].to_numpy(),
                 "fingerprint": np.array(fps, dtype=np.int64),
             }
         )
@@ -899,9 +850,7 @@ _GIF_FRAMES_SCHEMA = StructType(
 )
 
 
-def decode_gif_frames_batch(
-    id_col: str = "media_id", bytes_col: str = "content"
-):
+def decode_gif_frames_batch():
     """Per-batch :func:`one_pass` kernel: REAL video-frame extraction
     (``_GIF_FRAMES_SCHEMA``). Animated GIF payloads (operators/codecs.py
     — LZW, interlace, disposal composition) decode to their composed
@@ -912,7 +861,7 @@ def decode_gif_frames_batch(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         ids, idxs, hs, ws, means, bufs = [], [], [], [], [], []
-        for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
+        for mid, payload in zip(pdf["media_id"], pdf["content"]):
             payload = _as_bytes(payload)
             try:
                 frames = decode_gif(payload)
@@ -950,8 +899,6 @@ def encode_gifs_batch(
     src_width: int,
     src_height: int,
     n_frames: int = 4,
-    id_col: str = "media_id",
-    bytes_col: str = "content",
 ):
     """Per-batch :func:`one_pass` kernel: REAL animated-GIF encode of
     raw byte payloads. Each payload is sliced into ``n_frames``
@@ -965,7 +912,7 @@ def encode_gifs_batch(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
-        for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
+        for mid, payload in zip(pdf["media_id"], pdf["content"]):
             payload = _as_bytes(payload)
             buf = np.frombuffer(payload[:n_src], dtype=np.uint8)
             if len(buf) < n_src:
@@ -973,7 +920,7 @@ def encode_gifs_batch(
             frames = buf.reshape(n_frames, src_height, src_width)
             out.append(encode_gif(frames, interlace=bool(int(mid) % 2)))
         return pd.DataFrame(
-            {"media_id": pdf[id_col].to_numpy(), "content": out}
+            {"media_id": pdf["media_id"].to_numpy(), "content": out}
         )
 
     return fn

@@ -33,7 +33,7 @@ from hls_stac_parquet_spark.tuning import materialize
 #: optimizer size estimate: the tier's ~1 s fixed overhead pays off
 #: only above a few hundred MB (measured at sf0.1, r8).
 QUANTILES_RANGED_MIN_BYTES = 256 * 1024 * 1024
-#: ``grouped_weighted_median(ranged="auto")``'s break-even: the range
+#: :func:`grouped_weighted_median`'s break-even: the range
 #: tier wins 3.3 s vs 4.3 s at a 46 MB estimate and loses 1.51 s vs
 #: 0.96 s at sf0.1's ~4.6 MB (r9).
 WEIGHTED_MEDIAN_RANGED_MIN_BYTES = 32 * 1024 * 1024
@@ -166,20 +166,19 @@ def grouped_weighted_median(
     group_cols: Sequence[str],
     value_col: str,
     weight_col: str,
-    ranged: bool | str = "auto",
 ) -> DataFrame:
     """One row per group: the LOWER WEIGHTED MEDIAN of ``value_col``
     under ``weight_col`` — the smallest v whose cumulative weight (in
     (value, weight) order) reaches half the group's total weight.
     Output column: ``weighted_median`` (un-rounded; callers round).
 
-    ``ranged`` mirrors :func:`grouped_quantiles`:
+    Two tiers, as in :func:`grouped_quantiles`:
 
-    - ``False``: the classic two-window form — cumulative weight and
+    - the classic two-window form — cumulative weight and
       total weight over ``Window.partitionBy(group)``. Right when
       groups are numerous; with FEW groups it funnels the fact table
       through ≤ |groups| tasks (the 100 TB skew cliff).
-    - ``True``: range-partition by (group, value, weight) and find
+    - the ranged form: range-partition by (group, value, weight) and find
       each group's CROSSING partition from a per-(partition, group)
       weight-sum dim: the crossing partition is the unique pid where
       the running group weight passes half the total (≤ is used on
@@ -193,14 +192,14 @@ def grouped_weighted_median(
       range assignment is IDENTICAL for the cell pass and the re-read
       (repartitionByRange samples; two plans would draw different
       boundaries).
-    - ``"auto"``: by the optimizer's size estimate, like
-      grouped_quantiles but at a LOWER break-even,
-      ``WEIGHTED_MEDIAN_RANGED_MIN_BYTES`` (32 MiB vs 256 MiB): the hash
-      tier here funnels the fact through TWO per-group windows, and
-      the measured crossover is earlier — at a 46 MB estimate
-      (100×-replicated sf0.01) the range tier already wins 3.3 s vs
-      4.3 s, while at sf0.1's ~4.6 MB the hash tier wins 0.96 s vs
-      1.51 s (r9 measurements).
+
+    The ranged form runs when the optimizer's size estimate exceeds
+    ``WEIGHTED_MEDIAN_RANGED_MIN_BYTES``, a LOWER break-even than
+    grouped_quantiles' (32 MiB vs 256 MiB): the window form funnels
+    the fact through TWO per-group windows, and the measured crossover
+    is earlier — at a 46 MB estimate (100×-replicated sf0.01) the range
+    tier already wins 3.3 s vs 4.3 s, while at sf0.1's ~4.6 MB the
+    window form wins 0.96 s vs 1.51 s (r9 measurements).
 
     Tie safety: rows with equal (value, weight) share a range
     partition (range boundaries compare full keys) and permuting a
@@ -211,9 +210,7 @@ def grouped_weighted_median(
     is pinned by tests/test_properties.py.
     """
     gcols = list(group_cols)
-    if ranged == "auto":
-        ranged = _size_estimate(df) > WEIGHTED_MEDIAN_RANGED_MIN_BYTES
-    if not ranged:
+    if _size_estimate(df) <= WEIGHTED_MEDIAN_RANGED_MIN_BYTES:
         wc = (
             Window.partitionBy(*gcols)
             .orderBy(value_col, weight_col)

@@ -97,16 +97,13 @@ def with_global_ntile(
     order_by: Sequence[Column],
     k: int,
     out_col: str,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """``ntile(k) OVER (ORDER BY order_by)`` as a distributed plan —
     the closed form from the global rank r and total n (SQL ntile:
     the first ``n mod k`` buckets hold ``ceil(n/k)`` rows, the rest
     ``floor(n/k)``), so quantile bucketing never funnels the relation
     through one task."""
-    r = with_global_rank(
-        df, order_by, "_gr_rn", total_col="_gr_n", checkpoint=checkpoint
-    )
+    r = with_global_rank(df, order_by, "_gr_rn", total_col="_gr_n")
     q = F.floor(F.col("_gr_n") / k)
     rem = F.col("_gr_n") % k
     big = rem * (q + 1)
@@ -125,7 +122,6 @@ def with_global_cummax(
     maxes: Mapping[str, str],
     *,
     inclusive: bool = True,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Running maxima ``MAX(v) OVER (ORDER BY order_by ROWS UNBOUNDED
     PRECEDING .. {CURRENT ROW | 1 PRECEDING})`` for every
@@ -136,7 +132,7 @@ def with_global_cummax(
     Same contract as :func:`with_global_cumsum`: order keys must form
     a total order when the frame makes ties order-dependent.
     """
-    part, w_off = _range_partitioned(df, order_by, checkpoint)
+    part, w_off = _range_partitioned(df, order_by)
     pmax = part.groupBy(_PID).agg(
         *[F.max(v).alias(f"_m_{o}") for o, v in maxes.items()]
     )
@@ -166,7 +162,6 @@ def with_global_cumsum(
     df: DataFrame,
     order_by: Sequence[Column],
     sums: Mapping[str, str],
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Running totals ``SUM(v) OVER (ORDER BY order_by ROWS UNBOUNDED
     PRECEDING..CURRENT ROW)`` for every ``out_col -> value_col`` in
@@ -179,7 +174,7 @@ def with_global_cumsum(
     same as the plain window. For RANGE-frame (tie-inclusive)
     semantics, aggregate per key first and cumsum the aggregate.
     """
-    part, w_off = _range_partitioned(df, order_by, checkpoint)
+    part, w_off = _range_partitioned(df, order_by)
     psums = part.groupBy(_PID).agg(
         *[F.sum(v).alias(f"_s_{o}") for o, v in sums.items()]
     )

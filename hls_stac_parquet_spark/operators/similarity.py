@@ -30,6 +30,12 @@ from pyspark.sql.types import (
 
 from hls_stac_parquet_spark.tuning import materialize
 
+#: Reference rows the brute-force tier collects to the driver; above
+#: it :func:`cosine_topk` and :func:`cosine_pairs_above` refuse.
+BRUTE_FORCE_MAX_ROWS = 2_000_000
+#: Probe rows :func:`mmr_diversify` collects to the driver.
+MMR_MAX_QUERY_ROWS = 10_000
+
 _TOPK_SCHEMA = StructType(
     [
         StructField("vec_id", LongType()),
@@ -48,9 +54,7 @@ _PAIRS_SCHEMA = StructType(
 )
 
 
-def _collect_matrix(
-    df: DataFrame, id_col: str, vec_col: str, max_reference_rows: int
-):
+def _collect_matrix(df: DataFrame, max_rows: int):
     """Materialize the reference side as (ids, row-normalized float64
     matrix). This is the broadcast-dim pattern: the collected side is
     the *small* one by construction; the streaming side never leaves
@@ -62,18 +66,17 @@ def _collect_matrix(
     (:func:`lsh_cosine_candidates`) or IVF (:func:`ivf_cosine_topk`)
     tier — that's what they're for."""
     n = df.count()
-    if n > max_reference_rows:
+    if n > max_rows:
         raise ValueError(
             f"brute-force tier refused: reference side has {n} rows > "
-            f"max_reference_rows={max_reference_rows}; use "
-            "lsh_cosine_candidates / ivf_cosine_topk (the scale tier) or "
-            "raise the cap explicitly"
+            f"{max_rows}; use lsh_cosine_candidates / ivf_cosine_topk "
+            "(the scale tier)"
         )
-    pdf = df.select(id_col, vec_col).toPandas()
+    pdf = df.select("vec_id", "embedding").toPandas()
     if len(pdf) == 0:  # empty corpus: a valid (if degenerate) input
         return np.zeros(0, dtype=np.int64), np.zeros((0, 1)), np.zeros(0)
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0] = 1.0
     return ids, mat, norms
@@ -82,10 +85,6 @@ def _collect_matrix(
 def cosine_topk(
     df: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    max_reference_rows: int = 2_000_000,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for every vector (self excluded).
 
@@ -94,7 +93,7 @@ def cosine_topk(
     order.
     """
     spark = df.sparkSession
-    ids, mat, norms = _collect_matrix(df, id_col, vec_col, max_reference_rows)
+    ids, mat, norms = _collect_matrix(df, BRUTE_FORCE_MAX_ROWS)
     bc = spark.sparkContext.broadcast((ids, mat, norms))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -102,12 +101,12 @@ def cosine_topk(
         for pdf in batches:
             if not len(pdf):  # empty partitions are routine at scale
                 continue
-            q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            q_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             q_norms = np.linalg.norm(q_mat, axis=1)
             q_norms[q_norms == 0] = 1.0
             sims = (q_mat @ r_mat.T) / np.outer(q_norms, r_norms)
-            simr = np.round(sims, round_digits)
+            simr = np.round(sims, 6)
             out_q, out_n, out_s, out_r = [], [], [], []
             for row_i in range(len(q_ids)):
                 mask = r_ids != q_ids[row_i]
@@ -129,7 +128,7 @@ def cosine_topk(
 
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
-    return parallelize_for_udf(df.select(id_col, vec_col)).mapInPandas(
+    return parallelize_for_udf(df.select("vec_id", "embedding")).mapInPandas(
         gen, _TOPK_SCHEMA
     )
 
@@ -137,15 +136,11 @@ def cosine_topk(
 def cosine_pairs_above(
     df: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    max_reference_rows: int = 2_000_000,
 ) -> DataFrame:
     """All pairs (a < b) with cosine ≥ threshold — embedding near-dup
     detection. Same broadcast-GEMM plan as cosine_topk."""
     spark = df.sparkSession
-    ids, mat, norms = _collect_matrix(df, id_col, vec_col, max_reference_rows)
+    ids, mat, norms = _collect_matrix(df, BRUTE_FORCE_MAX_ROWS)
     bc = spark.sparkContext.broadcast((ids, mat, norms))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -153,12 +148,12 @@ def cosine_pairs_above(
         for pdf in batches:
             if not len(pdf):  # empty partitions are routine at scale
                 continue
-            q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            q_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             q_norms = np.linalg.norm(q_mat, axis=1)
             q_norms[q_norms == 0] = 1.0
             sims = np.round(
-                (q_mat @ r_mat.T) / np.outer(q_norms, r_norms), round_digits
+                (q_mat @ r_mat.T) / np.outer(q_norms, r_norms), 6
             )
             # keep a<b so each pair appears once globally
             qi, ri = np.nonzero(sims >= threshold)
@@ -173,41 +168,43 @@ def cosine_pairs_above(
 
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
-    return parallelize_for_udf(df.select(id_col, vec_col)).mapInPandas(
+    return parallelize_for_udf(df.select("vec_id", "embedding")).mapInPandas(
         gen, _PAIRS_SCHEMA
     )
 
 
-def _train_spherical_kmeans(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_clusters: int,
-    seed: int,
-    train_sample: int,
-    lloyd_iters: int,
-) -> "np.ndarray":
-    """Unit-norm centroid matrix from a bounded deterministic sample.
-
-    Top-N by ``xxhash64(id)`` is a takeOrdered (per-partition heap +
-    merge), not a global sort; training cost stays constant as the
-    corpus grows — the standard sample-trained IVF recipe."""
+def _train_sample(df: DataFrame) -> "np.ndarray | None":
+    """Unit-norm rows of a bounded deterministic training sample: the
+    10k smallest ``xxhash64(vec_id)``. That is a takeOrdered
+    (per-partition heap + merge), not a global sort; training cost
+    stays constant as the corpus grows — the standard sample-trained
+    IVF recipe."""
     sample = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(train_sample)
+        df.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id")))
+        .limit(10000)
         .toPandas()
     )
     if len(sample) == 0:  # empty corpus: nothing to quantize
         return None
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in sample[vec_col]])
+    X = np.stack([np.asarray(v, dtype=np.float64) for v in sample["embedding"]])
     xn = np.linalg.norm(X, axis=1)
     xn[xn == 0] = 1.0
-    X = X / xn[:, None]
+    return X / xn[:, None]
+
+
+def _train_spherical_kmeans(
+    df: DataFrame, n_clusters: int
+) -> "np.ndarray | None":
+    """Unit-norm centroid matrix: 8 seeded Lloyd iterations over
+    :func:`_train_sample` (None for an empty corpus)."""
+    X = _train_sample(df)
+    if X is None:
+        return None
     n_clusters = min(n_clusters, len(X))
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     centers = X[rng.choice(len(X), size=n_clusters, replace=False)]
-    for _ in range(lloyd_iters):
+    for _ in range(8):
         owner = np.argmax(X @ centers.T, axis=1)
         for j in range(n_clusters):
             members = X[owner == j]
@@ -218,9 +215,7 @@ def _train_spherical_kmeans(
     return centers / cnorm[:, None]
 
 
-def _ivf_assign_probe(
-    df: DataFrame, id_col: str, vec_col: str, bc_centers, n_probe: int
-):
+def _ivf_assign_probe(df: DataFrame, bc_centers, n_probe: int):
     """(corpus, probes) cogroup inputs from ONE Arrow pass.
 
     The former shape ran TWO pandas_udf passes over the corpus —
@@ -247,8 +242,8 @@ def _ivf_assign_probe(
 
     enriched_schema = StructType(
         [
-            StructField(id_col, df.schema[id_col].dataType),
-            StructField(vec_col, df.schema[vec_col].dataType),
+            StructField("vec_id", df.schema["vec_id"].dataType),
+            StructField("embedding", df.schema["embedding"].dataType),
             StructField("cluster", IntegerType()),
             StructField("probes", ArrayType(IntegerType())),
         ]
@@ -256,7 +251,7 @@ def _ivf_assign_probe(
 
     def enrich(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            sims = _unit_rows(pdf[vec_col]) @ bc_centers.value.T
+            sims = _unit_rows(pdf["embedding"]) @ bc_centers.value.T
             if len(pdf) == 0:
                 clusters = np.zeros(0, dtype=np.int32)
                 tops: list = []
@@ -267,8 +262,8 @@ def _ivf_assign_probe(
                 )
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
-                    vec_col: pdf[vec_col],
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "embedding": pdf["embedding"],
                     "cluster": clusters,
                     "probes": tops,
                 }
@@ -277,13 +272,13 @@ def _ivf_assign_probe(
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
     enriched = materialize(
-        parallelize_for_udf(df.select(id_col, vec_col))
+        parallelize_for_udf(df.select("vec_id", "embedding"))
         .mapInPandas(enrich, enriched_schema)
     )
-    corpus = enriched.select(id_col, vec_col, "cluster")
+    corpus = enriched.select("vec_id", "embedding", "cluster")
     probes = enriched.select(
-        F.col(id_col).alias("p_id"),
-        F.col(vec_col).alias("p_vec"),
+        F.col("vec_id").alias("p_id"),
+        F.col("embedding").alias("p_vec"),
         F.explode("probes").alias("cluster"),
     )
     return corpus, probes
@@ -292,14 +287,8 @@ def _ivf_assign_probe(
 def ivf_cosine_pairs_above(
     df: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_clusters: int = 8,
     n_probe: int = 2,
-    seed: int = 42,
-    round_digits: int = 6,
-    train_sample: int = 10000,
-    lloyd_iters: int = 8,
 ) -> DataFrame:
     """Blocked near-duplicate pair generation: all (a < b) pairs with
     cosine ≥ threshold, searched only WITHIN shared IVF cells — the
@@ -317,9 +306,7 @@ def ivf_cosine_pairs_above(
     the recall/cost dial.
     """
     spark = df.sparkSession
-    centers = _train_spherical_kmeans(
-        df, id_col, vec_col, n_clusters, seed, train_sample, lloyd_iters
-    )
+    centers = _train_spherical_kmeans(df, n_clusters)
     if centers is None:  # empty corpus -> no pairs
         return spark.createDataFrame([], _PAIRS_SCHEMA)
     bc_centers = spark.sparkContext.broadcast(centers)
@@ -335,9 +322,7 @@ def ivf_cosine_pairs_above(
     # one Arrow pass computes the centroid sims once and feeds both
     # cogroup branches off a checkpoint (r9, guide §4 — see
     # _ivf_assign_probe)
-    corpus, probes = _ivf_assign_probe(
-        df, id_col, vec_col, bc_centers, n_probe
-    )
+    corpus, probes = _ivf_assign_probe(df, bc_centers, n_probe)
 
     def search(key, corpus_pdf: pd.DataFrame, probe_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
@@ -345,11 +330,11 @@ def ivf_cosine_pairs_above(
         )
         if len(corpus_pdf) == 0 or len(probe_pdf) == 0:
             return empty
-        r_ids = corpus_pdf[id_col].to_numpy(dtype=np.int64)
+        r_ids = corpus_pdf["vec_id"].to_numpy(dtype=np.int64)
         q_ids = probe_pdf["p_id"].to_numpy(dtype=np.int64)
         sims = np.round(
-            _unit_rows(probe_pdf["p_vec"]) @ _unit_rows(corpus_pdf[vec_col]).T,
-            round_digits,
+            _unit_rows(probe_pdf["p_vec"]) @ _unit_rows(corpus_pdf["embedding"]).T,
+            6,
         )
         qi, ri = np.nonzero(sims >= threshold)
         keep = q_ids[qi] < r_ids[ri]  # a<b: each pair once per cell
@@ -375,14 +360,8 @@ def ivf_cosine_pairs_above(
 def ivf_cosine_topk(
     df: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_clusters: int = 8,
     n_probe: int = 3,
-    seed: int = 42,
-    round_digits: int = 6,
-    train_sample: int = 10000,
-    lloyd_iters: int = 8,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via an IVF (inverted-file)
     index — the other 100 TB ANN path, complementary to
@@ -409,9 +388,7 @@ def ivf_cosine_topk(
     :func:`cosine_topk` ground truth (tests/test_similarity.py).
     """
     spark = df.sparkSession
-    centers = _train_spherical_kmeans(
-        df, id_col, vec_col, n_clusters, seed, train_sample, lloyd_iters
-    )
+    centers = _train_spherical_kmeans(df, n_clusters)
     if centers is None:  # empty corpus -> no neighbors
         from pyspark.sql.types import IntegerType as _I
         return spark.createDataFrame([], StructType([
@@ -433,20 +410,18 @@ def ivf_cosine_topk(
     # one Arrow pass computes the centroid sims once and feeds both
     # cogroup branches off a checkpoint (r9, guide §4 — see
     # _ivf_assign_probe)
-    corpus, probes = _ivf_assign_probe(
-        df, id_col, vec_col, bc_centers, n_probe
-    )
+    corpus, probes = _ivf_assign_probe(df, bc_centers, n_probe)
 
     def search(key, corpus_pdf: pd.DataFrame, probe_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(corpus_pdf) == 0 or len(probe_pdf) == 0:
             return pd.DataFrame(
                 {"vec_id": [], "neighbor_id": [], "cosine": []}
             ).astype({"vec_id": np.int64, "neighbor_id": np.int64, "cosine": np.float64})
-        r_ids = corpus_pdf[id_col].to_numpy(dtype=np.int64)
+        r_ids = corpus_pdf["vec_id"].to_numpy(dtype=np.int64)
         q_ids = probe_pdf["p_id"].to_numpy(dtype=np.int64)
         sims = np.round(
-            _unit_rows(probe_pdf["p_vec"]) @ _unit_rows(corpus_pdf[vec_col]).T,
-            round_digits,
+            _unit_rows(probe_pdf["p_vec"]) @ _unit_rows(corpus_pdf["embedding"]).T,
+            6,
         )
         out_q, out_n, out_s = [], [], []
         for row_i in range(len(q_ids)):
@@ -488,27 +463,17 @@ def ivf_cosine_topk(
     )
 
 
-def lsh_cosine_candidates(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 32,
-    bands: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
+def lsh_cosine_candidates(df: DataFrame) -> DataFrame:
     """Random-hyperplane LSH candidate pairs for cosine similarity.
 
-    sign(X·H) gives an ``n_planes``-bit signature whose Hamming
-    distance estimates the angle; banded equality buckets turn the
-    all-pairs problem into a shuffle on (band, 8-bit bucket). This is
-    the IVF/LSH "scale path": no broadcast, no GEMM against the full
-    corpus, cost ∝ Σ bucket².
+    sign(X·H) over 32 seeded hyperplanes gives a 32-bit signature
+    whose Hamming distance estimates the angle; 4 banded equality
+    buckets turn the all-pairs problem into a shuffle on (band, 8-bit
+    bucket). This is the IVF/LSH "scale path": no broadcast, no GEMM
+    against the full corpus, cost ∝ Σ bucket². Each task draws the
+    same planes from the seed, sized by the vectors' dimension.
     """
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes))
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(planes)
+    n_planes, bands = 32, 4
     width = n_planes // bands
 
     sig_schema = StructType(
@@ -516,24 +481,26 @@ def lsh_cosine_candidates(
     )
 
     def sig_gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        H = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+            H = np.random.default_rng(42).standard_normal(
+                (mat.shape[1], n_planes)
+            )
             bits = (mat @ H) > 0
             sig = np.zeros(len(pdf), dtype=np.int64)
             for i in range(H.shape[1]):
                 sig |= bits[:, i].astype(np.int64) << i
             yield pd.DataFrame(
-                {"vec_id": pdf[id_col].to_numpy(dtype=np.int64), "sig": sig}
+                {"vec_id": pdf["vec_id"].to_numpy(dtype=np.int64), "sig": sig}
             )
 
     from hls_stac_parquet_spark.operators.lsh import bucket_pairs
 
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
-    sigs = parallelize_for_udf(df.select(id_col, vec_col)).mapInPandas(
+    sigs = parallelize_for_udf(df.select("vec_id", "embedding")).mapInPandas(
         sig_gen, sig_schema
     )
     banded = sigs.select(
@@ -554,13 +521,8 @@ def lsh_cosine_candidates(
 
 def pq_train_codebooks(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 8,
     codes: int = 16,
-    seed: int = 42,
-    train_sample: int = 10000,
-    lloyd_iters: int = 8,
 ) -> "np.ndarray":
     """Train product-quantization codebooks: split the (unit-
     normalized) vector into ``m`` contiguous subspaces and fit a
@@ -570,29 +532,20 @@ def pq_train_codebooks(
 
     Returns the codebook tensor with shape (m, codes, dim/m).
     """
-    sample = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(train_sample)
-        .toPandas()
-    )
-    if len(sample) == 0:  # empty corpus: nothing to quantize
+    X = _train_sample(df)
+    if X is None:  # empty corpus: nothing to quantize
         return None
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in sample[vec_col]])
-    xn = np.linalg.norm(X, axis=1)
-    xn[xn == 0] = 1.0
-    X = X / xn[:, None]
     dim = X.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim ({dim}) must be divisible by m ({m})")
     d_sub = dim // m
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     books = np.zeros((m, codes, d_sub))
     for s in range(m):
         Xs = X[:, s * d_sub : (s + 1) * d_sub]
         kk = min(codes, len(Xs))
         centers = Xs[rng.choice(len(Xs), size=kk, replace=False)]
-        for _ in range(lloyd_iters):
+        for _ in range(8):
             # L2 assignment: argmin ||x-c||² = argmax (x·c - ||c||²/2)
             scores = Xs @ centers.T - 0.5 * (centers**2).sum(axis=1)
             owner = np.argmax(scores, axis=1)
@@ -607,8 +560,6 @@ def pq_train_codebooks(
 def pq_encode(
     df: DataFrame,
     books: "np.ndarray",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode every vector to ``m`` small codes (nearest codebook
     centroid per subspace) — a pure map over Arrow batches, zero
@@ -620,7 +571,7 @@ def pq_encode(
     spark = df.sparkSession
     if books is None:  # trained on an empty corpus -> nothing to code
         return df.select(
-            id_col, F.expr("CAST(NULL AS array<int>)").alias("pq_codes")
+            "vec_id", F.expr("CAST(NULL AS array<int>)").alias("pq_codes")
         ).limit(0)
     bc = spark.sparkContext.broadcast(books)
 
@@ -641,7 +592,7 @@ def pq_encode(
             out[:, s] = np.argmax(scores, axis=1)
         return pd.Series(list(out))
 
-    return df.select(id_col, encode(vec_col).alias("pq_codes"))
+    return df.select("vec_id", encode("embedding").alias("pq_codes"))
 
 
 def pq_topk_adc(
@@ -649,8 +600,6 @@ def pq_topk_adc(
     queries: "pd.DataFrame",
     books: "np.ndarray",
     k: int = 10,
-    id_col: str = "vec_id",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: for each query vector, the
     approximate squared L2 distance to a coded corpus vector is the
@@ -712,7 +661,7 @@ def pq_topk_adc(
             if not len(pdf):
                 continue
             C = np.stack(pdf["pq_codes"].to_numpy())  # (n, m)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             # gather: dist[q, i] = Σ_s T[q, s, C[i, s]]
             dist = np.zeros((nq, len(ids)))
             for q in range(nq):
@@ -722,7 +671,7 @@ def pq_topk_adc(
                     {
                         "query_id": np.full(len(ids), qid[q], dtype=np.int64),
                         "neighbor_id": ids,
-                        "approx_dist": np.round(dist[q], round_digits),
+                        "approx_dist": np.round(dist[q], 6),
                     }
                 )
 
@@ -740,12 +689,7 @@ def pq_topk_adc(
 
 def kmeans_clusters(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_clusters: int = 8,
-    seed: int = 42,
-    train_sample: int = 10000,
-    lloyd_iters: int = 8,
 ) -> DataFrame:
     """Spherical k-means cluster assignment: ``(id, cluster, cosine)``
     for every vector, under centroids trained on a bounded
@@ -753,18 +697,16 @@ def kmeans_clusters(
     trainer the IVF index uses, exposed as a first-class clustering
     operator for corpus topic bucketing / diversity sampling).
 
-    Scale shape: training touches only ``train_sample`` rows
+    Scale shape: training touches only 10k sample rows
     (takeOrdered, constant as the corpus grows); assignment is one
     broadcast of the (k × d) centroid matrix and one numpy GEMM per
     Arrow batch — no shuffle, the corpus never moves. Deterministic
-    given ``seed``; assignment correctness (argmax cosine against the
+    given the fixed seed; assignment correctness (argmax cosine against the
     trained centers) is replayed in numpy in
     tests/test_similarity.py.
     """
     spark = df.sparkSession
-    centers = _train_spherical_kmeans(
-        df, id_col, vec_col, n_clusters, seed, train_sample, lloyd_iters
-    )
+    centers = _train_spherical_kmeans(df, n_clusters)
     out_schema = StructType(
         [
             StructField("cluster", IntegerType()),
@@ -775,7 +717,7 @@ def kmeans_clusters(
         return spark.createDataFrame(
             [],
             StructType(
-                [StructField(id_col, LongType())] + list(out_schema.fields)
+                [StructField("vec_id", LongType())] + list(out_schema.fields)
             ),
         )
     bc = spark.sparkContext.broadcast(centers)
@@ -801,18 +743,15 @@ def kmeans_clusters(
 
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
-    keyed = parallelize_for_udf(df.select(id_col, vec_col))
+    keyed = parallelize_for_udf(df.select("vec_id", "embedding"))
     return keyed.select(
-        id_col, assign(vec_col).alias("_a")
-    ).select(id_col, "_a.cluster", "_a.cosine")
+        "vec_id", assign("embedding").alias("_a")
+    ).select("vec_id", "_a.cluster", "_a.cosine")
 
 
 def random_project(
     df: DataFrame,
     out_dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection: embeddings × a fixed
     seeded Gaussian matrix R/√out_dim → ``(id, projected)`` with
@@ -830,13 +769,13 @@ def random_project(
     from pyspark.sql.types import ArrayType
 
     spark = df.sparkSession
-    first = df.select(F.size(vec_col).alias("d")).first()
+    first = df.select(F.size("embedding").alias("d")).first()
     if first is None:  # empty corpus
         return df.select(
-            id_col, F.expr("CAST(NULL AS array<double>)").alias("projected")
+            "vec_id", F.expr("CAST(NULL AS array<double>)").alias("projected")
         ).limit(0)
     d = int(first["d"])
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     R = rng.standard_normal((d, out_dim)) / np.sqrt(out_dim)
     bc = spark.sparkContext.broadcast(R)
 
@@ -850,8 +789,8 @@ def random_project(
 
     from hls_stac_parquet_spark.tuning import parallelize_for_udf
 
-    return parallelize_for_udf(df.select(id_col, vec_col)).select(
-        id_col, project(vec_col).alias("projected")
+    return parallelize_for_udf(df.select("vec_id", "embedding")).select(
+        "vec_id", project("embedding").alias("projected")
     )
 
 
@@ -871,10 +810,6 @@ def mmr_diversify(
     k: int = 5,
     pool: int = 20,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    max_query_rows: int = 10_000,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998): for each probe vector, pick ``k`` results that are relevant
@@ -886,7 +821,7 @@ def mmr_diversify(
     maximizes ``lam·rel(q, d) − (1 − lam)·max_{s∈S} sim(d, s)`` over
     the unpicked candidate pool. Fully deterministic: both relevance
     and candidate–candidate similarities are rounded to
-    ``round_digits`` before any comparison, and every argmax breaks
+    6 digits before any comparison, and every argmax breaks
     ties by smaller id — so the output is a pure function of the
     input, engine-portable, and exactly reproducible by the DuckDB
     recursive-CTE oracle (one recursive step per greedy pick).
@@ -902,9 +837,7 @@ def mmr_diversify(
     query — no driver loop, no per-pick job.
     """
     spark = df.sparkSession
-    q_ids, q_mat, q_norms = _collect_matrix(
-        query_df, id_col, vec_col, max_query_rows
-    )
+    q_ids, q_mat, q_norms = _collect_matrix(query_df, MMR_MAX_QUERY_ROWS)
     bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norms))
     n_pool = int(pool)
 
@@ -915,14 +848,14 @@ def mmr_diversify(
         for pdf in batches:
             if not len(pdf):
                 continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             c_mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
             c_norms = np.linalg.norm(c_mat, axis=1)
             c_norms[c_norms == 0] = 1.0
             sims = np.round(
-                (r_mat @ c_mat.T) / np.outer(r_norms, c_norms), round_digits
+                (r_mat @ c_mat.T) / np.outer(r_norms, c_norms), 6
             )
             out_q, out_c, out_r = [], [], []
             for qi in range(len(r_ids)):
@@ -952,7 +885,7 @@ def mmr_diversify(
             StructField("rel", DoubleType()),
         ]
     )
-    partial = parallelize_for_udf(df.select(id_col, vec_col)).mapInPandas(
+    partial = parallelize_for_udf(df.select("vec_id", "embedding")).mapInPandas(
         gen, rel_schema
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("cand"))
@@ -962,7 +895,7 @@ def mmr_diversify(
         .drop("_rn")
     )
     cand_vecs = top_pool.join(
-        df.select(F.col(id_col).alias("cand"), F.col(vec_col).alias("_vec")),
+        df.select(F.col("vec_id").alias("cand"), F.col("embedding").alias("_vec")),
         "cand",
     )
 
@@ -977,7 +910,7 @@ def mmr_diversify(
         mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_vec"]])
         norms = np.linalg.norm(mat, axis=1)
         norms[norms == 0] = 1.0
-        cs = np.round((mat @ mat.T) / np.outer(norms, norms), round_digits)
+        cs = np.round((mat @ mat.T) / np.outer(norms, norms), 6)
         n = len(ids)
         bsim = np.zeros(n, dtype=np.float64)
         avail = np.ones(n, dtype=bool)

@@ -157,19 +157,22 @@ def merge_digest_tables(
     return digests.groupBy(*group_cols).applyInPandas(merge, out_schema)
 
 
+#: hash seed shared by :func:`countmin_build` and :func:`countmin_estimate`
+COUNTMIN_SEED = 42
+
+
 def countmin_build(
     df: DataFrame,
     key_col: str,
     depth: int = 4,
     width: int = 1024,
-    seed: int = 42,
 ) -> DataFrame:
     """Count-Min sketch build: a (depth × width) count matrix as a
     DataFrame of (d, bucket, cnt) cells — the mergeable frequency
     sketch (point-query heavy hitters with one-sided error).
 
     Each input row explodes to ``depth`` cells (bucket =
-    xxhash64(key, seed+d) mod width, JVM-side); ONE fixed-keyspace
+    xxhash64(key, COUNTMIN_SEED+d) mod width, JVM-side); ONE fixed-keyspace
     aggregate builds the sketch, so the shuffle carries at most
     depth×width cells per map partition regardless of input
     cardinality. Sketches merge by cell-wise SUM (same shape as the
@@ -185,7 +188,8 @@ def countmin_build(
     ).select(
         "d",
         F.pmod(
-            F.xxhash64(F.col("_k"), F.col("d") + F.lit(seed)), F.lit(width)
+            F.xxhash64(F.col("_k"), F.col("d") + F.lit(COUNTMIN_SEED)),
+            F.lit(width),
         ).cast("int").alias("bucket"),
     )
     return cells.groupBy("d", "bucket").agg(
@@ -199,7 +203,6 @@ def countmin_estimate(
     key_col: str,
     depth: int = 4,
     width: int = 1024,
-    seed: int = 42,
 ) -> DataFrame:
     """Point-frequency estimates for ``keys`` off a built sketch:
     min over the key's ``depth`` cells. The sketch is depth×width
@@ -212,7 +215,8 @@ def countmin_estimate(
         key_col,
         "d",
         F.pmod(
-            F.xxhash64(F.col(key_col), F.col("d") + F.lit(seed)), F.lit(width)
+            F.xxhash64(F.col(key_col), F.col("d") + F.lit(COUNTMIN_SEED)),
+            F.lit(width),
         ).cast("int").alias("bucket"),
     )
     return (

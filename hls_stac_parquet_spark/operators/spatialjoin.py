@@ -33,6 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: mean Earth radius (IUGG), km
+EARTH_RADIUS_KM = 6371.0088
+
 
 def _inside_expr(vx: str, vy: str, px: str, py: str) -> str:
     """SQL boolean: point (px,py) inside the convex CCW ring
@@ -51,10 +54,6 @@ def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
     cell_size: float,
-    x: str = "x",
-    y: str = "y",
-    vx: str = "vx",
-    vy: str = "vy",
 ) -> DataFrame:
     """points ⋈ polygons on convex containment, grid-blocked.
 
@@ -70,8 +69,8 @@ def point_in_polygon_join(
             "_gx",
             F.explode(
                 F.sequence(
-                    F.floor(F.array_min(vx) / cs),
-                    F.floor(F.array_max(vx) / cs),
+                    F.floor(F.array_min("vx") / cs),
+                    F.floor(F.array_max("vx") / cs),
                 )
             ),
         )
@@ -79,18 +78,18 @@ def point_in_polygon_join(
             "_gy",
             F.explode(
                 F.sequence(
-                    F.floor(F.array_min(vy) / cs),
-                    F.floor(F.array_max(vy) / cs),
+                    F.floor(F.array_min("vy") / cs),
+                    F.floor(F.array_max("vy") / cs),
                 )
             ),
         )
     )
-    pts = points.withColumn("_gx", F.floor(F.col(x) / cs)).withColumn(
-        "_gy", F.floor(F.col(y) / cs)
+    pts = points.withColumn("_gx", F.floor(F.col("x") / cs)).withColumn(
+        "_gy", F.floor(F.col("y") / cs)
     )
     return (
         pts.join(poly_cells, ["_gx", "_gy"])
-        .filter(F.expr(_inside_expr(vx, vy, x, y)))
+        .filter(F.expr(_inside_expr("vx", "vy", "x", "y")))
         .drop("_gx", "_gy")
     )
 
@@ -103,7 +102,6 @@ def geo_radius_pairs(
     lon_l: str = "lon",
     lat_r: str = "lat",
     lon_r: str = "lon",
-    earth_radius_km: float = 6371.0088,
 ) -> DataFrame:
     """Grid-blocked EXACT geo radius join: every (left, right) row
     pair whose great-circle (haversine) distance is ≤ radius_km, with
@@ -133,7 +131,7 @@ def geo_radius_pairs(
     """
     import math
 
-    chord = 2.0 * math.sin(radius_km / (2.0 * earth_radius_km))
+    chord = 2.0 * math.sin(radius_km / (2.0 * EARTH_RADIUS_KM))
     cell = chord * 1.01
     k = int(math.ceil(2.0 / cell)) + 3  # cells per axis, with margin
 
@@ -177,7 +175,7 @@ def geo_radius_pairs(
     hav = F.sin(dlat) * F.sin(dlat) + F.cos(F.radians(lat_l)) * F.cos(
         F.radians(lat_r)
     ) * F.sin(dlon) * F.sin(dlon)
-    dist = 2 * earth_radius_km * F.asin(F.sqrt(hav))
+    dist = 2 * EARTH_RADIUS_KM * F.asin(F.sqrt(hav))
     return (
         lft.join(rgt, "_cell")
         .withColumn("dist_km", dist)

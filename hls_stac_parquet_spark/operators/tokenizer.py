@@ -36,13 +36,11 @@ from hls_stac_parquet_spark.tuning import materialize
 SEP = "\x1f"
 
 
-def word_frequencies(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def word_frequencies(df: DataFrame) -> DataFrame:
     """(word, freq) — the single corpus-wide pass BPE trains on."""
     return (
         df.select(
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word")
+            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("word")
         )
         .filter(F.col("word") != "")
         .groupBy("word")
@@ -130,7 +128,6 @@ def bpe_train(
 def bpe_segment(
     df: DataFrame,
     merges: list[tuple[int, str, str, int]],
-    text_col: str = "text",
     id_cols: list[str] | None = None,
 ) -> DataFrame:
     """Apply a learned merge table to a corpus: per word, replay the
@@ -138,7 +135,7 @@ def bpe_segment(
     replaces — one codegen'd projection, zero shuffle) and emit the
     segmented symbol array. ``id_cols`` carries document keys through
     for per-document token accounting."""
-    word = F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word")
+    word = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("word")
     out = df.select("*", word).filter(F.col("word") != "")
     syms = F.concat_ws(SEP, F.split("word", ""))
     for _, left, right, _ in merges:

@@ -69,24 +69,22 @@ def cache_daily_stac_json_links(
     protocol: str = "https",
     fixture_dir: str | None = None,
     endpoint: str | None = None,
-    skip_existing: bool = True,
 ) -> list[str]:
     """Cache stac.json link manifests for [start_date, end_date].
 
-    Returns the list of written manifest paths. Idempotent:
-    skip_existing drops already-cached days *before* any catalog I/O
-    (A9 as a work-unit filter, not a per-key HEAD)."""
+    Returns the list of written manifest paths. Idempotent: days
+    already cached are dropped on the driver *before* any catalog I/O
+    (A9 as a work-unit filter), one ``exists`` per day, and the write
+    tasks do not probe again."""
     end_date = end_date or start_date
     days = [
         start_date + dt.timedelta(days=i)
         for i in range((end_date - start_date).days + 1)
     ]
-    if skip_existing:
-        store = get_store(dest)
-        days = [
-            d for d in days
-            if not store.exists(manifest_key(collection_id, d))
-        ]
+    store = get_store(dest)
+    days = [
+        d for d in days if not store.exists(manifest_key(collection_id, d))
+    ]
     if not days:
         return []
 
@@ -106,4 +104,4 @@ def cache_daily_stac_json_links(
         F.to_date(F.substring("time_start", 1, 10)).alias("date"),
         "url",
     ).filter(F.col("date").isin(days))
-    return write_manifests(day_rows, dest, skip_existing=skip_existing)
+    return write_manifests(day_rows, dest, skip_existing=False)

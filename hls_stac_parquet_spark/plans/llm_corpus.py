@@ -27,13 +27,7 @@ from hls_stac_parquet_spark.functions.text import (
 )
 
 
-def curate_corpus(
-    docs: DataFrame,
-    quality_min: float = 0.3,
-    top_word_frac_max: float = 0.12,
-    train_pct: int = 87,
-    observation=None,
-) -> DataFrame:
+def curate_corpus(docs: DataFrame) -> DataFrame:
     """Curate ``docs`` (doc_id, text, source, ...) into a training
     corpus frame: one row per SURVIVING document with its dedup
     fingerprint, quality score, split assignment, and token count.
@@ -42,15 +36,17 @@ def curate_corpus(
     individually testable):
 
     1. **Quality gate** — composite C4/Gopher-shape score
-       (length/stopword/punctuation); per-row arithmetic, no shuffle.
+       (length/stopword/punctuation) of at least 0.3; per-row
+       arithmetic, no shuffle.
     2. **Repetition gate** — drop docs whose most frequent word
-       exceeds ``top_word_frac_max`` of all words (the Gopher
+       exceeds 12% of all words (the Gopher
        repetition filter); zero-shuffle HOF over the sorted tokens.
     3. **Dedup** — bag-of-words fingerprint groups; the minimum
        doc_id per group survives (window min over fp — the plan's
        single digest-keyed shuffle).
     4. **Split** — train/test by multiplicative hash of the SURVIVOR
-       id, so duplicate clusters can never straddle the split
+       id (87 of 97 hash buckets train), so duplicate clusters can
+       never straddle the split
        (test-set contamination by a train twin is impossible by
        construction).
     5. **Accounting** — whitespace token count for downstream
@@ -60,11 +56,6 @@ def curate_corpus(
     are per-row and cheap, dedup shuffles — filter-early shrinks the
     shuffle. At 100 TB each gate's selectivity shows up directly in
     the exchange sizes.
-
-    Pass a ``pyspark.sql.Observation`` as ``observation`` to get gate
-    metrics (kept-row count, average quality) accumulated on the SAME
-    job — production pipelines monitor gate selectivity without paying
-    a second action.
     """
     # sorted tokens are let-bound into their own projection: an
     # inlined split() inside the HOF re-evaluates per lambda step
@@ -86,22 +77,12 @@ def curate_corpus(
         )
         .drop("_ts")
         .filter(
-            (F.col("quality") >= quality_min)
-            & (F.col("top_word_frac") <= top_word_frac_max)
+            (F.col("quality") >= 0.3) & (F.col("top_word_frac") <= 0.12)
         )
         .withColumn("fp", bow_fingerprint("text"))
         .withColumn("n_tokens", F.size(F.split("text", " ")))
         .drop("text")
     )
-    if observation is not None:
-        # gate metrics ride the job itself (df.observe accumulators) —
-        # no second action, no extra scan; after any action on the
-        # result, observation.get yields {n_gated, avg_quality}
-        gated = gated.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_gated"),
-            F.round(F.avg("quality"), 6).alias("avg_quality"),
-        )
     # survivor = min doc_id per fingerprint, as a WINDOW over the gated
     # frame: one fp-keyed shuffle total, and the scan-side projection
     # above is evaluated once — the agg + self-join alternative pays
@@ -118,7 +99,7 @@ def curate_corpus(
             F.round("quality", 6).alias("quality"),
             F.round("top_word_frac", 6).alias("top_word_frac"),
             F.when(
-                (F.col("keep_id") * F.lit(2654435761)) % 97 < train_pct, "train"
+                (F.col("keep_id") * F.lit(2654435761)) % 97 < 87, "train"
             )
             .otherwise("test")
             .alias("split"),

@@ -101,22 +101,20 @@ def write_monthly_stac_geoparquet(
     dest: str,
     origin_date: dt.date | None = None,
     require_complete_links: bool = True,
-    skip_existing: bool = True,
-    version: str = "1",
     reference_layout: bool = False,
 ) -> dict:
     """Compact one collection-month of cached links into clustered
     GeoParquet. Returns {written, failed, skipped} counts plus the
     file manifest rows. The sink picks the layout from the URL count
     (:func:`cluster_month`), or with ``reference_layout=True`` the
-    exact one-object-per-month reference path (constants.py:8)."""
+    exact one-object-per-month reference path (constants.py:8). A
+    month that already holds a ``.parquet`` file is skipped, as the
+    reference skips existing output (write.py:146-149)."""
     store = get_store(dest)
     month_dir = geoparquet_month_dir(
-        collection_id, year, month, version, reference_layout
+        collection_id, year, month, reference_layout
     )
-    if skip_existing and any(
-        k.endswith(".parquet") for k in store.list(month_dir)
-    ):
+    if any(k.endswith(".parquet") for k in store.list(month_dir)):
         return {"skipped": True, "written": 0, "failed": 0, "files": []}
 
     day_urls = read_month_urls(links_src, collection_id, year, month)
@@ -174,7 +172,7 @@ def write_monthly_stac_geoparquet(
     )
 
     files = write_geoparquet_partitions(
-        hoisted, dest, collection_id, year, month, version=version,
+        hoisted, dest, collection_id, year, month,
         reference_layout=reference_layout,
     ).collect()
     return {

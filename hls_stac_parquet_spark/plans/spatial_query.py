@@ -55,12 +55,11 @@ from hls_stac_parquet_spark.store import LocalStore, get_store
 DRIVER_READ_MAX_BYTES = 10 << 20
 
 
-def _dataset_root(dest: str, collection_id: str,
-                  version: str) -> tuple[bool, str]:
+def _dataset_root(dest: str, collection_id: str) -> tuple[bool, str]:
     """(is a local POSIX path, Spark-readable root) of a collection."""
     store = get_store(dest)
     root = store.spark_url(
-        GEOPARQUET_DATASET_DIR.format(version=version, collection_id=collection_id)
+        GEOPARQUET_DATASET_DIR.format(collection_id=collection_id)
     )
     if root is None:
         raise ValueError(
@@ -157,7 +156,6 @@ def bbox_query(
     bbox: tuple[float, float, float, float],
     year: int | None = None,
     month: int | None = None,
-    version: str = "1",
 ) -> DataFrame:
     """Items intersecting bbox, with optional partition pruning on
     year/month. Small local reads run on the driver (see the module
@@ -165,7 +163,7 @@ def bbox_query(
     pruning and pushed bbox filters show in its plan."""
     if any(math.isnan(v) for v in bbox):
         raise ValueError(f"bbox_query needs a bbox without NaN, got {bbox}")
-    local, root = _dataset_root(dest, collection_id, version)
+    local, root = _dataset_root(dest, collection_id)
     if local:
         df = _driver_read(spark, root, bbox, year, month)
         if df is not None:

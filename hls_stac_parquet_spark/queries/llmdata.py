@@ -1417,17 +1417,17 @@ def q_pii_scrub(spark, sf_dir):
     )
 
 
-def _gather_hex_sql(idx_expr: str, n: int, hexcol: str = "h") -> str:
+def _gather_hex_sql(idx_expr: str, n: int) -> str:
     """Uppercase hex of ``n`` gathered bytes of a zero-padded buffer
-    whose hex is ``hexcol`` — byte k comes from index ``idx_expr`` (a
+    whose hex is column ``h`` — byte k comes from index ``idx_expr`` (a
     SQL expression over k). Both engines' hex() is uppercase, so the
     gathered string compares byte-for-byte against Spark's
     hex(content) (DuckDB's md5 cannot digest BLOBs, so the hex string
     itself is the compared value)."""
     return (
         f"array_to_string(list_transform(range(0, {n}), k -> "
-        f"CASE WHEN 2 * ({idx_expr}) + 2 <= strlen({hexcol}) "
-        f"THEN substr({hexcol}, CAST(2 * ({idx_expr}) + 1 AS INT), 2) "
+        f"CASE WHEN 2 * ({idx_expr}) + 2 <= strlen(h) "
+        f"THEN substr(h, CAST(2 * ({idx_expr}) + 1 AS INT), 2) "
         "ELSE '00' END), '')"
     )
 

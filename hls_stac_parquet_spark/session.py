@@ -44,7 +44,6 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
 def get_spark(
     app_name: str = "hls_stac_parquet_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
@@ -59,10 +58,9 @@ def get_spark(
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
 
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     conf = {
         "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": str(n_shuffle),
+        "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -46,8 +46,9 @@ from pyspark.sql import DataFrame
 
 from hls_stac_parquet_spark.store import get_store
 
-#: one collection's dataset root; both month templates extend it
-GEOPARQUET_DATASET_DIR = "v{version}/{collection_id}"
+#: one collection's dataset root, at the reference's ``v{version}``
+#: path with its default version 1; both month templates extend it
+GEOPARQUET_DATASET_DIR = "v1/{collection_id}"
 
 #: default output path: one file per range partition ``part``, so a
 #: re-run or retried write task overwrites its own file
@@ -232,7 +233,6 @@ def _month_path(
     collection_id: str,
     year: int,
     month: int,
-    version: str,
     reference_layout: bool,
     part: int = 0,
 ) -> str:
@@ -243,8 +243,7 @@ def _month_path(
         else GEOPARQUET_PATH_TEMPLATE
     )
     return template.format(
-        version=version, collection_id=collection_id, year=year,
-        month=month, part=part,
+        collection_id=collection_id, year=year, month=month, part=part
     )
 
 
@@ -252,12 +251,11 @@ def geoparquet_month_dir(
     collection_id: str,
     year: int,
     month: int,
-    version: str = "1",
     reference_layout: bool = False,
 ) -> str:
     """Store-relative hive directory for one collection-month."""
     return posixpath.dirname(
-        _month_path(collection_id, year, month, version, reference_layout)
+        _month_path(collection_id, year, month, reference_layout)
     )
 
 
@@ -309,26 +307,16 @@ def write_geoparquet(
     collection_id: str,
     year: int,
     month: int,
-    version: str = "1",
-    reference_layout: bool = False,
 ) -> DataFrame:
     """Write a spatially clustered GeoParquet month: counts ``df``,
     clusters it (:func:`cluster_month`), then each executor partition
     writes its own footer-stamped file. zstd level 6 matches the
     reference (write.py:243).
 
-    ``reference_layout=True`` forces one output object named exactly
-    like the reference (constants.py:8). The single file still gets
-    the distributed range-partitioned SORT (the expensive part); only
-    the final write funnels to one task — choose it for
-    reference-consumer compatibility, not throughput.
-
     Returns the write manifest (one row per file).
     """
     return write_geoparquet_partitions(
-        cluster_month(df, df.count(), reference_layout),
-        dest, collection_id, year, month, version=version,
-        reference_layout=reference_layout,
+        cluster_month(df, df.count()), dest, collection_id, year, month
     )
 
 
@@ -338,7 +326,6 @@ def write_geoparquet_partitions(
     collection_id: str,
     year: int,
     month: int,
-    version: str = "1",
     reference_layout: bool = False,
 ) -> DataFrame:
     """Write each partition of ``df``, rows in their current order, as
@@ -367,7 +354,7 @@ def write_geoparquet_partitions(
         # one live attempt per partition (the package enables no
         # speculation), so no two tasks write this key at once
         key = _month_path(
-            collection_id, year, month, version, reference_layout,
+            collection_id, year, month, reference_layout,
             part=TaskContext.get().partitionId(),
         )
         # `store` pickles into the task (config only); resolving the

@@ -56,8 +56,11 @@ def write_manifests(
 
     Writes are idempotent (full overwrite per path), so Spark task
     retries are safe (at-least-once write per group).
-    skip_existing mirrors links.py:100-103; the existence probe runs
-    executor-side against the same store the write targets.
+    ``skip_existing`` mirrors links.py:100-103 with an executor-side
+    existence probe per day against the same store the write targets.
+    E1 (plans/daily_ingest.py) drops cached days on the driver first
+    and passes ``skip_existing=False``, so its write tasks run no
+    probe: one ``exists`` per day in all.
     """
     import pandas as pd
 

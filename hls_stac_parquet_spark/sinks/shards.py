@@ -30,8 +30,6 @@ def write_training_shards(
     docs: DataFrame,
     dest: str,
     num_shards: int = 16,
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
 ) -> DataFrame:
     """Write ``docs`` into ``num_shards`` parquet shards under
     ``dest/shard=N/`` and return the |K|-row shard manifest
@@ -44,7 +42,7 @@ def write_training_shards(
     makes the export idempotent and the dataloader's epoch
     reproducible.
     """
-    shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_shards)).alias("shard")
+    shard = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_shards)).alias("shard")
     with_shard = docs.withColumn("shard", shard)
     # range-partition on the shard id: exactly one task per shard value
     # (hash-partitioning K small ints would collide ids into shared
@@ -59,16 +57,16 @@ def write_training_shards(
         with_shard.groupBy("shard")
         .agg(
             F.count("*").alias("n_docs"),
-            F.sum(token_col).cast("bigint").alias(token_col),
+            F.sum("n_tokens").cast("bigint").alias("n_tokens"),
         )
         .orderBy("shard")
     )
 
 
-def shard_balance_report(manifest: DataFrame, token_col: str = "n_tokens") -> dict:
+def shard_balance_report(manifest: DataFrame) -> dict:
     """Driver-side balance summary of a |K|-row manifest (tiny by
     construction): max/min/mean token mass and relative spread."""
-    rows = manifest.select(token_col).collect()
+    rows = manifest.select("n_tokens").collect()
     masses = [r[0] for r in rows]
     mean = sum(masses) / len(masses)
     return {

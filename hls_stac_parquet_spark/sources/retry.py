@@ -32,6 +32,11 @@ from typing import Callable, Mapping
 
 #: statuses worth retrying — throttling and transient server errors.
 TRANSIENT_STATUSES = frozenset({429, 500, 502, 503, 504})
+#: full-jitter exponential backoff: attempt k waits up to
+#: min(BACKOFF_MAX_S, BACKOFF_BASE_S * 2**k); a Retry-After is capped
+#: at BACKOFF_MAX_S too
+BACKOFF_BASE_S = 0.5
+BACKOFF_MAX_S = 8.0
 
 #: network-level exceptions worth retrying (DNS blip, reset, timeout).
 TRANSIENT_EXCEPTIONS = (
@@ -84,9 +89,6 @@ def request_with_retries(
     send: Callable[[], tuple[int, bytes, Mapping[str, str]]],
     *,
     attempts: int = 3,
-    base_delay: float = 0.5,
-    max_delay: float = 8.0,
-    statuses: frozenset[int] = TRANSIENT_STATUSES,
     sleep: Callable[[float], None] = time.sleep,
     jitter: Callable[[float, float], float] = random.uniform,
 ) -> tuple[int, bytes, Mapping[str, str]]:
@@ -112,14 +114,14 @@ def request_with_retries(
             else:
                 last_exc = e
                 status, body, headers = -1, b"", {}
-        if last_exc is None and status not in statuses:
+        if last_exc is None and status not in TRANSIENT_STATUSES:
             return status, body, headers
         if attempt == attempts - 1:
             break
-        delay = jitter(0.0, min(max_delay, base_delay * (2**attempt)))
+        delay = jitter(0.0, min(BACKOFF_MAX_S, BACKOFF_BASE_S * (2**attempt)))
         server_says = parse_retry_after(headers) if last_exc is None else None
         if server_says is not None:
-            delay = max(delay, min(server_says, max_delay))
+            delay = max(delay, min(server_says, BACKOFF_MAX_S))
         sleep(delay)
     if last_exc is not None:
         raise last_exc

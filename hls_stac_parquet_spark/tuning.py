@@ -18,9 +18,9 @@ query leaves no cached relation behind for the next one to hit.
 from __future__ import annotations
 
 
-def parallelize_for_udf(df, min_factor: int = 1):
-    """Ensure a DataFrame has at least ``defaultParallelism ×
-    min_factor`` partitions before an expensive per-row stage — an
+def parallelize_for_udf(df):
+    """Ensure a DataFrame has at least ``defaultParallelism``
+    partitions before an expensive per-row stage — an
     Arrow-UDF pass *or* a heavy JVM expression chain (shingle
     explodes, per-window md5, codec work).
 
@@ -36,7 +36,7 @@ def parallelize_for_udf(df, min_factor: int = 1):
     enough partitions (any real multi-file table, every cluster-scale
     scan) this is a no-op (no shuffle added).
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

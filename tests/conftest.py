@@ -19,7 +19,9 @@ SF001 = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("hls-spark-tests", shuffle_partitions=8)
+    s = get_spark(
+        "hls-spark-tests", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     yield s
     # explicit stop at session finish, then shut the Py4J gateway down
     # and give its callback/daemon threads a beat to exit, so no JVM

@@ -51,16 +51,6 @@ def test_asof_backward_inclusive(sides):
     assert out[(3, _ts(1))] == (None, None)  # key with no right rows
 
 
-def test_asof_backward_exclusive(sides):
-    left, right = sides
-    out = {
-        (r.k, r.ts): r.r_val
-        for r in asof_join(left, right, by=["k"], inclusive=False).collect()
-    }
-    assert out[(1, _ts(10))] == 40  # equal ts excluded → falls back to ts=4
-    assert out[(2, _ts(7))] is None  # only right rows are at ts>=7
-
-
 def test_asof_null_payload_carried_as_unit(spark):
     """A NULL payload field in the MATCHED right row must stay NULL —
     not be back-filled from an older right row (the per-column
@@ -112,18 +102,6 @@ def test_asof_forward_inclusive(sides):
     assert got[(1, _ts(20))] == (None, None)
     assert got[(2, _ts(7))] == (_ts(7), 70)
     assert got[(3, _ts(1))] == (None, None)
-
-
-def test_asof_forward_exclusive(sides):
-    left, right = sides
-    got = {
-        (r.k, r.ts): (r.matched_ts, r.r_val)
-        for r in asof_join(
-            left, right, by=["k"], direction="forward", inclusive=False
-        ).collect()
-    }
-    assert got[(1, _ts(10))] == (None, None)  # strictly after 10: nothing
-    assert got[(2, _ts(7))] == (_ts(9), 90)
 
 
 def test_asof_nearest(sides):

@@ -3,6 +3,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hls_stac_parquet_spark.operators.bloomjoin import (
+    _bloom_survivors,
     bloom_anti_join,
     bloom_semi_join,
 )
@@ -32,15 +33,12 @@ def test_bloom_semi_join_exact(spark):
 
 
 def test_bloom_prefilter_has_no_false_negatives(spark):
-    # verify=False returns a SUPERSET: every true match must survive
-    # the bloom test (the one-sided-error contract), even with a
-    # deliberately tiny, collision-heavy bitset.
+    # the bloom test alone returns a SUPERSET: every true match must
+    # survive it (the one-sided-error contract both joins rely on),
+    # even with a deliberately tiny, collision-heavy bitset.
     fact, dim = _sides(spark)
     superset = {
-        r.k
-        for r in bloom_semi_join(
-            fact, dim, "k", "dk", m_bits=256, k=2, verify=False
-        ).collect()
+        r.k for r in _bloom_survivors(fact, dim, "k", "dk", 256, 2).collect()
     }
     true_matches = {
         r.k
@@ -51,9 +49,7 @@ def test_bloom_prefilter_has_no_false_negatives(spark):
 
 def test_bloom_fpp_is_small_at_sized_bitset(spark):
     fact, dim = _sides(spark)
-    superset = bloom_semi_join(
-        fact, dim, "k", "dk", m_bits=1 << 14, k=5, verify=False
-    ).count()
+    superset = _bloom_survivors(fact, dim, "k", "dk", 1 << 14, 5).count()
     exact = fact.join(dim, fact["k"] == dim["dk"], "left_semi").count()
     # 2^14 bits for 500 keys ≈ 32 bits/key → fpp well under 1%
     assert superset - exact <= 0.01 * 5000

@@ -512,9 +512,13 @@ def test_gif_disposal_composition_matches_numpy_replay():
     f1 = np.full((8, 8), 200, dtype=np.uint8)
     # leave-in-place: second decoded frame IS f1 either way (full-rect
     # updates) — the disposal difference shows in canvas state, which
-    # the codec replays internally; pin the composed outputs
+    # the codec replays internally; pin the composed outputs. The
+    # encoder writes disposal 1; rewrite each graphic-control block.
+    gce = b"\x21\xf9\x04" + bytes([1 << 2])
     for disp in (1, 2, 3):
-        out = decode_gif(encode_gif([f0, f1], disposals=[disp, disp]))
+        data = encode_gif([f0, f1])
+        assert data.count(gce) == 2
+        out = decode_gif(data.replace(gce, gce[:3] + bytes([disp << 2])))
         assert np.array_equal(out[0, :, :, 0], f0)
         assert np.array_equal(out[1, :, :, 0], f1)
 

@@ -7,13 +7,13 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from hls_stac_parquet_spark.operators.completeness import (
     IncompleteInputError,
     expected_days,
     require_complete,
 )
+from hls_stac_parquet_spark.plans.monthly_compact import _require_month_days
 
 
 def _days(spark, days):
@@ -27,13 +27,13 @@ def test_expected_days_full_month(spark):
     assert df.count() == 31
 
 
-def test_origin_month_clips_start(spark):
-    # HLSL30 origin 2013-04-11 (constants.py:12): April 2013 expects 20 days
-    df = expected_days(
-        spark, dt.date(2013, 4, 1), dt.date(2013, 4, 30), origin_date=dt.date(2013, 4, 11)
-    )
-    assert df.count() == 20
-    assert df.agg(F.min("day")).collect()[0][0] == dt.date(2013, 4, 11)
+def test_origin_month_clips_start():
+    # HLSL30 origin 2013-04-11 (constants.py:12): April 2013 expects
+    # 20 days, 11-30; E2's gate applies the clip
+    origin = dt.date(2013, 4, 11)
+    _require_month_days(range(11, 31), 2013, 4, origin)  # no raise
+    with pytest.raises(IncompleteInputError, match=r"unexpected=\[10\]"):
+        _require_month_days(range(10, 31), 2013, 4, origin)
 
 
 def test_complete_passes(spark):

@@ -3,15 +3,16 @@
 import pandas as pd
 import pytest
 
+from hls_stac_parquet_spark.operators import graph
 from hls_stac_parquet_spark.operators.graph import (
     connected_components_auto,
     connected_components_star,
 )
 
 
-def _cc(spark, edges, **kw):
+def _cc(spark, edges):
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
-    rows = connected_components_star(df, **kw).collect()
+    rows = connected_components_star(df).collect()
     return {r.node: r.component for r in rows}
 
 
@@ -46,23 +47,27 @@ def test_clique_one_round(spark):
     assert set(got.values()) == {20}
 
 
-def test_non_convergence_raises(spark):
-    """A chain that has not reached its fixpoint after max_iter rounds
-    must raise, not return silently-split clusters."""
+def test_non_convergence_raises(spark, monkeypatch):
+    """A chain that has not reached its fixpoint after
+    CC_STAR_MAX_ITER rounds must raise, not return silently-split
+    clusters."""
     edges = [(i, i + 1) for i in range(10)]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+    monkeypatch.setattr(graph, "CC_STAR_MAX_ITER", 1)
     with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components_star(df, max_iter=1)
-    # the same graph converges when max_iter is sufficient
-    rows = connected_components_star(df, max_iter=15).collect()
+        connected_components_star(df)
+    # the same graph converges when the round cap is sufficient
+    monkeypatch.setattr(graph, "CC_STAR_MAX_ITER", 15)
+    rows = connected_components_star(df).collect()
     assert {r.component for r in rows} == {0}
 
 
-def test_star_long_chain_logarithmic_rounds(spark):
+def test_star_long_chain_logarithmic_rounds(spark, monkeypatch):
     """A 40-node chain converges in O(log^2) star rounds — far below a
-    max_iter that label propagation's O(diameter) would blow through."""
+    round cap that label propagation's O(diameter) would blow through."""
+    monkeypatch.setattr(graph, "CC_STAR_MAX_ITER", 15)
     edges = [(i, i + 1) for i in range(40)]
-    got = _cc(spark, edges, max_iter=15)
+    got = _cc(spark, edges)
     assert set(got.values()) == {0}
     assert len(got) == 41
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from hls_stac_parquet_spark.operators import intervals
 from hls_stac_parquet_spark.operators.intervals import interval_overlap_join
 from hls_stac_parquet_spark.queries.registry import t
 from tests.conftest import SF0001
@@ -43,26 +44,17 @@ def _naive(left, right):
 
 
 @pytest.mark.parametrize("grid_seconds", [600, 3600, 86400])
-def test_grid_matches_naive_quadratic(spark, grid_seconds):
+def test_grid_matches_naive_quadratic(spark, monkeypatch, grid_seconds):
+    monkeypatch.setattr(intervals, "GRID_SECONDS", grid_seconds)
     left = _windows(spark, "purchase")
     right = _windows(spark, "error")
-    grid = interval_overlap_join(
-        left, right, by=["user_id"], grid_seconds=grid_seconds
-    ).select("event_id", "r_event_id", "overlap_us")
+    grid = interval_overlap_join(left, right, by=["user_id"]).select(
+        "event_id", "r_event_id", "overlap_us"
+    )
     naive = _naive(left, right)
     assert grid.count() == naive.count()
     assert grid.exceptAll(naive).count() == 0
     assert naive.exceptAll(grid).count() == 0
-
-
-def test_min_overlap_threshold(spark):
-    left = _windows(spark, "purchase")
-    right = _windows(spark, "error")
-    out = interval_overlap_join(
-        left, right, by=["user_id"], min_overlap_seconds=3600
-    )
-    rows = out.select("overlap_us").collect()
-    assert all(r.overlap_us > 3600 * 1_000_000 for r in rows)
 
 
 def test_no_cartesian_in_plan(spark):

@@ -132,18 +132,6 @@ class TestResizeRawImages:
         assert bytes(row.content) == self._numpy_nn(b"\xff" * 10, 4, 4, 2, 2)
         assert len(row.content) == 4
 
-    def test_multichannel(self, spark):
-        from hls_stac_parquet_spark.operators.multimodal import resize_raw_images
-
-        rng = np.random.default_rng(11)
-        payload = rng.integers(0, 256, 16 * 16 * 3, dtype=np.uint8).tobytes()
-        media = spark.createDataFrame([(1, "image", payload)], MEDIA_SCHEMA)
-        row = resize_raw_images(
-            media, src_width=16, src_height=16, width=4, height=4, channels=3
-        ).collect()[0]
-        assert bytes(row.content) == self._numpy_nn(payload, 16, 16, 4, 4, ch=3)
-        assert len(row.content) == 4 * 4 * 3
-
 
 def test_pcm_stats_sine_wave(spark):
     """Known 440 Hz sine at 16 kHz: RMS = A/√2, ZCR = 2·f/rate —
@@ -205,7 +193,7 @@ class TestPatchify:
         got = {
             (r.patch_row, r.patch_col): bytes(r.content)
             for r in patchify_raw_images(
-                df, src_width=w, src_height=h, patch=p, channels=c
+                df, src_width=w, src_height=h, patch=p
             ).collect()
         }
         assert len(got) == (h // p) * (w // p)
@@ -226,7 +214,7 @@ class TestPatchify:
             [(1, bytearray(img.tobytes()))], "media_id long, content binary"
         )
         rows = patchify_raw_images(
-            df, src_width=9, src_height=7, patch=4, channels=1
+            df, src_width=9, src_height=7, patch=4
         ).collect()
         assert len(rows) == 1 * 2  # 7//4=1 row, 9//4=2 cols
         got = {(r.patch_row, r.patch_col): bytes(r.content) for r in rows}
@@ -386,9 +374,7 @@ class TestDhash:
         df = spark.createDataFrame([(1, b"\x00" * 1024)], ENCODED)
         hashes = _dhash(df, 32, 32)
         with pytest.raises(ValueError, match="pigeonhole"):
-            hamming_near_dup_pairs(hashes, max_hamming=4, bands=4)
-        with pytest.raises(ValueError, match="divide"):
-            hamming_near_dup_pairs(hashes, max_hamming=3, bands=5)
+            hamming_near_dup_pairs(hashes, max_hamming=4)
 
 
 class TestAudioFingerprint:

@@ -41,21 +41,22 @@ def test_interval_overlap_grid_exactness_random(spark, rows, grid):
     """Grid-bucketized overlap join == naive quadratic join for
     random keys/starts/durations at any grid width (incl. degenerate
     zero-length and multi-day intervals)."""
+    from unittest import mock
+
     from pyspark.sql import functions as F
 
-    from hls_stac_parquet_spark.operators.intervals import (
-        interval_overlap_join,
-    )
+    from hls_stac_parquet_spark.operators import intervals
 
     df = spark.createDataFrame(
         rows, "iv_id long, k long, s timestamp_ntz, e timestamp_ntz"
     )
-    got = sorted(
-        (r.iv_id, r.r_iv_id, r.overlap_us)
-        for r in interval_overlap_join(
-            df, df, by=["k"], grid_seconds=grid
-        ).collect()
-    )
+    with mock.patch.object(intervals, "GRID_SECONDS", grid):
+        got = sorted(
+            (r.iv_id, r.r_iv_id, r.overlap_us)
+            for r in intervals.interval_overlap_join(
+                df, df, by=["k"]
+            ).collect()
+        )
     want = []
     for a_id, ak, as_, ae in rows:
         for b_id, bk, bs, be in rows:
@@ -190,7 +191,7 @@ def test_snapshot_diff_matches_dict_diff(spark, olds, news):
     ).filter("k != -999")
     got = {
         r.k: r.status
-        for r in snapshot_diff(oldf, newf, ["k"], ["v"]).collect()
+        for r in snapshot_diff(oldf, newf, ["k"]).collect()
     }
     for k in set(olds) | set(news):
         if k not in olds:
@@ -211,12 +212,12 @@ def test_snapshot_diff_null_keys(spark):
 
     oldf = spark.createDataFrame([(None, 1), (2, 5)], "k long, v long")
     newf = spark.createDataFrame([(None, 1), (3, 7)], "k long, v long")
-    got = {r.k: r.status for r in snapshot_diff(oldf, newf, ["k"], ["v"]).collect()}
+    got = {r.k: r.status for r in snapshot_diff(oldf, newf, ["k"]).collect()}
     assert got == {None: "unchanged", 2: "removed", 3: "added"}
 
     old2 = spark.createDataFrame([(None, 1)], "k long, v long")
     new2 = spark.createDataFrame([(None, 9)], "k long, v long")
-    got2 = {r.k: r.status for r in snapshot_diff(old2, new2, ["k"], ["v"]).collect()}
+    got2 = {r.k: r.status for r in snapshot_diff(old2, new2, ["k"]).collect()}
     assert got2 == {None: "changed"}
 
 
@@ -284,7 +285,7 @@ def test_snapshot_diff_check_unique_raises(spark):
     oldf = spark.createDataFrame([(1, 1), (1, 2)], "k long, v long")
     newf = spark.createDataFrame([(1, 3)], "k long, v long")
     with pytest.raises(ValueError, match="duplicate key"):
-        snapshot_diff(oldf, newf, ["k"], ["v"], check_unique=True)
+        snapshot_diff(oldf, newf, ["k"], check_unique=True)
 
 
 def test_global_quantiles_match_single_window_kernel(spark):
@@ -357,18 +358,42 @@ def test_global_quantiles_empty_input(spark):
     assert len(row) == 1 and row[0]["m"] is None
 
 
-def test_grouped_weighted_median_ranged_matches_window_tier(spark):
-    """grouped_weighted_median(ranged=True) — the crossing-cell
-    range tier added r9 for low-cardinality groups — equals the
-    hash-window tier row for row on dup-heavy random (value, weight)
-    data, including tie runs, integer weights, a single-row group,
-    and an all-zero-weight group (every row qualifies → group min).
-    Also pins the window tier against a plain-Python replay."""
+def test_grouped_weighted_median_ranged_matches_window_tier(
+    spark, monkeypatch
+):
+    """grouped_weighted_median's crossing-cell range tier — added r9
+    for low-cardinality groups — equals the hash-window tier row for
+    row on dup-heavy random (value, weight) data, including tie runs,
+    integer weights, a single-row group, and an all-zero-weight group
+    (every row qualifies → group min). Also pins the window tier
+    against a plain-Python replay. Each tier is forced by moving
+    WEIGHTED_MEDIAN_RANGED_MIN_BYTES (read on the driver); the ranged
+    run must range-partition the relation it materializes."""
     import random
 
+    from hls_stac_parquet_spark.operators import quantiles
     from hls_stac_parquet_spark.operators.quantiles import (
         grouped_weighted_median,
     )
+
+    plans = []
+
+    real_materialize = quantiles.materialize
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_materialize(df)
+
+    monkeypatch.setattr(quantiles, "materialize", spy)
+
+    def median(df, min_bytes):
+        monkeypatch.setattr(
+            quantiles, "WEIGHTED_MEDIAN_RANGED_MIN_BYTES", min_bytes
+        )
+        return {
+            r["g"]: r["weighted_median"]
+            for r in grouped_weighted_median(df, ["g"], "v", "w").collect()
+        }
 
     rng = random.Random(29)
     for trial in range(3):
@@ -381,18 +406,12 @@ def test_grouped_weighted_median_ranged_matches_window_tier(spark):
             for _ in range(rng.randint(8, 300))
         ] + [("solo", 42.0, 3.0), ("zerow", 7.0, 0.0), ("zerow", 5.0, 0.0)]
         df = spark.createDataFrame(rows, ["g", "v", "w"]).repartition(7)
-        got = {
-            r["g"]: r["weighted_median"]
-            for r in grouped_weighted_median(
-                df, ["g"], "v", "w", ranged=True
-            ).collect()
-        }
-        want = {
-            r["g"]: r["weighted_median"]
-            for r in grouped_weighted_median(
-                df, ["g"], "v", "w", ranged=False
-            ).collect()
-        }
+        plans.clear()
+        got = median(df, -1)
+        assert any("rangepartitioning" in p.lower() for p in plans), plans
+        plans.clear()
+        want = median(df, 1 << 63)
+        assert plans == [], plans
         assert got == want, (trial, got, want)
         # independent replay: lower weighted median per group
         by_g: dict = {}

@@ -8,7 +8,12 @@ anywhere in a file, function-local ones included; importing a module
 also runs its parent packages' ``__init__``) and fails on any module
 it never reaches. The package uses absolute imports only, so the walk
 does not resolve relative ones. The definition walk (below) asks the
-same of each top-level ``def``, ``class`` and ``NAME =``.
+same of each top-level ``def``, ``class`` and ``NAME =``. The parameter
+walk (last) asks it of each defaulted parameter of a top-level
+``def``: some call outside the tests must set it, or it is a constant
+spelled as an option. A test that needs another value moves a module
+constant instead, and such a constant only reaches code that reads it
+on the driver.
 """
 
 from __future__ import annotations
@@ -224,3 +229,128 @@ def test_every_top_level_definition_is_reached():
         "top-level definitions nothing but tests reach:\n  "
         + "\n  ".join(unreached)
     )
+
+
+# --- defaulted parameters -------------------------------------------------
+#
+# One level further down: a defaulted parameter of a top-level package
+# ``def`` that no caller sets is a constant spelled as an option. A call
+# matches by the name it calls (a ``Name`` or an ``Attribute``'s attr,
+# whatever it resolves to, plus ``functools.partial(f, ...)``), and it
+# sets a parameter by keyword, by position, or through ``*``/``**``.
+# Calls in the package and in the root scripts count; tests do not, so
+# a test that needs another value moves a module constant instead.
+
+# Fake-substitution seams a test must set (a real clock, sleep or
+# /proc read would make the test slow or machine-dependent), and
+# deployment settings no in-repo caller has reason to set.
+ALLOWED_UNSET_PARAMS = {
+    f"{PACKAGE}.sources.retry.request_with_retries(sleep)":
+        "tests substitute a recording sleep for time.sleep",
+    f"{PACKAGE}.sources.retry.request_with_retries(jitter)":
+        "tests substitute a fixed jitter for random.uniform",
+    f"{PACKAGE}.sources.retry.parse_retry_after(now)":
+        "tests pin the clock an HTTP-date Retry-After is read against",
+    f"{PACKAGE}.session.default_driver_memory(meminfo)":
+        "tests pass a fake /proc/meminfo",
+    f"{PACKAGE}.cli.main(argv)":
+        "the console script reads sys.argv; tests pass argv",
+    f"{PACKAGE}.session.get_spark(master)":
+        "a deployment points the session at its cluster",
+    f"{PACKAGE}.sources.stac_fetch.fetch_stac_items(credential_provider)":
+        "a deployment passes its Earthdata credentials",
+    f"{PACKAGE}.operators.diff.snapshot_diff(check_unique)":
+        "an opt-in check costing two aggregate jobs; q_snapshot_diff's "
+        "keys are unique by construction, tests check the raise",
+    f"{PACKAGE}.operators.codecs.encode_jpeg(subsampling)":
+        "the 4:2:0 encode makes the chroma-subsampled JPEGs (the usual "
+        "camera/web form) that the decoder's upsampling tests decode",
+}
+
+
+def _call_name(func: ast.expr) -> str | None:
+    if isinstance(func, ast.Name):
+        return func.id
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return None
+
+
+def _calls() -> dict[str, list[tuple[list, list]]]:
+    """``name -> [(args, keywords)]`` over every call in the package and
+    the root scripts."""
+    files = [_module_file(m) for m in sorted(_package_modules())]
+    files += [*_root_scripts(), REPO / "__spark_entry__.py"]
+    out: dict[str, list[tuple[list, list]]] = {}
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name, args = _call_name(node.func), node.args
+            if name == "partial" and args:
+                name, args = _call_name(args[0]), args[1:]
+            if name is not None:
+                out.setdefault(name, []).append((args, node.keywords))
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """``(position or None, name)`` of each defaulted parameter."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    first = len(positional) - len(a.defaults)
+    out = [(i, p.arg) for i, p in enumerate(positional) if i >= first]
+    out += [
+        (None, p.arg)
+        for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+    return out
+
+
+def _sets(call: tuple[list, list], pos: int | None, name: str) -> bool:
+    args, keywords = call
+    if any(k.arg is None or k.arg == name for k in keywords):
+        return True
+    if pos is None:
+        return False
+    return any(isinstance(x, ast.Starred) for x in args) or pos < len(args)
+
+
+def _unset_parameters() -> list[str]:
+    calls = _calls()
+    out = []
+    for mod in sorted(_package_modules() - ALLOWED_UNREACHED):
+        path = _module_file(mod)
+        for stmt in ast.parse(path.read_text()).body:
+            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            sites = calls.get(stmt.name, [])
+            for pos, name in _defaulted(stmt):
+                if not any(_sets(c, pos, name) for c in sites):
+                    out.append(
+                        f"{mod}.{stmt.name}({name}) "
+                        f"({path.relative_to(REPO)}:{stmt.lineno})"
+                    )
+    return out
+
+
+def _key(entry: str) -> str:
+    return entry.split(" (")[0]
+
+
+def test_every_defaulted_parameter_is_set_by_a_caller():
+    unset = [
+        e for e in _unset_parameters() if _key(e) not in ALLOWED_UNSET_PARAMS
+    ]
+    assert not unset, (
+        f"{len(unset)} defaulted parameters only tests set:\n  "
+        + "\n  ".join(unset)
+    )
+
+
+def test_param_allowlist_names_real_unset_parameters():
+    """An allowlisted parameter that gains a caller, or is deleted,
+    leaves the list."""
+    unset = {_key(e) for e in _unset_parameters()}
+    assert set(ALLOWED_UNSET_PARAMS) <= unset, sorted(
+        set(ALLOWED_UNSET_PARAMS) - unset)

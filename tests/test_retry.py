@@ -32,7 +32,7 @@ def test_retry_transient_status_then_success():
         return responses[len(calls) - 1]
 
     status, body, _ = request_with_retries(
-        send, attempts=3, base_delay=0.5,
+        send, attempts=3,
         sleep=sleeps.append, jitter=_no_jitter,
     )
     assert (status, body) == (200, b"ok")
@@ -62,7 +62,7 @@ def test_retry_honors_retry_after_header():
         return 200, b"ok", {}
 
     status, _, _ = request_with_retries(
-        send, attempts=3, base_delay=0.5,
+        send, attempts=3,
         sleep=sleeps.append, jitter=_no_jitter,
     )
     assert status == 200
@@ -84,10 +84,10 @@ def test_retry_after_capped_and_garbage_ignored():
         return 200, b"", {}
 
     request_with_retries(
-        send, attempts=2, max_delay=8.0,
+        send, attempts=2,
         sleep=sleeps.append, jitter=_no_jitter,
     )
-    assert sleeps == [8.0]  # capped at max_delay
+    assert sleeps == [8.0]  # capped at BACKOFF_MAX_S
 
 
 def test_retry_after_http_date_form():

@@ -204,12 +204,58 @@ def test_e1_pipeline_writes_manifests_to_s3_from_executors(
         # driver-side month read-back over the store listing
         m = read_manifests(spark, dest, "HLSL30_2.0", 2025, 10)
         assert {r.day for r in m.collect()} == {1, 2}
-        # idempotent re-run: executor-side HEAD probes skip all days
+        # idempotent re-run: the driver's per-day exists filter drops
+        # every cached day before any catalog I/O or write task
         again = cache_daily_stac_json_links(
             spark, "C2021957657-LPCLOUD", "HLSL30_2.0", days[0], dest,
             end_date=days[-1], protocol="file", fixture_dir=cmr_dir,
         )
         assert again == []
+    finally:
+        _SCHEME_FACTORIES.pop("s3", None)
+
+
+def test_e1_probes_each_uncached_day_once(spark, fake_s3, tmp_path):
+    """A first E1 run over 2 uncached days sends one HEAD per day: the
+    driver's exists filter. The write tasks do not probe again."""
+    endpoint, _, _, st = fake_s3
+    from hls_stac_parquet_spark.plans.daily_ingest import (
+        cache_daily_stac_json_links,
+    )
+    from hls_stac_parquet_spark.store import (
+        _SCHEME_FACTORIES,
+        register_store_scheme,
+    )
+    from tests.fixtures import make_fixtures
+
+    days = [dt.date(2025, 10, d) for d in (1, 2)]
+    cmr_dir, _ = make_fixtures(str(tmp_path), days=days, granules_per_day=4)
+
+    # defined inside the test so cloudpickle ships it BY VALUE
+    def creds():
+        return {
+            "accessKeyId": "AKIDEXAMPLE",
+            "secretAccessKey": "wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY",
+            "sessionToken": "stsTOK",
+        }
+
+    register_store_scheme(
+        "s3",
+        lambda url: S3Store(url, credentials=creds, endpoint=endpoint,
+                            spark_readable=False),
+    )
+    try:
+        written = cache_daily_stac_json_links(
+            spark, "C2021957657-LPCLOUD", "HLSL30_2.0", days[0],
+            "s3://heads-bucket/links", end_date=days[-1], protocol="file",
+            fixture_dir=cmr_dir,
+        )
+        assert len(written) == 2
+        heads = [key for method, key, _, _ in st.requests if method == "HEAD"]
+        assert len(heads) == 2, heads
+        assert sorted(k.rsplit("/", 1)[1] for k in heads) == [
+            "2025-10-01.json", "2025-10-02.json"
+        ]
     finally:
         _SCHEME_FACTORIES.pop("s3", None)
 

@@ -61,20 +61,6 @@ def test_shard_balance_statistical(spark, tmp_path):
     assert rep["rel_spread"] < 0.2
 
 
-def test_curate_corpus_observe_metrics(spark):
-    from pyspark.sql import Observation
-
-    from hls_stac_parquet_spark.plans.llm_corpus import curate_corpus
-
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
-    obs = Observation("gates")
-    out = curate_corpus(docs, observation=obs)
-    n_out = out.count()
-    metrics = obs.get
-    assert metrics["n_gated"] >= n_out > 0
-    assert 0.0 < metrics["avg_quality"] <= 1.5
-
-
 def test_cli_export_training_shards(spark, tmp_path):
     from hls_stac_parquet_spark.cli import main
 

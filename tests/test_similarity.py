@@ -6,6 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from hls_stac_parquet_spark.operators import similarity
 from hls_stac_parquet_spark.operators.similarity import (
     cosine_pairs_above,
     cosine_topk,
@@ -59,16 +60,17 @@ def test_cosine_topk_finds_planted_neighbors(emb):
         assert top1[100 + i] == i
 
 
-def test_brute_force_cap_raises(emb):
+def test_brute_force_cap_raises(emb, monkeypatch):
     """The brute-force tier must refuse an oversized reference side
     with a clear error (pointing at the LSH/IVF tier) instead of
-    collecting it onto the driver."""
+    collecting it onto the driver. The cap is read on the driver."""
     import pytest
 
+    monkeypatch.setattr(similarity, "BRUTE_FORCE_MAX_ROWS", 5)
     with pytest.raises(ValueError, match="brute-force tier refused"):
-        cosine_topk(emb, k=1, max_reference_rows=5)
+        cosine_topk(emb, k=1)
     with pytest.raises(ValueError, match="lsh_cosine_candidates"):
-        cosine_pairs_above(emb, 0.99, max_reference_rows=5)
+        cosine_pairs_above(emb, 0.99)
 
 
 def test_cosine_pairs_threshold(emb):
@@ -79,7 +81,7 @@ def test_cosine_pairs_threshold(emb):
 def test_lsh_recall_on_planted_dups(emb):
     cand = {
         (r.vec_a, r.vec_b)
-        for r in lsh_cosine_candidates(emb, n_planes=16, bands=4, dim=DIM).collect()
+        for r in lsh_cosine_candidates(emb).collect()
     }
     planted = {(i, 100 + i) for i in range(5)}
     recall = len(cand & planted) / len(planted)
@@ -95,14 +97,14 @@ def test_ivf_recall_vs_brute_force(emb):
     k = 3
     exact = _numpy_topk(emb.toPandas(), k)
     approx = {}
-    out = ivf_cosine_topk(emb, k=k, n_clusters=4, n_probe=2, seed=1).collect()
+    out = ivf_cosine_topk(emb, k=k, n_clusters=4, n_probe=2).collect()
     for r in out:
         approx.setdefault(r.vec_id, []).append(r.neighbor_id)
     hits = sum(len(set(approx.get(v, [])) & set(exact[v])) for v in exact)
     recall = hits / sum(len(exact[v]) for v in exact)
     assert recall >= 0.5  # half the inverted lists probed
 
-    full = ivf_cosine_topk(emb, k=k, n_clusters=4, n_probe=4, seed=1)
+    full = ivf_cosine_topk(emb, k=k, n_clusters=4, n_probe=4)
     got = {}
     for r in full.collect():
         got.setdefault(r.vec_id, []).append((r.rnk, r.neighbor_id))
@@ -174,10 +176,8 @@ def test_kmeans_clusters_argmax_matches_numpy(emb):
         kmeans_clusters,
     )
 
-    got = kmeans_clusters(emb, n_clusters=4, seed=11).toPandas()
-    centers = _train_spherical_kmeans(
-        emb, "vec_id", "embedding", 4, 11, 10000, 8
-    )
+    got = kmeans_clusters(emb, n_clusters=4).toPandas()
+    centers = _train_spherical_kmeans(emb, 4)
     pdf = emb.toPandas()
     mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
     mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
@@ -196,7 +196,7 @@ def test_kmeans_clusters_argmax_matches_numpy(emb):
 def test_kmeans_planted_duplicates_share_a_cluster(emb):
     from hls_stac_parquet_spark.operators.similarity import kmeans_clusters
 
-    got = kmeans_clusters(emb, n_clusters=4, seed=11).toPandas()
+    got = kmeans_clusters(emb, n_clusters=4).toPandas()
     by_id = {int(r.vec_id): int(r.cluster) for r in got.itertuples()}
     for i in range(5):  # vec 100+i is a near-copy of vec i
         assert by_id[i] == by_id[100 + i]
@@ -205,17 +205,18 @@ def test_kmeans_planted_duplicates_share_a_cluster(emb):
 def test_random_projection_matches_numpy_and_preserves_distances(emb):
     from hls_stac_parquet_spark.operators.similarity import random_project
 
-    got = random_project(emb, out_dim=8, seed=5).toPandas()
+    # out_dim 16 and the fixed seed 42 are what q_random_projection runs
+    got = random_project(emb, out_dim=16).toPandas()
     pdf = emb.toPandas()
     mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    rng = np.random.default_rng(5)
-    R = rng.standard_normal((mat.shape[1], 8)) / np.sqrt(8)
+    rng = np.random.default_rng(42)
+    R = rng.standard_normal((mat.shape[1], 16)) / np.sqrt(16)
     want = np.round(mat @ R, 6)
     by_id = {int(i): np.asarray(p) for i, p in zip(got["vec_id"], got["projected"])}
     for i, vid in enumerate(pdf["vec_id"]):
         assert np.allclose(by_id[int(vid)], want[i]), vid
-    # JL: pairwise distances preserved in aggregate (generous band for
-    # out_dim=8; the point is "same scale", not a tight epsilon)
+    # JL: pairwise distances preserved in aggregate (generous band;
+    # the point is "same scale", not a tight epsilon)
     ids = pdf["vec_id"].to_numpy()
     proj = np.stack([by_id[int(v)] for v in ids])
     rng2 = np.random.default_rng(0)

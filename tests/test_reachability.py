@@ -255,8 +255,6 @@ ALLOWED_UNSET_PARAMS = {
         "tests pass a fake /proc/meminfo",
     f"{PACKAGE}.cli.main(argv)":
         "the console script reads sys.argv; tests pass argv",
-    f"{PACKAGE}.session.get_spark(master)":
-        "a deployment points the session at its cluster",
     f"{PACKAGE}.sources.stac_fetch.fetch_stac_items(credential_provider)":
         "a deployment passes its Earthdata credentials",
     f"{PACKAGE}.operators.diff.snapshot_diff(check_unique)":
